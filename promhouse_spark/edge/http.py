@@ -1715,14 +1715,3 @@ def create_app(
 
     return app
 
-
-def serve(
-    storage: Storage,
-    host: str = "127.0.0.1",
-    port: int = 7781,
-    rule_groups: list[dict] | None = None,
-    enable_admin: bool = False,
-) -> None:
-    create_app(storage, rule_groups=rule_groups, enable_admin=enable_admin).run(
-        host=host, port=port, threaded=True
-    )

@@ -539,7 +539,8 @@ def ngram_jaccard_pairs(
     token join omits zero-overlap pairs, the dense form would emit them)
     and the enumeration scales (``group_col`` set → shuffle equi-join,
     never a corpus broadcast); pass ``True`` to force it ungrouped or
-    ``False`` to skip the sniff job."""
+    ``False`` to skip the sniff job. Forcing it where the semantics differ
+    (``max_df`` set, or ``threshold <= 0``) raises ``ValueError``."""
     df = ensure_parallelism(df, id_col)
     if bitmask == "auto":
         bitmask = (
@@ -549,6 +550,16 @@ def ngram_jaccard_pairs(
             and prefix_filter is not True  # an explicitly pinned plan wins
         )
     if bitmask:
+        if max_df is not None:
+            raise ValueError(
+                "bitmask=True computes the exact join; max_df changes the "
+                "semantics (capped vocabulary) — pick one"
+            )
+        if threshold <= 0:
+            raise ValueError(
+                "bitmask=True needs threshold > 0: the token join never "
+                "emits zero-overlap pairs, the bitmask pair scan would"
+            )
         vocab = _small_vocabulary(df, text_col, 64)
         if vocab is not None:
             return _jaccard_bitmask(
@@ -642,17 +653,23 @@ def _jaccard_bitmask(
     a token→bit map literal, the self-join enumerates in-group (a < b)
     pairs once, and intersection/sizes come from ``bit_count`` — the same
     integers the token join aggregates, so ``i/(na+nb-i)`` is the same
-    double and the pair set is identical."""
+    double and the pair set is identical. A token missing from the map
+    makes the document's mask NULL (``try_element_at``: no ANSI error),
+    so it pairs with nothing."""
+    # bit 63 is the sign bit in two's-complement LongType
     mlit = F.create_map(
         *[
             x
             for i, t in enumerate(vocab)
-            for x in (F.lit(t), F.lit(1 << i).cast("long"))
+            for x in (
+                F.lit(t),
+                F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long"),
+            )
         ]
     )
     toks = F.array_distinct(F.split(F.col(text_col), " "))
     mask = F.aggregate(
-        F.transform(toks, lambda t: F.element_at(mlit, t)),
+        F.transform(toks, lambda t: F.try_element_at(mlit, t)),
         F.lit(0).cast("long"),
         lambda acc, x: acc.bitwiseOR(x),
     )
@@ -1245,12 +1262,12 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-shaped semantic near-dup pairs (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embeddings with the IVF coarse quantizer
-    (operators/similarity.py:ivf_index — MLlib k-means, distributed fit),
-    then exact cosine pairs WITHIN each cluster only. The candidate space
+    (operators/similarity.py:ivf_index — the package's one k-means,
+    ``kmeans.kmeans_fit``, and its exact nearest-centroid kernel), then
+    exact cosine pairs WITHIN each cluster only. The candidate space
     is cluster-bounded — sum of per-cluster squares, never the corpus
     cross-join — which is the whole SemDeDup idea: at 100 TB you pick
     num_centroids so clusters hold ~1e4 vectors and intra-cluster pairs
@@ -1266,42 +1283,8 @@ def semantic_dedup_pairs(
     """
     from promhouse_spark.operators.similarity import ivf_index
 
-    assigned, _ = ivf_index(df, num_centroids, id_col, vec_col, seed)
-    return embedding_cosine_duplicates(
-        assigned,
-        id_col=id_col,
-        vec_col=vec_col,
-        group_col="centroid_id",
-        threshold=threshold,
-    )
-
-
-def assign_nearest_centroid(
-    df: DataFrame,
-    centers: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "centroid_id",
-) -> DataFrame:
-    """Nearest-centroid assignment as EXPLICIT column arithmetic (not the
-    MLlib ``model.transform``) so a SQL engine reading the same persisted
-    centroids computes the identical argmin from the identical doubles
-    (MLlib's norm-trick distance differs in final ulps, which is fine for
-    clustering but not for a differential gate). Delegates to
-    kmeans.assign_with_dist_exact — the Arrow-batched kernel that replays
-    the similarity.ivf_assign zip-fold's IEEE operation order (sequential
-    per-coordinate accumulation, first-occurrence = smallest-cid argmin),
-    so every assignment is bit-identical to the column-expression form
-    (tests/test_kmeans.py pins full-frame equality) while the per-row
-    cost drops from ~1 µs·k interpreted-fold eval to one vectorized numpy
-    pass per Arrow batch (r11 — the same swap took the k-means training
-    queries from 80% of the sf100 scaling gate to ~10×-faster).
-    Map-side only; cost is k·dim multiply-adds per row."""
-    from promhouse_spark.operators.kmeans import assign_with_dist_exact
-
-    out = assign_with_dist_exact(df, centers, vec_col).drop("dist")
-    if out_col != "centroid_id":
-        out = out.withColumnRenamed("centroid_id", out_col)
-    return out
+    assigned, _ = ivf_index(df, num_centroids, id_col, vec_col)
+    return _intra_cluster_pairs(assigned, id_col, vec_col, threshold)
 
 
 def semantic_dedup_pairs_staged(
@@ -1311,36 +1294,36 @@ def semantic_dedup_pairs_staged(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
 ) -> DataFrame:
     """``semantic_dedup_pairs`` with the fitted centroids PERSISTED to
-    ``centroids_path`` (parquet: centroid_id, centroid array<double>) and
-    assignment done by :func:`assign_nearest_centroid` instead of the
-    MLlib transform. The k-means FIT stays Spark-side (not
-    SQL-expressible), but everything downstream of the fitted centroids —
-    assignment argmin + intra-cluster cosine — becomes replayable by any
-    SQL engine over the persisted table, which is how the driver's DuckDB
+    ``centroids_path`` (parquet: centroid_id, centroid array<double>).
+    The assignment is explicit argmin arithmetic over those doubles
+    (``kmeans.assign_with_dist_exact``, bit-identical to the SQL-replayable
+    column fold), so everything downstream of the fitted centroids —
+    assignment argmin + intra-cluster cosine — is replayable by any SQL
+    engine over the persisted table, which is how the driver's DuckDB
     oracle hash-verifies SemDeDup end-to-end."""
     from promhouse_spark.operators.similarity import ivf_index
 
-    # fit only; the returned lazy assignment frame is discarded unevaluated
-    _, centers = ivf_index(df, num_centroids, id_col, vec_col, seed)
-    spark = df.sparkSession
-    spark.createDataFrame(
+    assigned, centers = ivf_index(df, num_centroids, id_col, vec_col)
+    df.sparkSession.createDataFrame(
         [(i, c) for i, c in enumerate(centers)],
         "centroid_id int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(centroids_path)
+    return _intra_cluster_pairs(assigned, id_col, vec_col, threshold)
+
+
+def _intra_cluster_pairs(
+    assigned: DataFrame, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
     # materialize the assignment ONCE: embedding_cosine_duplicates
     # consumes the assigned frame on several subtrees (both join sides,
     # norm prefilter), and without the checkpoint the plan held 8 copies
     # of the Arrow assignment kernel — the corpus was re-assigned eight
     # times per run (r11). Production shape: the assignment IS the
     # partitioned IVF layout a real index materializes to storage.
-    assigned = assign_nearest_centroid(df, centers, vec_col).localCheckpoint(
-        eager=True
-    )
     return embedding_cosine_duplicates(
-        assigned,
+        assigned.localCheckpoint(eager=True),
         id_col=id_col,
         vec_col=vec_col,
         group_col="centroid_id",
@@ -1354,16 +1337,13 @@ def semantic_dedup(
     vec_col: str = "embedding",
     num_centroids: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
 ) -> DataFrame:
     """Corpus pruning via SemDeDup pairs: drop the higher-id member of
     every semantic near-dup pair (keep-min-id — a deterministic greedy
     stand-in for the paper's keep-lowest-centroid-similarity policy; the
     pair generation is the expensive part, the keep policy is swappable).
     One anti-join against the distinct drop set."""
-    pairs = semantic_dedup_pairs(
-        df, id_col, vec_col, num_centroids, threshold, seed
-    )
+    pairs = semantic_dedup_pairs(df, id_col, vec_col, num_centroids, threshold)
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(drops, id_col, "left_anti")
 

@@ -1,41 +1,37 @@
-"""Hand-rolled Lloyd's k-means over an embedding column — the coarse
-quantizer / topic-blocking fit (SemDeDup's clustering stage, IVF's
-quantizer) with a VERIFIABLE training trajectory.
+"""Hand-rolled Lloyd's k-means over an embedding column: the one
+k-means fit and the one nearest-centroid kernel of the package. The topic
+clustering query, the IVF coarse quantizer, the PQ and IVF-PQ
+codebooks and the SemDeDup blocking stage all fit through
+:func:`kmeans_fit` and assign through :func:`assign_with_dist_exact`,
+so every fitted artifact has a VERIFIABLE training trajectory.
 
-Why this exists next to ``similarity.ivf_index`` (MLlib KMeans): the
-MLlib fit is a black box to a SQL differential oracle — those queries
-stage the fitted centroids and verify only what's downstream. Here each
-Lloyd iteration is built from the same SQL-replayable primitives as
-``ivf_assign`` (sequential zip-fold squared-L2 argmin, smallest-cid
-tie-break) plus one keyed aggregation for the means, so a DuckDB oracle
-can unroll the iterations as a chained CTE and land on bit-identical
-centroids — the same verified-training contract as operators/hashlr.py.
+Each Lloyd iteration is built from SQL-replayable primitives
+(sequential zip-fold squared-L2 argmin, smallest-cid tie-break) plus
+one keyed aggregation for the means, so a DuckDB oracle can unroll the
+iterations as a chained CTE and land on bit-identical centroids — the
+same verified-training contract as operators/hashlr.py. Queries whose
+index is not unrolled in SQL stage the fitted centroids and codes, and
+their oracles replay everything downstream from those tables.
 
 Spark shape (what must survive 100 TB):
   - assignment is map-side over centroid LITERALS (no join, no
-    shuffle): by default the Arrow-batched :func:`assign_with_dist_exact`
-    kernel, which replays the reference column fold's IEEE operation
-    order and is bit-identical to it (r11 — the interpreted fold was 80%
-    of the sf100 scaling gate);
+    shuffle): the Arrow-batched :func:`assign_with_dist_exact` kernel,
+    which replays the reference column fold's IEEE operation order and
+    is bit-identical to it (r11 — the interpreted fold was 80% of the
+    sf100 scaling gate);
   - the mean recompute is one keyed aggregation with ``dim``
     per-coordinate avg columns (k·(dim+1) doubles shuffled/collected as
     index metadata — the bounded-collect contract the ANN operators
     follow);
-  - iteration count is a fixed hyper-parameter;
-  - serving-scale assignment has an Arrow-batched numpy twin
-    (:func:`assign_with_dist_vectorized`) for when oracle-exactness is
-    not required.
+  - iteration count is a fixed hyper-parameter.
 
 Determinism contract: centroid coordinates quantize to 1e-7 after every
 iteration in both engines, crushing aggregation-order float drift
 (~1e-15) so the unrolled oracle reproduces the trajectory exactly (the
 driver side rounds half-away-from-zero via functions/quantize.py to
 match DuckDB's mode — Python's half-to-even builtin would diverge at an
-exact midpoint).
-Init is the k lowest-id vectors by default (deterministic,
-SQL-replayable — what the unrolled oracle pins); ``init="kmeans||"``
-switches to hash-seeded k-means|| (:func:`kmeans_parallel_init`) for
-skewed corpora — still deterministic, but not oracle-replayed.
+exact midpoint). Init is the k lowest-id vectors (deterministic and
+SQL-replayable — what the unrolled oracle pins).
 """
 
 from __future__ import annotations
@@ -56,9 +52,12 @@ def assign_with_dist(
     centers: list[list[float]],
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Nearest-centroid assignment keeping the squared-L2 distance:
-    the ``similarity.ivf_assign`` argmin (sequential zip-fold, struct-min
-    on (distance, cid)) with both struct fields surfaced.
+    """Nearest-centroid assignment keeping the squared-L2 distance, as a
+    pure column expression: sequential zip-fold, struct-min on
+    (distance, cid), both struct fields surfaced. This is the reference
+    form a SQL engine replays bit-for-bit; production code assigns
+    through its Arrow-batched twin :func:`assign_with_dist_exact`, and
+    tests pin the two equal.
 
     Evaluation-strategy note (measured at sf10, 2M x 8 x 64): the
     zip-fold, though interpreted (higher-order lambdas get no codegen),
@@ -104,8 +103,8 @@ def assign_with_dist_exact(
     to pay the interpreted fold (~1 µs per (row, centroid); the two
     k-means queries were 80% of the r11 sf100 scaling gate).
 
-    Why it is exact where :func:`assign_with_dist_vectorized` is not:
-    the fold accumulates ``(v[j]-c[j])²`` sequentially in coordinate
+    Why it is exact where a BLAS norm-trick kernel is not: the fold
+    accumulates ``(v[j]-c[j])²`` sequentially in coordinate
     order, and IEEE-754 float addition is order-sensitive. This kernel
     replays that exact order — one numpy elementwise op per coordinate,
     ``acc = acc + d*d`` over j = 0..dim-1 — and elementwise fp64 numpy
@@ -217,48 +216,29 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quant: int = 7,
-    assign_fn=None,
-    init: str = "lowest_id",
-    seed: int = 42,
 ) -> list[list[float]]:
     """Lloyd's algorithm: assign (map-side argmin over centroid
     literals) then re-center (one keyed agg per iteration, k·dim rows
-    collected). Empty clusters keep their previous centroid. Returns the
-    fitted centroid list.
+    collected). Init is the k lowest-id vectors. Empty clusters keep
+    their previous centroid. Returns the fitted centroid list.
 
-    ``assign_fn`` picks the assignment kernel for the training loop:
-    default :func:`assign_with_dist_exact` — the Arrow-batched kernel
-    that replays the fold's IEEE operation order and is therefore
-    bit-identical to :func:`assign_with_dist` (the training trajectory,
-    and so the unrolled SQL oracle's hash, is unchanged) at ~10× the
-    speed (r11: the interpreted fold made the two k-means queries 80%
-    of the sf100 scaling gate, 312 + 261 s of 719 s). Pass
-    :func:`assign_with_dist` to force the pure column-expression form,
-    or :func:`assign_with_dist_vectorized` for the norm-trick serving
-    kernel (faster still, but last-ulp rank differences can flip
-    near-exact ties, so not for oracle-replayed fits).
+    Assignment runs through :func:`assign_with_dist_exact`, which is
+    bit-identical to :func:`assign_with_dist`, so the training
+    trajectory (and the unrolled SQL oracle's hash) is the fold's, at
+    ~10× its speed (r11: the interpreted fold made the two k-means
+    queries 80% of the sf100 scaling gate, 312 + 261 s of 719 s).
 
-    ``init``: ``"lowest_id"`` (default — deterministic and trivially
-    SQL-replayable, what the unrolled oracle pins) or ``"kmeans||"``
-    (:func:`kmeans_parallel_init` — hash-seeded, still deterministic,
-    the production choice on skewed corpora where the k lowest ids can
-    all land in one dense region)."""
-    if assign_fn is None:
-        assign_fn = assign_with_dist_exact
-    if init == "kmeans||":
-        centers = kmeans_parallel_init(
-            df, k, id_col, vec_col, seed=seed, assign_fn=assign_fn
-        )
-    elif init == "lowest_id":
-        seeds = (
-            df.orderBy(id_col)
-            .limit(k)
-            .select(F.col(vec_col).cast("array<double>").alias("v"))
-            .collect()
-        )
-        centers = [[float(x) for x in r["v"]] for r in seeds]
-    else:
-        raise ValueError(f"kmeans_fit: unknown init {init!r}")
+    ``vec_col`` names a top-level column; any character is legal in it
+    (the name is backtick-quoted for both the Column API and the means
+    SQL)."""
+    vec = "`" + vec_col.replace("`", "``") + "`"
+    seeds = (
+        df.orderBy(id_col)
+        .limit(k)
+        .select(F.col(vec).cast("array<double>").alias("v"))
+        .collect()
+    )
+    centers = [[float(x) for x in r["v"]] for r in seeds]
     if not centers:
         return centers
     dim = len(centers[0])
@@ -276,7 +256,7 @@ def kmeans_fit(
     # tests/test_kmeans.py::test_means_sql_matches_column_form).
     spark = df.sparkSession
     view = f"__promhouse_kmeans_means_{next(_FIT_VIEW_IDS)}"
-    cast_v = f"CAST(`{vec_col}` AS array<double>)"
+    cast_v = f"CAST({vec} AS array<double>)"
     means_sql = (
         "SELECT centroid_id, "
         + ", ".join(
@@ -286,7 +266,7 @@ def kmeans_fit(
     )
     try:
         for _ in range(iters):
-            assigned = assign_fn(df, centers, vec_col)
+            assigned = assign_with_dist_exact(df, centers, vec)
             assigned.createOrReplaceTempView(view)
             means = spark.sql(means_sql).collect()
             new = [list(c) for c in centers]
@@ -299,175 +279,3 @@ def kmeans_fit(
         spark.catalog.dropTempView(view)
     return centers
 
-
-def assign_with_dist_vectorized(
-    df: DataFrame,
-    centers: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched numpy assignment — the 100 TB serving path for the
-    fitted model. The column-expression fold above is the ORACLE-exact
-    form (sequential float accumulation a SQL engine replays bit-for-bit)
-    but evaluates interpreted at ~1 µs per (row, centroid); this kernel
-    does the same k x dim argmin as one BLAS-shaped batch op per Arrow
-    batch (||v||² - 2 v·Cᵀ + ||c||², then the true squared distance
-    recomputed for the winner only). Measured at sf10 (2M x 8 x 64):
-    0.81 s vs the fold's 7.57 s. Distances can differ from the fold
-    in the last ulp (pairwise vs sequential summation), so near-exact
-    ties may break differently — use the fold when differential
-    verification needs bit-exact assignment (the registered query does);
-    tests/test_kmeans.py pins agreement on real data."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    C = np.asarray(centers, dtype=np.float64)  # k x dim
-    c_sq = (C * C).sum(axis=1)  # k
-
-    schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.IntegerType()),
-            T.StructField("dist", T.DoubleType()),
-        ]
-    )
-
-    def kernel(vecs):
-        V = np.asarray(vecs.tolist(), dtype=np.float64)  # n x dim
-        if V.size == 0:
-            return pd.DataFrame({"centroid_id": [], "dist": []})
-        # rank by the norm trick (monotone in true distance per row)
-        rank = V @ C.T * -2.0 + c_sq  # n x k
-        cid = rank.argmin(axis=1)
-        # ties: argmin already takes the first (smallest cid) occurrence
-        diff = V - C[cid]
-        dist = (diff * diff).sum(axis=1)
-        return pd.DataFrame(
-            {"centroid_id": cid.astype("int32"), "dist": dist}
-        )
-
-    # struct-returning SCALAR pandas UDF (pd.Series -> pd.DataFrame);
-    # built without type hints — the hinted form trips the 4.x signature
-    # inference for struct returns
-    kernel_udf = F.pandas_udf(kernel, returnType=schema)
-    out = df.withColumn(
-        "_a", kernel_udf(F.col(vec_col).cast("array<double>"))
-    )
-    return (
-        out.withColumn("centroid_id", F.col("_a.centroid_id"))
-        .withColumn("dist", F.col("_a.dist"))
-        .drop("_a")
-    )
-
-
-def kmeans_parallel_init(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rounds: int = 3,
-    oversample: int | None = None,
-    seed: int = 42,
-    assign_fn=None,
-) -> list[list[float]]:
-    """k-means|| seeding (Bahmani et al., VLDB 2012 — the public
-    scalable-k-means++ algorithm MLlib also uses): ``rounds`` passes,
-    each sampling every point with probability ``l * d²(x, C) / φ(C)``
-    (l = oversample factor, default 2k), then a weighted k-means++ pass
-    over the ~l·rounds candidates on the driver.
-
-    Distributed shape: each round is ONE assignment pass (map-side
-    argmin over candidate literals) + one scalar agg for φ + a filtered
-    collect whose expected size is l — never the corpus. The Bernoulli
-    draw is a hash of (id, seed, round), so sampling is deterministic
-    and partitioning-independent; the driver-side k-means++ uses a
-    seeded generator — the whole init replays bit-identically.
-
-    The deterministic lowest-id init stays the default in
-    :func:`kmeans_fit` (it is what the unrolled SQL oracle replays);
-    this is the production option for skewed corpora, where lowest-id
-    can plant every seed in one dense region."""
-    if assign_fn is None:
-        assign_fn = assign_with_dist
-    l = oversample or 2 * k
-    first = (
-        df.orderBy(id_col)
-        .limit(1)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    if not first:
-        raise ValueError("kmeans_parallel_init: empty input")
-    centers = [[float(x) for x in first[0]["v"]]]
-    for r in range(rounds):
-        assigned = assign_fn(df, centers, vec_col)
-        phi = assigned.agg(F.sum("dist").alias("s")).first()["s"] or 0.0
-        if phi <= 0:
-            break  # all points coincide with a center: nothing to sample
-        draw = (
-            (F.abs(F.xxhash64(F.col(id_col), F.lit(seed), F.lit(r))) % 1_000_000)
-            / 1_000_000.0
-        )
-        cand = (
-            assigned.filter(draw < F.lit(float(l)) * F.col("dist") / F.lit(phi))
-            .select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-            .collect()
-        )
-        # collect order is partitioning-dependent; candidate order feeds
-        # the weighted k-means++ below, so pin it by id
-        cand.sort(key=lambda row: row[id_col])
-        centers.extend([float(x) for x in row["v"]] for row in cand)
-    # weight candidates by the size of their Voronoi cell, then k-means++
-    # over the (small, driver-resident) weighted candidate set
-    assigned = assign_fn(df, centers, vec_col)
-    wrows = assigned.groupBy("centroid_id").count().collect()
-    weights = [0.0] * len(centers)
-    for row in wrows:
-        weights[row["centroid_id"]] = float(row["count"])
-    return _weighted_kmeanspp(centers, weights, k, seed)
-
-
-def _weighted_kmeanspp(
-    cands: list[list[float]], weights: list[float], k: int, seed: int
-) -> list[list[float]]:
-    """Seeded k-means++ over a weighted candidate set (driver-side,
-    O(|cands|·k) — |cands| is the k-means|| oversample, not the corpus)."""
-    import random
-
-    rng = random.Random(seed)
-    if len(cands) <= k:
-        return [list(c) for c in cands]
-
-    def d2(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    total = sum(weights)
-    # first pick: weighted draw
-    x = rng.random() * total
-    acc = 0.0
-    pick = 0
-    for i, w in enumerate(weights):
-        acc += w
-        if x <= acc:
-            pick = i
-            break
-    chosen = [pick]
-    mind = [d2(c, cands[pick]) for c in cands]
-    while len(chosen) < k:
-        scores = [w * d for w, d in zip(weights, mind)]
-        total = sum(scores)
-        if total <= 0:  # fewer than k distinct candidates: pad by weight
-            rest = [i for i in range(len(cands)) if i not in chosen]
-            rest.sort(key=lambda i: -weights[i])
-            chosen.extend(rest[: k - len(chosen)])
-            break
-        x = rng.random() * total
-        acc = 0.0
-        pick = len(cands) - 1
-        for i, s in enumerate(scores):
-            acc += s
-            if x <= acc:
-                pick = i
-                break
-        chosen.append(pick)
-        mind = [min(m, d2(c, cands[pick])) for m, c in zip(mind, cands)]
-    return [list(cands[i]) for i in chosen]

@@ -8,6 +8,11 @@ single scan + top-k — both shapes avoid driver-side loops entirely.
 Vector math uses ``zip_with``/``aggregate`` higher-order functions (JVM-side)
 after casting float32 arrays to double so results are bit-comparable with a
 double-precision oracle.
+
+The IVF, PQ and IVF-PQ indexes have no clustering code of their own: every
+quantizer and codebook is fitted by ``kmeans.kmeans_fit`` and every vector
+is assigned by ``kmeans.assign_with_dist_exact`` — one fit, one
+nearest-centroid kernel, and both are the ones the k-means oracle pins.
 """
 
 from __future__ import annotations
@@ -15,6 +20,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from promhouse_spark.operators.kmeans import assign_with_dist_exact, kmeans_fit
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -159,54 +166,17 @@ def ivf_index(
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ):
-    """IVF coarse quantizer: MLlib k-means over the vectors; every vector is
-    assigned to its nearest centroid's inverted list.
+    """IVF coarse quantizer: :func:`kmeans_fit` over the vectors; every
+    vector is assigned to its nearest centroid's inverted list by
+    :func:`assign_with_dist_exact`.
 
     Returns (assigned_df with a ``centroid_id`` column, list of centroid
     vectors). At 100 TB the model is fit on a sample and assignment is one
     map-side pass; the inverted lists are just a partitioning column — write
     the table ``partitionBy("centroid_id")`` and probes prune partitions."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    data = df.withColumn(
-        "features", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(k=num_centroids, seed=seed, featuresCol="features").fit(data)
-    assigned = (
-        model.transform(data)
-        .withColumnRenamed("prediction", "centroid_id")
-        .drop("features")
-    )
-    # clusterCenters() yields numpy arrays; createDataFrame rejects
-    # numpy.float64 for array<double>, so cast to plain Python floats
-    return assigned, [[float(x) for x in c] for c in model.clusterCenters()]
-
-
-def ivf_ann_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    num_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate top-k: score only the ``nprobe`` inverted lists whose
-    centroids are nearest the query. Recall rises with nprobe
-    (nprobe == num_centroids is exact)."""
-    assigned, centers = ivf_index(df, num_centroids, id_col, vec_col, seed)
-    q = [float(x) for x in query_vec]
-
-    def l2(c):
-        return sum((a - b) ** 2 for a, b in zip(c, q))
-
-    probe = sorted(range(len(centers)), key=lambda i: l2(centers[i]))[:nprobe]
-    candidates = assigned.filter(F.col("centroid_id").isin(probe))
-    return cosine_topk(candidates, query_vec, k, id_col, vec_col)
+    centers = kmeans_fit(df, num_centroids, id_col=id_col, vec_col=vec_col)
+    return assign_with_dist_exact(df, centers, vec_col).drop("dist"), centers
 
 
 def ivf_build(
@@ -215,19 +185,18 @@ def ivf_build(
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> None:
     """Persist an IVF index: the vector table written
     ``partitionBy("centroid_id")`` (one directory per inverted list) plus a
-    tiny centroid sidecar. Build once, probe many — the 100 TB shape, where
-    re-fitting k-means per query (``ivf_ann_topk``) would be absurd.
+    tiny centroid sidecar. Build once, probe many (:func:`ivf_probe`) — the
+    100 TB shape, where re-fitting k-means per query would be absurd.
 
-    At scale: fit the quantizer on a sample (MLlib KMeans already
-    distributes), assignment is one map-side pass, and the partitioned
-    write is the only shuffle. The sidecar is O(num_centroids) — driver-safe
-    by construction.
+    At scale: fit the quantizer on a sample (each Lloyd step is one
+    map-side assignment plus one keyed aggregation), assignment is one
+    map-side pass, and the partitioned write is the only shuffle. The
+    sidecar is O(num_centroids) — driver-safe by construction.
     """
-    assigned, centers = ivf_index(df, num_centroids, id_col, vec_col, seed)
+    assigned, centers = ivf_index(df, num_centroids, id_col, vec_col)
     spark = df.sparkSession
     assigned.write.partitionBy("centroid_id").mode("overwrite").parquet(
         f"{index_path}/vectors"
@@ -239,57 +208,6 @@ def ivf_build(
     centers_df.coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 
-def ivf_assign(
-    df: DataFrame,
-    centers: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its nearest (L2) centroid WITHOUT MLlib — a
-    pure column expression (transform over the centroid literal array +
-    array_min on (distance, cid) structs), so assignment stays inside
-    whole-stage codegen and works in any foreachBatch. Identical to the
-    quantizer's own predictions (k-means assignment IS nearest-centroid;
-    equality asserted in tests)."""
-    v = F.col(vec_col).cast("array<double>")
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("c"),
-            )
-            for i, c in enumerate(centers)
-        ]
-    )
-    dists = F.transform(
-        cent_arr,
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(s["c"], v, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            s["cid"].alias("cid"),
-        ),
-    )
-    return df.withColumn("centroid_id", F.array_min(dists)["cid"])
-
-
-def ivf_assign_vectorized(
-    df: DataFrame,
-    centers: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serving twin of :func:`ivf_assign`: the Arrow-batched numpy argmin
-    (operators/kmeans.py:assign_with_dist_vectorized, measured 9× the
-    interpreted fold at sf10), surfacing only ``centroid_id``. Assignment
-    can differ from the fold only on a near-exact centroid tie (<1e-9
-    relative distance gap) — use :func:`ivf_assign` where a SQL oracle
-    must replay the argmin bit-for-bit (doc_semantic_dups does)."""
-    from promhouse_spark.operators.kmeans import assign_with_dist_vectorized
-
-    return assign_with_dist_vectorized(df, centers, vec_col).drop("dist")
-
-
 def ivf_add(spark, index_path: str, new_df: DataFrame, vec_col: str = "embedding") -> None:
     """Incrementally register vectors into a persisted IVF index: nearest-
     centroid assignment against the FROZEN sidecar (no re-fit — the
@@ -297,9 +215,9 @@ def ivf_add(spark, index_path: str, new_df: DataFrame, vec_col: str = "embedding
     append into the matching inverted-list directories. This is the
     streaming path: drop it in a ``foreachBatch`` and the index grows with
     the corpus; periodic full rebuilds (``ivf_build``) re-balance if the
-    distribution drifts. Assignment uses the vectorized serving kernel
-    (:func:`ivf_assign_vectorized`) — an index append has no SQL-oracle
-    bit-exactness contract, so the 9× kernel is the right default."""
+    distribution drifts. Assignment is :func:`assign_with_dist_exact`, the
+    same kernel the build used, so an appended copy of an indexed vector
+    lands in that vector's list; a NULL embedding lands in list 0."""
     centers_rows = spark.read.parquet(f"{index_path}/centroids").collect()
     centers_map = {r["centroid_id"]: list(r["centroid"]) for r in centers_rows}
     centers = [centers_map[i] for i in range(len(centers_map))]
@@ -309,7 +227,7 @@ def ivf_add(spark, index_path: str, new_df: DataFrame, vec_col: str = "embedding
     existing = spark.read.parquet(f"{index_path}/vectors").schema
     target_type = existing[vec_col].dataType
     new_df = new_df.withColumn(vec_col, F.col(vec_col).cast(target_type))
-    assigned = ivf_assign_vectorized(new_df, centers, vec_col)
+    assigned = assign_with_dist_exact(new_df, centers, vec_col).drop("dist")
     assigned.write.partitionBy("centroid_id").mode("append").parquet(
         f"{index_path}/vectors"
     )
@@ -362,7 +280,6 @@ def ivf_rebuild(
     num_centroids: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     target_path: str | None = None,
 ) -> None:
     """Refit the coarse quantizer over the CURRENT contents of a persisted
@@ -380,7 +297,7 @@ def ivf_rebuild(
     if target_path is None:
         vectors = vectors.localCheckpoint(eager=True)
         target_path = index_path
-    ivf_build(vectors, target_path, num_centroids, id_col, vec_col, seed)
+    ivf_build(vectors, target_path, num_centroids, id_col, vec_col)
 
 
 def ivf_probe(
@@ -479,7 +396,6 @@ def pq_build(
     k: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> None:
     """Build a product-quantization index: split each L2-normalized vector
     into ``m`` contiguous subspaces, k-means each subspace into ``k``
@@ -487,32 +403,55 @@ def pq_build(
 
     64-dim float32 → 8 bytes/vector (m=8): a 32× memory cut, which is what
     makes billion-vector ANN fit a cluster's RAM at 100 TB corpus scale.
-    Fits are per-subspace (``m`` MLlib jobs over a narrow projection; on a
-    real corpus, over a sample); encoding is one distributed pass. The
-    codebook sidecar is O(m·k·d/m) — driver-trivial."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    Fits are per-subspace (``m`` :func:`kmeans_fit` runs over a narrow
+    projection; on a real corpus, over a sample); encoding is one
+    distributed pass. The codebook sidecar is O(m·k·d/m) — driver-trivial."""
+    sub = _subspace_width(df, vec_col, m)
+    norm = _l2_normalized(df, vec_col).select(id_col, "__nvec")
+    encoded, codebooks = _pq_encode(norm, "__nvec", m, sub, k, id_col)
+    encoded.select(id_col, "codes").write.mode("overwrite").parquet(
+        f"{index_path}/codes"
+    )
+    _write_codebook(df.sparkSession, codebooks, index_path)
 
-    spark = df.sparkSession
+
+def _subspace_width(df: DataFrame, vec_col: str, m: int) -> int:
     dim = len(df.select(vec_col).first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    norm = _l2_normalized(df, vec_col)
-    codebooks: list[list[list[float]]] = []
-    encoded = norm
-    for j in range(m):
-        piece = F.slice(F.col("__nvec"), j * sub + 1, sub).cast("array<double>")
-        data = encoded.withColumn("__feat", array_to_vector(piece))
-        model = KMeans(
-            k=k, seed=seed + j, featuresCol="__feat", predictionCol=f"__c{j}"
-        ).fit(data)
-        encoded = model.transform(data).drop("__feat")
-        codebooks.append([[float(x) for x in c] for c in model.clusterCenters()])
-    codes = encoded.select(
-        id_col, F.array(*[F.col(f"__c{j}") for j in range(m)]).alias("codes")
+    return dim // m
+
+
+def _pq_encode(
+    df: DataFrame, src: str, m: int, sub: int, k: int, id_col: str
+) -> tuple[DataFrame, list[list[list[float]]]]:
+    """Fit one ``k``-centroid codebook per ``sub``-wide slice of ``src``
+    with :func:`kmeans_fit`, and encode every row as its ``m``
+    nearest-codeword ids (array column ``codes``, the other input
+    columns kept). The slices are checkpointed once: the m fits and the
+    encode pass all read them, and re-deriving them (normalization,
+    residuals, a coarse assignment) per Lloyd step would repeat that
+    work ~5·m times."""
+    slices = [f"__s{j}" for j in range(m)]
+    subs = df.select(
+        "*", *[F.slice(src, j * sub + 1, sub).alias(s) for j, s in enumerate(slices)]
+    ).localCheckpoint(eager=True)
+    codebooks = [kmeans_fit(subs, k, id_col=id_col, vec_col=s) for s in slices]
+    encoded = subs
+    for j, (s, cb) in enumerate(zip(slices, codebooks)):
+        encoded = assign_with_dist_exact(encoded, cb, s).withColumnRenamed(
+            "centroid_id", f"__c{j}"
+        )
+    codes = F.array(*[F.col(f"__c{j}") for j in range(m)])
+    return (
+        encoded.withColumn("codes", codes).drop(
+            "dist", src, *slices, *[f"__c{j}" for j in range(m)]
+        ),
+        codebooks,
     )
-    codes.write.mode("overwrite").parquet(f"{index_path}/codes")
+
+
+def _write_codebook(spark, codebooks, index_path: str) -> None:
     spark.createDataFrame(
         [(j, c, cb) for j, cb_j in enumerate(codebooks) for c, cb in enumerate(cb_j)],
         "subspace int, code int, centroid array<double>",
@@ -591,7 +530,6 @@ def ivfpq_build(
     k: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> None:
     """The composed billion-scale shape (FAISS IVFx,PQy): a coarse k-means
     assigns every L2-normalized vector to an inverted list (partition
@@ -600,44 +538,24 @@ def ivfpq_build(
     codes quantize finer). On disk: codes partitioned by centroid, one
     codebook, one centroid sidecar — probe cost is nprobe directories of
     8-byte codes plus a shortlist-sized exact rerank."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     spark = df.sparkSession
-    dim = len(df.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-
-    norm = _l2_normalized(df, vec_col)
-    data = norm.withColumn("__feat", array_to_vector(F.col("__nvec")))
-    coarse = KMeans(
-        k=num_centroids, seed=seed, featuresCol="__feat", predictionCol="centroid_id"
-    ).fit(data)
-    assigned = coarse.transform(data).drop("__feat")
-    centers = [[float(x) for x in c] for c in coarse.clusterCenters()]
+    sub = _subspace_width(df, vec_col, m)
+    norm = _l2_normalized(df, vec_col).select(id_col, "__nvec")
+    assigned, centers = ivf_index(norm, num_centroids, id_col, "__nvec")
     cent_lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in centers])
     resid = F.zip_with(
         F.col("__nvec"),
         F.element_at(cent_lit, F.col("centroid_id") + 1),
         lambda a, b: a - b,
     )
-    encoded = assigned.withColumn("__resid", resid)
-
-    codebooks: list[list[list[float]]] = []
-    for j in range(m):
-        piece = F.slice(F.col("__resid"), j * sub + 1, sub)
-        step = encoded.withColumn("__feat", array_to_vector(piece))
-        model = KMeans(
-            k=k, seed=seed + 1 + j, featuresCol="__feat", predictionCol=f"__c{j}"
-        ).fit(step)
-        encoded = model.transform(step).drop("__feat")
-        codebooks.append([[float(x) for x in c] for c in model.clusterCenters()])
-
+    # the coarse list id rides along as __list: the codeword assignment
+    # writes its own centroid_id column
+    resids = assigned.select(
+        id_col, F.col("centroid_id").alias("__list"), resid.alias("__resid")
+    )
+    encoded, codebooks = _pq_encode(resids, "__resid", m, sub, k, id_col)
     encoded.select(
-        id_col,
-        "centroid_id",
-        F.array(*[F.col(f"__c{j}") for j in range(m)]).alias("codes"),
+        id_col, F.col("__list").alias("centroid_id"), "codes"
     ).write.partitionBy("centroid_id").mode("overwrite").parquet(
         f"{index_path}/codes"
     )
@@ -645,10 +563,7 @@ def ivfpq_build(
         [(i, c) for i, c in enumerate(centers)],
         "centroid_id int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    spark.createDataFrame(
-        [(j, c, cb) for j, cb_j in enumerate(codebooks) for c, cb in enumerate(cb_j)],
-        "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebook")
+    _write_codebook(spark, codebooks, index_path)
 
 
 def ivfpq_probe(

@@ -211,15 +211,17 @@ def main(argv: Sequence[str] | None = None) -> None:
 
     from flask import Flask
 
-    from promhouse_spark.edge.http import create_app, serve
+    from promhouse_spark.edge import http
 
-    app = create_app(
+    # looked up on the module at call time, so a wrapper installed on
+    # http.create_app before main() runs wraps the one app served here
+    app = http.create_app(
         storage, rule_groups=rule_groups, enable_admin=args.enable_admin
     )
     debug = Flask("promhouse-debug")
     debug.add_url_rule("/healthz", "healthz", lambda: ("ok\n", 200))
-    # the debug server re-exports the API app's metrics endpoint, like the
-    # reference's separate debug listener
+    # the debug server re-exports the served API app's metrics endpoint,
+    # like the reference's separate debug listener
     debug.add_url_rule(
         "/metrics",
         "metrics",
@@ -230,7 +232,7 @@ def main(argv: Sequence[str] | None = None) -> None:
         target=lambda: debug.run(host=dh, port=dp, threaded=True), daemon=True
     ).start()
     ph, pp = parse_addr(args.listen_prom_addr)
-    serve(storage, host=ph, port=pp, rule_groups=rule_groups)
+    app.run(host=ph, port=pp, threaded=True)
 
 
 if __name__ == "__main__":

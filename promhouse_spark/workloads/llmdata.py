@@ -469,9 +469,9 @@ def emb_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN served from the PERSISTED index (build once per session via
     ``ivf_build``, then every query is an ``ivf_probe`` that scans only the
     nprobe nearest centroid partitions — directory pruning, the 100 TB
-    serving shape). Same seed ⇒ identical quantizer ⇒ identical result to
-    the fit-per-call ``ivf_ann_topk`` (equivalence asserted in
-    tests/test_recall.py). nprobe=10 of 16 lists — the driver's embeddings
+    serving shape). The quantizer is the deterministic lowest-id-init
+    ``kmeans_fit``, so a rebuild over the same corpus reproduces the same
+    index. nprobe=10 of 16 lists — the driver's embeddings
     are near-uniform, so the inverted lists separate weakly and
     recall@10 ≥ 0.8 needs a wide probe; clustered real-world embeddings
     reach the same recall at far lower nprobe."""
@@ -486,7 +486,7 @@ def emb_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.ivf_build(emb, path, num_centroids=16)
         _IVF_INDEX_CACHE[key] = path
     # stage a copy of the index artifacts at the fixed path the DuckDB
-    # oracle reads (the k-means fit isn't SQL-expressible, but probe
+    # oracle reads (the oracle does not replay the k-means fit, but probe
     # selection + list scan + cosine top-k over the persisted index ARE —
     # the oracle replays them from these exact tables), then probe from
     # the staged copy so query and oracle read identical bytes. The copy

@@ -211,7 +211,7 @@ def emb_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.pq_build(emb, path, m=8, k=16)
         _PQ_INDEX_CACHE[key] = path
     # stage the codes + codebook at the fixed path the DuckDB oracle reads
-    # (the per-subspace k-means fits aren't SQL-expressible; the ADC scan,
+    # (the oracle does not replay the per-subspace k-means fits; the ADC scan,
     # shortlist, and exact rerank over the persisted tables are), and probe
     # from the staged copy so query and oracle read identical bytes
     spark.read.parquet(f"{path}/codes").write.mode("overwrite").parquet(

@@ -112,14 +112,15 @@ _CENTROIDS_STAGE = "/tmp/promhouse_oracle_staging/semantic_centroids.parquet"
 
 def doc_semantic_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic near-dup pairs over the embeddings corpus
-    (operators/dedup.py:semantic_dedup_pairs_staged): MLlib k-means coarse
-    quantizer as the label-free blocking stage, exact cosine within
-    clusters only. Threshold 0.4 is corpus-relative: the synthetic
-    embeddings are near-uniform with a ~0.51 cosine ceiling (no natural
-    near-identical pairs), so 0.4 surfaces the true top of the similarity
-    distribution — production corpora use 0.95+.
+    (operators/dedup.py:semantic_dedup_pairs_staged): the IVF k-means
+    coarse quantizer (operators/kmeans.py:kmeans_fit) as the label-free
+    blocking stage, exact cosine within clusters only. Threshold 0.4 is
+    corpus-relative: the synthetic embeddings are near-uniform with a
+    ~0.51 cosine ceiling (no natural near-identical pairs), so 0.4
+    surfaces the true top of the similarity distribution — production
+    corpora use 0.95+.
 
-    HASH-PAIRED despite the non-SQL-expressible k-means fit: the query
+    HASH-PAIRED without unrolling the k-means fit in SQL: the query
     persists the fitted centroids to a staging parquet and assigns
     vectors by explicit argmin arithmetic, so the DuckDB oracle replays
     assignment + intra-cluster cosine over the SAME centroid table (the

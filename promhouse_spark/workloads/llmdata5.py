@@ -337,22 +337,21 @@ ORACLES["emb_kmeans_topics"] = _kmeans_oracle_sql()
 
 def emb_kmeans_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serving-path twin of emb_kmeans_topics: same oracle-exact Lloyd
-    fit, but the corpus-wide assignment pass runs through the
-    Arrow-batched numpy kernel (assign_with_dist_vectorized — the 100 TB
-    scoring path, measured 9× the interpreted fold at sf10). Output is
-    the per-cluster profile (size, mean/max distance) a corpus-mixing
-    stage consumes. The DuckDB oracle replays the fit and aggregates the
-    exact sequential-fold assignment — the hash match certifies the
-    vectorized kernel agrees with the bit-exact argmin on real data,
-    under the driver's independent gate rather than only in pytest."""
+    fit and the same Arrow-batched assignment kernel
+    (assign_with_dist_exact), aggregated into the per-cluster profile
+    (size, mean/max distance) a corpus-mixing stage consumes. The DuckDB
+    oracle replays the fit and aggregates the exact sequential-fold
+    assignment — the hash match certifies the kernel agrees with the
+    bit-exact argmin on real data, under the driver's independent gate
+    rather than only in pytest."""
     from promhouse_spark.operators.kmeans import (
-        assign_with_dist_vectorized,
+        assign_with_dist_exact,
         kmeans_fit,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     centers = kmeans_fit(emb, k=_KM_K, iters=_KM_ITERS)
-    assigned = assign_with_dist_vectorized(emb, centers)
+    assigned = assign_with_dist_exact(emb, centers)
     return (
         assigned.groupBy(F.col("centroid_id").alias("cluster_id"))
         .agg(

@@ -50,58 +50,8 @@ def test_fit_is_deterministic_across_partitionings(spark):
     assert f1 == f2
 
 
-def test_vectorized_assign_matches_fold(spark, sf_dir):
-    """The Arrow/numpy serving kernel must agree with the oracle-exact
-    fold on real fitted centroids — distances equal to float tolerance
-    (summation-order ulps only), and the same cluster id EXCEPT when two
-    centroids are a near-exact tie, where the kernel's norm-trick
-    arithmetic may legitimately flip the argmin (its docstring's caveat).
-    A tie flip is accepted only when both engines' distances to the two
-    chosen centroids agree within 1e-9."""
-    import math
-
-    from promhouse_spark.operators.kmeans import assign_with_dist_vectorized
-    from promhouse_spark.session import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centers = kmeans_fit(emb, k=4, iters=2)
-    a = {
-        r["vec_id"]: (r["centroid_id"], r["dist"])
-        for r in assign_with_dist(emb, centers).collect()
-    }
-    b = {
-        r["vec_id"]: (r["centroid_id"], r["dist"])
-        for r in assign_with_dist_vectorized(emb, centers).collect()
-    }
-
-    def sqdist(vec, cid):
-        return sum((x - c) ** 2 for x, c in zip(vec, centers[cid]))
-
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in emb.select("vec_id", "embedding").collect()
-    }
-    assert a.keys() == b.keys()
-    n_tie_flips = 0
-    for k_ in a:
-        assert abs(a[k_][1] - b[k_][1]) < 1e-9, k_
-        if a[k_][0] != b[k_][0]:
-            # allowed only as a genuine tie: exact distances to both
-            # chosen centroids must coincide within tolerance
-            da = sqdist(vecs[k_], a[k_][0])
-            db = sqdist(vecs[k_], b[k_][0])
-            assert math.isclose(da, db, rel_tol=0, abs_tol=1e-9), (
-                k_,
-                a[k_],
-                b[k_],
-            )
-            n_tie_flips += 1
-    # ties must be the exception, not a sign the kernel is broken
-    assert n_tie_flips <= max(1, len(a) // 100)
-
-
-def test_exact_kernel_is_bit_identical_to_fold(spark, sf_dir):
-    """assign_with_dist_exact (the default training kernel since r11)
+def test_exact_kernel_is_bit_identical_to_fold(spark, sf_dir, monkeypatch):
+    """assign_with_dist_exact (the training kernel since r11)
     must be BIT-identical to the column fold — same centroid_id and the
     same double dist for every row (it replays the fold's sequential
     coordinate accumulation, so not even last-ulp drift is allowed) —
@@ -110,7 +60,7 @@ def test_exact_kernel_is_bit_identical_to_fold(spark, sf_dir):
     from promhouse_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centers = kmeans_fit(emb, k=4, iters=2, assign_fn=assign_with_dist)
+    centers = kmeans_fit(emb, k=4, iters=2)
     a = sorted(
         (r["vec_id"], r["centroid_id"], r["dist"])
         for r in assign_with_dist(emb, centers).collect()
@@ -121,10 +71,12 @@ def test_exact_kernel_is_bit_identical_to_fold(spark, sf_dir):
     )
     assert a == b  # exact equality, doubles included
 
-    # fits agree too (trajectory preserved step for step)
-    fold_fit = kmeans_fit(emb, k=4, iters=2, assign_fn=assign_with_dist)
-    exact_fit = kmeans_fit(emb, k=4, iters=2)  # default = exact kernel
-    assert fold_fit == exact_fit
+    # fits agree too (trajectory preserved step for step): the same fit
+    # with the fold swapped in as the training kernel
+    from promhouse_spark.operators import kmeans as K
+
+    monkeypatch.setattr(K, "assign_with_dist_exact", assign_with_dist)
+    assert kmeans_fit(emb, k=4, iters=2) == centers
 
     # exact tie: point (1,0) equidistant from (0,0) and (2,0) → cid 0
     df = spark.createDataFrame(
@@ -144,65 +96,14 @@ def test_exact_kernel_is_bit_identical_to_fold(spark, sf_dir):
     assert ta[2][1] == 0  # the tie broke to the smaller cid
 
 
-def test_fit_with_vectorized_assign_fn_matches_fold_fit(spark):
-    """kmeans_fit(assign_fn=assign_with_dist_vectorized) — the serving-
-    scale fit — lands on the same quantized centroids as the oracle-exact
-    fold on a corpus without near-exact centroid ties."""
-    from promhouse_spark.operators.kmeans import assign_with_dist_vectorized
-
+def test_fit_on_backtick_column_name(spark):
+    """A backtick in the vector column's name is quoted, not a syntax
+    error: the fit equals the same fit on a plainly named column."""
     df = _planted(spark)
-    fold = kmeans_fit(df, k=2, iters=3)
-    fast = kmeans_fit(df, k=2, iters=3, assign_fn=assign_with_dist_vectorized)
-    assert fold == fast
-
-
-def _skewed_planted(spark):
-    """Three far-apart blobs, with ALL of the k lowest ids being the SAME
-    point inside blob A — lowest-id seeding then starts with coincident
-    centers, the smallest-cid tie-break starves the duplicates, and
-    Lloyd can never un-collapse them (empty clusters keep their previous
-    centroid); k-means|| samples by distance mass and escapes."""
-    rows = []
-    for i in range(40):
-        rows.append((i, [0.0, 0.0]))
-    for i in range(20):
-        rows.append((100 + i, [100.0 + (i % 5) * 0.01, 0.0]))
-    for i in range(20):
-        rows.append((200 + i, [0.0, 100.0 + (i % 5) * 0.01]))
-    return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def _inertia(df, centers):
-    return (
-        assign_with_dist(df, centers)
-        .agg(F.sum("dist").alias("s"))
-        .first()["s"]
+    odd = df.withColumnRenamed("embedding", "emb`ed")
+    assert kmeans_fit(odd, k=2, iters=3, vec_col="emb`ed") == kmeans_fit(
+        df, k=2, iters=3
     )
-
-
-def test_kmeans_parallel_init_beats_lowest_id_on_skew(spark):
-    """k-means|| seeding recovers the planted 3-blob partition that
-    lowest-id seeding (all 3 seeds in one blob) cannot: strictly lower
-    inertia AND an exact blob↔cluster bijection."""
-    df = _skewed_planted(spark)
-    low = kmeans_fit(df, k=3, iters=4)
-    par = kmeans_fit(df, k=3, iters=4, init="kmeans||")
-    i_low = _inertia(df, low)
-    i_par = _inertia(df, par)
-    assert i_par < i_low / 10, (i_par, i_low)
-    # exact recovery: each blob maps to exactly one distinct cluster
-    blobs = {}
-    for r in assign_with_dist(df, par).collect():
-        blobs.setdefault(r["vec_id"] // 100, set()).add(r["centroid_id"])
-    assert all(len(v) == 1 for v in blobs.values())
-    assert len({next(iter(v)) for v in blobs.values()}) == 3
-
-
-def test_kmeans_parallel_init_is_deterministic(spark):
-    df = _skewed_planted(spark)
-    a = kmeans_fit(df, k=3, iters=2, init="kmeans||")
-    b = kmeans_fit(df.repartition(7), k=3, iters=2, init="kmeans||")
-    assert a == b
 
 
 def test_exact_kernel_degenerate_inputs_match_fold(spark):

@@ -229,22 +229,45 @@ def test_ngram_jaccard_max_df_skew_guard(corpus):
     assert (1, 3) in pairs_exact and (1, 3) not in pairs_capped
 
 
-def test_ivf_ann_recall(spark):
+def test_ivf_ann_recall(spark, tmp_path):
     import math
 
     rows = [(i, [math.cos(i / 25.0), math.sin(i / 25.0), ((i * 37) % 100) / 100.0])
             for i in range(1, 400)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = [1.0, 0.1, 0.3]
+    idx = str(tmp_path / "ivf")
+    S.ivf_build(df, idx, num_centroids=8)
     exact = [r["vec_id"] for r in S.cosine_topk(df, q, k=10).collect()]
-    approx = [r["vec_id"] for r in
-              S.ivf_ann_topk(df, q, k=10, num_centroids=8, nprobe=3).collect()]
+    approx = [r["vec_id"] for r in S.ivf_probe(spark, idx, q, k=10, nprobe=3).collect()]
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.5, f"IVF recall too low: {recall} (exact={exact}, approx={approx})"
     # full probe == exact
-    full = [r["vec_id"] for r in
-            S.ivf_ann_topk(df, q, k=10, num_centroids=8, nprobe=8).collect()]
+    full = [r["vec_id"] for r in S.ivf_probe(spark, idx, q, k=10, nprobe=8).collect()]
     assert full == exact
+
+
+def test_ivf_add_null_embedding_lands_in_list_zero(spark, tmp_path):
+    """A NULL embedding in an ivf_add batch appends without raising; the
+    exact kernel assigns it like the reference fold does, to list 0."""
+    rows = [(i, [float(i % 7), float(i % 5)]) for i in range(40)]
+    idx = str(tmp_path / "ivf-null")
+    S.ivf_build(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        idx,
+        num_centroids=4,
+    )
+    S.ivf_add(
+        spark,
+        idx,
+        spark.createDataFrame(
+            [(100, None), (101, [6.0, 4.0])], "vec_id long, embedding array<double>"
+        ),
+    )
+    vecs = spark.read.parquet(f"{idx}/vectors")
+    assert vecs.count() == 42
+    got = {r["vec_id"]: r["centroid_id"] for r in vecs.filter("vec_id >= 100").collect()}
+    assert got[100] == 0
 
 
 def test_multimodal_features_match_independent_python(spark, sf_dir):
@@ -557,6 +580,60 @@ def test_jaccard_bitmask_gates(spark):
     zero = D.ngram_jaccard_pairs(df, group_col="source", threshold=0.0)
     pairs = {(r["doc_a"], r["doc_b"]) for r in zero.collect()}
     assert (1, 5) not in pairs  # no shared token → absent, token-join semantics
+
+
+def test_jaccard_bitmask_64_token_vocabulary(spark):
+    """A vocabulary of exactly 64 tokens passes the bitmask gate, and the
+    token at bit 63 (the sign bit of a long) must not overflow: the pair
+    set and doubles equal the token join's."""
+    vocab = [f"w{j}" for j in range(64)]
+    rows = [
+        (i, " ".join(vocab[(i * 5 + j) % 64] for j in range(12)), "s")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    assert len(D._small_vocabulary(df, "text", 64)) == 64
+
+    def pairs(bitmask):
+        return sorted(
+            map(
+                tuple,
+                D.ngram_jaccard_pairs(
+                    df, group_col="source", threshold=0.3, bitmask=bitmask
+                ).collect(),
+            )
+        )
+
+    plain = pairs(False)
+    assert plain  # a 0-row match certifies nothing
+    assert pairs(True) == plain
+
+
+def test_jaccard_bitmask_forced_rejects_max_df(spark, corpus):
+    with pytest.raises(ValueError, match="max_df"):
+        D.ngram_jaccard_pairs(corpus, threshold=0.5, max_df=0.5, bitmask=True)
+
+
+def test_jaccard_bitmask_forced_rejects_nonpositive_threshold(spark, corpus):
+    for thr in (0.0, -0.1):
+        with pytest.raises(ValueError, match="threshold > 0"):
+            D.ngram_jaccard_pairs(corpus, threshold=thr, bitmask=True)
+
+
+def test_jaccard_bitmask_missing_token_is_null_not_ansi_error(spark):
+    """A token absent from the token→bit map gives a NULL mask (no pair)
+    instead of an ANSI map-key error."""
+    df = spark.createDataFrame(
+        [(1, "a b", "s"), (2, "a b", "s"), (3, "a zz", "s")],
+        "doc_id long, text string, source string",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = D._jaccard_bitmask(df, "doc_id", "text", "source", 0.5, ["a", "b"]).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in got] == [(1, 2, 1.0)]
 
 
 def _zipf_corpus(spark, n_docs=120, vocab=400, seed=3):

@@ -66,18 +66,6 @@ def test_lsh_ann_recall(emb, query_vec, exact_top10):
     assert recall >= 0.8, f"LSH recall@10 {recall} < 0.8 (exact={exact_top10}, got={got})"
 
 
-def test_ivf_ann_recall(emb, query_vec, exact_top10):
-    got = [
-        r["vec_id"]
-        for r in S.ivf_ann_topk(
-            emb, query_vec, k=10, num_centroids=16, nprobe=10
-        ).collect()
-    ]
-    assert len(got) == 10
-    recall = len(set(exact_top10) & set(got)) / 10
-    assert recall >= 0.8, f"IVF recall@10 {recall} < 0.8 (exact={exact_top10}, got={got})"
-
-
 def test_simhash_band_completeness(docs):
     """The banded join must find EVERY pair within the hamming radius: compare
     against brute-force all-pairs hamming over the collected fingerprints
@@ -152,10 +140,9 @@ def test_lsh_probe_order_is_margin_sorted():
 
 
 def test_ivf_persisted_index_prunes_partitions(spark, emb, query_vec, exact_top10, tmp_path):
-    """Build/probe split: the probe scans only the nprobe nearest inverted
-    lists (centroid_id is a partition column -> directory pruning), and the
-    persisted probe returns the same result as the fit-per-call query at the
-    same nprobe."""
+    """Build/probe split: the persisted probe reaches recall@10 >= 0.8 at
+    nprobe=10 of 16, and scans only the nprobe nearest inverted lists
+    (centroid_id is a partition column -> directory pruning)."""
     from pyspark.sql import functions as F
 
     idx = str(tmp_path / "ivf")
@@ -163,8 +150,9 @@ def test_ivf_persisted_index_prunes_partitions(spark, emb, query_vec, exact_top1
 
     probed = S.ivf_probe(spark, idx, query_vec, k=10, nprobe=10)
     got = [r["vec_id"] for r in probed.collect()]
+    assert len(got) == 10
     recall = len(set(exact_top10) & set(got)) / 10
-    assert recall >= 0.8
+    assert recall >= 0.8, f"IVF recall@10 {recall} < 0.8 (exact={exact_top10}, got={got})"
 
     # the executed scan must touch files from exactly <= nprobe partitions
     centers = {
@@ -185,15 +173,13 @@ def test_ivf_persisted_index_prunes_partitions(spark, emb, query_vec, exact_top1
     assert all(d.startswith("centroid_id=") for d in dirs)
     assert {int(d.split("=")[1]) for d in dirs} <= set(probe)
 
-    # equivalence with the fit-per-call path (same seed -> same quantizer)
-    inline = [r["vec_id"] for r in S.ivf_ann_topk(emb, query_vec, k=10, num_centroids=16, nprobe=10).collect()]
-    assert got == inline
 
+def test_fold_assignment_matches_built_lists(spark, emb, tmp_path):
+    """The reference column fold (kmeans.assign_with_dist, what a SQL
+    engine replays) must put every vector in the inverted list the build
+    wrote it to — both are L2-argmin over the same frozen centroids."""
+    from promhouse_spark.operators.kmeans import assign_with_dist
 
-def test_ivf_assign_matches_quantizer(spark, emb, tmp_path):
-    """Expression-based nearest-centroid assignment (ivf_assign) must agree
-    with the quantizer's own k-means predictions for every vector — both
-    are L2-argmin over the same frozen centroids."""
     idx = str(tmp_path / "ivf-assign")
     S.ivf_build(emb, idx, num_centroids=16)
     centers_map = {
@@ -207,7 +193,7 @@ def test_ivf_assign_matches_quantizer(spark, emb, tmp_path):
     }
     recomputed = {
         r["vec_id"]: r["centroid_id"]
-        for r in S.ivf_assign(emb, centers).collect()
+        for r in assign_with_dist(emb, centers).collect()
     }
     assert recomputed == built
 

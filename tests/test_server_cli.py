@@ -128,6 +128,57 @@ def test_server_end_to_end_memory_backend():
     assert m.status_code == 200 and b"promhouse_spark" in m.content
 
 
+def test_server_serves_the_app_main_built():
+    """--web.enable-admin-api reaches the served API, and the debug
+    listener's /metrics counts the requests that API answered."""
+    import requests
+
+    from promhouse_spark.edge.prompb import encode_write_request
+    from promhouse_spark.edge.snappy_codec import compress
+    from promhouse_spark.models import Label, Sample, TimeSeries
+    from promhouse_spark.server import main
+
+    pp, dp = _free_port(), _free_port()
+    threading.Thread(
+        target=main,
+        args=(
+            [
+                "--storage-type", "memory",
+                "--listen-prom-addr", f"127.0.0.1:{pp}",
+                "--listen-debug-addr", f"127.0.0.1:{dp}",
+                "--web.enable-admin-api",
+                "--log.level", "warning",
+            ],
+        ),
+        daemon=True,
+    ).start()
+    base, dbg = f"http://127.0.0.1:{pp}", f"http://127.0.0.1:{dp}"
+    deadline = time.monotonic() + 60
+    while True:
+        try:
+            flags = requests.get(f"{base}/api/v1/status/flags", timeout=5).json()
+            assert requests.get(f"{dbg}/healthz", timeout=5).text == "ok\n"
+            break
+        except requests.RequestException:
+            if time.monotonic() > deadline:
+                raise
+            time.sleep(0.1)
+    assert flags["data"]["web.enable-admin-api"] == "true"
+
+    payload = compress(
+        encode_write_request(
+            [TimeSeries([Label("__name__", "up")], [Sample(1.0, 1767225600000)])]
+        )
+    )
+    assert requests.post(f"{base}/write", data=payload, timeout=5).status_code == 200
+    metrics = requests.get(f"{dbg}/metrics", timeout=5).text
+    samples = [
+        line for line in metrics.splitlines()
+        if line.startswith("promhouse_spark_written_samples ")
+    ]
+    assert samples and float(samples[0].split()[1]) == 1.0, metrics
+
+
 def test_load_rule_groups_yaml_and_check(tmp_path, capsys):
     """--rules-file loads Prometheus-shaped YAML with per-rule expression
     validation; --check-rules is the promtool-check workflow."""
