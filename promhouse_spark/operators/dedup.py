@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from promhouse_spark.session import materialize_tier
+
 # MinHash parameter field: h32 in [0, 2^32); a·h+b stays < 2^63 (no overflow),
 # reduced mod a prime > 2^32.
 _MH_PRIME = 4294967311  # smallest prime > 2^32
@@ -375,7 +377,7 @@ def simhash_near_duplicates(
     any pair within distance ``max_hamming`` agrees on at least one whole
     band — so band count scales with the requested radius (k=3 → the classic
     4×16-bit split) and recall stays complete, never all-to-all."""
-    fps = simhash(df, id_col, text_col, shingle_n).cache()
+    fps = materialize_tier(simhash(df, id_col, text_col, shingle_n))
     return simhash_pairs_from_fingerprints(fps, id_col, max_hamming)
 
 

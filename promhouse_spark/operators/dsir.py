@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from promhouse_spark.session import materialize_tier
+
 
 def feature_buckets(text: Column | str, n_buckets: int = 64) -> Column:
     """Hashed unigram+bigram feature stream of a text column: an array of
@@ -59,79 +61,6 @@ def feature_buckets(text: Column | str, n_buckets: int = 64) -> Column:
             + F.length(x)
         )
         % n_buckets,
-    )
-
-
-def bucket_log_ratios(
-    target: DataFrame,
-    raw: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """(bucket, log_ratio): add-one-smoothed log(P_target / P_raw) per
-    feature bucket. Exactly ``n_buckets`` rows — broadcast-sized index
-    metadata, never fact data."""
-    spark = target.sparkSession
-
-    def hist(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(
-                F.explode(feature_buckets(text_col, n_buckets)).alias("bucket")
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    domain = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    t = hist(target, "t_cnt")
-    r = hist(raw, "r_cnt")
-    joined = (
-        domain.join(t, "bucket", "left")
-        .join(r, "bucket", "left")
-        .na.fill({"t_cnt": 0, "r_cnt": 0})
-    )
-    # the two corpus totals are bounded index metadata (2 longs), like the
-    # ANN centroid collects: pull them eagerly and fold in as literals so
-    # the 64-row ratio frame needs no unpartitioned window / cross join
-    joined = joined.cache()
-    totals = joined.agg(
-        F.sum("t_cnt").alias("t"), F.sum("r_cnt").alias("r")
-    ).first()
-    out = joined.select(
-        "bucket",
-        (
-            F.log((F.col("t_cnt") + 1) / F.lit(float(totals["t"] + n_buckets)))
-            - F.log((F.col("r_cnt") + 1) / F.lit(float(totals["r"] + n_buckets)))
-        ).alias("log_ratio"),
-    )
-    return out
-
-
-def dsir_weights(
-    raw: DataFrame,
-    log_ratios: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Per-document DSIR importance log-weight: sum over the document's
-    feature buckets of count * log_ratio. ``log_ratios`` (n_buckets rows)
-    joins broadcast; the only shuffle is the per-doc aggregation."""
-    per_doc = (
-        raw.select(
-            id_col,
-            F.explode(feature_buckets(text_col, n_buckets)).alias("bucket"),
-        )
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return (
-        per_doc.join(F.broadcast(log_ratios), "bucket")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("n_feats"),
-            F.sum(F.col("cnt") * F.col("log_ratio")).alias("weight"),
-        )
     )
 
 
@@ -169,19 +98,21 @@ def dsir_select(
     n_buckets: int = 64,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """The whole DSIR pipeline off ONE featurization pass.
+    """The whole DSIR pipeline off ONE featurization pass: add-one-smoothed
+    per-bucket log(P_target / P_raw) over the ``is_target`` rows vs all
+    rows, each document's importance log-weight (sum of count ·
+    log_ratio over its feature buckets), then :func:`gumbel_keep`.
 
-    The composable trio (bucket_log_ratios → dsir_weights → gumbel_keep)
-    featurizes the corpus three times — two histogram passes plus the
-    scoring pass. At bench scale that is the entire cost (the explode is
-    ~100x every downstream aggregation; measured 3x end-to-end at sf10),
+    Featurizing separately for the target histogram, the raw histogram
+    and the scoring pass would scan the corpus three times; the explode is
+    ~100x every downstream aggregation (measured 3x end-to-end at sf10),
     and at 100 TB three corpus scans instead of one is disqualifying.
-    Here the per-(doc, bucket) count frame is built once and persisted;
-    both histograms are 64-row re-aggregations of it, the two corpus
-    totals come from one bounded collect, and scoring reuses the same
-    frame through a broadcast join. Identical arithmetic to the trio —
-    the DuckDB oracle is unchanged."""
-    per_doc = (
+    Here the per-(doc, bucket) count frame is materialized once; both
+    histograms are 64-row re-aggregations of it (broadcast-sized index
+    metadata, never fact data), the two corpus totals come from one
+    bounded collect, and scoring reuses the same frame through a
+    broadcast join."""
+    per_doc = materialize_tier(
         raw.select(
             id_col,
             is_target.alias("_is_target"),
@@ -189,7 +120,6 @@ def dsir_select(
         )
         .groupBy(id_col, "_is_target", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     totals = per_doc.agg(
         F.sum(F.when(F.col("_is_target"), F.col("cnt")).otherwise(0)).alias("t"),

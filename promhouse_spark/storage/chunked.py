@@ -130,7 +130,6 @@ class ChunkedParquetStorage(SparkParquetStorage):
             _encode_group, schema=CHUNK_SCHEMA
         )
         chunks.write.partitionBy(DATE).mode("append").parquet(self.chunks_path)
-        self._drop_recent_cache()
 
     # ----------------------------------------------------------------- read
 
@@ -610,7 +609,6 @@ class ChunkedParquetStorage(SparkParquetStorage):
         fs.rename(self.spark, self.chunks_path, old)
         fs.rename(self.spark, tmp, self.chunks_path)
         fs.delete(self.spark, old)
-        self._drop_recent_cache()
 
     def _compact_hist_chunks(self, files_per_day: int = 1) -> None:
         """Merge the overlapping histogram mini-chunks micro-batch

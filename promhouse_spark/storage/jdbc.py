@@ -181,7 +181,6 @@ class JdbcStorage(SparkParquetStorage):
             .mode("append")
             .save()
         )
-        self._drop_recent_cache()
 
     def compact_samples(self, files_per_day: int = 1) -> None:
         """No-op: table maintenance belongs to the database (ClickHouse's

@@ -417,16 +417,6 @@ class SparkParquetStorage(Storage):
             .mode("append")
             .parquet(self.samples_path)
         )
-        self._drop_recent_cache()
-
-    def _drop_recent_cache(self) -> None:
-        """A pinned recent-window cache is a snapshot — drop it after any
-        mutation so reads keep read-your-own-writes; deployments re-pin on a
-        timer."""
-        cache = getattr(self, "_recent_cache", None)
-        if cache is not None:
-            cache.unpersist()
-            self._recent_cache = None
 
     def compact_samples(self, files_per_day: int = 1) -> None:
         """Rewrite the fact table with consolidated, fully-clustered files —
@@ -471,7 +461,6 @@ class SparkParquetStorage(Storage):
         fs.rename(self.spark, self.samples_path, old)
         fs.rename(self.spark, tmp, self.samples_path)
         fs.delete(self.spark, old)
-        self._drop_recent_cache()
 
     def retention_sweep(
         self, keep_days: int, now_ms: int | None = None
@@ -513,8 +502,6 @@ class SparkParquetStorage(Storage):
                 if part_date < cutoff:
                     fs.delete(self.spark, os.path.join(root, name))
                     dropped.append(name)
-        if dropped:
-            self._drop_recent_cache()
         return dropped
 
     def _date_partitioned_tiers(self) -> tuple[str, ...]:
@@ -554,7 +541,6 @@ class SparkParquetStorage(Storage):
         n = matched.count()
         if n:
             t.coalesce(1).write.mode("append").parquet(self.tombstones_path)
-            self._drop_recent_cache()
         return n
 
     def clean_tombstones(self, files_per_day: int = 1) -> dict[str, int]:
@@ -651,7 +637,6 @@ class SparkParquetStorage(Storage):
                 fs.delete(self.spark, root)
             rewritten[os.path.basename(root)] = len(affected)
         fs.delete(self.spark, self.tombstones_path)
-        self._drop_recent_cache()
         return rewritten
 
     def snapshot(self, name: str | None = None) -> str:
@@ -923,16 +908,8 @@ class SparkParquetStorage(Storage):
             ]
 
         results: list[list[TimeSeries]] = []
-        cold = self.samples_df()
-        recent = getattr(self, "_recent_cache", None)
-        recent_start = getattr(self, "_recent_start_ms", None)
+        samples = self.samples_df()
         for q in queries:
-            # serve fully-recent windows from the pinned cache (risk-7 path)
-            samples = (
-                recent
-                if recent is not None and recent_start is not None and q.start_ms >= recent_start
-                else cold
-            )
             if self.cache_registry:
                 fps = self._resolve_fingerprints(q)
                 if not fps:  # O3 short-circuit (clickhouse.go:405-407)
@@ -1035,24 +1012,6 @@ class SparkParquetStorage(Storage):
             yield hist_only(hseries[hi])
             hi += 1
 
-    def cache_recent(self, days: int = 2) -> None:
-        """Pin the hottest day partitions in executor memory (SURVEY §7 risk
-        7: remote-read is latency-sensitive; Prometheus mostly reads the
-        recent window). Reads hit the cached partitions without touching
-        parquet; older windows still scan (and partition-prune) normally."""
-        samples = self.samples_df()
-        if DATE not in samples.columns:
-            return
-        import time as _time
-
-        cutoff_ms = (int(_time.time() * 1000) // 86_400_000 - days) * 86_400_000
-        recent = samples.filter(
-            F.col(DATE) >= F.to_date(F.timestamp_millis(F.lit(cutoff_ms)))
-        ).cache()
-        recent.count()  # materialize
-        self._recent_cache = recent
-        self._recent_start_ms = cutoff_ms
-
     def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
         """One query's restricted fact scan (F2 + J1/J2) — the layout seam:
         the flat tier filters rows; a chunked tier prunes whole chunks by
@@ -1067,9 +1026,7 @@ class SparkParquetStorage(Storage):
         """O1 as a single job: per-query restricted scans, each tagged with
         its slot index, unioned and grouped once. Order preserved; empty
         slots stay empty."""
-        cold = self.samples_df()
-        recent = getattr(self, "_recent_cache", None)
-        recent_start = getattr(self, "_recent_start_ms", None)
+        samples = self.samples_df()
         per_query: list[tuple[int, list[int]]] = []
         branches = []
         for idx, q in enumerate(queries):
@@ -1077,12 +1034,7 @@ class SparkParquetStorage(Storage):
             per_query.append((idx, fps))
             if not fps:
                 continue
-            samples = (
-                recent
-                if recent is not None and recent_start is not None and q.start_ms >= recent_start
-                else None
-            )
-            branch = self._restricted_scan(samples if samples is not None else cold, q, fps).select(
+            branch = self._restricted_scan(samples, q, fps).select(
                 F.lit(idx).alias("qidx"), FINGERPRINT, TIMESTAMP_MS, VALUE
             )
             branches.append(branch)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from promhouse_spark.session import load_table
+from promhouse_spark.session import STAGE_DIR, load_table, stage_once
 
 
 def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,7 +816,7 @@ _HLL_RHO_MAX = 64 - _HLL_P + 1  # 51: all suffix bits zero
 # alpha_m · m² · 2^48 — the fixed-point numerator, embedded as the same
 # literal on both sides so the division sees identical operands.
 _HLL_NUM = 0.7213 / (1 + 1.079 / _HLL_M) * _HLL_M * _HLL_M * _HLL_SCALE
-_HLL_STAGE = "/tmp/promhouse_oracle_staging/hll_hashes.parquet"
+_HLL_STAGE = f"{STAGE_DIR}/hll_hashes.parquet"
 
 
 def ph_cardinality_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,17 +833,15 @@ def ph_cardinality_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction all replay in DuckDB over identical bytes.
     tests/test_llm_ops.py additionally pins a ≤2% relative-error gate
     against exact countDistinct."""
-    from promhouse_spark.workloads.llmdata import _stage
-
     ev = load_table(spark, sf_dir, "events")
-    staged = _stage(
+    staged = stage_once(
+        spark,
+        sf_dir,
+        _HLL_STAGE,
         lambda: ev.select(
             "event_type",
             F.xxhash64(F.col("user_id").cast("string")).alias("h"),
         ).distinct(),
-        _HLL_STAGE,
-        sf_dir,
-        spark,
     )
     w = F.col("h").bitwiseAND(F.lit(_HLL_WMASK))
     rho = F.when(w == 0, F.lit(_HLL_RHO_MAX)).otherwise(
@@ -1345,7 +1343,7 @@ ORACLES.update({"ph_stream_enrich_join": PH_STREAM_ENRICH_SQL})
 
 
 _KMV_K = 64
-_KMV_STAGE = "/tmp/promhouse_oracle_staging/kmv_hashes.parquet"
+_KMV_STAGE = f"{STAGE_DIR}/kmv_hashes.parquet"
 
 
 def ph_cardinality_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1360,17 +1358,15 @@ def ph_cardinality_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays in DuckDB over identical bytes. At 100 TB the sketch is the
     same shape: hash map-side, keep k minima per group (a bounded
     accumulator), estimate from u_k."""
-    from promhouse_spark.workloads.llmdata import _stage
-
     ev = load_table(spark, sf_dir, "events")
-    staged = _stage(
+    staged = stage_once(
+        spark,
+        sf_dir,
+        _KMV_STAGE,
         lambda: ev.select(
             "event_type",
             F.xxhash64(F.col("user_id").cast("string")).alias("h"),
         ).distinct(),
-        _KMV_STAGE,
-        sf_dir,
-        spark,
     )
     u = (F.col("h").cast("double") + F.lit(2.0**63)) / F.lit(2.0**64)
     agg = (

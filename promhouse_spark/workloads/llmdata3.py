@@ -21,7 +21,12 @@ from promhouse_spark.operators import dedup as D
 from promhouse_spark.operators import sampling as SP
 from promhouse_spark.operators import similarity as S
 from promhouse_spark.operators import text as X
-from promhouse_spark.session import load_table, materialize_tier
+from promhouse_spark.session import (
+    STAGE_DIR,
+    load_table,
+    materialize_tier,
+    stage_once,
+)
 
 
 def doc_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,46 +189,26 @@ FROM enriched ORDER BY doc_id
 
 # ---- PQ ANN serving path: sketch-based, rows-only driver check ------------
 
-_PQ_INDEX_CACHE: dict[tuple[str, str], str] = {}
+_PQ_STAGE = f"{STAGE_DIR}/pq_index"
 
 
 def emb_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: ADC scan over 8-byte codes + exact rerank
     of the shortlist (operators/similarity.py:pq_probe). Index built once
-    per (app, corpus) and served from the persisted codes — the
-    billion-vector memory-bound serving shape. Recall and rerank-exactness
-    are gated in tests/test_recall.py."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    per (app, corpus) straight into the fixed path the DuckDB oracle reads
+    (the oracle does not replay the per-subspace k-means fits; the ADC
+    scan, shortlist, and exact rerank over the persisted tables are) and
+    served from the persisted codes — the billion-vector memory-bound
+    serving shape. Recall and rerank-exactness are gated in
+    tests/test_recall.py."""
     from promhouse_spark.workloads.llmdata import _query_vec
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _PQ_INDEX_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="phs-pq-")
-        # long-lived processes cycle SparkSessions: reap the index dir at
-        # interpreter exit so per-application builds can't accumulate
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        S.pq_build(emb, path, m=8, k=16)
-        _PQ_INDEX_CACHE[key] = path
-    # stage the codes + codebook at the fixed path the DuckDB oracle reads
-    # (the oracle does not replay the per-subspace k-means fits; the ADC scan,
-    # shortlist, and exact rerank over the persisted tables are), and probe
-    # from the staged copy so query and oracle read identical bytes
-    spark.read.parquet(f"{path}/codes").write.mode("overwrite").parquet(
-        f"{_PQ_STAGE}/codes"
+    stage_once(
+        spark, sf_dir, _PQ_STAGE, lambda: S.pq_build(emb, _PQ_STAGE, m=8, k=16)
     )
-    spark.read.parquet(f"{path}/codebook").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{_PQ_STAGE}/codebook")
     return S.pq_probe(spark, _PQ_STAGE, emb, _query_vec(spark, sf_dir), topk=10)
 
-
-_PQ_STAGE = "/tmp/promhouse_oracle_staging/pq_index"
 
 EMB_PQ_ANN_SQL = f"""
 WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
@@ -496,13 +481,13 @@ def doc_curation_pipeline2(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = materialize_tier(
         D.remove_repeated_spans(docs, n=8, min_docs=2)
         .select("doc_id", "source", X.scrub_pii("clean_text").alias("text")),
-        durable=True, site="pipeline2_cleaned",
+        site="pipeline2_cleaned",
     )
     model = X.char_ngram_model(cleaned, "text", n=3)
     scored = materialize_tier(
         X.charlm_score(cleaned, model, n=3)
         .join(cleaned.select("doc_id", "source", "text"), "doc_id"),
-        durable=True, site="pipeline2_scored",
+        site="pipeline2_scored",
     )
     thresh = scored.agg(
         F.percentile("avg_nll", F.lit(0.9)).alias("t")
@@ -597,8 +582,7 @@ ORACLES["doc_curation_pipeline2"] = DOC_CURATION2_SQL
 
 # ---- IVF-PQ ANN (round 7): the composed billion-scale shape, hash-paired ---
 
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], str] = {}
-_IVFPQ_STAGE = "/tmp/promhouse_oracle_staging/ivfpq_index"
+_IVFPQ_STAGE = f"{STAGE_DIR}/ivfpq_index"
 _IVFPQ_NPROBE = 8
 
 
@@ -607,31 +591,17 @@ def emb_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted lists, PQ codes on the RESIDUAL v − centroid score them via
     per-centroid LUT folds, shortlist rerank is exact cosine
     (operators/similarity.py:ivfpq_build/ivfpq_probe). HASH-PAIRED via the
-    staged index artifacts: the k-means fits stay Spark-side, but probe
-    selection, residual ADC scoring, the shortlist, and the exact rerank
-    all replay in SQL over the identical centroid/codebook/code tables."""
-    import os
-    import shutil
-    import tempfile
-    import atexit
-
+    index, built once per (app, corpus) straight into the staging path the
+    oracle reads: the k-means fits stay Spark-side, but probe selection,
+    residual ADC scoring, the shortlist, and the exact rerank all replay
+    in SQL over the identical centroid/codebook/code tables."""
     from promhouse_spark.workloads.llmdata import _query_vec
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _IVFPQ_INDEX_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="phs-ivfpq-")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        S.ivfpq_build(emb, path, num_centroids=16, m=8, k=16)
-        _IVFPQ_INDEX_CACHE[key] = path
-    spark.read.parquet(f"{path}/codes").write.partitionBy(
-        "centroid_id"
-    ).mode("overwrite").parquet(f"{_IVFPQ_STAGE}/codes")
-    for side in ("centroids", "codebook"):
-        spark.read.parquet(f"{path}/{side}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{_IVFPQ_STAGE}/{side}")
+    stage_once(
+        spark, sf_dir, _IVFPQ_STAGE,
+        lambda: S.ivfpq_build(emb, _IVFPQ_STAGE, num_centroids=16, m=8, k=16),
+    )
     return S.ivfpq_probe(
         spark, _IVFPQ_STAGE, emb, _query_vec(spark, sf_dir),
         topk=10, nprobe=_IVFPQ_NPROBE,

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from promhouse_spark.session import load_table, materialize_tier
+from promhouse_spark.session import STAGE_DIR, load_table, materialize_tier, stage
 
 _BPE_K = 8
 
@@ -107,7 +107,7 @@ ORACLES = {
 }
 
 
-_CENTROIDS_STAGE = "/tmp/promhouse_oracle_staging/semantic_centroids.parquet"
+_CENTROIDS_STAGE = f"{STAGE_DIR}/semantic_centroids.parquet"
 
 
 def doc_semantic_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,8 +506,16 @@ ORACLES["doc_curation_pipeline3"] = DOC_CURATION3_SQL
 
 # ---- model-based quality scoring (round 7) ---------------------------------
 
-_QM_STAGE = "/tmp/promhouse_oracle_staging/quality_model.parquet"
+_QM_STAGE = f"{STAGE_DIR}/quality_model.parquet"
 _EN_STOP_SQL = "('the','a','of','and','to','in','is')"
+
+
+def _write_quality_model(spark: SparkSession, intercept, weights) -> None:
+    """Write the fitted (intercept, weights) as the (idx, weight) rows the
+    oracles read; idx -1 is the intercept. Rewritten on every run."""
+    spark.createDataFrame(
+        [(-1, intercept)] + list(enumerate(weights)), "idx int, weight double"
+    ).coalesce(1).write.mode("overwrite").parquet(_QM_STAGE)
 
 
 def doc_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,10 +533,7 @@ def doc_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     intercept, weights = train_quality_model(docs)
-    rows = [(-1, intercept)] + [(i, w) for i, w in enumerate(weights)]
-    spark.createDataFrame(rows, "idx int, weight double").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(_QM_STAGE)
+    _write_quality_model(spark, intercept, weights)
     linear, prob = quality_score(intercept, weights)
     return (
         docs.select("source", linear.alias("lin"), prob.alias("p"))
@@ -637,7 +642,7 @@ ORACLES["doc_bpe_tokenize"] = DOC_BPE_TOKENIZE_SQL
 
 # ---- real video frame sampling (round 7) ------------------------------------
 
-_VIDEO_STAGE = "/tmp/promhouse_oracle_staging/video_frames.parquet"
+_VIDEO_STAGE = f"{STAGE_DIR}/video_frames.parquet"
 
 
 def doc_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -659,8 +664,7 @@ def doc_video_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_frame = frames.join(
         docs.select(F.col("doc_id").alias("asset_id"), "source"), "asset_id"
     ).select("asset_id", "source", "frame_idx", "frame_ts_ms", "sum_luma")
-    per_frame.write.mode("overwrite").parquet(_VIDEO_STAGE)
-    staged = spark.read.parquet(_VIDEO_STAGE)
+    staged = stage(per_frame, _VIDEO_STAGE)
     # EXACT integer fixed point throughout: sum_luma is an integer sum of
     # width*height uint8 values, so averages and deltas never leave BIGINT
     # arithmetic and the 1e-6 fixed-point results are engine-bit-identical
@@ -726,7 +730,7 @@ ORACLES["doc_video_motion"] = DOC_VIDEO_MOTION_SQL
 
 # ---- real audio decode pipeline (round 7) ------------------------------------
 
-_AUDIO_STAGE = "/tmp/promhouse_oracle_staging/audio_stats.parquet"
+_AUDIO_STAGE = f"{STAGE_DIR}/audio_stats.parquet"
 
 
 def doc_audio_level(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -748,8 +752,7 @@ def doc_audio_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = M.audio_stats(assets).join(
         docs.select(F.col("doc_id").alias("asset_id"), "source"), "asset_id"
     ).select("asset_id", "source", "n_samples", "sum_abs_dev")
-    stats.write.mode("overwrite").parquet(_AUDIO_STAGE)
-    staged = spark.read.parquet(_AUDIO_STAGE)
+    staged = stage(stats, _AUDIO_STAGE)
     return (
         staged.groupBy("source")
         .agg(
@@ -787,7 +790,7 @@ ORACLES["doc_audio_level"] = DOC_AUDIO_LEVEL_SQL
 
 # ---- curation capstone v4 (round 7) -----------------------------------------
 
-_CAP4_SIG_STAGE = "/tmp/promhouse_oracle_staging/cap4_signatures.parquet"
+_CAP4_SIG_STAGE = f"{STAGE_DIR}/cap4_signatures.parquet"
 
 
 def doc_curation_pipeline4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -812,10 +815,7 @@ def doc_curation_pipeline4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     intercept, weights = train_quality_model(docs)
-    spark.createDataFrame(
-        [(-1, intercept)] + [(i, w) for i, w in enumerate(weights)],
-        "idx int, weight double",
-    ).coalesce(1).write.mode("overwrite").parquet(_QM_STAGE)
+    _write_quality_model(spark, intercept, weights)
     linear, _ = quality_score(intercept, weights)
     # `kept` has four consumers (signature staging, shingle semi-join,
     # the final anti-join, the per-source rollup) and `final` below
@@ -830,12 +830,10 @@ def doc_curation_pipeline4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 100 TB any executor loss kills the job).
     kept = materialize_tier(
         docs.filter(linear >= 0).select("doc_id", "source", "text"),
-        durable=True, site="pipeline4_kept",
+        site="pipeline4_kept",
     )
 
-    sig = D.minhash_signatures(kept)
-    sig.write.mode("overwrite").parquet(_CAP4_SIG_STAGE)
-    staged_sig = spark.read.parquet(_CAP4_SIG_STAGE)
+    staged_sig = stage(D.minhash_signatures(kept), _CAP4_SIG_STAGE)
     cand = D.minhash_lsh_from_signatures(staged_sig).select("doc_a", "doc_b")
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -855,7 +853,7 @@ def doc_curation_pipeline4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drops = ver.select(F.col("doc_b").alias("doc_id")).distinct()
     final = materialize_tier(
-        kept.join(drops, "doc_id", "left_anti"), durable=True, site="pipeline4_final"
+        kept.join(drops, "doc_id", "left_anti"), site="pipeline4_final"
     )
 
     # ONE tokenize of the survivors serves both BPE training and the
@@ -870,8 +868,7 @@ def doc_curation_pipeline4(spark: SparkSession, sf_dir: str) -> DataFrame:
     swf = materialize_tier(
         final.select("source", F.explode(tokens("text")).alias("wd"))
         .groupBy("source", "wd")
-        .agg(F.count("*").cast("long").alias("cnt")),
-        site="pipeline4_swf",
+        .agg(F.count("*").cast("long").alias("cnt"))
     )
     wf = swf.groupBy("wd").agg(F.sum("cnt").cast("long").alias("cnt"))
     _merges, vocab = bpe_train(

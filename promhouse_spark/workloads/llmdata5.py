@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from promhouse_spark.session import load_table
+from promhouse_spark.session import load_table, materialize_tier
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -30,7 +30,7 @@ def doc_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR selection over the documents corpus: target = the English
     subset, raw = everything; output the importance weight, Gumbel noise,
     and keep verdict per document. Plan (operators/dsir.py:dsir_select):
-    ONE featurization pass into a persisted per-(doc, bucket) count
+    ONE featurization pass into a materialized per-(doc, bucket) count
     frame; both 64-row histograms and the broadcast-joined scoring pass
     re-aggregate it — no second corpus scan, no global sort, no
     corpus-sized join."""
@@ -135,13 +135,15 @@ def doc_hashlr_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = hashlr_features(
-        docs,
-        label=_stop_ratio_teacher(),
-        n_buckets=_LR_BUCKETS,
-        ngrams=1,
-        scale=_LR_SCALE,
-    ).cache()
+    feats = materialize_tier(
+        hashlr_features(
+            docs,
+            label=_stop_ratio_teacher(),
+            n_buckets=_LR_BUCKETS,
+            ngrams=1,
+            scale=_LR_SCALE,
+        )
+    )
     bias, weights = hashlr_train(
         feats,
         n_buckets=_LR_BUCKETS,

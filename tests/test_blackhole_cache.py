@@ -1,10 +1,7 @@
-"""Blackhole backend (S14) + recent-window read cache (SURVEY §7 risk 7)."""
+"""Blackhole backend (S14)."""
 
-import time
-
-from promhouse_spark.models import Label, Query, Sample, TimeSeries, make_matchers
+from promhouse_spark.models import Query
 from promhouse_spark.storage.blackhole import BlackholeStorage
-from promhouse_spark.storage.parquet import SparkParquetStorage
 from tests.fixtures import get_data
 
 
@@ -13,28 +10,3 @@ def test_blackhole():
     st.write(get_data())
     assert st.written_series == 3 and st.written_samples == 15
     assert st.read([Query(0, 1, ()), Query(0, 1, ())]) == [[], []]
-
-
-def _now_series(name, offset_ms, value):
-    now = int(time.time() * 1000)
-    return TimeSeries(
-        labels=[Label("__name__", name)],
-        samples=[Sample(value=value, timestamp_ms=now + offset_ms)],
-    ), now
-
-
-def test_cache_recent_serves_and_invalidates(spark, tmp_path):
-    st = SparkParquetStorage(spark, str(tmp_path / "store"))
-    ts, now = _now_series("hot", -1000, 1.0)
-    st.write([ts])
-    st.cache_recent(days=2)
-    assert st._recent_cache is not None
-    q = Query(now - 3_600_000, now + 3_600_000, make_matchers(("__name__", "=", "hot")))
-    [series] = st.read([q])
-    assert len(series) == 1 and series[0].samples[0].value == 1.0
-    # a write must invalidate the snapshot so new samples stay visible
-    ts2, _ = _now_series("hot", -500, 2.0)
-    st.write([ts2])
-    assert getattr(st, "_recent_cache", None) is None
-    [series] = st.read([q])
-    assert sorted(s.value for s in series[0].samples) == [1.0, 2.0]

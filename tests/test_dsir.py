@@ -8,12 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from promhouse_spark.operators.dsir import (
-    bucket_log_ratios,
-    dsir_weights,
-    feature_buckets,
-    gumbel_keep,
-)
+from promhouse_spark.operators.dsir import dsir_select, feature_buckets, gumbel_keep
 
 
 def test_feature_stream_is_unigrams_plus_bigrams(spark):
@@ -38,16 +33,12 @@ def test_planted_target_distribution_scores_higher(spark):
         rows.append((i, target_text, "t"))          # target-like raw docs
         rows.append((100 + i, other_text, "o"))     # off-target raw docs
     raw = spark.createDataFrame(rows, ["doc_id", "text", "kind"])
-    target = raw.filter(F.col("kind") == "t").select("doc_id", "text")
-    lr = bucket_log_ratios(target, raw)
-    assert lr.count() == 64  # full bucket domain, even unseen buckets
-    w = dsir_weights(raw, lr)
-    got = {r["doc_id"]: r["weight"] for r in w.collect()}
+    out = dsir_select(raw, F.col("kind") == "t").collect()
+    got = {r["doc_id"]: r["weight"] for r in out}
     t_w = [got[i] for i in range(20)]
     o_w = [got[100 + i] for i in range(20)]
     assert min(t_w) > max(o_w)  # clean separation on disjoint vocab
-    kept = gumbel_keep(w).filter(F.col("keep")).select("doc_id").collect()
-    kept_ids = {r["doc_id"] for r in kept}
+    kept_ids = {r["doc_id"] for r in out if r["keep"]}
     # selection is ∝ exp(weight): the target-like docs dominate the keeps
     assert len([i for i in kept_ids if i < 100]) > len(
         [i for i in kept_ids if i >= 100]
