@@ -1285,12 +1285,11 @@ def create_app(
 
     @app.get("/api/v1/status/walreplay")
     def status_walreplay():
-        # no WAL tier: ingestion is durable on write (parquet append), so
-        # replay is always instantaneously "done" — the shape clients poll
-        return {
-            "status": "success",
-            "data": {"min": 0, "max": 0, "current": 0, "state": "done"},
-        }
+        # the parquet tier replays its write-ahead log while it is built,
+        # before the server listens; backends without one have nothing
+        status = getattr(storage, "wal_replay_status", None)
+        data = status() if status else {"min": 0, "max": 0, "current": 0, "state": "done"}
+        return {"status": "success", "data": data}
 
     @app.get("/api/v1/notifications")
     def notifications():

@@ -343,6 +343,9 @@ class StoreWriter:
     def write(self, series: Sequence[TimeSeries]) -> None:
         self.storage.write(series)
 
+    def close(self) -> None:
+        self.storage.flush()  # the restore ends with every sample in parquet
+
 
 # --------------------------------------------------------------------- copy
 

@@ -25,8 +25,10 @@ VALUE = "value"
 LABELS = "labels"
 DATE = "date"
 
-# Series registry (dimension). Deduplicated by fingerprint on write
-# (ReplacingMergeTree equivalent: anti-join before append, clickhouse.go:437-447).
+# Series registry (dimension). New series are diffed on write against the
+# hot registry dict (or anti-joined once per flush with the dict off), and
+# readers collapse leftover duplicates: the ReplacingMergeTree equivalent
+# (clickhouse.go:88,437-447).
 TIME_SERIES_SCHEMA = T.StructType(
     [
         T.StructField(DATE, T.DateType(), False),

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import logging
+import signal
 from typing import Sequence
 
 
@@ -232,7 +233,23 @@ def main(argv: Sequence[str] | None = None) -> None:
         target=lambda: debug.run(host=dh, port=dp, threaded=True), daemon=True
     ).start()
     ph, pp = parse_addr(args.listen_prom_addr)
-    app.run(host=ph, port=pp, threaded=True)
+    if threading.current_thread() is threading.main_thread():
+        # clean shutdown writes the head out; a handler installed before
+        # main() (a wrapper's) still runs, after the flush
+        previous = signal.getsignal(signal.SIGTERM)
+
+        def on_sigterm(signum, frame):
+            storage.flush()
+            if callable(previous):
+                previous(signum, frame)
+            raise SystemExit(0)
+
+        signal.signal(signal.SIGTERM, on_sigterm)
+    try:
+        app.run(host=ph, port=pp, threaded=True)
+    except KeyboardInterrupt:
+        pass
+    storage.flush()
 
 
 if __name__ == "__main__":

@@ -22,4 +22,12 @@ class Storage(abc.ABC):
     def write(self, timeseries: Sequence[TimeSeries]) -> None:
         """Append samples; register any new series (append-only, no sample
         dedup — identical (fingerprint, ts) rows are legal, see
-        SURVEY §7 risk 6)."""
+        SURVEY §7 risk 6). A return is the ack: the rows survive a crash
+        of this process. They may still sit in a write-ahead log rather
+        than the tables (see :meth:`flush`); every read of the same
+        instance sees them."""
+
+    def flush(self) -> None:
+        """Move acknowledged rows still held in a write head into the
+        tables, so other readers of the same store see them. A no-op for
+        backends that write through."""

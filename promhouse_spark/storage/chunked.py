@@ -109,11 +109,13 @@ def _decode_chunks(batches: Iterator) -> Iterator:
 
 class ChunkedParquetStorage(SparkParquetStorage):
     def __init__(self, spark: SparkSession, root: str, **kwargs) -> None:
-        super().__init__(spark, root, **kwargs)
+        # set before the base constructor, whose registry reload flushes a
+        # replayed head through this tier's ingest
         self.chunks_path = os.path.join(root, "chunks")
         # native histograms as tsdb/chunkenc histogram chunks (types 2/3)
         # — same at-rest ≡ wire contract as the float chunks tier
         self.hist_chunks_path = os.path.join(root, "hist_chunks")
+        super().__init__(spark, root, **kwargs)
 
     # ---------------------------------------------------------------- write
 
@@ -134,6 +136,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
     # ----------------------------------------------------------------- read
 
     def chunks_df(self) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, self.chunks_path):
             return self.spark.createDataFrame([], CHUNK_SCHEMA)
         return self.spark.read.parquet(self.chunks_path)
@@ -143,6 +146,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         chunk through the Arrow decoder. Correct everywhere the flat frame
         is expected; time-range pushdown happens in :meth:`_restricted_scan`
         instead, where chunk envelopes can prune before decode."""
+        self.flush()
         if not fs.exists(self.spark, self.chunks_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         par = self.spark.sparkContext.defaultParallelism
@@ -182,6 +186,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         ``mapInPandas`` could never push down. Returns a superset of
         [start_ms, end_ms] at chunk granularity; callers apply their own
         exact time predicates."""
+        self.flush()
         if not fs.exists(self.spark, self.chunks_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         lo = max(int(start_ms), -4_000_000_000_000_000)
@@ -314,11 +319,13 @@ class ChunkedParquetStorage(SparkParquetStorage):
     # ------------------------------------------------- histogram chunk tier
 
     def hist_chunks_df(self) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, self.hist_chunks_path):
             return self.spark.createDataFrame([], HIST_CHUNK_SCHEMA)
         return self.spark.read.parquet(self.hist_chunks_path)
 
     def has_histograms(self) -> bool:
+        self.flush()
         return fs.exists(self.spark, self.hist_chunks_path)
 
     def _write_histograms(self, hdf: DataFrame) -> None:
@@ -343,6 +350,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         before the decode barrier."""
         from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
+        self.flush()
         if not fs.exists(self.spark, self.hist_chunks_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         par = self.spark.sparkContext.defaultParallelism
@@ -359,6 +367,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         then the exact row filter applies above the decode."""
         from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
+        self.flush()
         if not fs.exists(self.spark, self.hist_chunks_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         cond = (F.col("max_ms") >= start_ms) & (F.col("min_ms") <= end_ms)
@@ -389,6 +398,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         from promhouse_spark.functions.fingerprint import to_unsigned64
         from promhouse_spark.schemas import LABELS
 
+        self.flush()
         if fs.exists(self.spark, self.tombstones_path):
             return None
         if not fs.exists(self.spark, self.hist_chunks_path):
@@ -446,6 +456,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         """Flat sidecars clean via the inherited rewrite; the chunks tier
         decodes → masks → re-encodes ONLY the day partitions whose chunk
         envelopes intersect a pending tombstone, then the tombstones clear."""
+        self.flush()
         if not fs.exists(self.spark, self.tombstones_path):
             return {}
         t = self.tombstones_df()
@@ -579,6 +590,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         chunks micro-batch ingestion accumulates (the Prometheus head-
         compaction analog). Same offline/single-writer contract as the
         flat tier's compaction."""
+        self.flush()
         self._compact_hist_chunks(files_per_day)
         if not fs.exists(self.spark, self.chunks_path):
             return

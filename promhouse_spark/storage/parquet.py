@@ -3,10 +3,25 @@
 Re-expresses the reference's ClickHouse backend
 (``storages/clickhouse/clickhouse.go``) on Parquet + DataFrames:
 
-- ``time_series`` registry: parquet, deduplicated by fingerprint via
-  anti-join-before-append (the ReplacingMergeTree equivalent,
-  ``clickhouse.go:88,437-447``), plus an in-memory fingerprint→labels dict as
-  the hot cache with read-your-own-writes (``clickhouse.go:51-52,437-447``);
+- write head: ``write()`` runs no Spark job. It fingerprints, diffs the
+  series against the hot dict, appends one fsynced record batch to the
+  local write-ahead log (``<root>/wal/``, ``storage/wal.py``) and to the
+  driver-side head, and acks. ``flush()`` writes the whole head at once:
+  one registry append and one samples append per batch instead of three
+  Spark jobs per request. It runs when
+  the head holds ``HEAD_MAX_SAMPLES`` samples, when its oldest row is
+  ``HEAD_MAX_AGE_S`` old, on demand, and before every read that scans
+  files. So an ack means "fsynced to the local WAL", where the reference
+  acks after its ClickHouse insert commits (``clickhouse.go:450-505``);
+  a restart replays the WAL, and a flush cut short by a crash is
+  re-committed exactly once;
+- ``time_series`` registry: parquet, plus an in-memory fingerprint→labels
+  dict as the hot cache with read-your-own-writes
+  (``clickhouse.go:51-52,437-447``). The dict is the new-series diff;
+  with it off, each flush anti-joins its series against the persisted
+  registry instead. Readers collapse duplicate fingerprints that
+  concurrent writers leave (the ReplacingMergeTree equivalent,
+  ``clickhouse.go:88``);
 - ``samples`` fact table: parquet, append-only, partitioned by day
   (``PARTITION BY toDate(timestamp_ms/1000)``, ``clickhouse.go:100``), rows
   sorted by (fingerprint, timestamp_ms) within files for delta-encoding
@@ -18,19 +33,30 @@ Re-expresses the reference's ClickHouse backend
 - raw-SQL passthrough (``clickhouse.go:372-388``) against the registered
   ``time_series`` / ``samples`` temp views.
 
-Scale notes: all heavy lifting stays in JVM/Tungsten — the only Python-side
-kernel is the FNV-1a fingerprint Pandas UDF on the ingest path. The registry
-dict is a driver-side cache of series *cardinality* (not sample volume); for
-cardinalities beyond driver memory set ``cache_registry=False`` and series
-resolution runs fully distributed (``plans.read.select_series``).
+Scale notes: all heavy lifting stays in JVM/Tungsten; the head reaches
+Spark as one Arrow table per flush. The registry dict is a driver-side
+cache of series *cardinality* (not sample volume); for cardinalities
+beyond driver memory set ``cache_registry=False`` and series resolution
+runs fully distributed (``plans.read.select_series``). A root with no
+local directory for the WAL (a JDBC URL, a remote filesystem) flushes
+inside every ``write()``, so its ack still means "in the store".
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
+import time
+import weakref
+from array import array
 from typing import Sequence
+from urllib.parse import urlparse
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from promhouse_spark.functions.fingerprint import fingerprint, to_signed64, to_unsigned64
 from promhouse_spark.functions.labels import sort_labels
@@ -55,6 +81,7 @@ from promhouse_spark.schemas import (
 )
 from promhouse_spark.storage import fs
 from promhouse_spark.storage.base import Storage
+from promhouse_spark.storage.wal import Head, WriteAheadLog, read_records
 
 
 #: Cardinality above which the driver-side registry dict auto-disables and
@@ -68,6 +95,27 @@ from promhouse_spark.storage.base import Storage
 #: 5.9 GB RSS, 106 s reload). 2M keeps the driver under ~2.4 GB and inside
 #: the regime where the cache still wins.
 DEFAULT_REGISTRY_CACHE_MAX_SERIES = 2_000_000
+
+#: The head flushes to parquet once it holds this many samples: Prometheus's
+#: remote-write batch of up to 100k samples per send (SURVEY C3) ...
+HEAD_MAX_SAMPLES = 100_000
+#: ... or once its oldest row is this many seconds old, checked on each
+#: write: the sender's batch deadline (C3). Readers flush it regardless.
+HEAD_MAX_AGE_S = 5.0
+
+_SAMPLES_ARROW = to_arrow_schema(SAMPLES_SCHEMA)
+
+
+def _time_window(rows: list[tuple]) -> tuple[int, int]:
+    """(min, max) timestamp of head rows keyed (fingerprint, ts, ...)."""
+    ts = [r[1] for r in rows]
+    return min(ts), max(ts)
+
+
+def _not_in(df: DataFrame, stored: DataFrame) -> DataFrame:
+    """Rows of ``df`` whose (fingerprint, timestamp) ``stored`` lacks."""
+    keys = [FINGERPRINT, TIMESTAMP_MS]
+    return df.join(stored.select(*keys), keys, "left_anti")
 
 
 class SparkParquetStorage(Storage):
@@ -97,12 +145,31 @@ class SparkParquetStorage(Storage):
         # index (clickhouse.go:51-52), refreshed from disk on construction
         # (the 5 s reloader's job, clickhouse.go:155-204).
         self._registry: dict[int, dict[str, str]] = {}
+        # the write head and its WAL (storage/wal.py); one lock serializes
+        # writes, flushes and WAL appends across the server's threads
+        self._lock = threading.RLock()
+        self._flushing = False
+        self._head = Head()
+        self._wal = None
+        local = urlparse(root)
+        if local.scheme in ("", "file"):
+            self._wal = WriteAheadLog(os.path.join(local.path, "wal"))
+            # a GC'd instance drops its segment locks like a dead process
+            weakref.finalize(self, self._wal.close)
+            for path, _ in self._wal.open:
+                self._head.replay(read_records(path))
+            if cache_registry:
+                self._registry.update(self._head.series)
+        self._replayed_segments = (
+            len(self._wal.open) + len(self._wal.sealed) if self._wal else 0
+        )
         if cache_registry:
             self.reload_registry()
 
     # ---------------------------------------------------------------- utils
 
     def _read_or_empty(self, path: str, schema) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, path):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(path)
@@ -114,6 +181,7 @@ class SparkParquetStorage(Storage):
         return df.dropDuplicates([FINGERPRINT])
 
     def samples_df(self) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, self.samples_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.samples_path))
@@ -168,9 +236,11 @@ class SparkParquetStorage(Storage):
         """True when the native-histogram tier holds data — the seam the
         HTTP layer and read attachment check (the chunked tier stores
         histograms under a different layout/path)."""
+        self.flush()
         return fs.exists(self.spark, self.histograms_path)
 
     def histograms_df(self) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, self.histograms_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.histograms_path))
@@ -209,6 +279,7 @@ class SparkParquetStorage(Storage):
         )
 
     def exemplars_df(self) -> DataFrame:
+        self.flush()
         if not fs.exists(self.spark, self.exemplars_path):
             return self.spark.createDataFrame([], EXEMPLARS_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.exemplars_path))
@@ -297,25 +368,33 @@ class SparkParquetStorage(Storage):
 
     def write(self, timeseries: Sequence[TimeSeries]) -> None:
         """O6 (``clickhouse.go:423-512``): canonicalize → fingerprint →
-        registry diff → registry append *before* samples append (readers must
-        always resolve labels, SURVEY §3.2)."""
+        registry diff against the hot dict → one fsynced WAL append → the
+        head; returns (acks) without running Spark. :meth:`flush` writes
+        the head to parquet once per batch, registry before samples
+        (readers must always resolve labels, SURVEY §3.2). A root with no
+        local WAL directory (a JDBC URL, a remote filesystem) flushes
+        before returning, so its ack still means "in the store"."""
         if not timeseries:
             return
         new_series: dict[int, dict[str, str]] = {}
-        sample_rows: list[tuple[int, int, float]] = []
+        fps, tss, vals = array("q"), array("q"), array("d")
         hist_rows: list[tuple] = []
         exemplar_rows: list[tuple] = []
+        # cache off: the dict is empty, so every series not already in the
+        # head is new, and the flush anti-joins them against the registry
+        known = self._registry if self.cache_registry else self._head.series
         for ts in timeseries:
             labels = sort_labels(ts.labels)  # clickhouse.go:428
             fp = fingerprint((l.name, l.value) for l in labels)
-            if fp not in self._registry and fp not in new_series:
+            if fp not in known and fp not in new_series:
                 new_series[fp] = {l.name: l.value for l in labels}
             sfp = to_signed64(fp)
             # Coerce at the boundary: protocol callers may hand ints where the
             # schema says float64 (and vice versa for timestamps).
-            sample_rows.extend(
-                (sfp, int(s.timestamp_ms), float(s.value)) for s in ts.samples
-            )
+            for s in ts.samples:
+                fps.append(sfp)
+                tss.append(int(s.timestamp_ms))
+                vals.append(float(s.value))
             hist_rows.extend(
                 (
                     sfp,
@@ -339,45 +418,131 @@ class SparkParquetStorage(Storage):
                 )
                 for e in getattr(ts, "exemplars", ()) or ()
             )
+        rows = (new_series, fps, tss, vals, hist_rows, exemplar_rows)
+        with self._lock:
+            if self._wal is not None:
+                self._wal.append(Head.records(*rows))
+            self._head.add(*rows)
+            if self.cache_registry:  # read-your-own-writes via the hot dict
+                self._registry.update(new_series)
+        if self._wal is None:
+            self.flush()
+        elif (
+            len(self._head.fps) >= HEAD_MAX_SAMPLES
+            or time.monotonic() - self._head.since >= HEAD_MAX_AGE_S
+        ):
+            try:
+                self.flush()
+            except Exception:  # noqa: BLE001 — the rows are in the WAL already
+                logging.getLogger(__name__).exception(
+                    "head flush failed; its WAL segment stays sealed and the "
+                    "next flush commits it"
+                )
 
-        if new_series:
-            reg_rows = [
-                (to_signed64(fp), labels) for fp, labels in new_series.items()
-            ]
+    def flush(self) -> None:
+        """Write the head to parquet: seal its WAL segment, append the new
+        series through ``_append_registry`` and the samples through
+        ``ingest_df`` (one job each, plus the sidecars), then delete the
+        segment. Sealed segments left by a crash or a failed flush are
+        committed first, minus the rows the store already holds. Every
+        reader calls this before it scans; on an empty head it returns
+        without a filesystem call or a Spark job."""
+        if not self._head and not (self._wal and self._wal.sealed):
+            return
+        with self._lock:
+            if self._flushing:  # a reader inside this flush's own commit
+                return
+            self._flushing = True
+            try:
+                if self._wal is not None:
+                    for seg in list(self._wal.sealed):
+                        head = Head()
+                        head.replay(read_records(seg[0]))
+                        self._commit(head, recovering=True)
+                        self._wal.release(seg)
+                if self._head:
+                    sealed = self._wal.seal() if self._wal is not None else []
+                    head, self._head = self._head, Head()
+                    self._commit(head)
+                    for seg in sealed:
+                        self._wal.release(seg)
+            finally:
+                self._flushing = False
+
+    def _commit(self, head: Head, recovering: bool = False) -> None:
+        """Append one head to the store. ``recovering``: the rows may be
+        partly stored already (a flush died mid-commit), so only those
+        missing from the store go in — an anti-join on (fingerprint,
+        timestamp) restricted to the head's series and time window."""
+        if head.series:
             reg_df = (
                 self.spark.createDataFrame(
-                    reg_rows, f"{FINGERPRINT} long, {LABELS} map<string,string>"
+                    [(to_signed64(fp), labels) for fp, labels in head.series.items()],
+                    f"{FINGERPRINT} long, {LABELS} map<string,string>",
                 )
                 .withColumn(DATE, F.current_date())
                 .select(DATE, FINGERPRINT, LABELS)
             )
-            # Persist-then-cache: anti-join against the persisted registry
-            # guards against duplicates across restarts (A3).
-            reg_df = reg_df.join(
-                self._existing_fingerprints(), FINGERPRINT, "left_anti"
-            ).select(DATE, FINGERPRINT, LABELS)
-            self._append_registry(reg_df)
-            if self.cache_registry:  # read-your-own-writes via the hot dict
-                self._registry.update(new_series)
-
-        if sample_rows:
-            df = self.spark.createDataFrame(sample_rows, SAMPLES_SCHEMA)
-            self.ingest_df(df)
-        if hist_rows:
-            self._write_histograms(
-                self.spark.createDataFrame(hist_rows, HISTOGRAMS_SCHEMA)
-            )
-        if exemplar_rows:
-            edf = self.spark.createDataFrame(exemplar_rows, EXEMPLARS_SCHEMA)
-            (
-                edf.withColumn(
-                    DATE, F.to_date(F.timestamp_millis(F.col(TIMESTAMP_MS)))
+            if recovering or not self.cache_registry:
+                # no hot dict to diff against: drop the persisted series once
+                # per flush (ReplacingMergeTree-style, A3)
+                reg_df = reg_df.join(
+                    self._existing_fingerprints(), FINGERPRINT, "left_anti"
+                ).select(DATE, FINGERPRINT, LABELS)
+            # new series are a small table: one registry file per flush
+            self._append_registry(reg_df.coalesce(1))
+        # recovery's restriction: every series of the head
+        fps = (
+            list({*head.fps, *(r[0] for r in head.histograms + head.exemplars)})
+            if recovering
+            else []
+        )
+        if head.fps:
+            df = self.spark.createDataFrame(
+                pa.table(
+                    [
+                        np.frombuffer(head.fps, np.int64),
+                        np.frombuffer(head.ts, np.int64),
+                        np.frombuffer(head.values, np.float64),
+                    ],
+                    schema=_SAMPLES_ARROW,
                 )
-                .sortWithinPartitions(FINGERPRINT, TIMESTAMP_MS)
-                .write.partitionBy(DATE)
-                .mode("append")
-                .parquet(self.exemplars_path)
             )
+            if recovering:
+                q = Query(min(head.ts), max(head.ts), ())
+                df = _not_in(df, self._restricted_scan(self.samples_df(), q, fps))
+            # Arrow arrives as one partition per 10k-row batch: write at most
+            # one file per core per flush, as many as reads scan in parallel
+            self.ingest_df(df.coalesce(self.spark.sparkContext.defaultParallelism))
+        if head.histograms:
+            hdf = self.spark.createDataFrame(head.histograms, HISTOGRAMS_SCHEMA)
+            if recovering:
+                stored = self.histograms_range_df(*_time_window(head.histograms))
+                hdf = _not_in(hdf, restrict_to_series(stored, fps, self.max_series_inlist))
+            self._write_histograms(hdf)
+        if head.exemplars:
+            edf = self.spark.createDataFrame(head.exemplars, EXEMPLARS_SCHEMA)
+            if recovering:
+                stored = samples_in_range(self.exemplars_df(), *_time_window(head.exemplars))
+                edf = _not_in(edf, restrict_to_series(stored, fps, self.max_series_inlist))
+            self._append_exemplars(edf)
+
+    def _append_exemplars(self, edf: DataFrame) -> None:
+        (
+            edf.withColumn(DATE, F.to_date(F.timestamp_millis(F.col(TIMESTAMP_MS))))
+            .sortWithinPartitions(FINGERPRINT, TIMESTAMP_MS)
+            .write.partitionBy(DATE)
+            .mode("append")
+            .parquet(self.exemplars_path)
+        )
+
+    def wal_replay_status(self) -> dict:
+        """``/api/v1/status/walreplay``: the WAL segments this instance
+        claimed at start (open ones replayed into the head, sealed ones
+        re-committed). Replay runs inside the constructor, so it is done
+        by the time anything can ask."""
+        n = self._replayed_segments
+        return {"min": 1 if n else 0, "max": n, "current": n, "state": "done"}
 
     def _existing_fingerprints(self) -> DataFrame:
         """Persisted fingerprints (for the new-series anti-join) — the
@@ -427,6 +592,7 @@ class SparkParquetStorage(Storage):
         files would be re-ingested as new data (double-counted partials).
         Stop the rollup stream and reset its checkpoint (or compact the
         rollup from scratch afterwards) around a samples compaction."""
+        self.flush()
         if not fs.exists(self.spark, self.samples_path):
             return  # nothing ingested yet
         old = self.samples_path + ".old"
@@ -480,6 +646,7 @@ class SparkParquetStorage(Storage):
         import datetime as _dt
         import time as _time
 
+        self.flush()
         if now_ms is None:
             now_ms = int(_time.time() * 1000)
         cutoff = _dt.datetime.fromtimestamp(
@@ -532,6 +699,7 @@ class SparkParquetStorage(Storage):
         """
         from promhouse_spark.plans.read import select_series
 
+        self.flush()
         matched = select_series(self.registry_df(), matchers).select(FINGERPRINT)
         lo = -(2**62) if start_ms is None else int(start_ms)
         hi = (2**62) if end_ms is None else int(end_ms)
@@ -556,6 +724,7 @@ class SparkParquetStorage(Storage):
         Same single-writer/offline contract as :meth:`compact_samples`
         (partition swaps are rename-based).
         """
+        self.flush()
         if not fs.exists(self.spark, self.tombstones_path):
             return {}
         t = self.tombstones_df().select(
@@ -652,6 +821,7 @@ class SparkParquetStorage(Storage):
         import time as _time
         import uuid as _uuid
 
+        self.flush()
         if name is None:
             name = (
                 _time.strftime("%Y%m%dT%H%M%SZ", _time.gmtime())

@@ -13,6 +13,13 @@ Input batches arrive row-oriented as (labels map, timestamp_ms, value) — the
 in-flight TimeSeries shape flattened — and the fingerprint is computed
 in-stream by the Pandas UDF (the only Python kernel on the hot path).
 
+The HTTP remote-write path no longer runs this pipeline per request: it
+acks from the WAL-backed head of ``SparkParquetStorage`` and flushes one
+batch at a time (``storage/wal.py``). A micro-batch here is already a
+batch, so it appends straight to the tables and keeps its per-batch
+registry anti-join; its ``registry_df()`` call flushes the storage's head
+first, so both paths see each other's series.
+
 No watermark is configured, matching the reference's "late data is just
 data" contract (C1). Exactly-once: parquet appends inside foreachBatch are
 idempotent per epoch only if the sink dedupes; like the reference (which can

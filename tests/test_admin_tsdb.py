@@ -53,6 +53,7 @@ def _mk_store(spark, tmp_path, days=3):
             )
         )
     store.write(series)
+    store.flush()  # tests list the partition files
     return store
 
 

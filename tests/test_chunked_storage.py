@@ -74,6 +74,8 @@ def stores(spark, tmp_path_factory):
     chunked = ChunkedParquetStorage(spark, str(tmp_path_factory.mktemp("chunked")))
     flat.write(data)
     chunked.write(data)
+    flat.flush()  # bytes on disk are measured below
+    chunked.flush()
     return flat, chunked
 
 
@@ -138,7 +140,9 @@ def test_delete_and_clean_reencode(spark, tmp_path):
 def test_compact_merges_minichunks(spark, tmp_path):
     store = ChunkedParquetStorage(spark, str(tmp_path / "s"))
     # 10 micro-batches of 20 samples each → 10 mini-chunks per series-day
+    # (each flushed on its own: the head would batch them into one)
     for b in range(10):
+        store.flush()
         store.write(
             [
                 TimeSeries(
@@ -150,6 +154,7 @@ def test_compact_merges_minichunks(spark, tmp_path):
                 )
             ]
         )
+    store.flush()
     before = _read_all(store)
     assert store.chunks_df().count() == 10
     store.compact_samples()

@@ -19,8 +19,9 @@ pytestmark = pytest.mark.slow
 def test_compact_preserves_results_and_reduces_files(spark, tmp_path):
     st = SparkParquetStorage(spark, str(tmp_path / "store"))
     data = get_data()
-    for ts in data:  # one write per series → many small files
+    for ts in data:  # one write and flush per series → many small files
         st.write([ts])
+        st.flush()
     q = Query(T0 - 60_000, T0 + 60_000, make_matchers(("__name__", "=", "http_requests_total")))
     before = normalize(st.read([q])[0])
     files_before = len(glob.glob(f"{st.samples_path}/**/*.parquet", recursive=True))
@@ -81,6 +82,7 @@ def test_retention_sweep_drops_old_partitions(spark, tmp_path):
             ],
         )
     ])
+    store.flush()  # the partitions are listed below
     before = set(fs.list_names(spark, store.samples_path))
     assert sum(1 for n in before if n.startswith("date=")) == 3
 

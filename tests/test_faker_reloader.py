@@ -58,6 +58,7 @@ def test_registry_convergence_across_instances(spark, tmp_path):
     b = SparkParquetStorage(spark, root)
     data = get_data()
     a.write(data[:1])
+    a.flush()  # other instances see a's writes once a's head is flushed
     b.write(data[1:2])  # b doesn't know about a's series yet
     assert len(b.read([Query(T0 - 1000, T0 + 9000, ())])[0]) == 1
     b.reload_registry()
@@ -66,6 +67,7 @@ def test_registry_convergence_across_instances(spark, tmp_path):
     stop = b.start_reloader(interval_seconds=0.2)
     try:
         a.write(data[2:3])
+        a.flush()
         import time
 
         deadline = time.time() + 10

@@ -210,7 +210,8 @@ def test_retention_sweeps_hist_chunk_partitions(spark, tmp_path):
 
 def test_compaction_merges_hist_mini_chunks(spark, tmp_path):
     st = ChunkedParquetStorage(spark, str(tmp_path / "s"))
-    for i in range(6):  # one write per micro-batch → 6 mini-chunks/series
+    for i in range(6):  # one write and flush per micro-batch → 6 mini-chunks/series
+        st.flush()
         st.write(
             [
                 TimeSeries(

@@ -126,6 +126,10 @@ def test_streaming_soak_bounded_rss_and_stable_files(spark, tmp_path):
                 ),
             ]
             writer.write(list(fan_out(scrape, instances=N_INSTANCES, seed=it)))
+            # each iteration stands for a 15 s scrape, past the head's 5 s
+            # age limit: flush it as the live head would, so the rollup
+            # stream has files to tail
+            storage.flush()
             rss_curve.append(round(_driver_rss_mb(), 1))
         print("soak RSS curve (MB):", json.dumps(rss_curve))
 

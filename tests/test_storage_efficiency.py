@@ -81,6 +81,8 @@ def test_histogram_chunks_beat_flat_sidecar(spark, tmp_path):
     chun = ChunkedParquetStorage(spark, str(tmp_path / "chun"))
     flat.write(data)
     chun.write(data)
+    flat.flush()  # bytes on disk are measured below
+    chun.flush()
     n = 40 * 360
     flat_b = du(flat.histograms_path) / n
     chunk_b = du(chun.hist_chunks_path) / n

@@ -9,7 +9,9 @@ Usage:
                                      [--plans-only] [query ...]
 
 Writes <out>/<query>.txt (formatted plan) and prints one JSON line with
-{name: {"median": s, "min": s, "max": s, "flags": {...}}}.
+{name: {"median": s, "min": s, "max": s, "flags": {...}}}. Without --out
+the plans go to a fresh temporary directory, whose path is printed, so a
+run never overwrites the plan captures committed under plans/.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -43,7 +46,7 @@ def plan_flags(plan: str) -> dict:
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    out_dir = "plans/r11"
+    out_dir = None
     runs = 3
     plans_only = False
     sf_dir = "/root/testdata/sf0.1"
@@ -73,6 +76,9 @@ def main() -> None:
     if names:
         queries = {n: queries[n] for n in names}
 
+    if out_dir is None:
+        out_dir = tempfile.mkdtemp(prefix="profile-queries-")
+        print(f"plans: {out_dir}", file=sys.stderr)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="promhouse-profile")
     load_table(spark, sf_dir, "lineitem").count()  # session warm-up
