@@ -136,8 +136,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
     # ----------------------------------------------------------------- read
 
     def chunks_df(self) -> DataFrame:
-        self.flush()
-        if not fs.exists(self.spark, self.chunks_path):
+        if not self._stored(self.chunks_path):
             return self.spark.createDataFrame([], CHUNK_SCHEMA)
         return self.spark.read.parquet(self.chunks_path)
 
@@ -146,8 +145,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         chunk through the Arrow decoder. Correct everywhere the flat frame
         is expected; time-range pushdown happens in :meth:`_restricted_scan`
         instead, where chunk envelopes can prune before decode."""
-        self.flush()
-        if not fs.exists(self.spark, self.chunks_path):
+        if not self._stored(self.chunks_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         par = self.spark.sparkContext.defaultParallelism
         decoded = (
@@ -186,8 +184,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         ``mapInPandas`` could never push down. Returns a superset of
         [start_ms, end_ms] at chunk granularity; callers apply their own
         exact time predicates."""
-        self.flush()
-        if not fs.exists(self.spark, self.chunks_path):
+        if not self._stored(self.chunks_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         lo = max(int(start_ms), -4_000_000_000_000_000)
         hi = min(int(end_ms), 4_000_000_000_000_000)
@@ -319,14 +316,12 @@ class ChunkedParquetStorage(SparkParquetStorage):
     # ------------------------------------------------- histogram chunk tier
 
     def hist_chunks_df(self) -> DataFrame:
-        self.flush()
-        if not fs.exists(self.spark, self.hist_chunks_path):
+        if not self._stored(self.hist_chunks_path):
             return self.spark.createDataFrame([], HIST_CHUNK_SCHEMA)
         return self.spark.read.parquet(self.hist_chunks_path)
 
     def has_histograms(self) -> bool:
-        self.flush()
-        return fs.exists(self.spark, self.hist_chunks_path)
+        return self._stored(self.hist_chunks_path)
 
     def _write_histograms(self, hdf: DataFrame) -> None:
         """Histogram ingest: one shuffle keyed (fingerprint, day), Arrow-
@@ -350,8 +345,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         before the decode barrier."""
         from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
-        self.flush()
-        if not fs.exists(self.spark, self.hist_chunks_path):
+        if not self._stored(self.hist_chunks_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         par = self.spark.sparkContext.defaultParallelism
         decoded = (
@@ -367,8 +361,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         then the exact row filter applies above the decode."""
         from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
-        self.flush()
-        if not fs.exists(self.spark, self.hist_chunks_path):
+        if not self._stored(self.hist_chunks_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         cond = (F.col("max_ms") >= start_ms) & (F.col("min_ms") <= end_ms)
         start_d = F.to_date(F.timestamp_millis(F.lit(int(start_ms))))
@@ -398,10 +391,10 @@ class ChunkedParquetStorage(SparkParquetStorage):
         from promhouse_spark.functions.fingerprint import to_unsigned64
         from promhouse_spark.schemas import LABELS
 
-        self.flush()
+        stored = self._stored(self.hist_chunks_path)
         if fs.exists(self.spark, self.tombstones_path):
             return None
-        if not fs.exists(self.spark, self.hist_chunks_path):
+        if not stored:
             return []
         if fps is None and self.cache_registry:
             fps = self._resolve_fingerprints(q)
@@ -456,8 +449,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         """Flat sidecars clean via the inherited rewrite; the chunks tier
         decodes → masks → re-encodes ONLY the day partitions whose chunk
         envelopes intersect a pending tombstone, then the tombstones clear."""
-        self.flush()
-        if not fs.exists(self.spark, self.tombstones_path):
+        if not self._stored(self.tombstones_path):
             return {}
         t = self.tombstones_df()
         rewritten: dict[str, int] = {}
@@ -590,9 +582,8 @@ class ChunkedParquetStorage(SparkParquetStorage):
         chunks micro-batch ingestion accumulates (the Prometheus head-
         compaction analog). Same offline/single-writer contract as the
         flat tier's compaction."""
-        self.flush()
         self._compact_hist_chunks(files_per_day)
-        if not fs.exists(self.spark, self.chunks_path):
+        if not self._stored(self.chunks_path):
             return
         old = self.chunks_path + ".old"
         if fs.exists(self.spark, old):
@@ -628,7 +619,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         re-encode full-size chunks, swap."""
         from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
-        if not fs.exists(self.spark, self.hist_chunks_path):
+        if not self._stored(self.hist_chunks_path):
             return
         old = self.hist_chunks_path + ".old"
         if fs.exists(self.spark, old):

@@ -116,7 +116,6 @@ class JdbcStorage(SparkParquetStorage):
     # ----------------------------------------------------- overridden seams
 
     def registry_df(self) -> DataFrame:
-        self.flush()
         df = self._read_table(REGISTRY_TABLE)
         if df is None:
             return self.spark.createDataFrame(
@@ -129,7 +128,6 @@ class JdbcStorage(SparkParquetStorage):
         )
 
     def samples_df(self) -> DataFrame:
-        self.flush()
         df = self._read_table(SAMPLES_TABLE, partitioned=True)
         if df is None:
             return self.spark.createDataFrame(

@@ -10,11 +10,12 @@ Re-expresses the reference's ClickHouse backend
   one registry append and one samples append per batch instead of three
   Spark jobs per request. It runs when
   the head holds ``HEAD_MAX_SAMPLES`` samples, when its oldest row is
-  ``HEAD_MAX_AGE_S`` old, on demand, and before every read that scans
-  files. So an ack means "fsynced to the local WAL", where the reference
-  acks after its ClickHouse insert commits (``clickhouse.go:450-505``);
-  a restart replays the WAL, and a flush cut short by a crash is
-  re-committed exactly once;
+  ``HEAD_MAX_AGE_S`` old (a daemon thread watches the age, so an idle
+  writer's last batch still lands), on demand, and before every read
+  that scans files. So an ack means "fsynced to the local WAL", where
+  the reference acks after its ClickHouse insert commits
+  (``clickhouse.go:450-505``); a restart replays the WAL, and a flush cut
+  short by a crash resumes at the tier it was appending (``storage/wal.py``);
 - ``time_series`` registry: parquet, plus an in-memory fingerprint→labels
   dict as the hot cache with read-your-own-writes
   (``clickhouse.go:51-52,437-447``). The dict is the new-series diff;
@@ -38,8 +39,9 @@ Spark as one Arrow table per flush. The registry dict is a driver-side
 cache of series *cardinality* (not sample volume); for cardinalities
 beyond driver memory set ``cache_registry=False`` and series resolution
 runs fully distributed (``plans.read.select_series``). A root with no
-local directory for the WAL (a JDBC URL, a remote filesystem) flushes
-inside every ``write()``, so its ack still means "in the store".
+local directory for the WAL (a JDBC URL, a remote filesystem) has no
+head: each ``write()`` commits its own rows before it returns, so its
+ack still means "in the store".
 """
 
 from __future__ import annotations
@@ -81,7 +83,14 @@ from promhouse_spark.schemas import (
 )
 from promhouse_spark.storage import fs
 from promhouse_spark.storage.base import Storage
-from promhouse_spark.storage.wal import Head, WriteAheadLog, read_records
+from promhouse_spark.storage.wal import (
+    BEGIN,
+    DONE,
+    Head,
+    WriteAheadLog,
+    progress,
+    read_records,
+)
 
 
 #: Cardinality above which the driver-side registry dict auto-disables and
@@ -99,8 +108,8 @@ DEFAULT_REGISTRY_CACHE_MAX_SERIES = 2_000_000
 #: The head flushes to parquet once it holds this many samples: Prometheus's
 #: remote-write batch of up to 100k samples per send (SURVEY C3) ...
 HEAD_MAX_SAMPLES = 100_000
-#: ... or once its oldest row is this many seconds old, checked on each
-#: write: the sender's batch deadline (C3). Readers flush it regardless.
+#: ... or once its oldest row is this many seconds old: the sender's batch
+#: deadline (C3). Readers flush it regardless.
 HEAD_MAX_AGE_S = 5.0
 
 _SAMPLES_ARROW = to_arrow_schema(SAMPLES_SCHEMA)
@@ -116,6 +125,34 @@ def _not_in(df: DataFrame, stored: DataFrame) -> DataFrame:
     """Rows of ``df`` whose (fingerprint, timestamp) ``stored`` lacks."""
     keys = [FINGERPRINT, TIMESTAMP_MS]
     return df.join(stored.select(*keys), keys, "left_anti")
+
+
+def _age_flusher(ref: weakref.ref) -> None:
+    """One storage's age rule: flush its head once the oldest row is
+    ``HEAD_MAX_AGE_S`` old, with or without further writes. Holds the
+    storage only weakly, and exits once the head is empty (the next write
+    starts a new one; a failed commit's sealed segment goes in with the
+    next flush) or the storage is gone."""
+    while True:
+        storage = ref()
+        if storage is None:
+            return
+        with storage._lock:
+            if not storage._head:
+                storage._flusher = None
+                return
+            wait = storage._head.since + HEAD_MAX_AGE_S - time.monotonic()
+        if wait <= 0:
+            try:
+                storage.flush()
+            except Exception:  # noqa: BLE001 — the rows stay in a sealed segment
+                logging.getLogger(__name__).exception(
+                    "head flush failed; its WAL segment stays sealed and the "
+                    "next flush commits it"
+                )
+                wait = HEAD_MAX_AGE_S
+        del storage
+        time.sleep(max(wait, 0.0))
 
 
 class SparkParquetStorage(Storage):
@@ -145,10 +182,13 @@ class SparkParquetStorage(Storage):
         # index (clickhouse.go:51-52), refreshed from disk on construction
         # (the 5 s reloader's job, clickhouse.go:155-204).
         self._registry: dict[int, dict[str, str]] = {}
-        # the write head and its WAL (storage/wal.py); one lock serializes
-        # writes, flushes and WAL appends across the server's threads
-        self._lock = threading.RLock()
+        # the write head and its WAL (storage/wal.py). _lock guards the
+        # head and the WAL appends and is never held across a Spark job, so
+        # writes ack while a flush runs; _flush_lock serializes commits
+        self._lock = threading.Lock()
+        self._flush_lock = threading.RLock()
         self._flushing = False
+        self._flusher: threading.Thread | None = None
         self._head = Head()
         self._wal = None
         local = urlparse(root)
@@ -160,6 +200,8 @@ class SparkParquetStorage(Storage):
                 self._head.replay(read_records(path))
             if cache_registry:
                 self._registry.update(self._head.series)
+            if self._head:
+                self._start_flusher()
         self._replayed_segments = (
             len(self._wal.open) + len(self._wal.sealed) if self._wal else 0
         )
@@ -168,9 +210,15 @@ class SparkParquetStorage(Storage):
 
     # ---------------------------------------------------------------- utils
 
-    def _read_or_empty(self, path: str, schema) -> DataFrame:
+    def _stored(self, path: str) -> bool:
+        """Flush the head, then report whether ``path`` holds a tier: the
+        check every reader that scans files makes first, so none misses an
+        acked row."""
         self.flush()
-        if not fs.exists(self.spark, path):
+        return fs.exists(self.spark, path)
+
+    def _read_or_empty(self, path: str, schema) -> DataFrame:
+        if not self._stored(path):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(path)
 
@@ -181,8 +229,7 @@ class SparkParquetStorage(Storage):
         return df.dropDuplicates([FINGERPRINT])
 
     def samples_df(self) -> DataFrame:
-        self.flush()
-        if not fs.exists(self.spark, self.samples_path):
+        if not self._stored(self.samples_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.samples_path))
 
@@ -236,12 +283,10 @@ class SparkParquetStorage(Storage):
         """True when the native-histogram tier holds data — the seam the
         HTTP layer and read attachment check (the chunked tier stores
         histograms under a different layout/path)."""
-        self.flush()
-        return fs.exists(self.spark, self.histograms_path)
+        return self._stored(self.histograms_path)
 
     def histograms_df(self) -> DataFrame:
-        self.flush()
-        if not fs.exists(self.spark, self.histograms_path):
+        if not self._stored(self.histograms_path):
             return self.spark.createDataFrame([], HISTOGRAMS_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.histograms_path))
 
@@ -279,8 +324,7 @@ class SparkParquetStorage(Storage):
         )
 
     def exemplars_df(self) -> DataFrame:
-        self.flush()
-        if not fs.exists(self.spark, self.exemplars_path):
+        if not self._stored(self.exemplars_path):
             return self.spark.createDataFrame([], EXEMPLARS_SCHEMA)
         return self._apply_tombstones(self.spark.read.parquet(self.exemplars_path))
 
@@ -372,8 +416,10 @@ class SparkParquetStorage(Storage):
         head; returns (acks) without running Spark. :meth:`flush` writes
         the head to parquet once per batch, registry before samples
         (readers must always resolve labels, SURVEY §3.2). A root with no
-        local WAL directory (a JDBC URL, a remote filesystem) flushes
-        before returning, so its ack still means "in the store"."""
+        local WAL directory (a JDBC URL, a remote filesystem) commits this
+        write's rows alone before returning, so its ack still means "in
+        the store", and a failed commit leaves the hot dict untouched for
+        the sender's retry."""
         if not timeseries:
             return
         new_series: dict[int, dict[str, str]] = {}
@@ -419,18 +465,23 @@ class SparkParquetStorage(Storage):
                 for e in getattr(ts, "exemplars", ()) or ()
             )
         rows = (new_series, fps, tss, vals, hist_rows, exemplar_rows)
+        if self._wal is None:
+            head = Head()
+            head.add(*rows)
+            with self._flush_lock:
+                self._commit(head)
+            if self.cache_registry:
+                self._registry.update(new_series)
+            return
         with self._lock:
-            if self._wal is not None:
-                self._wal.append(Head.records(*rows))
+            self._wal.append(Head.records(*rows))
             self._head.add(*rows)
             if self.cache_registry:  # read-your-own-writes via the hot dict
                 self._registry.update(new_series)
-        if self._wal is None:
-            self.flush()
-        elif (
-            len(self._head.fps) >= HEAD_MAX_SAMPLES
-            or time.monotonic() - self._head.since >= HEAD_MAX_AGE_S
-        ):
+            if self._flusher is None:
+                self._start_flusher()
+            full = len(self._head.fps) >= HEAD_MAX_SAMPLES
+        if full:  # the writer waits for this flush: backpressure on the head
             try:
                 self.flush()
             except Exception:  # noqa: BLE001 — the rows are in the WAL already
@@ -439,41 +490,70 @@ class SparkParquetStorage(Storage):
                     "next flush commits it"
                 )
 
+    def _start_flusher(self) -> None:
+        self._flusher = threading.Thread(
+            target=_age_flusher, args=(weakref.ref(self),), daemon=True,
+            name="head-flusher",
+        )
+        self._flusher.start()
+
     def flush(self) -> None:
         """Write the head to parquet: seal its WAL segment, append the new
         series through ``_append_registry`` and the samples through
         ``ingest_df`` (one job each, plus the sidecars), then delete the
         segment. Sealed segments left by a crash or a failed flush are
-        committed first, minus the rows the store already holds. Every
-        reader calls this before it scans; on an empty head it returns
-        without a filesystem call or a Spark job."""
+        committed first, from the tier their commit reached. Writes keep
+        acking into a fresh head meanwhile. Every reader calls this before
+        it scans; on an empty head it returns without a filesystem call or
+        a Spark job."""
         if not self._head and not (self._wal and self._wal.sealed):
             return
-        with self._lock:
+        with self._flush_lock:
             if self._flushing:  # a reader inside this flush's own commit
                 return
             self._flushing = True
             try:
-                if self._wal is not None:
-                    for seg in list(self._wal.sealed):
-                        head = Head()
-                        head.replay(read_records(seg[0]))
-                        self._commit(head, recovering=True)
-                        self._wal.release(seg)
-                if self._head:
-                    sealed = self._wal.seal() if self._wal is not None else []
+                for seg in list(self._wal.sealed):
+                    records = read_records(seg[0])
+                    head = Head()
+                    head.replay(records)
+                    self._commit(head, [seg], progress(records))
+                    self._wal.release(seg)
+                with self._lock:
+                    sealed = self._wal.seal() if self._head else []
                     head, self._head = self._head, Head()
-                    self._commit(head)
+                if head:
+                    self._commit(head, sealed)
                     for seg in sealed:
                         self._wal.release(seg)
             finally:
                 self._flushing = False
 
-    def _commit(self, head: Head, recovering: bool = False) -> None:
-        """Append one head to the store. ``recovering``: the rows may be
-        partly stored already (a flush died mid-commit), so only those
-        missing from the store go in — an anti-join on (fingerprint,
-        timestamp) restricted to the head's series and time window."""
+    def _commit(self, head: Head, segments=(), marks: dict | None = None) -> None:
+        """Append one head to the store, tier by tier, recording each
+        tier's start and end in the head's sealed WAL ``segments``.
+        ``marks`` is what a recovered segment recorded before its process
+        died: a tier marked done is skipped, one never begun is appended
+        whole, and only one whose append was cut short goes in minus the
+        (fingerprint, timestamp) keys the store already holds within the
+        head's series and time window. Only that last case can merge a
+        re-sent row into an identical stored one."""
+        marks = marks or {}
+
+        def tier(name, df, missing, write) -> None:
+            if marks.get(name) == DONE:
+                return
+            if marks.get(name) == BEGIN:  # cut short: part may be stored
+                df = missing(df)
+            if segments:
+                self._wal.mark(segments, BEGIN, name)
+            write(df)
+            if segments:
+                self._wal.mark(segments, DONE, name)
+
+        def series() -> list[int]:
+            return list({*head.fps, *(r[0] for r in head.histograms + head.exemplars)})
+
         if head.series:
             reg_df = (
                 self.spark.createDataFrame(
@@ -483,20 +563,21 @@ class SparkParquetStorage(Storage):
                 .withColumn(DATE, F.current_date())
                 .select(DATE, FINGERPRINT, LABELS)
             )
-            if recovering or not self.cache_registry:
-                # no hot dict to diff against: drop the persisted series once
-                # per flush (ReplacingMergeTree-style, A3)
-                reg_df = reg_df.join(
+
+            def new_series(df: DataFrame) -> DataFrame:
+                return df.join(
                     self._existing_fingerprints(), FINGERPRINT, "left_anti"
                 ).select(DATE, FINGERPRINT, LABELS)
+
+            if not self.cache_registry:
+                # no hot dict to diff against: drop the persisted series once
+                # per flush (ReplacingMergeTree-style, A3)
+                reg_df = new_series(reg_df)
             # new series are a small table: one registry file per flush
-            self._append_registry(reg_df.coalesce(1))
-        # recovery's restriction: every series of the head
-        fps = (
-            list({*head.fps, *(r[0] for r in head.histograms + head.exemplars)})
-            if recovering
-            else []
-        )
+            tier(
+                "registry", reg_df, new_series,
+                lambda df: self._append_registry(df.coalesce(1)),
+            )
         if head.fps:
             df = self.spark.createDataFrame(
                 pa.table(
@@ -508,24 +589,36 @@ class SparkParquetStorage(Storage):
                     schema=_SAMPLES_ARROW,
                 )
             )
-            if recovering:
-                q = Query(min(head.ts), max(head.ts), ())
-                df = _not_in(df, self._restricted_scan(self.samples_df(), q, fps))
             # Arrow arrives as one partition per 10k-row batch: write at most
             # one file per core per flush, as many as reads scan in parallel
-            self.ingest_df(df.coalesce(self.spark.sparkContext.defaultParallelism))
+            par = self.spark.sparkContext.defaultParallelism
+            tier(
+                "samples", df,
+                lambda df: _not_in(df, self._restricted_scan(
+                    self.samples_df(), Query(min(head.ts), max(head.ts), ()), series()
+                )),
+                lambda df: self.ingest_df(df.coalesce(par)),
+            )
         if head.histograms:
-            hdf = self.spark.createDataFrame(head.histograms, HISTOGRAMS_SCHEMA)
-            if recovering:
-                stored = self.histograms_range_df(*_time_window(head.histograms))
-                hdf = _not_in(hdf, restrict_to_series(stored, fps, self.max_series_inlist))
-            self._write_histograms(hdf)
+            tier(
+                "histograms",
+                self.spark.createDataFrame(head.histograms, HISTOGRAMS_SCHEMA),
+                lambda df: _not_in(df, restrict_to_series(
+                    self.histograms_range_df(*_time_window(head.histograms)),
+                    series(), self.max_series_inlist,
+                )),
+                self._write_histograms,
+            )
         if head.exemplars:
-            edf = self.spark.createDataFrame(head.exemplars, EXEMPLARS_SCHEMA)
-            if recovering:
-                stored = samples_in_range(self.exemplars_df(), *_time_window(head.exemplars))
-                edf = _not_in(edf, restrict_to_series(stored, fps, self.max_series_inlist))
-            self._append_exemplars(edf)
+            tier(
+                "exemplars",
+                self.spark.createDataFrame(head.exemplars, EXEMPLARS_SCHEMA),
+                lambda df: _not_in(df, restrict_to_series(
+                    samples_in_range(self.exemplars_df(), *_time_window(head.exemplars)),
+                    series(), self.max_series_inlist,
+                )),
+                self._append_exemplars,
+            )
 
     def _append_exemplars(self, edf: DataFrame) -> None:
         (
@@ -592,8 +685,7 @@ class SparkParquetStorage(Storage):
         files would be re-ingested as new data (double-counted partials).
         Stop the rollup stream and reset its checkpoint (or compact the
         rollup from scratch afterwards) around a samples compaction."""
-        self.flush()
-        if not fs.exists(self.spark, self.samples_path):
+        if not self._stored(self.samples_path):
             return  # nothing ingested yet
         old = self.samples_path + ".old"
         if fs.exists(self.spark, old):
@@ -646,7 +738,6 @@ class SparkParquetStorage(Storage):
         import datetime as _dt
         import time as _time
 
-        self.flush()
         if now_ms is None:
             now_ms = int(_time.time() * 1000)
         cutoff = _dt.datetime.fromtimestamp(
@@ -657,7 +748,7 @@ class SparkParquetStorage(Storage):
         # native-histogram and exemplar sidecars (exemplars especially are
         # high-churn short-retention data in production Prometheus)
         for root in self._date_partitioned_tiers():
-            if not fs.exists(self.spark, root):
+            if not self._stored(root):
                 continue
             for name in fs.list_names(self.spark, root):
                 if not name.startswith(f"{DATE}="):
@@ -699,7 +790,6 @@ class SparkParquetStorage(Storage):
         """
         from promhouse_spark.plans.read import select_series
 
-        self.flush()
         matched = select_series(self.registry_df(), matchers).select(FINGERPRINT)
         lo = -(2**62) if start_ms is None else int(start_ms)
         hi = (2**62) if end_ms is None else int(end_ms)
@@ -724,8 +814,7 @@ class SparkParquetStorage(Storage):
         Same single-writer/offline contract as :meth:`compact_samples`
         (partition swaps are rename-based).
         """
-        self.flush()
-        if not fs.exists(self.spark, self.tombstones_path):
+        if not self._stored(self.tombstones_path):
             return {}
         t = self.tombstones_df().select(
             F.col(FINGERPRINT).alias("__t_fp"), "min_ms", "max_ms"
@@ -821,7 +910,6 @@ class SparkParquetStorage(Storage):
         import time as _time
         import uuid as _uuid
 
-        self.flush()
         if name is None:
             name = (
                 _time.strftime("%Y%m%dT%H%M%SZ", _time.gmtime())
@@ -836,7 +924,7 @@ class SparkParquetStorage(Storage):
         fs.mkdirs(self.spark, staging)
         for sub in ("time_series", "samples", "histograms", "exemplars", "tombstones"):
             src = os.path.join(self.root, sub)
-            if fs.exists(self.spark, src):
+            if self._stored(src):
                 fs.copy(self.spark, src, os.path.join(staging, sub))
         fs.rename(self.spark, staging, dest)
         return name

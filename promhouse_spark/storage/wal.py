@@ -13,10 +13,13 @@ sink of Structured Streaming (Armbrust et al., SIGMOD 2018):
   ``EXEMPLARS`` rows. Payloads are raw machine arrays or JSON; the write
   path never re-encodes protobuf;
 - the newest segment of a head is *open*. A flush renames it to
-  ``<name>.sealed``, appends the head to parquet, then deletes it. An
-  open segment left by a dead process was never committed and replays
-  into the head; a sealed one was being committed when the process died
-  and is re-appended minus the rows the store already holds;
+  ``<name>.sealed``, appends the head to parquet tier by tier, then
+  deletes it. Before and after each tier's append it adds a ``BEGIN`` /
+  ``DONE`` record naming the tier. An open segment left by a dead
+  process was never committed and replays into the head. A sealed one
+  was being committed when the process died: its tiers marked done are
+  skipped, those never begun are appended whole, and only a tier whose
+  append was cut short goes in minus the rows the store already holds;
 - each segment a live head owns carries an exclusive ``flock``. Storage
   instances sharing a root only claim segments whose owner is gone, and
   the kernel drops the lock of a killed process.
@@ -34,6 +37,7 @@ import zlib
 from array import array
 
 SERIES, SAMPLES, HISTOGRAMS, EXEMPLARS = 1, 2, 3, 4
+BEGIN, DONE = 5, 6  # a flush's progress through one tier (payload: its name)
 SEALED = ".sealed"
 _HEADER = struct.Struct("<BII")  # record type, payload bytes, crc32 of payload
 _COUNT = struct.Struct("<I")
@@ -122,7 +126,15 @@ class Head:
                          for r in json.loads(body)]
             elif kind == EXEMPLARS:
                 exemplars = [tuple(r) for r in json.loads(body)]
+            else:  # BEGIN / DONE: see progress()
+                continue
             self.add(series, *cols, hists, exemplars)
+
+
+def progress(records: list[tuple[int, bytes]]) -> dict[str, int]:
+    """How far a sealed segment's commit got: tier name -> its last mark,
+    ``BEGIN`` (the append may be partly stored) or ``DONE``."""
+    return {body.decode(): kind for kind, body in records if kind in (BEGIN, DONE)}
 
 
 def _json(obj) -> bytes:
@@ -178,6 +190,13 @@ class WriteAheadLog:
         self._sync_dir()
         self.sealed += sealed
         return sealed
+
+    def mark(self, segments: list[tuple[str, int]], kind: int, tier: str) -> None:
+        """Record a commit's progress in each of its sealed segments."""
+        data = record(kind, tier.encode())
+        for _, fd in segments:
+            os.write(fd, data)
+            os.fsync(fd)
 
     def release(self, segment: tuple[str, int]) -> None:
         """Delete a committed segment and drop its lock."""

@@ -66,8 +66,7 @@ def test_registry_convergence_across_instances(spark, tmp_path):
     assert len(res) == 2  # a's series + b's own
     stop = b.start_reloader(interval_seconds=0.2)
     try:
-        a.write(data[2:3])
-        a.flush()
+        a.write(data[2:3])  # reaches b once a's head flushes by age
         import time
 
         deadline = time.time() + 10

@@ -126,9 +126,11 @@ def test_streaming_soak_bounded_rss_and_stable_files(spark, tmp_path):
                 ),
             ]
             writer.write(list(fan_out(scrape, instances=N_INSTANCES, seed=it)))
-            # each iteration stands for a 15 s scrape, past the head's 5 s
-            # age limit: flush it as the live head would, so the rollup
-            # stream has files to tail
+            # each iteration stands for a 15 s scrape, and between two of
+            # them a live head flushes by age (HEAD_MAX_AGE_S = 5 s). The
+            # loop runs all scrapes in a few seconds, so it flushes at each
+            # one: the rollup stream tails the flushed files, and the
+            # compaction check below needs one file set per scrape
             storage.flush()
             rss_curve.append(round(_driver_rss_mb(), 1))
         print("soak RSS curve (MB):", json.dumps(rss_curve))

@@ -1,7 +1,8 @@
 """The WAL-backed write head of SparkParquetStorage: acked writes survive
-a crash exactly once, a flush cut short re-commits without duplicates,
-the cache-off registry stays deduplicated across flushes, and writes
-racing a flush are neither lost nor doubled."""
+a crash exactly once, a flush cut short resumes where it stopped, an idle
+head flushes by age, the cache-off registry stays deduplicated across
+flushes, writes racing a flush are neither lost nor doubled, and a root
+without a WAL commits each write before its ack."""
 
 from __future__ import annotations
 
@@ -149,6 +150,126 @@ def test_crash_after_append_before_segment_delete_leaves_no_duplicates(
     assert _segments(root) == []
     assert _stored(again) == (20, 20)
     assert spark.read.parquet(again.registry_path).count() == 15
+
+
+def test_crash_inside_an_append_recommits_only_the_missing_rows(
+    spark, tmp_path, monkeypatch
+):
+    root = str(tmp_path / "s")
+    store = SparkParquetStorage(spark, root)
+    store.write(_batch(0, range(10)))
+    orig = SparkParquetStorage.ingest_df
+
+    def append_then_die(self, df, files_per_day=None):
+        orig(self, df.limit(4), files_per_day)  # a partial Spark commit
+        raise RuntimeError("crash inside the samples append")
+
+    monkeypatch.setattr(SparkParquetStorage, "ingest_df", append_then_die)
+    with pytest.raises(RuntimeError, match="crash inside"):
+        store.flush()
+    monkeypatch.undo()
+    del store  # unflushed: its segment locks go, as with a killed process
+    gc.collect()
+    again = SparkParquetStorage(spark, root)
+    assert _segments(root) == [] and _stored(again) == (10, 10)
+    assert spark.read.parquet(again.registry_path).count() == 10
+
+
+def test_crash_before_an_append_keeps_a_resent_batch(spark, tmp_path, monkeypatch):
+    """Identical (fingerprint, ts) rows are legal: a batch the sender
+    resends after its first copy was stored keeps both copies when the
+    flush carrying the resend dies before its samples append, as it does
+    without a crash."""
+    root = str(tmp_path / "s")
+    store = SparkParquetStorage(spark, root)
+    store.write(_batch(0, range(10)))
+    store.flush()
+    store.write(_batch(0, range(11)))  # the resend, plus one new series
+
+    def die(self, reg_df):
+        raise RuntimeError("crash inside the registry append")
+
+    monkeypatch.setattr(SparkParquetStorage, "_append_registry", die)
+    with pytest.raises(RuntimeError, match="crash inside"):
+        store.flush()
+    monkeypatch.undo()
+    del store  # unflushed: its segment locks go, as with a killed process
+    gc.collect()
+    again = SparkParquetStorage(spark, root)
+    assert _segments(root) == [] and _stored(again) == (21, 11)
+    assert spark.read.parquet(again.registry_path).count() == 11
+
+
+def test_idle_head_flushes_by_age_without_another_write(spark, tmp_path):
+    from promhouse_spark.storage.parquet import HEAD_MAX_AGE_S
+
+    root = str(tmp_path / "s")
+    store = SparkParquetStorage(spark, root)
+    store.write(_batch(0, range(5)))
+    deadline = time.monotonic() + HEAD_MAX_AGE_S + 60
+    while _segments(root) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert _segments(root) == []
+    other = SparkParquetStorage(spark, root, cache_registry=False)
+    assert _stored(other) == (5, 5)
+
+
+def test_writes_ack_while_a_flush_commits(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "s")
+    store = SparkParquetStorage(spark, root)
+    store.write(_batch(0, range(8)))
+    entered, release = threading.Event(), threading.Event()
+    orig = SparkParquetStorage.ingest_df
+
+    def held(self, df, files_per_day=None):
+        entered.set()
+        assert release.wait(120)
+        orig(self, df, files_per_day)
+
+    monkeypatch.setattr(SparkParquetStorage, "ingest_df", held)
+    flusher = threading.Thread(target=store.flush)
+    flusher.start()
+    try:
+        assert entered.wait(120)
+        store.write(_batch(1, range(8)))  # acks with the commit still held
+        assert len(store._head.fps) == 8
+    finally:
+        release.set()
+        flusher.join(120)
+    monkeypatch.undo()
+    assert _stored(store) == (16, 16)
+
+
+def test_root_without_wal_retries_a_failed_commit_whole(spark, monkeypatch):
+    """A JDBC root has no WAL: each write commits its own rows before it
+    acks. A failed commit reaches that write's caller and leaves the hot
+    dict without the series, so the retry registers it."""
+    import uuid
+
+    from promhouse_spark.storage.jdbc import DERBY_DRIVER, JdbcStorage, derby_memory_url
+
+    store = JdbcStorage(
+        spark, derby_memory_url(f"nowal{uuid.uuid4().hex[:8]}"), driver=DERBY_DRIVER
+    )
+    assert store._wal is None
+    store.write(_batch(0, range(3)))
+    orig, calls = JdbcStorage._append_registry, []
+
+    def fail_once(self, reg_df):
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("transient")
+        return orig(self, reg_df)
+
+    monkeypatch.setattr(JdbcStorage, "_append_registry", fail_once)
+    with pytest.raises(OSError):
+        store.write(_batch(1, range(3, 5)))
+    assert not store._head and len(store._registry) == 3
+    store.write(_batch(1, range(3, 5)))  # the sender's retry
+    monkeypatch.undo()
+    assert store.registry_df().count() == 5 and len(store._registry) == 5
+    res = store.read([Query(T0, T0 + 10**6, make_matchers(("__name__", "=", "head_probe")))])[0]
+    assert sorted(len(ts.samples) for ts in res) == [1, 1, 1, 1, 1]
 
 
 def test_failed_flush_recommits_on_the_same_instance(spark, tmp_path, monkeypatch):
