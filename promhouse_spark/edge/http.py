@@ -742,7 +742,7 @@ def create_app(
             )
             total = 0
             for sel, ext in _collect_selectors(node):
-                samples, _series = eng._selected(sel)
+                samples, _series = eng._selected(sel, ext)
                 # _selected shifts timestamps by +offset, so the window
                 # compares directly against the evaluation grid; instant
                 # selectors look back `lookback`, matrix ones their range
@@ -847,7 +847,7 @@ def create_app(
         offset = sel.offset_ms or 0
         # _selected applies matchers and shifts timestamps by +offset for
         # the lookup; shift back for reporting
-        samples, series = eng._selected(sel)
+        samples, series = eng._selected(sel, rs.range_ms)
         rows = (
             samples.filter(
                 (F.col("timestamp_ms") > at - rs.range_ms)

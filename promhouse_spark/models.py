@@ -9,7 +9,9 @@ model in :mod:`promhouse_spark.schemas`.
 from __future__ import annotations
 
 import enum
+import functools
 import re
+import warnings
 from dataclasses import dataclass, field
 from typing import Mapping, Sequence
 
@@ -111,6 +113,17 @@ def anchored(pattern: str) -> str:
     return f"^(?:{pattern})$"
 
 
+@functools.lru_cache(maxsize=1024)
+def regex(pattern: str) -> re.Pattern:
+    """A matcher pattern compiled once (``re.error`` if it does not
+    compile). Python warns "possible nested set" on RE2 POSIX classes such
+    as ``[[:alpha:]]``; that parse is the pinned dialect divergence
+    (tests/test_regex_dialect.py), so the warning is silenced."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", FutureWarning)
+        return re.compile(pattern)
+
+
 @dataclass(frozen=True)
 class Matcher:
     """A single label matcher (``storages/base/base.go:62-82``).
@@ -135,7 +148,7 @@ class Matcher:
         # slack), and it keeps inline flags like (?i)/(?s) legal at pattern
         # start — Python 3.11 rejects global flags mid-pattern, which the
         # literal ^(?: prefix would force.
-        ok = re.fullmatch(self.value, v) is not None
+        ok = regex(self.value).fullmatch(v) is not None
         if self.type is MatchType.RE:
             return ok
         return not ok

@@ -153,6 +153,18 @@ def _drop_keys(labels: Column, keys: Sequence[str]) -> Column:
     return F.map_filter(labels, lambda k, _: ~F.array_contains(drop, k))
 
 
+def _keyed(
+    df: DataFrame, key: Column, labels_col: str, time_col: str, value_col: str
+) -> DataFrame:
+    """A vector as (``__t``, ``__key``, ``__labels``, ``__v``) rows."""
+    return df.select(
+        F.col(time_col).alias("__t"),
+        key.alias("__key"),
+        F.col(labels_col).alias("__labels"),
+        F.col(value_col).cast("double").alias("__v"),
+    )
+
+
 def _one_side(
     df: DataFrame,
     key: Column,
@@ -218,6 +230,8 @@ def binop(
     labels_col: str = "labels",
     time_col: str = "eval_ms",
     value_col: str = "value",
+    left_unique: bool = False,
+    right_unique: bool = False,
 ) -> DataFrame:
     """Binary operation between two instant vectors with PromQL vector
     matching. ``op`` is one of ``+ - * / % ^ == != > < >= <=`` or a custom
@@ -231,6 +245,13 @@ def binop(
     Output: (``labels_col``, ``time_col``, ``value_col``) — unmatched rows
     drop (inner join), comparison ops without ``bool_mode`` filter the left
     vector instead of computing a value.
+
+    ``left_unique`` / ``right_unique``: the caller guarantees that side
+    holds at most one row per (time, match key) — an aggregation's output
+    under plain one-to-one matching. The one-to-one guards cannot fire
+    then, so they are left out of the plan: a unique right side skips its
+    duplicate-series collapse, and a unique left side the post-join
+    matched-series window.
     """
     if card not in ("one_to_one", "many_to_one", "one_to_many"):
         raise ValueError(f"unknown cardinality: {card}")
@@ -254,18 +275,16 @@ def binop(
         # every lhs sample, and its matchedSigs error fires only when ≥2
         # rows of one match group actually produce output — collapsing
         # with first() would silently discard the duplicate instead
-        l = left.select(
-            F.col(time_col).alias("__t"),
-            lkey.alias("__key"),
-            F.col(labels_col).alias("__labels"),
-            F.col(value_col).cast("double").alias("__v"),
-        )
-        r = _one_side(
-            right, rkey, "right", labels_col, time_col, value_col,
-            eager_guard=True,
-        )
+        l = _keyed(left, lkey, labels_col, time_col, value_col)
+        if right_unique:
+            r = _keyed(right, rkey, labels_col, time_col, value_col)
+        else:
+            r = _one_side(
+                right, rkey, "right", labels_col, time_col, value_col,
+                eager_guard=True,
+            )
         lv, rv = F.col("l.__v"), F.col("r.__v")
-        if not (is_cmp and not bool_mode):
+        if not (is_cmp and not bool_mode) and not left_unique:
             # matchedSigs: detected POST-JOIN via a window count over the
             # join output (the rhs is unique per key, so joined rows per
             # (t, key) = the matched left group's size). A left-side guard
@@ -282,12 +301,7 @@ def binop(
     else:
         many, one = (left, right) if card == "many_to_one" else (right, left)
         one_side = "right" if card == "many_to_one" else "left"
-        m = many.select(
-            F.col(time_col).alias("__t"),
-            match_key(F.col(labels_col), on, ignoring).alias("__key"),
-            F.col(labels_col).alias("__labels"),
-            F.col(value_col).cast("double").alias("__v"),
-        ).alias("l")
+        m = _keyed(many, lkey, labels_col, time_col, value_col)
         o = _one_side(
             one, rkey, one_side, labels_col, time_col, value_col,
             eager_guard=True,
@@ -331,14 +345,16 @@ def binop(
         kept = joined.filter(op_fn(lv, rv))
         value_out, time_out = lv, F.col("__t")
         if card == "one_to_one":
-            # matchedSigs for filter comparisons: only when ≥2 rows of a
-            # match group BOTH survive the filter does Prometheus error —
-            # counted over the kept rows (the window repartitions by the
-            # join key the rows already carry). Guard value AND eval_ms so
-            # value-pruning plans still trip it.
-            kn = F.count("*").over(W.partitionBy("__t", "__key"))
-            value_out = _matched_guard(lv, kn)
-            time_out = _matched_guard(F.col("__t"), kn).cast("long")
+            if not left_unique:
+                # matchedSigs for filter comparisons: only when ≥2 rows of
+                # a match group BOTH survive the filter does Prometheus
+                # error — counted over the kept rows (the window
+                # repartitions by the join key the rows already carry).
+                # Guard value AND eval_ms so value-pruning plans still
+                # trip it.
+                kn = F.count("*").over(W.partitionBy("__t", "__key"))
+                value_out = _matched_guard(lv, kn)
+                time_out = _matched_guard(F.col("__t"), kn).cast("long")
         else:
             # grouped filter: insertedSigs — two surviving many-side rows
             # collapsing onto the SAME result labels is an error
@@ -363,7 +379,7 @@ def binop(
         kn = F.count("*").over(W.partitionBy("__t", "__key"))
         value = _matched_guard(value, kn)
         time_out = _matched_guard(F.col("__t"), kn).cast("long")
-    else:
+    elif card != "one_to_one":
         # grouped arith/bool: insertedSigs — distinct many-side rows whose
         # RESULT labels collide (an include label erased the
         # distinguishing dimension) are an error in engine.go

@@ -18,6 +18,7 @@ day partitions before reading a byte.
 
 from __future__ import annotations
 
+import json
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
@@ -89,24 +90,31 @@ def restrict_to_series(
 ) -> DataFrame:
     """J1/J2/J3: restrict the fact scan to the matched series set.
 
-    - list of ≤ ``max_inlist`` fingerprints → ``isin`` literal pushdown
-      (reaches the parquet reader as an IN filter — the reference's
-      ``WHERE fingerprint IN (...)``, ``clickhouse.go:288``);
+    - list of ≤ ``max_inlist`` fingerprints → an ``IN`` filter (reaches the
+      parquet reader as an IN filter — the reference's
+      ``WHERE fingerprint IN (...)``, ``clickhouse.go:288``). It is built
+      as one SQL expression over the integers, a single py4j call where
+      ``Column.isin`` makes one per fingerprint;
     - otherwise → left-semi join against a (deduped) fingerprint frame
       (the reference's temp-table ``ANY INNER JOIN``,
-      ``clickhouse.go:352-358``). No forced broadcast: an empty-matcher
-      select-all makes the matched set the whole registry, so the join
-      strategy is left to AQE, which broadcasts when the runtime size
-      statistics say it fits and shuffles otherwise.
+      ``clickhouse.go:352-358``). A list becomes a plan-local relation
+      (one JSON literal, no RDD), so the planner sees its size. No forced
+      broadcast: an empty-matcher select-all makes the matched set the
+      whole registry, so the join strategy is left to AQE, which
+      broadcasts when the size statistics say it fits and shuffles
+      otherwise.
     """
     if isinstance(fingerprints, DataFrame):
         fp_df = fingerprints.select(FINGERPRINT).dropDuplicates([FINGERPRINT])
         return samples_df.join(fp_df, FINGERPRINT, "left_semi")
-    fps = list(fingerprints)
+    fps = sorted({int(f) for f in fingerprints})
+    if not fps:
+        return samples_df.filter(F.lit(False))
     if len(fps) <= max_inlist:
-        return samples_df.filter(F.col(FINGERPRINT).isin(fps))
-    spark = samples_df.sparkSession
-    fp_df = spark.createDataFrame([(f,) for f in set(fps)], f"{FINGERPRINT} long")
+        return samples_df.filter(F.expr(f"{FINGERPRINT} IN ({','.join(map(str, fps))})"))
+    fp_df = samples_df.sparkSession.range(1).select(
+        F.explode(F.from_json(F.lit(json.dumps(fps)), "array<bigint>")).alias(FINGERPRINT)
+    )
     return samples_df.join(fp_df, FINGERPRINT, "left_semi")
 
 

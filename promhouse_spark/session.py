@@ -51,6 +51,14 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # PySpark 4 wraps every DataFrame/Column API call to capture its
+        # Python call site for error messages: about 5 extra py4j round
+        # trips per F.* call, a third of a PromQL query's driver build.
+        # Off, a PySpark error no longer names the Python line (file and
+        # line number) that built the failing expression; the message and
+        # the JVM stack trace are unchanged. PySpark reads the setting
+        # once per process, at the first wrapped call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

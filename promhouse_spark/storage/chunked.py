@@ -36,7 +36,7 @@ Scale design:
 Trade-offs vs the flat tier, stated: a rawsql query whose WHERE carries
 provable ``timestamp_ms`` bounds gets them pushed below the decode
 barrier (``_register_views_for_sql`` → ``extract_time_window`` →
-``samples_window_df``); bound-less analytics SQL still sees a
+``_window_chunks``); bound-less analytics SQL still sees a
 decode-everything frame — analytics-heavy deployments keep the flat
 tier, ingest-heavy long-retention ones take the 10× storage win.
 ``clean_tombstones`` decodes, masks, and re-encodes only the affected
@@ -62,6 +62,8 @@ CHUNK_SCHEMA = (
     "n int, chunk binary"
 )
 _DECODED_SCHEMA = f"{FINGERPRINT} long, {TIMESTAMP_MS} long, {VALUE} double"
+#: |timestamp_ms| bound that ``to_date(timestamp_millis(...))`` can take
+_MS_LIMIT = 4_000_000_000_000_000
 
 
 def _encode_group(pdf):
@@ -138,7 +140,33 @@ class ChunkedParquetStorage(SparkParquetStorage):
     def chunks_df(self) -> DataFrame:
         if not self._stored(self.chunks_path):
             return self.spark.createDataFrame([], CHUNK_SCHEMA)
-        return self.spark.read.parquet(self.chunks_path)
+        return self.spark.read.schema(CHUNK_SCHEMA).parquet(self.chunks_path)
+
+    def _window_chunks(self, start_ms: int, end_ms: int) -> DataFrame:
+        """Chunk rows that can hold a sample in [start_ms, end_ms]: the day
+        partitions prune directories and the (min_ms, max_ms) envelope
+        prunes chunks through parquet row-group stats, before a byte
+        decodes. Bounds clamp to the range ``to_date`` can represent."""
+        lo = max(int(start_ms), -_MS_LIMIT)
+        hi = min(int(end_ms), _MS_LIMIT)
+        cond = (F.col("max_ms") >= lo) & (F.col("min_ms") <= hi)
+        cond = cond & (
+            F.col(DATE) >= F.to_date(F.timestamp_millis(F.lit(lo)))
+        ) & (F.col(DATE) <= F.to_date(F.timestamp_millis(F.lit(hi))))
+        return self.chunks_df().filter(cond)
+
+    def _decode(self, chunks: DataFrame) -> DataFrame:
+        """Chunk rows → flat (fingerprint, timestamp_ms, value) rows,
+        tombstones masked. The decode is spread across every core: the
+        chunk frame is small (≤120 samples a row), but a single parquet
+        file would otherwise pin the whole decode on one task."""
+        par = self.spark.sparkContext.defaultParallelism
+        decoded = (
+            chunks.select(FINGERPRINT, "chunk")
+            .repartition(par)
+            .mapInPandas(_decode_chunks, schema=_DECODED_SCHEMA)
+        )
+        return self._apply_tombstones(decoded)
 
     def samples_df(self) -> DataFrame:
         """The decoded flat view (rawsql/views/compat): every surviving
@@ -147,13 +175,7 @@ class ChunkedParquetStorage(SparkParquetStorage):
         instead, where chunk envelopes can prune before decode."""
         if not self._stored(self.chunks_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            self.chunks_df()
-            .repartition(par)
-            .mapInPandas(_decode_chunks, schema=_DECODED_SCHEMA)
-        )
-        return self._apply_tombstones(decoded)
+        return self._decode(self.chunks_df())
 
     def _register_views_for_sql(self, sql: str) -> None:
         """Rawsql over the chunked tier: parse provable [lo, hi] bounds out
@@ -170,66 +192,29 @@ class ChunkedParquetStorage(SparkParquetStorage):
         if lo is None and hi is None:
             return super()._register_views_for_sql(sql)
         self.register_views(
-            samples=self.samples_window_df(
-                -4_000_000_000_000_000 if lo is None else lo,
-                4_000_000_000_000_000 if hi is None else hi,
+            samples=self._decode(
+                self._window_chunks(
+                    -_MS_LIMIT if lo is None else lo, _MS_LIMIT if hi is None else hi
+                )
             )
         )
 
-    def samples_window_df(self, start_ms: int, end_ms: int) -> DataFrame:
-        """Time-bounded decoded view — the hook the PromQL engine uses
-        (``PromQLEngine.from_storage`` + ``find_min_max_time``): chunk
-        envelopes and day partitions prune to the query's reachable
-        window BEFORE the decode barrier, which a filter above
-        ``mapInPandas`` could never push down. Returns a superset of
-        [start_ms, end_ms] at chunk granularity; callers apply their own
-        exact time predicates."""
-        if not self._stored(self.chunks_path):
-            return self.spark.createDataFrame([], SAMPLES_SCHEMA)
-        lo = max(int(start_ms), -4_000_000_000_000_000)
-        hi = min(int(end_ms), 4_000_000_000_000_000)
-        chunks = self.chunks_df()
-        cond = (F.col("max_ms") >= lo) & (F.col("min_ms") <= hi)
-        cond = cond & (
-            F.col(DATE) >= F.to_date(F.timestamp_millis(F.lit(lo)))
-        ) & (F.col(DATE) <= F.to_date(F.timestamp_millis(F.lit(hi))))
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            chunks.filter(cond)
-            .select(FINGERPRINT, "chunk")
-            .repartition(par)
-            .mapInPandas(_decode_chunks, schema=_DECODED_SCHEMA)
-        )
-        return self._apply_tombstones(decoded)
-
-    def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
+    def _restricted_scan(
+        self, samples: DataFrame, q: Query, fps, max_inlist: int | None = None
+    ) -> DataFrame:
         """Chunk-granularity pushdown: fingerprint restriction + day
         pruning + (min_ms, max_ms) envelope overlap run on the 6-column
-        chunk frame (parquet row-group stats prune on the envelope
-        columns); ONLY surviving chunks decode. The passed flat frame is
-        ignored — pruning below the decode barrier beats any cached
+        chunk frame; ONLY surviving chunks decode. The passed flat frame
+        is ignored — pruning below the decode barrier beats any cached
         decoded view."""
-        chunks = self.chunks_df()
-        cond = (F.col("max_ms") >= q.start_ms) & (F.col("min_ms") <= q.end_ms)
-        start_d = F.to_date(F.timestamp_millis(F.lit(int(q.start_ms))))
-        end_d = F.to_date(F.timestamp_millis(F.lit(int(q.end_ms))))
-        cond = cond & (F.col(DATE) >= start_d) & (F.col(DATE) <= end_d)
+        if max_inlist is None:
+            max_inlist = self.max_series_inlist
         pruned = restrict_to_series(
-            chunks.filter(cond), fps, self.max_series_inlist
+            self._window_chunks(q.start_ms, q.end_ms), fps, max_inlist
         )
-        # spread the Python decode across every core: the surviving chunk
-        # frame is tiny (≤120 samples per row), but a single parquet file
-        # would otherwise pin the whole decode on one task
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            pruned.select(FINGERPRINT, "chunk")
-            .repartition(par)
-            .mapInPandas(_decode_chunks, schema=_DECODED_SCHEMA)
-        )
-        decoded = decoded.filter(
+        return self._decode(pruned).filter(
             (F.col(TIMESTAMP_MS) >= q.start_ms) & (F.col(TIMESTAMP_MS) <= q.end_ms)
         )
-        return self._apply_tombstones(decoded)
 
     def read_chunks(self, q: Query):
         """Zero-decode read for the streamed remote-read path: the pruned
@@ -255,13 +240,8 @@ class ChunkedParquetStorage(SparkParquetStorage):
         fps = self._resolve_fingerprints(q)
         if not fps:
             return []
-        chunks = self.chunks_df()
-        cond = (F.col("max_ms") >= q.start_ms) & (F.col("min_ms") <= q.end_ms)
-        start_d = F.to_date(F.timestamp_millis(F.lit(int(q.start_ms))))
-        end_d = F.to_date(F.timestamp_millis(F.lit(int(q.end_ms))))
-        cond = cond & (F.col(DATE) >= start_d) & (F.col(DATE) <= end_d)
         pruned = restrict_to_series(
-            chunks.filter(cond), fps, self.max_series_inlist
+            self._window_chunks(q.start_ms, q.end_ms), fps, self.max_series_inlist
         ).select(FINGERPRINT, "min_ms", "max_ms", "chunk")
 
         from promhouse_spark.functions.fingerprint import to_unsigned64

@@ -76,6 +76,7 @@ from promhouse_spark.schemas import (
     FINGERPRINT,
     HISTOGRAMS_SCHEMA,
     LABELS,
+    SAMPLES_DISK_SCHEMA,
     SAMPLES_SCHEMA,
     TIME_SERIES_SCHEMA,
     TIMESTAMP_MS,
@@ -132,8 +133,13 @@ def _age_flusher(ref: weakref.ref) -> None:
     ``HEAD_MAX_AGE_S`` old, with or without further writes. Holds the
     storage only weakly, and exits once the head is empty (the next write
     starts a new one; a failed commit's sealed segment goes in with the
-    next flush) or the storage is gone."""
+    next flush) or the storage is gone. It starts beside a head that has
+    just begun, so it sleeps before its first look: a strong reference
+    taken while ``write()`` returns would keep a storage its caller
+    dropped alive, with its WAL segment locked against a new instance."""
+    wait = HEAD_MAX_AGE_S
     while True:
+        time.sleep(max(wait, 0.0))
         storage = ref()
         if storage is None:
             return
@@ -152,7 +158,6 @@ def _age_flusher(ref: weakref.ref) -> None:
                 )
                 wait = HEAD_MAX_AGE_S
         del storage
-        time.sleep(max(wait, 0.0))
 
 
 class SparkParquetStorage(Storage):
@@ -231,7 +236,11 @@ class SparkParquetStorage(Storage):
     def samples_df(self) -> DataFrame:
         if not self._stored(self.samples_path):
             return self.spark.createDataFrame([], SAMPLES_SCHEMA)
-        return self._apply_tombstones(self.spark.read.parquet(self.samples_path))
+        # the on-disk schema is fixed: declaring it skips the footer-read
+        # job Spark's parquet schema inference runs on every scan build
+        return self._apply_tombstones(
+            self.spark.read.schema(SAMPLES_DISK_SCHEMA).parquet(self.samples_path)
+        )
 
     def tombstones_df(self) -> DataFrame:
         """Pending delete intervals: (fingerprint, min_ms, max_ms) — the
@@ -385,8 +394,9 @@ class SparkParquetStorage(Storage):
         rows = reg.collect()
         merged = {to_unsigned64(r[FINGERPRINT]): dict(r[LABELS]) for r in rows}
         # keep read-your-own-writes for series written after the scan started
-        merged.update(self._registry)
-        self._registry = merged
+        with self._lock:
+            merged.update(self._registry)
+            self._registry = merged
         self.cache_registry = self._want_cache
 
     def start_reloader(self, interval_seconds: float = 5.0):
@@ -471,7 +481,8 @@ class SparkParquetStorage(Storage):
             with self._flush_lock:
                 self._commit(head)
             if self.cache_registry:
-                self._registry.update(new_series)
+                with self._lock:
+                    self._registry.update(new_series)
             return
         with self._lock:
             self._wal.append(Head.records(*rows))
@@ -931,13 +942,22 @@ class SparkParquetStorage(Storage):
 
     # ----------------------------------------------------------------- read
 
-    def _resolve_fingerprints(self, q: Query) -> list[int]:
-        """O2 against the hot cache (signed fingerprints)."""
+    def _resolve_series(self, q: Query) -> list[tuple[int, dict[str, str]]]:
+        """O2 against the hot cache: (signed fingerprint, labels) of every
+        series ``q`` matches. Matches over a copy of the dict taken under
+        ``_lock``, which every writer holds while it adds series, so a
+        concurrent write can neither break the pass nor wait for it."""
+        with self._lock:
+            registry = self._registry.copy()
         return [
-            to_signed64(fp)
-            for fp, labels in self._registry.items()
+            (to_signed64(fp), labels)
+            for fp, labels in registry.items()
             if q.matches(labels)
         ]
+
+    def _resolve_fingerprints(self, q: Query) -> list[int]:
+        """O2 against the hot cache (signed fingerprints)."""
+        return [fp for fp, _ in self._resolve_series(q)]
 
     def attach_rollup(self, rollup_path: str, step_ms: int) -> None:
         """Register a continuously-maintained rollup table
@@ -1270,14 +1290,17 @@ class SparkParquetStorage(Storage):
             yield hist_only(hseries[hi])
             hi += 1
 
-    def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
+    def _restricted_scan(
+        self, samples: DataFrame, q: Query, fps, max_inlist: int | None = None
+    ) -> DataFrame:
         """One query's restricted fact scan (F2 + J1/J2) — the layout seam:
         the flat tier filters rows; a chunked tier prunes whole chunks by
-        their (min_ms, max_ms) envelope before decoding a byte."""
+        their (min_ms, max_ms) envelope before decoding a byte.
+        ``max_inlist`` overrides the storage's IN-list cutover."""
         return restrict_to_series(
             samples_in_range(samples, q.start_ms, q.end_ms),
             fps,
-            self.max_series_inlist,
+            self.max_series_inlist if max_inlist is None else max_inlist,
         )
 
     def _read_batched(self, queries: Sequence[Query]) -> list[list[TimeSeries]]:

@@ -89,9 +89,10 @@ def ingest_batch(storage: SparkParquetStorage, batch_df: DataFrame) -> None:
                 storage.spark.createDataFrame(
                     new_rows, new_series.schema
                 ).write.mode("append").parquet(storage.registry_path)
-                storage._registry.update(
-                    {to_unsigned64(r[FINGERPRINT]): dict(r[LABELS]) for r in new_rows}
-                )
+                with storage._lock:
+                    storage._registry.update(
+                        {to_unsigned64(r[FINGERPRINT]): dict(r[LABELS]) for r in new_rows}
+                    )
         else:
             # high-cardinality path: the series delta stays on the executors
             # end-to-end — a label-churn storm never lands on the driver.

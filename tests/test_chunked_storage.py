@@ -268,8 +268,8 @@ def test_streamed_read_falls_back_under_tombstones(spark, tmp_path):
 def test_promql_over_chunked_prunes_and_matches_flat(stores, spark):
     """The PromQL serving path over the chunked tier: results identical to
     the flat tier, and the compiled plan carries the chunk-envelope
-    predicates below the Arrow decode (find_min_max_time →
-    samples_window_df)."""
+    predicates below the Arrow decode (find_min_max_time → the storage's
+    _restricted_scan)."""
     from promhouse_spark.promql.engine import PromQLEngine
 
     flat, chunked = stores

@@ -118,6 +118,21 @@ def test_query_range_bad_promql_is_client_error(client):
     assert client.get("/api/v1/query").status_code == 400
 
 
+@pytest.mark.parametrize("matcher", ['job=~"("', 'job!~"[a-"'])
+def test_query_range_bad_regex_is_client_error(client, matcher):
+    """Matchers compile in Python when the query builds; a regex that
+    does not compile is the client's error, with or without a series to
+    match against."""
+    for query in (f"requests_total{{{matcher}}}", f"absent_metric{{{matcher}}}"):
+        r = client.get(
+            "/api/v1/query_range",
+            query_string={"query": query, "start": "0", "end": "1", "step": "1"},
+        )
+        assert r.status_code == 400, r.data[:300]
+        body = r.get_json()
+        assert body["status"] == "error" and body["errorType"] == "bad_data"
+
+
 def test_query_range_rfc3339_times(client):
     r = client.get(
         "/api/v1/query_range",
