@@ -137,6 +137,11 @@ def create_app(
     import time as _time_mod
 
     app = Flask("promhouse_spark")
+    if getattr(storage, "_want_cache", False):
+        # remote read and PromQL resolve series against the storage's hot
+        # registry dict: keep it current with the series other instances
+        # sharing the root flush (the reference's 5 s reloader)
+        app.extensions["registry_reloader"] = storage.start_reloader()
     counters = {"written_samples": 0, "written_time_series": 0, "read_queries": 0}
     rule_groups = rule_groups or []
     _started = _time_mod.time()

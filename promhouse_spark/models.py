@@ -113,12 +113,118 @@ def anchored(pattern: str) -> str:
     return f"^(?:{pattern})$"
 
 
+# Java's line terminators (java.util.regex without UNIX_LINES): what "."
+# does not match, and what the closing "$" may stand before at the end
+_JAVA_DOT = r"[^\n\r\x85\u2028\u2029]"
+_JAVA_END = r"(?:\r\n|(?<!\r)\n|[\r\x85\u2028\u2029])?"
+_JAVA_FLAGS = re.compile(r"\(\?([is]+)\)")
+_QUANTIFIER = re.compile(r"\{\d+(?:,\d*)?\}")
+_CLASS_ESCAPES = frozenset("dDwWsS")
+
+
+def _escape(pattern: str, i: int) -> str | None:
+    """The escape at ``pattern[i]`` if both dialects read it alike: an
+    escaped ASCII punctuation literal, \\t \\n \\r \\f, or an ASCII class
+    \\d \\w \\s (and their negations)."""
+    e = pattern[i + 1 : i + 2]
+    if e and (e in _CLASS_ESCAPES or e in "tnrf" or (e.isascii() and not e.isalnum())):
+        return "\\" + e
+    return None
+
+
+def _class_end(pattern: str, i: int) -> int | None:
+    """The index past the character class opening at ``pattern[i]`` if
+    both dialects read it alike: no nested ``[`` (Java's union, RE2's POSIX
+    class), no ``&&`` (Java's intersection), no leading ``]``, and a ``-``
+    only at either end or between two plain characters."""
+    j = i + 2 if pattern.startswith("[^", i) else i + 1
+    atoms: list[str | None] = []  # plain characters; None for an escape
+    while j < len(pattern):
+        c = pattern[j]
+        if c == "]" and atoms:
+            return j + 1
+        if c == "[" or c == "]" or pattern.startswith("&&", j):
+            return None
+        if c == "\\":
+            if _escape(pattern, j) is None:
+                return None
+            atoms.append(None)
+            j += 2
+            continue
+        if c == "-" and atoms and pattern[j + 1 : j + 2] != "]":
+            lo, hi = atoms[-1], pattern[j + 1 : j + 2]
+            if lo is None or lo.startswith("-") or hi in ("", "\\", "[", "-"):
+                return None
+            atoms.append("-" + hi)  # the range's end, not an endpoint
+            j += 2
+            continue
+        atoms.append(c)
+        j += 1
+    return None
+
+
 @functools.lru_cache(maxsize=1024)
-def regex(pattern: str) -> re.Pattern:
-    """A matcher pattern compiled once (``re.error`` if it does not
-    compile). Python warns "possible nested set" on RE2 POSIX classes such
-    as ``[[:alpha:]]``; that parse is the pinned dialect divergence
-    (tests/test_regex_dialect.py), so the warning is silenced."""
+def regex(pattern: str) -> re.Pattern | None:
+    """A matcher pattern as Python's ``re`` must read it to answer exactly
+    what the distributed matcher answers — Java's regex running ``rlike``
+    over ``^(?:pattern)$`` (``promql/engine.py:matcher_condition``,
+    ``operators/matchers.py``) — or None for a pattern outside the subset
+    translated here. The translation: ASCII ``\\d \\w \\s`` and case folding,
+    ``.`` stops at every Java line terminator, and the closing ``$`` may
+    stand before one final terminator. Outside the subset are ``\\p{..}``,
+    ``\\Q..\\E``, ``\\z``, POSIX and nested classes, inner ``^``/``$``,
+    groups other than ``(..)``/``(?:..)``, and flags other than a leading
+    ``(?i)``/``(?s)``; a pattern Python does not compile is outside too.
+    Callers that can run Java's matcher resolve those selections there."""
+    flags = _JAVA_FLAGS.match(pattern)
+    dotall = flags is not None and "s" in flags.group(1)
+    i = flags.end() if flags else 0
+    out: list[str] = []
+    while i < len(pattern):
+        c = pattern[i]
+        if c == "\\":
+            esc = _escape(pattern, i)
+            if esc is None:
+                return None
+            out.append(esc)
+            i += 2
+        elif c == "[":
+            j = _class_end(pattern, i)
+            if j is None:
+                return None
+            out.append(pattern[i:j])
+            i = j
+        elif c == "{":
+            q = _QUANTIFIER.match(pattern, i)
+            if q is None:
+                return None
+            out.append(q.group())
+            i = q.end()
+        elif c in "^$]}" or (
+            pattern.startswith("(?", i) and not pattern.startswith("(?:", i)
+        ):
+            return None
+        else:
+            out.append(_JAVA_DOT if c == "." and not dotall else c)
+            i += 1
+    prefix = flags.group() if flags else ""
+    with warnings.catch_warnings():
+        # Python warns where it may read a class differently some day
+        # ("possible set union" on [a||b]): not exact, so outside too
+        warnings.simplefilter("error", FutureWarning)
+        try:
+            return re.compile(f"{prefix}(?:{''.join(out)}){_JAVA_END}", re.ASCII)
+        except (re.error, FutureWarning):
+            return None
+
+
+@functools.lru_cache(maxsize=1024)
+def _python_regex(pattern: str) -> re.Pattern:
+    """A pattern outside :func:`regex`'s subset, read by Python's ``re``
+    alone (``re.error`` if it does not compile) — the matcher of storages
+    with no Java side. Python warns "possible nested set" on RE2 POSIX
+    classes such as ``[[:alpha:]]``; that parse is a pinned dialect
+    divergence (tests/test_regex_dialect.py), so the warning is silenced."""
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", FutureWarning)
         return re.compile(pattern)
@@ -144,11 +250,9 @@ class Matcher:
             return v == self.value
         if self.type is MatchType.NEQ:
             return v != self.value
-        # fullmatch ≡ RE2's ^(?:p)$ where $ is end-of-text (no trailing-\n
-        # slack), and it keeps inline flags like (?i)/(?s) legal at pattern
-        # start — Python 3.11 rejects global flags mid-pattern, which the
-        # literal ^(?: prefix would force.
-        ok = regex(self.value).fullmatch(v) is not None
+        # fullmatch over the translated pattern ≡ Java's ^(?:p)$; it keeps
+        # a leading (?i)/(?s) legal, which Python 3.11 rejects mid-pattern
+        ok = (regex(self.value) or _python_regex(self.value)).fullmatch(v) is not None
         if self.type is MatchType.RE:
             return ok
         return not ok
@@ -170,6 +274,15 @@ class Query:
         """Conjunction over all matchers; empty list selects all
         (``storages/storages_test.go:264-326``)."""
         return all(m.matches(labels) for m in self.matchers)
+
+    def java_exact(self) -> bool:
+        """Do Python's matches equal Java's for every regex here
+        (:func:`regex`)? Only such a query resolves against a hot dict where
+        the distributed matcher could also serve it."""
+        return all(
+            m.type in (MatchType.EQ, MatchType.NEQ) or regex(m.value) is not None
+            for m in self.matchers
+        )
 
     def __repr__(self) -> str:
         ms = ",".join(repr(m) for m in self.matchers)

@@ -27,9 +27,12 @@ from promhouse_spark.models import Matcher
 from promhouse_spark.operators.matchers import matchers_to_column
 from promhouse_spark.schemas import DATE, FINGERPRINT, LABELS, TIMESTAMP_MS
 
-# Reference default for the IN-list ↔ semi-join switch
-# (cmd/promhouse/main.go:198).
-DEFAULT_MAX_SERIES_INLIST = 50
+# The IN-list ↔ semi-join switch for remote read and PromQL alike (the
+# reference defaults to 50, cmd/promhouse/main.go:198). The IN filter is
+# one SQL expression; a remote read over a 5k-series store (local[2],
+# warm median) took 0.41/0.39 s at 50 series (IN/semi-join), 0.35/0.40 s
+# at 200, 0.66/0.57 s at 1k and 1.88/1.70 s at 5k.
+DEFAULT_MAX_SERIES_INLIST = 200
 
 
 def select_series(registry_df: DataFrame, matchers: Sequence[Matcher]) -> DataFrame:
@@ -95,7 +98,7 @@ def restrict_to_series(
       ``WHERE fingerprint IN (...)``, ``clickhouse.go:288``). It is built
       as one SQL expression over the integers, a single py4j call where
       ``Column.isin`` makes one per fingerprint;
-    - otherwise → left-semi join against a (deduped) fingerprint frame
+    - otherwise → left-semi join against a fingerprint frame
       (the reference's temp-table ``ANY INNER JOIN``,
       ``clickhouse.go:352-358``). A list becomes a plan-local relation
       (one JSON literal, no RDD), so the planner sees its size. No forced
@@ -105,8 +108,8 @@ def restrict_to_series(
       otherwise.
     """
     if isinstance(fingerprints, DataFrame):
-        fp_df = fingerprints.select(FINGERPRINT).dropDuplicates([FINGERPRINT])
-        return samples_df.join(fp_df, FINGERPRINT, "left_semi")
+        # a semi-join keeps each left row once however often its key repeats
+        return samples_df.join(fingerprints.select(FINGERPRINT), FINGERPRINT, "left_semi")
     fps = sorted({int(f) for f in fingerprints})
     if not fps:
         return samples_df.filter(F.lit(False))

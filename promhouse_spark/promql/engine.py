@@ -40,11 +40,12 @@ from __future__ import annotations
 
 import json
 import math
-import re
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from promhouse_spark.models import Query, make_matchers, regex
+from promhouse_spark.models import Query, make_matchers
 from promhouse_spark.operators.asof import instant_vector
 from promhouse_spark.operators.vector_match import (
     _CMP as _VM_CMP,
@@ -69,27 +70,11 @@ from promhouse_spark.promql.parser import (
     find_min_max_time,
     parse,
 )
-from promhouse_spark.plans.read import restrict_to_series
+from promhouse_spark.plans.read import DEFAULT_MAX_SERIES_INLIST, restrict_to_series
 
 NAME = "__name__"
 
-#: Matched-series count up to which a selector restricts its scan with one
-#: ``fingerprint IN (...)`` filter. A semi-join against the same set costs
-#: one broadcast job per selector; the filter costs the parse of its
-#: integers, measured at 0.07 s for 1k, 0.13 s for 5k and 0.24 s for 10k
-#: fingerprints (local[1], parse + optimize). Larger sets (a select-all
-#: over a big registry) take the semi-join.
-INLIST_MAX_SERIES = 5_000
-
 _SERIES_JSON = "array<struct<fingerprint:bigint,labels:map<string,string>>>"
-
-
-def _restrict(frame: DataFrame, matched: list[int] | DataFrame) -> DataFrame:
-    """Rows of a fingerprint-keyed frame that belong to the matched series:
-    an IN filter over resolved fingerprints, a semi-join on a series frame."""
-    if isinstance(matched, DataFrame):
-        return frame.join(matched.select("fingerprint"), "fingerprint", "left_semi")
-    return restrict_to_series(frame, matched, INLIST_MAX_SERIES)
 
 _ARITH = {
     "+": lambda l, r: l + r,
@@ -319,6 +304,21 @@ def matcher_condition(labels: Column, m: Matcher) -> Column:
     raise ValueError(f"bad matcher op {m.op}")
 
 
+def _check_regex(spark, pattern: str) -> None:
+    """ValueError (→ 400) for a pattern Java's regex rejects: ``rlike``
+    would only fail once a job runs."""
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(f"^(?:{pattern})$")
+        return
+    except IllegalArgumentException as e:
+        # PySpark's converted PatternSyntaxException, once a session has
+        # installed its py4j exception capture
+        msg = str(e)
+    except Py4JJavaError as e:
+        msg = e.java_exception.getMessage()
+    raise ValueError(f"invalid matcher regex {pattern!r}: {msg}")
+
+
 class PromQLEngine:
     def __init__(
         self,
@@ -344,10 +344,14 @@ class PromQLEngine:
         # *_over_time range functions (streaming/rollup.rollup_range_agg)
         self._rollup: tuple[DataFrame, int] | None = None
         # set by from_storage, inherited by sub-engines (_sub): the storage
-        # whose hot registry dict resolves selectors (None: they resolve
-        # over series_df), and its restricted scan (raw tier only), which
-        # reads each selector's samples over the window it can reach
-        self._hot_registry = None
+        # (series_df may then be None until a selection resolves
+        # distributed), a snapshot of its hot registry dict (None: every
+        # selection resolves over series_df), its IN-list cutover, and its
+        # restricted scan (raw tier only), which reads each selector's
+        # samples over the window it can reach
+        self._storage = None
+        self._registry: dict | None = None
+        self._max_inlist = DEFAULT_MAX_SERIES_INLIST
         self._scan = None
         # §3.3 shared-tier dedup (r12): instant-vector tiers of selectors
         # that appear in MULTIPLE operands of one expression are built
@@ -378,17 +382,20 @@ class PromQLEngine:
         behind the /api/v1/query and /api/v1/query_range endpoints.
 
         Series selection takes the path remote read takes. When the
-        storage keeps its registry as a hot dict (``cache_registry``),
-        each selector's matchers resolve in Python against a snapshot of
-        that dict (``Query.matches``, the remote-read matcher); the
-        matched (fingerprint, labels) pairs enter the plan as a small
-        literal relation. The samples come from the storage's
-        ``_restricted_scan`` over the window the selector can reach
-        (``find_min_max_time``), so a chunked tier prunes chunks by
-        envelope before its decode. With the dict off (constructed so, or
-        auto-disabled above ``registry_cache_max_series``) the matchers run
-        distributed over ``registry_df()`` and the same scan semi-joins
-        the matched fingerprints.
+        storage keeps its registry as a hot dict (``cache_registry``), the
+        engine copies that dict once, and each selector's matchers resolve
+        in Python against the copy (``Query.matches``, the remote-read
+        matcher, which reads regexes as Java does); the matched
+        (fingerprint, labels) pairs enter the plan as a small literal
+        relation. The samples come from the storage's ``_restricted_scan``
+        over the window the selector can reach (``find_min_max_time``), so
+        a chunked tier prunes chunks by envelope before its decode. A
+        selection resolves distributed instead, over ``registry_df()``,
+        with the samples scan semi-joined to it, when the dict is off
+        (constructed so, or auto-disabled above
+        ``registry_cache_max_series``), when a regex lies outside the
+        subset Python reads exactly as Java (``models.regex``), or when it
+        matches more series than the storage's ``max_series_inlist``.
 
         ``tier="rollup"`` evaluates over the attached continuous rollup
         (one last-value sample per downsample window) instead of raw
@@ -401,6 +408,7 @@ class PromQLEngine:
         series = (
             None if hot else storage.registry_df().select("fingerprint", "labels")
         )
+        registry = storage._registry_snapshot() if hot else None
         if tier == "rollup":
             if not getattr(storage, "_rollup_path", None):
                 raise ValueError("tier='rollup' requires storage.attach_rollup(...)")
@@ -432,8 +440,10 @@ class PromQLEngine:
         )
         if tier == "rollup":
             eng._rollup = (partials, storage._rollup_step_ms)
-        if hot:
-            eng._hot_registry = storage
+        eng._storage, eng._registry = storage, registry
+        eng._max_inlist = getattr(
+            storage, "max_series_inlist", DEFAULT_MAX_SERIES_INLIST
+        )
         if tier == "raw" and hasattr(storage, "_restricted_scan"):
             eng._scan = storage._restricted_scan
         return eng
@@ -455,10 +465,9 @@ class PromQLEngine:
             out = self._compile(node)
         except ValueError:
             raise
-        except (IndexError, KeyError, AttributeError, TypeError, re.error) as e:
+        except (IndexError, KeyError, AttributeError, TypeError) as e:
             # compile is pure plan construction — any of these here is a
-            # malformed expression (re.error: a matcher regex that does
-            # not compile), and the HTTP edge must see ValueError
+            # malformed expression, and the HTTP edge must see ValueError
             # (→ 400 bad_data), never a 500
             raise ValueError(
                 f"invalid PromQL expression: {type(e).__name__}: {e}"
@@ -508,7 +517,8 @@ class PromQLEngine:
             self.samples, self.series, start_ms, end_ms, step_ms,
             self.lookback_ms,
         )
-        sub._hot_registry, sub._scan = self._hot_registry, self._scan
+        sub._storage, sub._registry = self._storage, self._registry
+        sub._max_inlist, sub._scan = self._max_inlist, self._scan
         return sub
 
     def _matched(self, sel: VectorSelector) -> tuple[DataFrame, list[int] | DataFrame]:
@@ -519,22 +529,26 @@ class PromQLEngine:
         matchers = list(sel.matchers)
         if sel.name is not None:
             matchers.append(Matcher(NAME, "=", sel.name))
-        if self._hot_registry is None:
-            cond = F.lit(True)
-            for m in matchers:
-                cond = cond & matcher_condition(F.col("labels"), m)
-            series = self.series.filter(cond)
-            return series, series
+        q = Query(0, 0, make_matchers(*((m.name, m.op, m.value) for m in matchers)))
+        if self._registry is not None and q.java_exact():
+            pairs = self._storage._resolve_series(q, self._registry)
+            if len(pairs) <= self._max_inlist:
+                rows = json.dumps([{"fingerprint": fp, "labels": l} for fp, l in pairs])
+                series = self.samples.sparkSession.range(1).select(
+                    F.inline(F.from_json(F.lit(rows), _SERIES_JSON))
+                )
+                return series, [fp for fp, _ in pairs]
+        # distributed: no hot dict, a regex only Java reads exactly, or a
+        # match set too wide for an IN list
+        cond = F.lit(True)
         for m in matchers:
             if m.op in ("=~", "!~"):
-                regex(m.value)  # a bad regex fails even on no series
-        q = Query(0, 0, make_matchers(*((m.name, m.op, m.value) for m in matchers)))
-        pairs = self._hot_registry._resolve_series(q)
-        rows = json.dumps([{"fingerprint": fp, "labels": l} for fp, l in pairs])
-        series = self.samples.sparkSession.range(1).select(
-            F.inline(F.from_json(F.lit(rows), _SERIES_JSON))
-        )
-        return series, [fp for fp, _ in pairs]
+                _check_regex(self.samples.sparkSession, m.value)
+            cond = cond & matcher_condition(F.col("labels"), m)
+        if self.series is None:
+            self.series = self._storage.registry_df().select("fingerprint", "labels")
+        series = self.series.filter(cond)
+        return series, series
 
     def _selected(
         self, sel: VectorSelector, range_ms: int = 0
@@ -552,11 +566,9 @@ class PromQLEngine:
             lo, hi = find_min_max_time(
                 node, self.start_ms, self.end_ms, self.lookback_ms
             )
-            samples = self._scan(
-                self.samples, Query(lo, hi), matched, max_inlist=INLIST_MAX_SERIES
-            )
+            samples = self._scan(self.samples, Query(lo, hi), matched)
         else:
-            samples = _restrict(self.samples, matched)
+            samples = restrict_to_series(self.samples, matched, self._max_inlist)
         if sel.offset_ms:
             samples = samples.withColumn(
                 "timestamp_ms", F.col("timestamp_ms") + F.lit(sel.offset_ms)
@@ -635,7 +647,7 @@ class PromQLEngine:
             from promhouse_spark.schemas import HISTOGRAMS_SCHEMA
 
             hists = self.samples.sparkSession.createDataFrame([], HISTOGRAMS_SCHEMA)
-        hists = _restrict(hists, matched)
+        hists = restrict_to_series(hists, matched, self._max_inlist)
         if sel.offset_ms:
             hists = hists.withColumn(
                 "timestamp_ms", F.col("timestamp_ms") + F.lit(sel.offset_ms)
@@ -984,7 +996,7 @@ class PromQLEngine:
         from promhouse_spark.streaming.rollup import rollup_range_agg
 
         series, matched = self._matched(args0.selector)
-        sub = _restrict(partials, matched)
+        sub = restrict_to_series(partials, matched, self._max_inlist)
         out = rollup_range_agg(
             sub, rstep, func, args0.range_ms, self.step_ms
         ).filter(

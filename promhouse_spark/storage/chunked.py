@@ -199,18 +199,14 @@ class ChunkedParquetStorage(SparkParquetStorage):
             )
         )
 
-    def _restricted_scan(
-        self, samples: DataFrame, q: Query, fps, max_inlist: int | None = None
-    ) -> DataFrame:
+    def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
         """Chunk-granularity pushdown: fingerprint restriction + day
         pruning + (min_ms, max_ms) envelope overlap run on the 6-column
         chunk frame; ONLY surviving chunks decode. The passed flat frame
         is ignored — pruning below the decode barrier beats any cached
         decoded view."""
-        if max_inlist is None:
-            max_inlist = self.max_series_inlist
         pruned = restrict_to_series(
-            self._window_chunks(q.start_ms, q.end_ms), fps, max_inlist
+            self._window_chunks(q.start_ms, q.end_ms), fps, self.max_series_inlist
         )
         return self._decode(pruned).filter(
             (F.col(TIMESTAMP_MS) >= q.start_ms) & (F.col(TIMESTAMP_MS) <= q.end_ms)

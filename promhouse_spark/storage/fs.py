@@ -69,6 +69,16 @@ def mkdirs(spark: SparkSession, path: str) -> None:
     fs.mkdirs(jpath)
 
 
+def content_summary(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(file count, total bytes) of the tree at ``path``, in two filesystem
+    calls; (0, 0) if it is absent."""
+    fs, jpath = _fs_path(spark, path)
+    if not fs.exists(jpath):
+        return (0, 0)
+    summary = fs.getContentSummary(jpath)
+    return (int(summary.getFileCount()), int(summary.getLength()))
+
+
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Names of the direct children of ``path`` (empty if it is absent)."""
     fs, jpath = _fs_path(spark, path)

@@ -158,6 +158,10 @@ class JdbcStorage(SparkParquetStorage):
             return self.spark.createDataFrame([], f"{FINGERPRINT} long")
         return df.select(FINGERPRINT)
 
+    def _registry_version(self):
+        """No cheap change check on a table: the reloader reloads every tick."""
+        return None
+
     def _append_registry(self, reg_df: DataFrame) -> None:
         (
             self._opts(

@@ -362,15 +362,14 @@ def test_newer_function_surface(client):
 def test_documented_divergences(client):
     """Each known divergence asserted AS DOCUMENTED in ARCHITECTURE.md —
     if one gets fixed or regresses differently, this test flags the doc."""
-    # 1. RE2 POSIX classes: matchers resolve in Python's re, the
-    #    remote-read matcher, which parses [[:alpha:]]+ as the set
-    #    {[ : a l p h} followed by one or more literal "]", so neither
-    #    room "a" nor room "b" matches — RE2 would match both. (Same
+    # 1. RE2 POSIX classes take Java's nested-class-union parse:
+    #    [[:alpha:]] becomes the character set {[ : a l p h}, so room "a"
+    #    matches and room "b" does not — RE2 would match both. (Same
     #    divergence family as tests/test_regex_dialect.py.)
     code, body = _range(client, 'temp{room=~"[[:alpha:]]+"}')
     assert code == 200
     rooms = {s["metric"].get("room") for s in body["data"]["result"]}
-    assert rooms == set()
+    assert rooms == {"a"}
     # 2. holt_winters is served under BOTH its 2.x name and the 3.x
     #    double_exponential_smoothing alias (not a divergence anymore)
     assert _range(client, "double_exponential_smoothing(temp[2m], 0.1, 0.3)")[0] == 200

@@ -9,7 +9,7 @@ documented below rather than silently wrong."""
 
 import pytest
 
-from promhouse_spark.models import Matcher, MatchType
+from promhouse_spark.models import Matcher, MatchType, regex
 from promhouse_spark.operators.matchers import matchers_to_column
 
 LABELS = [
@@ -70,3 +70,45 @@ def test_posix_class_divergence_documented(spark):
     m2 = Matcher("x", MatchType.RE, "[a-zA-Z]+")
     assert m2.matches({"x": "abc"})
     assert len(df.filter(matchers_to_column([m2])).collect()) == 1
+
+
+# values that separate the dialects: Java's line terminators (which "."
+# skips and the closing "$" may stand before), Unicode digits and letters,
+# and case-folding corners (the Kelvin sign folds to "k" only in Unicode)
+VALUES = [
+    "", "a", "A", "ab", "a\n", "a\r", "a\r\n", "a\n\n", "a\x85", "a\u2028",
+    "\n", "a\nb", "a\rb", "é", "É", "\u0663", "K", "k", "\u212a", "ß", "12",
+    "x y", "a-b", "[", ":", "\t", "\x0b",
+]
+# patterns Python reads exactly as Java (models.regex translates them) ...
+JAVA_EXACT = [
+    "a", "a.", ".*", ".+", "(?s).*", "(?s)a.b", "a.b", "\\d+", "\\w+", "\\s",
+    "a\\s*", "\\S+", "(?i)k", "(?i)é", "(?i)[a-z]+", "[^a]", "a\\r", "a\\n",
+    "(a|b)+", "[\\w.-]+", "[a-]+", "a{2}", "a*+", "(?:a|ab)(?:c|bcd)?", "",
+]
+# ... and patterns it does not, which resolve through Java's own matcher
+JAVA_ONLY = [
+    "[[:alpha:]]+", "\\p{L}+", "\\pL+", "\\p{Alpha}+", "\\Qa.b\\E", "a\\z",
+    "a$", "^a", "(?P<n>a)", "[a-z&&[^b]]", "a{,2}",
+]
+
+
+def test_python_reads_the_translated_subset_as_java(spark):
+    """One dialect: wherever a matcher resolves in Python (the hot registry
+    dict), it answers what Java's ``rlike`` answers on the distributed
+    path, line terminators and Unicode included; a pattern outside the
+    translated subset has no Python reading to resolve with."""
+    df = spark.createDataFrame(
+        [(i, {"v": v}) for i, v in enumerate(VALUES)],
+        "id long, labels map<string,string>",
+    )
+    ms = [Matcher("v", MatchType.RE, p) for p in JAVA_EXACT]
+    rows = df.select(
+        "id", *(matchers_to_column([m]).alias(f"p{k}") for k, m in enumerate(ms))
+    ).collect()
+    for k, m in enumerate(ms):
+        assert regex(m.value) is not None, m.value
+        java = {r["id"] for r in rows if r[f"p{k}"]}
+        py = {i for i, v in enumerate(VALUES) if m.matches({"v": v})}
+        assert py == java, m.value
+    assert [p for p in JAVA_ONLY if regex(p) is not None] == []

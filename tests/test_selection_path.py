@@ -7,17 +7,27 @@ stays safe while writers add series, ``samples_df()`` builds without a
 Spark job, the served shapes (a streamed remote read, a sum-of-rate range
 query and a ratio of two) stay within their job counts and build with no
 job at all, and a storage whose dict is off still answers PromQL through
-the distributed ``registry_df()`` resolution."""
+the distributed ``registry_df()`` resolution, as does a selector whose
+regex only Java reads exactly or whose match set is too wide for an IN
+list. A served storage's dict takes in what other instances flush."""
 
 from __future__ import annotations
 
 import contextlib
 import itertools
 import threading
+import time
 
 import pytest
 
-from promhouse_spark.models import Label, Query, Sample, TimeSeries, make_matchers
+from promhouse_spark.models import (
+    Label,
+    Query,
+    Sample,
+    TimeSeries,
+    make_matchers,
+    regex,
+)
 from promhouse_spark.promql import PromQLEngine
 from promhouse_spark.storage.parquet import SparkParquetStorage
 
@@ -214,11 +224,114 @@ def test_cache_off_promql_resolves_over_registry_df(spark, tmp_path, store):
     ):
         hot_eng = PromQLEngine.from_storage(store, **grid)
         cold_eng = PromQLEngine.from_storage(cold, **grid)
-        assert hot_eng._hot_registry is store and cold_eng._hot_registry is None
+        assert hot_eng._registry is not None and cold_eng._registry is None
         plan = cold_eng.explain(expr)
         assert "time_series" in plan  # the registry scan
         hot = _canon(hot_eng.eval(expr))
         assert hot and hot == _canon(cold_eng.eval(expr))
+
+
+ROOMS = ["a", "b", "Ab", "é", "a.b", "7", "a\r", "x y"]
+
+
+def _rooms() -> list[TimeSeries]:
+    return [
+        TimeSeries(
+            [Label("__name__", "temp"), Label("room", room)],
+            [Sample(float(r + k), T0 + k * STEP_MS) for k in range(POINTS)],
+        )
+        for r, room in enumerate(ROOMS)
+    ]
+
+
+@pytest.fixture(scope="module")
+def dialect_roots(spark, tmp_path_factory) -> dict[str, str]:
+    """Two roots holding the same rooms: one served hot, one cold."""
+    roots = {}
+    for name in ("hot", "cold"):
+        roots[name] = str(tmp_path_factory.mktemp(f"dialect_{name}"))
+        st = SparkParquetStorage(spark, roots[name])
+        st.write(_rooms())
+        st.flush()
+    return roots
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        # outside the Python-translated subset: resolved through Java's rlike
+        "\\p{L}+", "\\pL+", "\\p{Alpha}+", "\\Qa.b\\E", "a\\z", "[[:alpha:]]+",
+        # inside it: resolved against the hot dict
+        "a.*", ".+", "(?i)a.*", "\\w+", "[^a].*",
+    ],
+)
+def test_hot_and_cold_read_a_regex_alike(spark, dialect_roots, pattern):
+    """The same selector answers the same whatever the registry's size:
+    the hot dict and the distributed resolution read one (Java) dialect."""
+    hot = SparkParquetStorage(spark, dialect_roots["hot"])
+    cold = SparkParquetStorage(
+        spark, dialect_roots["cold"], registry_cache_max_series=0
+    )
+    grid = dict(start_ms=T0 + 300_000, end_ms=T0 + 585_000, step_ms=60_000)
+    quoted = pattern.replace("\\", "\\\\")
+    expr = f'temp{{room=~"{quoted}"}}'
+    hot_eng = PromQLEngine.from_storage(hot, **grid)
+    got = _canon(hot_eng.eval(expr))
+    assert got == _canon(PromQLEngine.from_storage(cold, **grid).eval(expr))
+    if pattern in ("\\p{L}+", ".+"):
+        assert {dict(labels)["room"] for labels, _, _ in got} >= {"a", "é"}
+    distributed = "time_series" in hot_eng.explain(expr)
+    assert distributed == (regex(pattern) is None)
+
+
+def test_wide_selector_resolves_distributed(spark, store):
+    """A selector matching more series than the storage's IN-list cutover
+    resolves over ``registry_df()`` rather than as a literal relation of
+    its whole match set; narrower ones stay on the hot dict. Both answer
+    as the engine with the default cutover does."""
+    narrow = SparkParquetStorage(spark, store.root, max_series_inlist=2)
+    grid = dict(start_ms=T0 + 300_000, end_ms=T0 + 585_000, step_ms=60_000)
+    for expr, wide in (
+        ("sum by (job) (rate(req_total_0[2m]))", True),  # 6 series
+        ('rate(req_total_0{instance="web-0"}[2m])', False),  # 2 series
+    ):
+        eng = PromQLEngine.from_storage(narrow, **grid)
+        assert ("time_series" in eng.explain(expr)) == wide
+        got = _canon(eng.eval(expr))
+        assert got and got == _canon(PromQLEngine.from_storage(store, **grid).eval(expr))
+
+
+def test_served_dict_takes_in_series_another_instance_flushes(spark, tmp_path):
+    """Two instances over one root: a series instance A writes and flushes
+    reaches PromQL on instance B's server within the reloader interval
+    (5 s), with no restart. B's own appends cause no reload."""
+    pytest.importorskip("flask")
+    from promhouse_spark.edge.http import create_app
+
+    root = str(tmp_path / "shared")
+    a = SparkParquetStorage(spark, root)
+    a.write(_counters(metrics=1, jobs=1, instances=1))
+    a.flush()
+    b = SparkParquetStorage(spark, root)
+    client = create_app(b).test_client()
+    assert len(_range(client, "req_total_0")) == 1
+    # B's own appends leave nothing for its reloader to read
+    b.write(_counters(metrics=2, jobs=1, instances=1)[1:])
+    b.flush()
+    assert b._registry_version() == b._registry_loaded
+    a.write(
+        [
+            TimeSeries(
+                [Label("__name__", "req_total_0"), Label("instance", "web-9"), Label("job", "svc0")],
+                [Sample(1.0, T0 + k * STEP_MS) for k in range(POINTS)],
+            )
+        ]
+    )
+    a.flush()
+    deadline = time.monotonic() + 20
+    while len(_range(client, "req_total_0")) < 2 and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert len(_range(client, "req_total_0")) == 2
 
 
 def _canon(df) -> list[tuple]:
