@@ -143,6 +143,8 @@ def create_app(
         # sharing the root flush (the reference's 5 s reloader)
         app.extensions["registry_reloader"] = storage.start_reloader()
     counters = {"written_samples": 0, "written_time_series": 0, "read_queries": 0}
+    # storages without a Spark session (memory, blackhole) match in Python
+    spark = getattr(storage, "spark", None)
     rule_groups = rule_groups or []
     _started = _time_mod.time()
     # Metric metadata cache fed by Remote-Write 2.0 writes (type/help/unit
@@ -302,13 +304,22 @@ def create_app(
                 log.warning("ignoring read hints: %s", hints)  # prom.go:184-186
             # the reference compiles matcher regexes while converting the
             # request (storages/base/base.go:102-104 via prom.go:153-192):
-            # a bad pattern is a client error, rejected before any read
+            # a bad pattern is a client error, rejected before any read, in
+            # the dialect the storage matches in — Java's, as PromQL
+            # checks, wherever a Spark session runs the match
             for m in q.matchers:
                 if m.type in (MatchType.RE, MatchType.NRE):
                     try:
-                        re.compile(m.value)
+                        if spark is None:
+                            re.compile(m.value)
+                        else:
+                            from promhouse_spark.operators.matchers import check_regex
+
+                            check_regex(spark, m.value)
                     except re.error as e:
                         return Response(f"invalid matcher regex: {e}", status=400)
+                    except ValueError as e:
+                        return Response(str(e), status=400)
             queries.append(q)
         if (
             prompb.RESPONSE_TYPE_STREAMED_XOR_CHUNKS in accepted_types
@@ -435,22 +446,12 @@ def create_app(
                     )
                 },
             )
-        try:
-            if any(h is not None for h in hint_list) and hasattr(
-                storage, "read_with_hints"
-            ):
-                results = storage.read_with_hints(queries, hint_list)
-            else:
-                results = storage.read(queries)
-        except re.error as e:
-            return Response(f"invalid matcher regex: {e}", status=400)
-        except Exception as e:  # noqa: BLE001
-            # dialect gap: a pattern Python re accepts can still fail Java's
-            # compiler on the distributed path (e.g. (?P<name>...) groups) —
-            # that's a client error, not a server fault
-            if "PatternSyntaxException" in str(e):
-                return Response(f"invalid matcher regex: {e}"[:500], status=400)
-            raise
+        if any(h is not None for h in hint_list) and hasattr(
+            storage, "read_with_hints"
+        ):
+            results = storage.read_with_hints(queries, hint_list)
+        else:
+            results = storage.read(queries)
         counters["read_queries"] += len(queries)
         if prompb.RESPONSE_TYPE_STREAMED_XOR_CHUNKS in accepted_types:
             # Streamed chunked remote read (Prometheus ≥ 2.13,

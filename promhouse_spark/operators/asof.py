@@ -113,8 +113,8 @@ def instant_vector(
     final NULL filter drops, so the result is unchanged while the plan
     loses one full fact-table scan + distinct per selector.
 
-    Expects the (fingerprint, timestamp_ms, value) sample shape used across
-    promql_lite."""
+    Expects the (fingerprint, timestamp_ms, value) sample shape of the
+    PromQL engine's samples frame."""
     grid_ts = F.explode(
         F.sequence(
             F.lit(start_ms), F.lit(end_ms), F.lit(step_ms)

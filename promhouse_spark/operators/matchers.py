@@ -25,7 +25,9 @@ from __future__ import annotations
 from functools import reduce
 from typing import Iterable
 
-from pyspark.sql import Column, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import IllegalArgumentException
+from pyspark.sql import Column, SparkSession, functions as F
 
 from promhouse_spark.models import MatchType, Matcher, anchored
 
@@ -56,3 +58,20 @@ def matchers_to_column(
     if not cols:
         return F.lit(True)  # empty matcher list → select all (F3)
     return reduce(lambda a, b: a & b, cols)
+
+
+def check_regex(spark: SparkSession, pattern: str) -> None:
+    """ValueError for a matcher pattern Java's regex rejects, raised before
+    any plan runs it: ``rlike`` would only fail once a job runs. PromQL
+    and remote read both check here, so a pattern is legal on both or on
+    neither."""
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(anchored(pattern))
+        return
+    except IllegalArgumentException as e:
+        # PySpark's converted PatternSyntaxException, once a session has
+        # installed its py4j exception capture
+        msg = str(e)
+    except Py4JJavaError as e:
+        msg = e.java_exception.getMessage()
+    raise ValueError(f"invalid matcher regex {pattern!r}: {msg}")

@@ -15,9 +15,7 @@ transition, evaluated over history instead of live.
 
 Gaps-and-islands on the evaluation grid: firing evals are equally spaced,
 so run id = eval_ms − rank·step (one window pass per series, keyed by the
-canonical labels JSON) — the same one-shuffle shape as
-operators/promql_lite.alert_intervals, lifted from raw samples to compiled
-expressions."""
+canonical labels JSON), then one keyed aggregation per run."""
 
 from __future__ import annotations
 

@@ -41,12 +41,11 @@ from __future__ import annotations
 import json
 import math
 
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from promhouse_spark.models import Query, make_matchers
 from promhouse_spark.operators.asof import instant_vector
+from promhouse_spark.operators.matchers import check_regex
 from promhouse_spark.operators.vector_match import (
     _CMP as _VM_CMP,
     agg_by,
@@ -304,21 +303,6 @@ def matcher_condition(labels: Column, m: Matcher) -> Column:
     raise ValueError(f"bad matcher op {m.op}")
 
 
-def _check_regex(spark, pattern: str) -> None:
-    """ValueError (→ 400) for a pattern Java's regex rejects: ``rlike``
-    would only fail once a job runs."""
-    try:
-        spark._jvm.java.util.regex.Pattern.compile(f"^(?:{pattern})$")
-        return
-    except IllegalArgumentException as e:
-        # PySpark's converted PatternSyntaxException, once a session has
-        # installed its py4j exception capture
-        msg = str(e)
-    except Py4JJavaError as e:
-        msg = e.java_exception.getMessage()
-    raise ValueError(f"invalid matcher regex {pattern!r}: {msg}")
-
-
 class PromQLEngine:
     def __init__(
         self,
@@ -543,7 +527,7 @@ class PromQLEngine:
         cond = F.lit(True)
         for m in matchers:
             if m.op in ("=~", "!~"):
-                _check_regex(self.samples.sparkSession, m.value)
+                check_regex(self.samples.sparkSession, m.value)
             cond = cond & matcher_condition(F.col("labels"), m)
         if self.series is None:
             self.series = self._storage.registry_df().select("fingerprint", "labels")
@@ -1139,8 +1123,8 @@ class PromQLEngine:
             )
         elif func == "holt_winters":
             # double exponential smoothing (funcHoltWinters), seeded
-            # s=x2, b=x2-x1, folded over the window's sorted samples —
-            # the bounded collect-fold shape (operators/promql_lite.py)
+            # s=x2, b=x2-x1, folded over the window's sorted samples: the
+            # collect is bounded by one window, never a whole series
             sf_, tf_ = hw_params
             omf, omtf = 1.0 - sf_, 1.0 - tf_
             arr = F.array_sort(F.collect_list(F.struct("ts", "v")))
@@ -1268,19 +1252,17 @@ class PromQLEngine:
                 _VALUE_FUNCS[func](F.col("value")).cast("double").alias("value"),
             )
         if func in ("clamp", "clamp_min", "clamp_max"):
-            from promhouse_spark.operators.promql_lite import (
-                clamp, clamp_max, clamp_min,
-            )
-
             vec = self._vec(node.args[0])
             lits = [_lit_float(a, f"{func} bound") for a in node.args[1:]]
             v = F.col("value")
-            if func == "clamp":
-                value = clamp(v, lits[0], lits[1])
-            elif func == "clamp_min":
-                value = clamp_min(v, lits[0])
+            if func == "clamp_min":
+                value = F.greatest(v, F.lit(lits[0]))
+            elif func == "clamp_max":
+                value = F.least(v, F.lit(lits[0]))
+            elif lits[0] > lits[1]:
+                value = F.lit(math.nan)  # funcClamp: min > max yields NaN
             else:
-                value = clamp_max(v, lits[0])
+                value = F.least(F.greatest(v, F.lit(lits[0])), F.lit(lits[1]))
             return vec.select(
                 F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
                 "eval_ms",

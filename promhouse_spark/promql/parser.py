@@ -138,6 +138,29 @@ _TOKEN_RE = re.compile(
     re.VERBOSE,
 )
 
+# the escapes of Go's strconv.Unquote, which Prometheus's lexer decodes in
+# quoted strings
+_ESCAPE_RE = re.compile(r"\\(x[0-9a-fA-F]{2}|u[0-9a-fA-F]{4}|U[0-9a-fA-F]{8}|[0-7]{3}|.)")
+_SIMPLE_ESCAPES = {
+    "a": "\a", "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t",
+    "v": "\v", "\\": "\\", "'": "'", '"': '"',
+}
+
+
+def _unquote(token: str) -> str:
+    """The text of a quoted string token with its escapes decoded. Every
+    other character stays as written, non-ASCII ones included; an escape Go
+    does not define stays as written too."""
+
+    def decode(m: re.Match) -> str:
+        e = m.group(1)
+        if len(e) == 1:
+            return _SIMPLE_ESCAPES.get(e, m.group(0))
+        return chr(int(e[1:], 16) if e[0] in "xuU" else int(e, 8))
+
+    return _ESCAPE_RE.sub(decode, token[1:-1])
+
+
 KEYWORDS = {
     "by", "without", "on", "ignoring", "group_left", "group_right",
     "offset", "bool", "and", "or", "unless", "atan2",
@@ -270,10 +293,7 @@ class Parser:
         while self.peek().text != ")":
             t = self.next()
             if t.kind == "STRING":  # Prometheus 3 UTF-8 grouping labels
-                raw = t.text[1:-1]
-                names.append(
-                    raw.encode().decode("unicode_escape") if "\\" in raw else raw
-                )
+                names.append(_unquote(t.text))
             elif t.kind == "IDENT":
                 names.append(t.text)
             else:
@@ -359,10 +379,7 @@ class Parser:
             )
         if t.kind == "STRING":
             self.next()
-            raw = t.text[1:-1]
-            return StringLiteral(
-                raw.encode().decode("unicode_escape") if "\\" in raw else raw
-            )
+            return StringLiteral(_unquote(t.text))
         if t.kind == "IDENT":
             name = self.next().text
             if name.lower() in ("inf", "nan"):
@@ -422,10 +439,7 @@ class Parser:
                 # Prometheus 3 UTF-8 names: quoted label names in
                 # matchers, and the bare-quoted sugar {"my.metric"} ≡
                 # {__name__="my.metric"}
-                raw = name_t.text[1:-1]
-                name = (
-                    raw.encode().decode("unicode_escape") if "\\" in raw else raw
-                )
+                name = _unquote(name_t.text)
                 if self.peek().text in (",", "}"):
                     out.append(Matcher("__name__", "=", name))
                     if self.peek().text == ",":
@@ -441,8 +455,7 @@ class Parser:
             val_t = self.next()
             if val_t.kind != "STRING":
                 raise ValueError(f"expected quoted value, got {val_t.text!r}")
-            raw = val_t.text[1:-1]
-            value = raw.encode().decode("unicode_escape") if "\\" in raw else raw
+            value = _unquote(val_t.text)
             out.append(Matcher(name, op_t.text, value))
             if self.peek().text == ",":
                 self.next()

@@ -68,6 +68,7 @@ from promhouse_spark.plans.read import (
     group_into_series,
     restrict_to_series,
     samples_in_range,
+    select_series,
 )
 from promhouse_spark.plans.rawsql import rawsql_text, run_rawsql
 from promhouse_spark.schemas import (
@@ -315,12 +316,6 @@ class SparkParquetStorage(Storage):
         partition-pruned time-range shape as the float-sample path (F2 +
         J1/J2), returning the labelled columnar frame
         operators/nativehist.wire_hist_quantile consumes."""
-        from promhouse_spark.plans.read import (
-            restrict_to_series,
-            samples_in_range,
-            select_series,
-        )
-
         matched = select_series(self.registry_df(), query.matchers)
         hf = self.histograms_range_df(query.start_ms, query.end_ms)
         hf = restrict_to_series(hf, matched.select(FINGERPRINT))
@@ -345,12 +340,6 @@ class SparkParquetStorage(Storage):
         """Exemplar read (web/api/v1 query_exemplars shape): matcher
         resolution + partition-pruned time range, labelled with the owning
         series' labels. Same F2 + J1/J2 plan as the float path."""
-        from promhouse_spark.plans.read import (
-            restrict_to_series,
-            samples_in_range,
-            select_series,
-        )
-
         matched = select_series(self.registry_df(), query.matchers)
         ef = samples_in_range(self.exemplars_df(), query.start_ms, query.end_ms)
         ef = restrict_to_series(ef, matched.select(FINGERPRINT))
@@ -829,8 +818,6 @@ class SparkParquetStorage(Storage):
         millions of series writes millions of 24-byte rows, not samples.
         Returns the number of series tombstoned.
         """
-        from promhouse_spark.plans.read import select_series
-
         matched = select_series(self.registry_df(), matchers).select(FINGERPRINT)
         lo = -(2**62) if start_ms is None else int(start_ms)
         hi = (2**62) if end_ms is None else int(end_ms)
@@ -983,9 +970,15 @@ class SparkParquetStorage(Storage):
     def _resolve_series(
         self, q: Query, registry: dict[int, dict[str, str]] | None = None
     ) -> list[tuple[int, dict[str, str]]]:
-        """O2 against the hot cache: (signed fingerprint, labels) of every
-        series ``q`` matches, over ``registry`` (a snapshot of the dict) or
-        a fresh snapshot."""
+        """O2: (signed fingerprint, labels) of every series ``q`` matches.
+        Against the hot cache — ``registry`` (a snapshot of the dict) or a
+        fresh snapshot — when Python reads each of its regexes exactly as
+        Java does (``Query.java_exact``); else over ``registry_df()`` with
+        Java's matcher, as PromQL's distributed selection does, so remote
+        read answers one dialect whatever the registry's size."""
+        if not q.java_exact():
+            rows = select_series(self.registry_df(), q.matchers).collect()
+            return [(r[FINGERPRINT], dict(r[LABELS])) for r in rows]
         if registry is None:
             registry = self._registry_snapshot()
         return [
@@ -1101,8 +1094,6 @@ class SparkParquetStorage(Storage):
         for registries beyond driver memory, and an empty-matcher select-all
         makes the matched set the whole registry; AQE picks broadcast vs
         shuffle from runtime sizes (asserted on the plan in test_plans.py)."""
-        from promhouse_spark.plans.read import select_series
-
         if samples is None:
             samples = self.samples_df()
         series = select_series(self.registry_df(), q.matchers)
@@ -1121,8 +1112,6 @@ class SparkParquetStorage(Storage):
         Python and labels come from the registry cache, so no Java regex
         or distributed matcher error can fire from inside a streaming
         generator after response headers are out."""
-        from promhouse_spark.plans.read import select_series
-
         if not self.has_histograms():
             return []
         hf = self.histograms_range_df(q.start_ms, q.end_ms)

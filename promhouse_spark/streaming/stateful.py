@@ -1,19 +1,20 @@
-"""Stateful streaming operators (beyond-reference): continuous PromQL-lite.
+"""Stateful streaming operators (beyond-reference): a continuous counter
+increase.
 
-The batch ``operators/promql_lite.py`` computes counter-reset-aware
-``increase``/``rate`` with a window lag — fine over a static table, but a
-live pipeline sees each sample once, and the previous sample of a series
-usually arrived in an EARLIER micro-batch. That cross-batch "last sample per
-series" is exactly keyed streaming state, so this is the one operator family
-built on ``applyInPandasWithState`` (Arrow-batched, per-key state store)
-rather than ``foreachBatch`` appends: the monoid trick the continuous rollup
-uses (streaming/rollup.py) does not apply, because increase over a boundary
-needs the boundary sample itself, not a mergeable partial.
+Over a static table, a counter-reset-aware increase is one window lag per
+series — fine in batch, but a live pipeline sees each sample once, and the
+previous sample of a series usually arrived in an EARLIER micro-batch. That
+cross-batch "last sample per series" is exactly keyed streaming state, so
+this is the one operator family built on ``applyInPandasWithState``
+(Arrow-batched, per-key state store) rather than ``foreachBatch`` appends:
+the monoid trick the continuous rollup uses (streaming/rollup.py) does not
+apply, because increase over a boundary needs the boundary sample itself,
+not a mergeable partial.
 
-Semantics match ``promql_lite.increase`` (counter resets: a drop
-contributes the post-reset value, extrapolation-free — the exact-sum
-variant): for each series, samples are processed in timestamp order and
-``delta_i = v_i - v_{i-1} if v_i >= v_{i-1} else v_i``; the differential
+Semantics are the exact-sum increase (counter resets: a drop contributes
+the post-reset value, extrapolation-free — unlike PromQL's extrapolated
+``increase()``): for each series, samples are processed in timestamp order
+and ``delta_i = v_i - v_{i-1} if v_i >= v_{i-1} else v_i``; the differential
 test pins streaming-cumulative == batch-total.
 
 Scale shape: state is O(live series) × 24 bytes, hash-partitioned by
@@ -109,7 +110,8 @@ def continuous_increase(samples_stream, timeout_ms: int | None = None):
     """Attach the stateful increase operator to a streaming samples DF
     (``fingerprint, timestamp_ms, value``). Returns a streaming DF emitting
     one row per (series, micro-batch) with that batch's increase and the
-    running total — the continuous twin of ``promql_lite.increase_abs``.
+    running total — the continuous twin of a batch window-lag sum of the
+    same deltas.
 
     Output mode must be ``update``/``append`` on the sink. State never
     expires by default (Prometheus counters are long-lived); pass

@@ -7,7 +7,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from promhouse_spark.promql import PromQLEngine
 from promhouse_spark.session import STAGE_DIR, load_table, stage_once
+from promhouse_spark.workloads.promql2 import (
+    _DAY_MS,
+    _END_MS,
+    _LOOKBACK_MS,
+    _SAMPLES_CTE,
+    _STEP_MS,
+    _by_series,
+    _engine,
+    _extrapolated_cte,
+    _windows_cte,
+)
 
 
 def q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,48 +351,20 @@ ORACLES.update(
 
 
 def ph_rate_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL-lite increase/rate over the events stream treated as counters
-    per user (6 h windows): counter-reset-aware positive-delta sums."""
-    from promhouse_spark.operators.promql_lite import rate
-
-    ev = load_table(spark, sf_dir, "events")
-    samples = ev.select(
-        F.col("user_id").alias("fingerprint"),
-        F.unix_millis(F.col("ts")).alias("timestamp_ms"),
-        F.col("value"),
-    )
-    step = 6 * 3600 * 1000
-    return (
-        rate(samples, step_ms=step)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "increase",
-            "rate",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``increase(events[1d])`` compiled from text: each series' counter
+    growth over the trailing day, reset-aware and extrapolated to the
+    window edges as Prometheus does."""
+    out = _engine(spark, sf_dir).eval("increase(events[1d])")
+    return _by_series(out, F.round("value", 6).alias("increase"))
 
 
-PH_RATE_COUNTER_SQL = """
-WITH deltas AS (
-  SELECT user_id,
-         epoch_ms(ts) AS ts_ms,
-         CASE WHEN lag(value) OVER w IS NULL THEN 0.0
-              WHEN value >= lag(value) OVER w THEN value - lag(value) OVER w
-              ELSE value END AS inc
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts))
-)
-SELECT user_id,
-       ts_ms - (ts_ms % 21600000) AS window_start_ms,
-       round(sum(inc), 6) AS increase,
-       round(sum(inc), 6) / 21600.0 AS rate,
-       count(*) AS n_samples
-FROM deltas
-GROUP BY user_id, ts_ms - (ts_ms % 21600000)
-ORDER BY user_id, window_start_ms
+PH_RATE_COUNTER_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)},
+{_extrapolated_cte(_DAY_MS, as_rate=False)}
+SELECT user_id, event_type, eval_ms, round(value, 6) AS increase
+FROM xr
+ORDER BY user_id, event_type, eval_ms
 """
 
 
@@ -1046,41 +1030,50 @@ ORACLES.update({"ph_gap_detect": PH_GAP_DETECT_SQL})
 
 
 def ph_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL ``histogram_quantile(0.9, ...)`` end-to-end: cumulative
-    ``le`` buckets are built per event type (6 conditional sums in ONE fact
-    pass, unpivoted via ``stack``), then the interpolated quantile comes
-    from ``operators.promql_lite.histogram_quantile`` — a lag-window over
-    ≤ 6 bucket rows per group. The fact table is scanned once and only
-    (group × bucket) rows ever shuffle."""
-    from promhouse_spark.operators.promql_lite import histogram_quantile
-
+    """``histogram_quantile(0.9, events_bucket)`` compiled from text over
+    classic cumulative buckets: one fact pass counts, per event type, the
+    events at or below each ``le`` bound, ``+Inf`` counting them all (the
+    bucket Prometheus requires), and the counts enter the engine as one
+    scrape at the grid's end. The engine interpolates inside the first
+    bucket whose count reaches 0.9 × the ``+Inf`` count; a rank in the
+    ``+Inf`` bucket answers the highest finite bound."""
     ev = load_table(spark, sf_dir, "events")
-    les = [10.0, 25.0, 50.0, 100.0, 250.0, 500.0]
+    les = ["10", "25", "50", "100", "250", "500", "+Inf"]
     wide = ev.groupBy("event_type").agg(
         *[
-            F.sum((F.col("value") <= le).cast("long")).cast("double").alias(f"c{i}")
+            F.sum((F.col("value") <= float(le)).cast("long")).cast("double").alias(f"c{i}")
             for i, le in enumerate(les)
         ]
     )
-    stack_expr = (
-        f"stack({len(les)}, "
-        + ", ".join(f"{le}D, c{i}" for i, le in enumerate(les))
-        + ") as (le, cum_count)"
+    buckets = wide.select(
+        "event_type",
+        F.explode(
+            F.array(*[F.struct(F.lit(le).alias("le"), F.col(f"c{i}").alias("n"))
+                      for i, le in enumerate(les)])
+        ).alias("b"),
+    ).select("event_type", "b.le", "b.n")
+    fp = F.concat_ws(":", "event_type", "le").alias("fingerprint")
+    samples = buckets.select(fp, F.lit(_END_MS).alias("timestamp_ms"), F.col("n").alias("value"))
+    series = buckets.select(
+        fp,
+        F.create_map(
+            F.lit("__name__"), F.lit("events_bucket"),
+            F.lit("type"), F.col("event_type"),
+            F.lit("le"), F.col("le"),
+        ).alias("labels"),
     )
-    buckets = wide.select("event_type", F.expr(stack_expr))
-    return (
-        histogram_quantile(buckets, 0.9, group_cols=("event_type",))
-        .select(
-            "event_type",
-            F.col("quantile").alias("p90"),
-            F.round("rank", 6).alias("rank"),
-        )
-        .orderBy("event_type")
-    )
+    eng = PromQLEngine(samples, series, _END_MS, _END_MS, _STEP_MS, _LOOKBACK_MS)
+    out = eng.eval("histogram_quantile(0.9, events_bucket)")
+    return out.select(
+        F.element_at("labels", "type").alias("event_type"),
+        F.round("value", 6).alias("p90"),
+    ).orderBy("event_type")
 
 
 PH_HISTOGRAM_QUANTILE_SQL = """
-WITH les(le) AS (SELECT unnest([10.0, 25.0, 50.0, 100.0, 250.0, 500.0])),
+WITH les(le) AS (
+  SELECT unnest([10.0, 25.0, 50.0, 100.0, 250.0, 500.0, 'inf'::DOUBLE])
+),
 b AS (
   SELECT event_type, le,
          CAST(sum(CASE WHEN value <= le THEN 1 ELSE 0 END) AS DOUBLE) AS cum
@@ -1096,8 +1089,8 @@ r AS (
   WINDOW w AS (PARTITION BY event_type ORDER BY le)
 )
 SELECT event_type,
-       round(lo + (le - lo) * (rank - pcnt) / (cum - pcnt), 6) AS p90,
-       round(rank, 6) AS rank
+       round(CASE WHEN isinf(le) THEN lo
+                  ELSE lo + (le - lo) * (rank - pcnt) / (cum - pcnt) END, 6) AS p90
 FROM r
 WHERE cum >= rank AND pcnt < rank
 ORDER BY event_type
@@ -1138,43 +1131,32 @@ ORACLES.update({"ph_cardinality_salted": PH_CARDINALITY_SALTED_SQL})
 
 
 def ph_series_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL resets()/changes() analogues per series (user counter): the
-    flap/restart counters an alerting pipeline reads — one window pass
-    marks both, one keyed aggregate folds them."""
-    from promhouse_spark.operators.promql_lite import series_stability
-
-    ev = load_table(spark, sf_dir, "events")
-    samples = ev.select(
-        F.col("user_id").alias("fingerprint"),
-        F.unix_millis(F.col("ts")).alias("timestamp_ms"),
-        F.col("value"),
+    """``resets`` and ``changes`` over each series' trailing day — the
+    flap/restart counters an alerting pipeline reads — as one compiled
+    expression: ``label_replace`` tags each side with a ``stat`` label and
+    ``or`` unions the two."""
+    out = _engine(spark, sf_dir).eval(
+        'label_replace(resets(events[1d]), "stat", "resets", "", "")'
+        ' or label_replace(changes(events[1d]), "stat", "changes", "", "")'
     )
-    return (
-        series_stability(samples)
-        .select(F.col("fingerprint").alias("user_id"), "n_samples", "n_resets", "n_changes")
-        .filter(F.col("user_id") < 40)
-        .orderBy("user_id")
+    return _by_series(
+        out,
+        F.element_at("labels", "stat").alias("stat"),
+        F.col("value").cast("long").alias("n"),
     )
 
 
-PH_SERIES_STABILITY_SQL = """
-WITH marked AS (
-  SELECT user_id,
-         CASE WHEN lag(value) OVER w IS NOT NULL AND value < lag(value) OVER w
-              THEN 1 ELSE 0 END AS is_reset,
-         CASE WHEN lag(value) OVER w IS NOT NULL AND value <> lag(value) OVER w
-              THEN 1 ELSE 0 END AS is_change
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts))
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_samples,
-       CAST(sum(is_reset) AS BIGINT) AS n_resets,
-       CAST(sum(is_change) AS BIGINT) AS n_changes
-FROM marked
-WHERE user_id < 40
-GROUP BY user_id
-ORDER BY user_id
+PH_SERIES_STABILITY_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms, 'resets' AS stat,
+       CAST(count(*) FILTER (WHERE value < prev) AS BIGINT) AS n
+FROM rf GROUP BY 1, 2, 3
+UNION ALL
+SELECT user_id, event_type, eval_ms, 'changes' AS stat,
+       CAST(count(*) FILTER (WHERE value <> prev) AS BIGINT) AS n
+FROM rf GROUP BY 1, 2, 3
+ORDER BY user_id, event_type, eval_ms, stat
 """
 
 QUERIES.update({"ph_series_stability": ph_series_stability})

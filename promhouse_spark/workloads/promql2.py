@@ -1,23 +1,30 @@
 """PromQL-semantics workloads, second wave: instant-vector evaluation via
-the as-of join (operators/asof.py), grid gap-filling, the regression
-functions ``deriv`` / ``predict_linear``, ``quantile_over_time``,
-``holt_winters`` (recursive-CTE oracle), Prometheus's real extrapolated
-rate/increase, label_replace/label_join, alerting-rule interval replay,
-``count_values``, ``absent_over_time``, and the LOCF time-weighted average
-(operators/promql_lite.py, functions/labels.py).
+the as-of join (operators/asof.py), grid gap-filling, label_replace /
+label_join (functions/labels.py), and the range functions — ``deriv``,
+``predict_linear``, ``quantile_over_time``, ``holt_winters``, ``rate``,
+``avg_over_time`` — plus alerting-rule interval replay, ``count_values``
+and ``absent_over_time``, each compiled from PromQL text by
+promql/engine.py, the evaluator ``/api/v1/query_range`` serves.
 
 The instant-vector and gap-fill oracles run DuckDB's NATIVE ``ASOF JOIN``
 — a genuinely independent mechanism from the union-merge window rendering
 on the Spark side, so a hash match there validates the as-of semantics,
-not just the arithmetic.
+not just the arithmetic. The range-function oracles replay Prometheus's
+sliding (t − range, t] windows with an inequality join
+(:func:`_windows_cte`).
+
+Shared with the later PromQL waves: the evaluation grid, the compiled
+series model (:func:`_engine`: one series per (user, event_type) with
+labels {__name__: "events", user, type}) and the DuckDB replay CTEs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from promhouse_spark.operators.asof import instant_vector
-from promhouse_spark.operators.promql_lite import deriv, predict_linear
+from promhouse_spark.promql import PromQLEngine
+from promhouse_spark.promql.alerts import alert_intervals_promql
 from promhouse_spark.session import load_table
 
 # the events table spans 2024-01-01..2024-01-30 (~3 samples/user/day at
@@ -28,6 +35,12 @@ _START_MS = 1704153600000  # 2024-01-02T00:00:00Z
 _END_MS = _START_MS + 48 * 3600 * 1000
 _STEP_MS = 3600 * 1000
 _LOOKBACK_MS = 6 * 3600 * 1000
+# the range of the compiled range functions: a (user, type) series holds
+# ~0.4 samples a day, so a day is the shortest window that often holds the
+# two samples most of them need
+_DAY_MS = 24 * 3600 * 1000
+
+_GRID_SQL = f"generate_series({_START_MS}, {_END_MS}, {_STEP_MS})"
 
 
 def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,6 +50,143 @@ def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts")).alias("timestamp_ms"),
         F.col("value"),
     )
+
+
+def _engine(spark: SparkSession, sf_dir: str) -> PromQLEngine:
+    ev = load_table(spark, sf_dir, "events")
+    fp = F.concat_ws(":", F.col("user_id"), F.col("event_type"))
+    samples = ev.select(
+        fp.alias("fingerprint"),
+        F.unix_millis("ts").alias("timestamp_ms"),
+        "value",
+    )
+    series = (
+        ev.select("user_id", "event_type")
+        .distinct()
+        .select(
+            fp.alias("fingerprint"),
+            F.create_map(
+                F.lit("__name__"), F.lit("events"),
+                F.lit("user"), F.col("user_id").cast("string"),
+                F.lit("type"), F.col("event_type"),
+            ).alias("labels"),
+        )
+    )
+    return PromQLEngine(
+        samples, series, _START_MS, _END_MS, _STEP_MS, _LOOKBACK_MS
+    )
+
+
+def _by_series(out: DataFrame, *cols: Column | str) -> DataFrame:
+    """A compiled per-series result as (user_id, event_type, eval_ms,
+    *cols), in that order."""
+    return out.select(
+        F.element_at("labels", "user").cast("long").alias("user_id"),
+        F.element_at("labels", "type").alias("event_type"),
+        "eval_ms",
+        *cols,
+    ).orderBy("user_id", "event_type", "eval_ms")
+
+
+_SAMPLES_CTE = """samples AS (
+  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, value FROM events
+)"""
+
+
+def _vec_ctes(
+    alias: str, pred: str, grid_key: str = "user_id", grid_sql: str | None = None
+) -> str:
+    """DuckDB instant-vector replay as a CTE pair: distinct-series × grid
+    through the native ASOF JOIN, MATERIALIZED so DuckDB 1.0 cannot push
+    the staleness WHERE into the join (it would reject it as a second ASOF
+    inequality), then the lookback filter. ``pred`` filters the sample
+    stream; ``alias`` names the filtered vector; ``grid_sql`` overrides the
+    evaluation grid (subquery oracles use a finer/extended one)."""
+    keys = [k.strip() for k in grid_key.split(",")]
+    on = " AND ".join(f"g.{k} = s.{k}" for k in keys)
+    gsel = ", ".join(f"u.{k}" for k in keys)
+    grid_sql = grid_sql or _GRID_SQL
+    return f"""{alias}_raw AS MATERIALIZED (
+  SELECT g.*, s.value, s.ts_ms
+  FROM (
+    SELECT {gsel}, gg.eval_ms
+    FROM (SELECT DISTINCT {grid_key} FROM samples WHERE {pred}) u
+    CROSS JOIN (SELECT unnest({grid_sql}) AS eval_ms) gg
+  ) g ASOF JOIN (SELECT * FROM samples WHERE {pred}) s
+    ON {on} AND g.eval_ms >= s.ts_ms
+),
+{alias} AS (
+  SELECT * FROM {alias}_raw WHERE ts_ms >= eval_ms - {_LOOKBACK_MS}
+)"""
+
+
+def _windows_cte(range_ms: int) -> str:
+    """DuckDB replay of the engine's range windows (``_explode_to_grid``),
+    as CTEs after :data:`_SAMPLES_CTE`: ``grid`` holds the evaluation
+    times, and ``rf`` one row per (series, eval_ms, sample in
+    (eval_ms − range, eval_ms]) with the sample's predecessor in its window
+    (``prev``, ``prev_ts``), its 1-based place ``i`` and the window's size
+    ``n``, in the engine's (ts, value) order."""
+    return f"""grid AS (
+  SELECT unnest({_GRID_SQL}) AS eval_ms
+),
+rf AS (
+  SELECT s.user_id, s.event_type, g.eval_ms, s.ts_ms, s.value,
+         lag(s.value) OVER w AS prev, lag(s.ts_ms) OVER w AS prev_ts,
+         row_number() OVER w AS i,
+         count(*) OVER (PARTITION BY s.user_id, s.event_type, g.eval_ms) AS n
+  FROM samples s JOIN grid g
+    ON s.ts_ms <= g.eval_ms AND s.ts_ms > g.eval_ms - {range_ms}
+  WINDOW w AS (PARTITION BY s.user_id, s.event_type, g.eval_ms
+               ORDER BY s.ts_ms, s.value)
+)"""
+
+
+def _extrapolated_cte(range_ms: int, as_rate: bool) -> str:
+    """``xr``: ``rate()`` (``as_rate``) or ``increase()`` per (series,
+    eval_ms) over :func:`_windows_cte` — Prometheus's extrapolatedRate
+    (promql/functions.go): reset-aware growth from the first to the last
+    sample, extrapolated to the window edges unless a sample sits further
+    than 1.1 average intervals from its edge, the head clamped at the
+    counter's zero crossing BEFORE that check. The arithmetic runs in the
+    order of the engine's ``_extrapolated``."""
+    per_s = f" / {range_ms / 1000.0}" if as_rate else ""
+    return f"""agg AS (
+  SELECT user_id, event_type, eval_ms,
+         sum(CASE WHEN prev IS NULL THEN 0.0
+                  WHEN value >= prev THEN value - prev
+                  ELSE value END) AS delta,
+         min(ts_ms) AS first_ts, max(ts_ms) AS last_ts,
+         (min({{'t': ts_ms, 'v': value}})).v AS first_v,
+         count(*) AS cnt
+  FROM rf GROUP BY 1, 2, 3
+  HAVING count(*) >= 2 AND max(ts_ms) > min(ts_ms)
+),
+ext AS (
+  SELECT user_id, event_type, eval_ms, delta, first_v,
+         CAST(last_ts - first_ts AS DOUBLE) AS sampled,
+         CAST(last_ts - first_ts AS DOUBLE) / (cnt - 1) AS avg_iv,
+         CAST(first_ts - (eval_ms - {range_ms}) AS DOUBLE) AS to_start,
+         CAST(eval_ms - last_ts AS DOUBLE) AS to_end
+  FROM agg
+),
+zeroed AS (
+  SELECT user_id, event_type, eval_ms, delta, sampled, avg_iv, to_end,
+         CASE WHEN delta > 0 AND first_v >= 0
+               AND sampled * (first_v / nullif(delta, 0.0)) < to_start
+              THEN sampled * (first_v / nullif(delta, 0.0))
+              ELSE to_start
+         END AS to_start_c
+  FROM ext
+),
+xr AS (
+  SELECT user_id, event_type, eval_ms,
+         delta * (sampled
+                  + CASE WHEN to_start_c >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_start_c END
+                  + CASE WHEN to_end >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_end END)
+           / sampled{per_s} AS value
+  FROM zeroed
+)"""
 
 
 def ph_instant_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,65 +229,44 @@ ORDER BY user_id, eval_ms
 
 
 def ph_deriv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL deriv(): per-(series, 6 h window) least-squares slope of the
-    gauge, value/second — one algebraic aggregation, no window sort."""
-    step = 6 * 3600 * 1000
-    return (
-        deriv(_samples(spark, sf_dir), step_ms=step)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "slope_per_sec",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``deriv(events[1d])``: per series and grid hour, the least-squares
+    slope of the trailing day's samples in value per second."""
+    out = _engine(spark, sf_dir).eval("deriv(events[1d])")
+    return _by_series(out, F.round("value", 9).alias("slope_per_sec"))
 
 
-PH_DERIV_SQL = """
-SELECT user_id,
-       (epoch_ms(ts) // 21600000) * 21600000 AS window_start_ms,
-       round(regr_slope(value, (epoch_ms(ts) - (epoch_ms(ts) // 21600000) * 21600000) / 1000.0), 6)
-         AS slope_per_sec,
-       CAST(count(*) AS BIGINT) AS n_samples
-FROM events
-GROUP BY 1, 2
-HAVING count(*) >= 2
-ORDER BY user_id, window_start_ms
+PH_DERIV_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms,
+       round(regr_slope(value, (ts_ms - eval_ms) / 1000.0), 9) AS slope_per_sec
+FROM rf
+GROUP BY 1, 2, 3
+HAVING regr_slope(value, (ts_ms - eval_ms) / 1000.0) IS NOT NULL
+ORDER BY user_id, event_type, eval_ms
 """
 
 
 def ph_predict_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL predict_linear(): the 6 h-window fit extrapolated 1 h past the
-    window end — the capacity-alerting primitive."""
-    step = 6 * 3600 * 1000
-    return (
-        predict_linear(_samples(spark, sf_dir), step_ms=step, horizon_s=3600)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "predicted",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``predict_linear(events[1d], 3600)``: the trailing day's fit
+    extrapolated one hour past each evaluation — the capacity-alerting
+    primitive."""
+    out = _engine(spark, sf_dir).eval("predict_linear(events[1d], 3600)")
+    return _by_series(out, F.round("value", 4).alias("predicted"))
 
 
-PH_PREDICT_LINEAR_SQL = """
-WITH xy AS (
-  SELECT user_id,
-         (epoch_ms(ts) // 21600000) * 21600000 AS window_start_ms,
-         (epoch_ms(ts) - (epoch_ms(ts) // 21600000) * 21600000) / 1000.0 AS x,
-         value AS y
-  FROM events
+PH_PREDICT_LINEAR_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)},
+fit AS (
+  SELECT user_id, event_type, eval_ms,
+         regr_intercept(value, (ts_ms - eval_ms) / 1000.0)
+           + regr_slope(value, (ts_ms - eval_ms) / 1000.0) * 3600.0 AS predicted
+  FROM rf GROUP BY 1, 2, 3
 )
-SELECT user_id, window_start_ms,
-       round(regr_intercept(y, x) + regr_slope(y, x) * (21600.0 + 3600.0), 4) AS predicted,
-       CAST(count(*) AS BIGINT) AS n_samples
-FROM xy
-GROUP BY user_id, window_start_ms
-HAVING count(*) >= 2
-ORDER BY user_id, window_start_ms
+SELECT user_id, event_type, eval_ms, round(predicted, 4) AS predicted
+FROM fit WHERE predicted IS NOT NULL
+ORDER BY user_id, event_type, eval_ms
 """
 
 
@@ -155,31 +284,19 @@ ORACLES = {
 
 
 def ph_quantile_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL quantile_over_time(0.9, …): exact interpolated p90 per
-    (series, 6 h window)."""
-    from promhouse_spark.operators.promql_lite import quantile_over_time
-
-    step = 6 * 3600 * 1000
-    return (
-        quantile_over_time(_samples(spark, sf_dir), q=0.9, step_ms=step)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "quantile",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``quantile_over_time(0.9, events[1d])``: the exact interpolated
+    p90 of each series' trailing day."""
+    out = _engine(spark, sf_dir).eval("quantile_over_time(0.9, events[1d])")
+    return _by_series(out, F.round("value", 6).alias("quantile"))
 
 
-PH_QUANTILE_SQL = """
-SELECT user_id,
-       (epoch_ms(ts) // 21600000) * 21600000 AS window_start_ms,
-       round(quantile_cont(value, 0.9), 6) AS quantile,
-       CAST(count(*) AS BIGINT) AS n_samples
-FROM events
-GROUP BY 1, 2
-ORDER BY user_id, window_start_ms
+PH_QUANTILE_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms, round(quantile_cont(value, 0.9), 6) AS quantile
+FROM rf
+GROUP BY 1, 2, 3
+ORDER BY user_id, event_type, eval_ms
 """
 
 QUERIES["ph_quantile_over_time"] = ph_quantile_over_time
@@ -238,49 +355,33 @@ ORACLES["ph_gap_fill_linear"] = PH_GAP_FILL_SQL
 
 
 def ph_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL holt_winters(0.3, 0.1) per (series, 6 h window): the
-    sequential smoothing recurrence as a JVM array fold; the oracle replays
-    the identical recurrence through a DuckDB RECURSIVE CTE — an
-    independent sequential mechanism."""
-    from promhouse_spark.operators.promql_lite import holt_winters
-
-    step = 6 * 3600 * 1000
-    return (
-        holt_winters(_samples(spark, sf_dir), sf=0.3, tf=0.1, step_ms=step)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "smoothed",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``holt_winters(events[1d], 0.3, 0.1)``: the smoothing recurrence
+    folded over each trailing day's samples (a JVM array fold in the
+    engine); the oracle replays the same recurrence through a DuckDB
+    RECURSIVE CTE — an independent sequential mechanism."""
+    out = _engine(spark, sf_dir).eval("holt_winters(events[1d], 0.3, 0.1)")
+    return _by_series(out, F.round("value", 6).alias("smoothed"))
 
 
-PH_HOLT_WINTERS_SQL = """
-WITH RECURSIVE vals AS (
-  SELECT user_id,
-         (epoch_ms(ts) // 21600000) * 21600000 AS w,
-         row_number() OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                            ORDER BY epoch_ms(ts), value) AS i,
-         value
-  FROM events
-),
-counts AS (SELECT user_id AS cu, w AS cw, max(i) AS n FROM vals GROUP BY 1, 2),
+PH_HOLT_WINTERS_SQL = f"""
+WITH RECURSIVE {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)},
 hw AS (
-  SELECT v2.user_id, v2.w, 2 AS i, v2.value AS s, v2.value - v1.value AS b
-  FROM vals v1 JOIN vals v2 ON v1.user_id = v2.user_id AND v1.w = v2.w
-  WHERE v1.i = 1 AND v2.i = 2
+  SELECT r2.user_id, r2.event_type, r2.eval_ms, r2.n, 2 AS i,
+         r2.value AS s, r2.value - r1.value AS b
+  FROM rf r1 JOIN rf r2 USING (user_id, event_type, eval_ms)
+  WHERE r1.i = 1 AND r2.i = 2
   UNION ALL
-  SELECT hw.user_id, hw.w, hw.i + 1,
-         0.3 * v.value + 0.7 * (hw.s + hw.b),
-         0.1 * ((0.3 * v.value + 0.7 * (hw.s + hw.b)) - hw.s) + 0.9 * hw.b
-  FROM hw JOIN vals v ON v.user_id = hw.user_id AND v.w = hw.w AND v.i = hw.i + 1
+  SELECT hw.user_id, hw.event_type, hw.eval_ms, hw.n, hw.i + 1,
+         0.3 * r.value + 0.7 * (hw.s + hw.b),
+         0.1 * ((0.3 * r.value + 0.7 * (hw.s + hw.b)) - hw.s) + 0.9 * hw.b
+  FROM hw JOIN rf r
+    ON r.user_id = hw.user_id AND r.event_type = hw.event_type
+   AND r.eval_ms = hw.eval_ms AND r.i = hw.i + 1
 )
-SELECT hw.user_id, hw.w AS window_start_ms, round(hw.s, 6) AS smoothed,
-       CAST(c.n AS BIGINT) AS n_samples
-FROM hw JOIN counts c ON hw.user_id = c.cu AND hw.w = c.cw AND hw.i = c.n
-ORDER BY user_id, window_start_ms
+SELECT user_id, event_type, eval_ms, round(s, 6) AS smoothed
+FROM hw WHERE i = n
+ORDER BY user_id, event_type, eval_ms
 """
 
 QUERIES["ph_holt_winters"] = ph_holt_winters
@@ -288,37 +389,39 @@ ORACLES["ph_holt_winters"] = PH_HOLT_WINTERS_SQL
 
 
 def ph_alert_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alerting-rule replay: maximal value > 90 runs per series that held
-    for at least 12 h (operators/promql_lite.py:alert_intervals) — the
-    batch form of `expr > 90 FOR 12h`."""
-    from promhouse_spark.operators.promql_lite import alert_intervals
-
-    return (
-        alert_intervals(_samples(spark, sf_dir), threshold=90.0, for_ms=12 * 3600 * 1000)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "start_ms",
-            "end_ms",
-            "n_samples",
-        )
-        .orderBy("user_id", "start_ms")
+    """Alerting-rule replay of ``max_over_time(events[1d]) > 90 FOR 12h``
+    (promql/alerts.py): per series, the maximal runs of consecutive firing
+    grid hours that lasted at least 12 h."""
+    out = alert_intervals_promql(
+        _engine(spark, sf_dir), "max_over_time(events[1d]) > 90",
+        for_ms=12 * 3600 * 1000,
     )
+    return out.select(
+        F.element_at("labels", "user").cast("long").alias("user_id"),
+        F.element_at("labels", "type").alias("event_type"),
+        "start_ms",
+        "end_ms",
+        "n_evals",
+    ).orderBy("user_id", "event_type", "start_ms")
 
 
-PH_ALERT_INTERVALS_SQL = """
-WITH flagged AS (
-  SELECT user_id, epoch_ms(ts) AS ts_ms, value > 90 AS ok,
-         sum(CASE WHEN value > 90 THEN 0 ELSE 1 END)
-           OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), value
-                 ROWS UNBOUNDED PRECEDING) AS grp
-  FROM events
+PH_ALERT_INTERVALS_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)},
+firing AS (
+  SELECT user_id, event_type, eval_ms,
+         eval_ms - {_STEP_MS} * row_number() OVER (
+           PARTITION BY user_id, event_type ORDER BY eval_ms) AS run
+  FROM rf
+  GROUP BY 1, 2, 3
+  HAVING max(value) > 90
 )
-SELECT user_id, min(ts_ms) AS start_ms, max(ts_ms) AS end_ms,
-       CAST(count(*) AS BIGINT) AS n_samples
-FROM flagged WHERE ok
-GROUP BY user_id, grp
-HAVING max(ts_ms) - min(ts_ms) >= 43200000
-ORDER BY user_id, start_ms
+SELECT user_id, event_type, min(eval_ms) AS start_ms, max(eval_ms) AS end_ms,
+       CAST(count(*) AS BIGINT) AS n_evals
+FROM firing
+GROUP BY user_id, event_type, run
+HAVING max(eval_ms) - min(eval_ms) >= 43200000
+ORDER BY user_id, event_type, start_ms
 """
 
 QUERIES["ph_alert_intervals"] = ph_alert_intervals
@@ -376,92 +479,20 @@ ORACLES["ph_label_ops"] = PH_LABEL_OPS_SQL
 
 
 def ph_rate_extrapolated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prometheus's real rate()/increase() — boundary extrapolation with
-    the 1.1×-average-interval guard and the zero-crossing clamp
-    (operators/promql_lite.py:rate_extrapolated), per 6 h window.
-
-    The rate is surfaced in exact fixed-point (1e-12/s units, BIGINT):
-    rounding a float quotient proved engine-unstable at sf0.1 — the two
-    engines' round(x, 6) emit nearest-doubles one ulp apart, and dividing
-    those straddles an 8-dp rounding midpoint. Integer DIV on the micro
-    increase is deterministic on both sides."""
-    from promhouse_spark.operators.promql_lite import rate_extrapolated
-
-    step = 6 * 3600 * 1000
-    inc6 = F.round(F.col("increase_extrapolated") * 1_000_000).cast("long")
-    return (
-        rate_extrapolated(_samples(spark, sf_dir), step_ms=step)
-        .withColumn("inc6", inc6)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "increase_extrapolated",
-            F.expr("CAST((inc6 * 1000000) DIV 21600 AS BIGINT)").alias("rate_e12"),
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``rate(events[1d])``: Prometheus's extrapolated per-second rate —
+    boundary extrapolation with the 1.1×-average-interval guard and the
+    zero-crossing clamp — per series and grid hour."""
+    out = _engine(spark, sf_dir).eval("rate(events[1d])")
+    return _by_series(out, F.round("value", 10).alias("rate"))
 
 
-PH_RATE_EXTRAPOLATED_SQL = """
-WITH base AS (
-  SELECT user_id,
-         (epoch_ms(ts) // 21600000) * 21600000 AS w,
-         epoch_ms(ts) AS ts_ms, value,
-         lag(value) OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                          ORDER BY epoch_ms(ts), value) AS prev
-  FROM events
-),
-agg AS (
-  SELECT user_id, w,
-         sum(CASE WHEN prev IS NULL THEN 0.0
-                  WHEN value >= prev THEN value - prev
-                  ELSE value END) AS delta,
-         min(ts_ms) AS first_ts, max(ts_ms) AS last_ts,
-         (min({'t': ts_ms, 'v': value})).v AS first_v,
-         count(*) AS n
-  FROM base
-  GROUP BY user_id, w
-  HAVING count(*) >= 2 AND max(ts_ms) > min(ts_ms)
-),
-ext AS (
-  SELECT user_id, w, delta, n,
-         CAST(last_ts - first_ts AS DOUBLE) AS sampled,
-         CAST(last_ts - first_ts AS DOUBLE) / (n - 1) AS avg_iv,
-         CAST(first_ts - w AS DOUBLE) AS to_start,
-         CAST(w + 21600000 - last_ts AS DOUBLE) AS to_end,
-         first_v
-  FROM agg
-),
-zeroed AS (
-  -- Prometheus clamps durationToStart with durationToZero BEFORE the
-  -- 1.1x-average-interval threshold check (promql/functions.go
-  -- extrapolatedRate); mirror that ordering exactly
-  SELECT user_id, w, delta, n, sampled, avg_iv, to_end,
-         CASE WHEN delta > 0 AND first_v >= 0
-               AND sampled * (first_v / nullif(delta, 0.0)) < to_start
-              THEN sampled * (first_v / nullif(delta, 0.0))
-              ELSE to_start
-         END AS to_start_c
-  FROM ext
-),
-capped AS (
-  SELECT user_id, w, delta, n, sampled,
-         CASE WHEN to_start_c >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_start_c END AS head,
-         CASE WHEN to_end >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_end END AS tail
-  FROM zeroed
-)
-SELECT user_id, window_start_ms, increase_extrapolated,
-       (CAST(round(increase_extrapolated * 1000000) AS BIGINT) * 1000000) // 21600
-         AS rate_e12,
-       n_samples
-FROM (
-  SELECT user_id, w AS window_start_ms,
-         round(delta * (sampled + head + tail) / sampled, 6) AS increase_extrapolated,
-         CAST(n AS BIGINT) AS n_samples
-  FROM capped
-)
-ORDER BY user_id, window_start_ms
+PH_RATE_EXTRAPOLATED_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)},
+{_extrapolated_cte(_DAY_MS, as_rate=True)}
+SELECT user_id, event_type, eval_ms, round(value, 10) AS rate
+FROM xr
+ORDER BY user_id, event_type, eval_ms
 """
 
 QUERIES["ph_rate_extrapolated"] = ph_rate_extrapolated
@@ -469,46 +500,20 @@ ORACLES["ph_rate_extrapolated"] = PH_RATE_EXTRAPOLATED_SQL
 
 
 def ph_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOCF time-weighted average vs the plain mean per (series, 6 h
-    window) (operators/promql_lite.py:time_weighted_avg) — the
-    irregular-sampling average billing/SLO rollups need."""
-    from promhouse_spark.operators.promql_lite import time_weighted_avg
-
-    step = 6 * 3600 * 1000
-    return (
-        time_weighted_avg(_samples(spark, sf_dir), step_ms=step)
-        .select(
-            F.col("fingerprint").alias("user_id"),
-            "window_start_ms",
-            "twa",
-            "plain_avg",
-            "n_samples",
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``avg_over_time(events[1d])``: the mean of each series' trailing
+    day. PromQL has no time-weighted average, so the query keeps its name
+    and takes the function Prometheus offers."""
+    out = _engine(spark, sf_dir).eval("avg_over_time(events[1d])")
+    return _by_series(out, F.round("value", 6).alias("avg"))
 
 
-PH_TWA_SQL = """
-WITH base AS (
-  SELECT user_id,
-         (epoch_ms(ts) // 21600000) * 21600000 AS w,
-         epoch_ms(ts) AS ts_ms, value,
-         lead(epoch_ms(ts)) OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                                  ORDER BY epoch_ms(ts), value) AS next_ts
-  FROM events
-),
-seg AS (
-  SELECT user_id, w, value,
-         CAST(coalesce(next_ts, w + 21600000) - ts_ms AS DOUBLE) AS dur
-  FROM base
-)
-SELECT user_id, w AS window_start_ms,
-       round(sum(value * dur) / sum(dur), 6) AS twa,
-       round(avg(value), 6) AS plain_avg,
-       CAST(count(*) AS BIGINT) AS n_samples
-FROM seg
-GROUP BY user_id, w
-ORDER BY user_id, window_start_ms
+PH_TWA_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms, round(avg(value), 6) AS avg
+FROM rf
+GROUP BY 1, 2, 3
+ORDER BY user_id, event_type, eval_ms
 """
 
 QUERIES["ph_time_weighted_avg"] = ph_time_weighted_avg
@@ -516,63 +521,46 @@ ORACLES["ph_time_weighted_avg"] = PH_TWA_SQL
 
 
 def ph_count_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL count_values(), windowed per 6 h: the discrete value
-    histogram, over integer-bucketed values (raw doubles are near-unique,
-    so the wrapper rounds to whole units first — the build-info/version
-    counting shape)."""
-    from promhouse_spark.operators.promql_lite import count_values
-
-    step = 6 * 3600 * 1000
-    s = _samples(spark, sf_dir).withColumn("value", F.round("value", 0))
-    return (
-        count_values(s, step_ms=step)
-        .select("window_start_ms", "value", "n")
-        .orderBy("window_start_ms", "value")
-    )
+    """``count_values("value", round(events))``: per grid hour, how many
+    series hold each whole-unit value (raw doubles are near-unique) — the
+    build-info/version counting shape."""
+    out = _engine(spark, sf_dir).eval('count_values("value", round(events))')
+    return out.select(
+        "eval_ms",
+        F.element_at("labels", "value").cast("long").alias("value"),
+        F.col("value").cast("long").alias("n"),
+    ).orderBy("eval_ms", "value")
 
 
-PH_COUNT_VALUES_SQL = """
-SELECT (epoch_ms(ts) // 21600000) * 21600000 AS window_start_ms,
-       round(value, 0) AS value,
+PH_COUNT_VALUES_SQL = f"""
+WITH {_SAMPLES_CTE},
+{_vec_ctes("utvec", "TRUE", "user_id, event_type")}
+SELECT eval_ms, CAST(round(value, 0) AS BIGINT) AS value,
        CAST(count(*) AS BIGINT) AS n
-FROM events
+FROM utvec
 GROUP BY 1, 2
-ORDER BY window_start_ms, value
+ORDER BY eval_ms, value
 """
 
 
 def ph_absent_over_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL absent_over_time over a 2-day hourly grid: (series, hour)
-    pairs with NO sample — the scrape-loss report, as a grid anti-join."""
-    from promhouse_spark.operators.promql_lite import absent_over_time
-
-    return (
-        absent_over_time(
-            _samples(spark, sf_dir), _START_MS, _END_MS, _STEP_MS
-        )
-        .select(
-            F.col("fingerprint").alias("user_id"), "window_start_ms", "absent"
-        )
-        .orderBy("user_id", "window_start_ms")
-    )
+    """``absent_over_time(events{user="1"}[1h])``: the grid hours whose
+    trailing hour holds no sample of user 1 — the scrape-loss probe."""
+    out = _engine(spark, sf_dir).eval('absent_over_time(events{user="1"}[1h])')
+    return out.select(
+        F.element_at("labels", "user").cast("long").alias("user_id"),
+        "eval_ms",
+        F.col("value").cast("long").alias("absent"),
+    ).orderBy("eval_ms")
 
 
 PH_ABSENT_SQL = f"""
-WITH grid AS (
-  SELECT u.user_id, g.w
-  FROM (SELECT DISTINCT user_id FROM events) u
-  CROSS JOIN (
-    SELECT unnest(generate_series({_START_MS}, {_END_MS} - 1, {_STEP_MS})) AS w
-  ) g
-),
-present AS (
-  SELECT DISTINCT user_id, (epoch_ms(ts) // {_STEP_MS}) * {_STEP_MS} AS w
-  FROM events
-  WHERE epoch_ms(ts) >= {_START_MS} AND epoch_ms(ts) < {_END_MS}
-)
-SELECT g.user_id, g.w AS window_start_ms, CAST(1 AS BIGINT) AS absent
-FROM grid g ANTI JOIN present p ON g.user_id = p.user_id AND g.w = p.w
-ORDER BY g.user_id, window_start_ms
+WITH {_SAMPLES_CTE},
+{_windows_cte(3600 * 1000)}
+SELECT CAST(1 AS BIGINT) AS user_id, eval_ms, CAST(1 AS BIGINT) AS absent
+FROM grid
+WHERE eval_ms NOT IN (SELECT eval_ms FROM rf WHERE user_id = 1)
+ORDER BY eval_ms
 """
 
 QUERIES["ph_count_values"] = ph_count_values

@@ -23,14 +23,18 @@ from promhouse_spark.operators.asof import instant_vector
 from promhouse_spark.operators.vector_match import agg_by, binop, topk_by
 from promhouse_spark.session import load_table
 from promhouse_spark.workloads.promql2 import (
+    _DAY_MS,
     _END_MS,
     _LOOKBACK_MS,
+    _SAMPLES_CTE,
     _START_MS,
     _STEP_MS,
+    _by_series,
+    _engine,
     _samples,
+    _vec_ctes,
+    _windows_cte,
 )
-
-_GRID_SQL = f"generate_series({_START_MS}, {_END_MS}, {_STEP_MS})"
 
 
 def _cents(c: Column) -> Column:
@@ -92,38 +96,6 @@ def _user_type_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval_ms",
         "value",
     )
-
-
-def _vec_ctes(
-    alias: str, pred: str, grid_key: str = "user_id", grid_sql: str | None = None
-) -> str:
-    """DuckDB instant-vector replay as a CTE pair: distinct-series × grid
-    through the native ASOF JOIN, MATERIALIZED so DuckDB 1.0 cannot push
-    the staleness WHERE into the join (it would reject it as a second ASOF
-    inequality), then the lookback filter. ``pred`` filters the sample
-    stream; ``alias`` names the filtered vector; ``grid_sql`` overrides the
-    evaluation grid (subquery oracles use a finer/extended one)."""
-    keys = [k.strip() for k in grid_key.split(",")]
-    on = " AND ".join(f"g.{k} = s.{k}" for k in keys)
-    gsel = ", ".join(f"u.{k}" for k in keys)
-    grid_sql = grid_sql or _GRID_SQL
-    return f"""{alias}_raw AS MATERIALIZED (
-  SELECT g.*, s.value, s.ts_ms
-  FROM (
-    SELECT {gsel}, gg.eval_ms
-    FROM (SELECT DISTINCT {grid_key} FROM samples WHERE {pred}) u
-    CROSS JOIN (SELECT unnest({grid_sql}) AS eval_ms) gg
-  ) g ASOF JOIN (SELECT * FROM samples WHERE {pred}) s
-    ON {on} AND g.eval_ms >= s.ts_ms
-),
-{alias} AS (
-  SELECT * FROM {alias}_raw WHERE ts_ms >= eval_ms - {_LOOKBACK_MS}
-)"""
-
-
-_SAMPLES_CTE = """samples AS (
-  SELECT user_id, event_type, epoch_ms(ts) AS ts_ms, value FROM events
-)"""
 
 
 def ph_binop_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,103 +239,56 @@ ORACLES = {
 
 
 def ph_irate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL irate() per (series, 6 h window): reset-aware per-second rate
-    between the last two samples (operators/promql_lite.py:irate), surfaced
-    in exact 1e-6 fixed point (cents increase x 1e7 integer-divided by the
-    millisecond gap)."""
-    from promhouse_spark.operators.promql_lite import irate
+    """``irate(events[1d])``: the reset-aware per-second rate between the
+    last two samples of each series' trailing day, in exact 1e-6 fixed
+    point (the oracle runs the engine's arithmetic in the same order)."""
+    out = _engine(spark, sf_dir).eval("irate(events[1d])")
+    return _by_series(out, F.round(F.col("value") * 1e6).cast("long").alias("irate_e6"))
 
-    step = 6 * 3600 * 1000
-    out = irate(_samples(spark, sf_dir), step_ms=step)
-    inc_cents = _cents(F.col("increase"))
-    return out.select(
-        F.col("fingerprint").alias("user_id"),
-        "window_start_ms",
-        inc_cents.alias("inc_cents"),
-        "dt_ms",
-        _idiv(inc_cents * F.lit(10_000_000), F.col("dt_ms")).alias("irate_e6"),
-    ).orderBy("user_id", "window_start_ms")
-
-
-_LAST_TWO_SQL = """
-  SELECT user_id,
-         (epoch_ms(ts) // 21600000) * 21600000 AS w,
-         epoch_ms(ts) AS ts_ms, value,
-         row_number() OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                            ORDER BY epoch_ms(ts) DESC, value DESC) AS rn,
-         lead(epoch_ms(ts)) OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                                  ORDER BY epoch_ms(ts) DESC, value DESC) AS prev_ts,
-         lead(value) OVER (PARTITION BY user_id, (epoch_ms(ts) // 21600000) * 21600000
-                           ORDER BY epoch_ms(ts) DESC, value DESC) AS prev_v
-  FROM events
-"""
 
 PH_IRATE_SQL = f"""
-WITH base AS ({_LAST_TWO_SQL}),
-lasttwo AS (
-  SELECT user_id, w,
-         CAST(round((CASE WHEN value >= prev_v THEN value - prev_v ELSE value END) * 100)
-              AS BIGINT) AS inc_cents,
-         ts_ms - prev_ts AS dt_ms
-  FROM base WHERE rn = 1 AND prev_ts IS NOT NULL
-)
-SELECT user_id, w AS window_start_ms, inc_cents, CAST(dt_ms AS BIGINT) AS dt_ms,
-       (inc_cents * 10000000) // nullif(dt_ms, 0) AS irate_e6
-FROM lasttwo
-ORDER BY user_id, window_start_ms
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms,
+       CAST(round((CASE WHEN value >= prev THEN value - prev ELSE value END)
+                  / nullif(CAST(ts_ms - prev_ts AS DOUBLE), 0.0) * 1000.0 * 1e6)
+            AS BIGINT) AS irate_e6
+FROM rf WHERE i = n AND n >= 2
+ORDER BY user_id, event_type, eval_ms
 """
 
 
 def ph_idelta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL idelta() per (series, 6 h window): the plain gauge difference
-    between the last two samples, in exact signed cents."""
-    from promhouse_spark.operators.promql_lite import idelta
-
-    step = 6 * 3600 * 1000
-    out = idelta(_samples(spark, sf_dir), step_ms=step)
-    return out.select(
-        F.col("fingerprint").alias("user_id"),
-        "window_start_ms",
-        _cents(F.col("idelta")).alias("idelta_cents"),
-        "dt_ms",
-    ).orderBy("user_id", "window_start_ms")
+    """``idelta(events[1d])``: the plain gauge difference between the last
+    two samples of each series' trailing day, in exact signed cents."""
+    out = _engine(spark, sf_dir).eval("idelta(events[1d])")
+    return _by_series(out, _cents(F.col("value")).alias("idelta_cents"))
 
 
 PH_IDELTA_SQL = f"""
-WITH base AS ({_LAST_TWO_SQL})
-SELECT user_id, w AS window_start_ms,
-       CAST(round((value - prev_v) * 100) AS BIGINT) AS idelta_cents,
-       CAST(ts_ms - prev_ts AS BIGINT) AS dt_ms
-FROM base WHERE rn = 1 AND prev_ts IS NOT NULL
-ORDER BY user_id, window_start_ms
+WITH {_SAMPLES_CTE},
+{_windows_cte(_DAY_MS)}
+SELECT user_id, event_type, eval_ms,
+       CAST(round((value - prev) * 100) AS BIGINT) AS idelta_cents
+FROM rf WHERE i = n AND n >= 2
+ORDER BY user_id, event_type, eval_ms
 """
 
 
 def ph_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PromQL clamp / clamp_min / clamp_max over the per-user instant
-    vector — the gauge guard-rail family, pure column expressions."""
-    from promhouse_spark.operators.promql_lite import clamp, clamp_max, clamp_min
-
-    vec = _user_vec(spark, sf_dir, "total")
-    v = F.col("value")
-    return vec.select(
-        F.element_at("labels", "user").cast("long").alias("user_id"),
-        "eval_ms",
-        F.round(clamp(v, 25.0, 75.0), 6).alias("clamped"),
-        F.round(clamp_min(v, 10.0), 6).alias("clamped_min"),
-        F.round(clamp_max(v, 300.0), 6).alias("clamped_max"),
-    ).orderBy("user_id", "eval_ms")
+    """``clamp(events, 25, 75)`` over the per-series instant vector — the
+    gauge guard rail."""
+    out = _engine(spark, sf_dir).eval("clamp(events, 25, 75)")
+    return _by_series(out, F.round("value", 6).alias("clamped"))
 
 
 PH_CLAMP_SQL = f"""
 WITH {_SAMPLES_CTE},
-{_vec_ctes("tvec", "TRUE")}
-SELECT user_id, eval_ms,
-       round(least(greatest(value, 25.0), 75.0), 6) AS clamped,
-       round(greatest(value, 10.0), 6) AS clamped_min,
-       round(least(value, 300.0), 6) AS clamped_max
-FROM tvec
-ORDER BY user_id, eval_ms
+{_vec_ctes("utvec", "TRUE", "user_id, event_type")}
+SELECT user_id, event_type, eval_ms,
+       round(least(greatest(value, 25.0), 75.0), 6) AS clamped
+FROM utvec
+ORDER BY user_id, event_type, eval_ms
 """
 
 

@@ -12,40 +12,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from promhouse_spark.promql import PromQLEngine
-from promhouse_spark.session import load_table
 from promhouse_spark.workloads.promql2 import (
     _END_MS,
-    _LOOKBACK_MS,
+    _SAMPLES_CTE,
     _START_MS,
     _STEP_MS,
+    _engine,
+    _extrapolated_cte,
+    _vec_ctes,
+    _windows_cte,
 )
-from promhouse_spark.workloads.promql3 import _SAMPLES_CTE, _vec_ctes
-
-
-def _engine(spark: SparkSession, sf_dir: str) -> PromQLEngine:
-    ev = load_table(spark, sf_dir, "events")
-    fp = F.concat_ws(":", F.col("user_id"), F.col("event_type"))
-    samples = ev.select(
-        fp.alias("fingerprint"),
-        F.unix_millis("ts").alias("timestamp_ms"),
-        "value",
-    )
-    series = (
-        ev.select("user_id", "event_type")
-        .distinct()
-        .select(
-            fp.alias("fingerprint"),
-            F.create_map(
-                F.lit("__name__"), F.lit("events"),
-                F.lit("user"), F.col("user_id").cast("string"),
-                F.lit("type"), F.col("event_type"),
-            ).alias("labels"),
-        )
-    )
-    return PromQLEngine(
-        samples, series, _START_MS, _END_MS, _STEP_MS, _LOOKBACK_MS
-    )
 
 
 def ph_promql_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,55 +76,10 @@ def ph_promql_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PH_PROMQL_RATE_SQL = f"""
 WITH {_SAMPLES_CTE},
-grid AS (
-  SELECT unnest(generate_series({_START_MS}, {_END_MS}, {_STEP_MS})) AS t
-),
-rf AS (
-  SELECT s.user_id, s.event_type, g.t AS eval_ms, s.ts_ms, s.value,
-         lag(s.value) OVER (PARTITION BY s.user_id, s.event_type, g.t
-                            ORDER BY s.ts_ms, s.value) AS prev
-  FROM samples s JOIN grid g
-    ON s.ts_ms <= g.t AND s.ts_ms > g.t - {_RANGE_MS}
-),
-agg AS (
-  SELECT user_id, event_type, eval_ms,
-         sum(CASE WHEN prev IS NULL THEN 0.0
-                  WHEN value >= prev THEN value - prev
-                  ELSE value END) AS delta,
-         min(ts_ms) AS first_ts, max(ts_ms) AS last_ts,
-         (min({{'t': ts_ms, 'v': value}})).v AS first_v,
-         count(*) AS n
-  FROM rf GROUP BY 1, 2, 3
-  HAVING count(*) >= 2 AND max(ts_ms) > min(ts_ms)
-),
-ext AS (
-  SELECT user_id, event_type, eval_ms, delta, n,
-         CAST(last_ts - first_ts AS DOUBLE) AS sampled,
-         CAST(last_ts - first_ts AS DOUBLE) / (n - 1) AS avg_iv,
-         CAST(first_ts - (eval_ms - {_RANGE_MS}) AS DOUBLE) AS to_start,
-         CAST(eval_ms - last_ts AS DOUBLE) AS to_end,
-         first_v
-  FROM agg
-),
-zeroed AS (
-  SELECT user_id, event_type, eval_ms, delta, sampled, avg_iv, to_end,
-         CASE WHEN delta > 0 AND first_v >= 0
-               AND sampled * (first_v / nullif(delta, 0.0)) < to_start
-              THEN sampled * (first_v / nullif(delta, 0.0))
-              ELSE to_start
-         END AS to_start_c
-  FROM ext
-),
-rates AS (
-  SELECT user_id, event_type, eval_ms,
-         delta * (sampled
-                  + CASE WHEN to_start_c >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_start_c END
-                  + CASE WHEN to_end >= avg_iv * 1.1 THEN avg_iv / 2 ELSE to_end END)
-           / sampled / {_RANGE_MS / 1000.0} AS r
-  FROM zeroed
-)
-SELECT event_type, eval_ms, round(sum(r), 6) AS rate_sum
-FROM rates GROUP BY 1, 2
+{_windows_cte(_RANGE_MS)},
+{_extrapolated_cte(_RANGE_MS, as_rate=True)}
+SELECT event_type, eval_ms, round(sum(value), 6) AS rate_sum
+FROM xr GROUP BY 1, 2
 ORDER BY event_type, eval_ms
 """
 

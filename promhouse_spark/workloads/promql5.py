@@ -20,11 +20,12 @@ from promhouse_spark.session import load_table
 from promhouse_spark.workloads.promql2 import (
     _END_MS,
     _LOOKBACK_MS,
+    _SAMPLES_CTE,
     _START_MS,
     _STEP_MS,
+    _engine,
+    _vec_ctes,
 )
-from promhouse_spark.workloads.promql3 import _SAMPLES_CTE, _vec_ctes
-from promhouse_spark.workloads.promql4 import _engine
 
 
 def ph_promql_scalar_div(spark: SparkSession, sf_dir: str) -> DataFrame:

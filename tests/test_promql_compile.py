@@ -80,6 +80,18 @@ def test_parse_modifiers_and_aggregations():
         parse("m } x")
 
 
+def test_string_escapes_keep_non_ascii():
+    """Quoted strings decode Go's escapes and keep every other character
+    as written: a non-ASCII letter next to an escaped backslash survives
+    in a matcher and in a string argument."""
+    sel = parse('temp{room=~"é\\\\d"}')
+    assert sel.matchers[0].value == "é\\d"
+    call = parse('label_replace(m, "dst", "é\\\\1", "src", "(.*)")')
+    assert call.args[2].value == "é\\1"
+    assert parse('m{a="\\u00e9\\t\\x41\\101"}').matchers[0].value == "é\tAA"
+    assert parse("m{a='it\\'s'}").matchers[0].value == "it's"
+
+
 # ---- engine ---------------------------------------------------------------
 
 
@@ -852,3 +864,193 @@ def test_at_start_end_resolve_against_outer_range(eng):
     # @ start() pins to 300s everywhere
     r = _rows(eng, 'min_over_time((errors{job="api"} @ start())[2m:1m])')
     assert all(x.value == 300.0 for x in r)
+
+
+# ---- hand-computed range-function pins --------------------------------------
+
+
+def _at(spark, rows, expr, t):
+    """``expr`` evaluated at the single time ``t`` over samples (id,
+    timestamp_ms, value) of the series m{id=...}: {id: value}."""
+    sdf = spark.createDataFrame(
+        rows, "fingerprint long, timestamp_ms long, value double"
+    )
+    ser = spark.createDataFrame(
+        [(fp, {"__name__": "m", "id": str(fp)}) for fp in sorted({r[0] for r in rows})],
+        "fingerprint long, labels map<string,string>",
+    )
+    e = PromQLEngine(sdf, ser, start_ms=t, end_ms=t, step_ms=60_000)
+    return {r.labels["id"]: r.value for r in e.eval(expr).collect()}
+
+
+def test_rate_extrapolated_hand_computed(spark):
+    """extrapolatedRate pins, per functions.go: boundary extrapolation,
+    the zero-crossing head clamp, a counter reset, and a single sample."""
+    rows = [
+        # 1: head clamp fires (to_zero 1750 < to_start 2000)
+        (1, 2000, 1.0), (1, 4000, 3.0), (1, 9000, 5.0),
+        # 2: counter reset; the factor extrapolates to exactly 2x
+        (2, 1000, 10.0), (2, 6000, 2.0),
+        # 3: a single sample yields nothing
+        (3, 5000, 7.0),
+    ]
+    inc = _at(spark, rows, "increase(m[10s])", 10_000)
+    # 1: delta 4, sampled 7000, head min(2000, 7000*1/4) = 1750, tail 1000
+    assert inc["1"] == pytest.approx(4 * 9750 / 7000)
+    # 2: delta 2 (reset), head 1000, tail 4000 -> 2 * 10000/5000
+    assert inc["2"] == pytest.approx(4.0)
+    assert "3" not in inc
+    rate = _at(spark, rows, "rate(m[10s])", 10_000)
+    assert rate["1"] == pytest.approx(4 * 9750 / 7000 / 10)
+    # a counter that starts at 0 extrapolates no further back than 0:
+    # head clamps to 0, tail 100 s (< 1.1 x 100 s) -> 30 * 2 over 300 s
+    assert _at(
+        spark, [(1, 100_000, 0.0), (1, 200_000, 30.0)], "rate(m[5m])", 300_000
+    )["1"] == pytest.approx(0.2)
+
+
+def test_increase_with_counter_reset(spark):
+    """A drop inside the window contributes the post-reset value, and the
+    window (t - 5m, t] is open on the left: the sample at t - 5m is out."""
+    rows = [
+        (1, 0, 10.0),        # at t - 5m: outside the window
+        (1, 60_000, 15.0),
+        (1, 120_000, 3.0),   # reset: +3
+        (1, 180_000, 8.0),   # +5
+        (1, 310_000, 9.0),   # after t
+    ]
+    # delta 8, sampled 120 s, head 60 s (< 1.1 x 60 s), tail 120 s capped
+    # at 30 s -> 8 x 210/120
+    assert _at(spark, rows, "increase(m[5m])", 300_000)["1"] == pytest.approx(14.0)
+
+
+def test_delta_over_time(spark):
+    """delta() is last - first extrapolated like rate, with no counter
+    reset handling and no zero clamp."""
+    rows = [(1, 250_000, 5.0), (1, 10_000, 12.0), (1, 150_000, 2.0)]
+    # -7 over 240 s sampled, head 10 s, tail 50 s -> -7 x 300/240
+    assert _at(spark, rows, "delta(m[5m])", 300_000)["1"] == pytest.approx(-8.75)
+
+
+def test_irate_uses_last_two_and_handles_reset(spark):
+    rows = [(1, 0, 10.0), (1, 60_000, 95.0), (1, 120_000, 100.0), (1, 180_000, 4.0)]
+    # last two at t=180 s: 100 -> 4 is a reset, contributing 4 over 60 s
+    assert _at(spark, rows, "irate(m[5m])", 180_000)["1"] == pytest.approx(4.0 / 60.0)
+    # idelta: the plain gauge difference, negative on the same data
+    assert _at(spark, rows, "idelta(m[5m])", 180_000)["1"] == -96.0
+    # earlier samples in the window are ignored: at t=120 s, 95 -> 100
+    assert _at(spark, rows, "irate(m[5m])", 120_000)["1"] == pytest.approx(5.0 / 60.0)
+
+
+def test_irate_single_sample_window_drops(spark):
+    assert _at(spark, [(1, 0, 1.0), (2, 0, 2.0)], "irate(m[5m])", 0) == {}
+
+
+def test_clamp_family(spark):
+    rows = [(1, 0, -5.0), (2, 0, 50.0), (3, 0, 500.0)]
+
+    def vals(expr):
+        got = _at(spark, rows, expr, 0)
+        return [got[k] for k in ("1", "2", "3")]
+
+    assert vals("clamp(m, 0, 100)") == [0.0, 50.0, 100.0]
+    assert vals("clamp_min(m, 0)") == [0.0, 50.0, 500.0]
+    assert vals("clamp_max(m, 100)") == [-5.0, 50.0, 100.0]
+    # Prometheus funcClamp: min > max yields NaN for every element
+    assert all(math.isnan(v) for v in vals("clamp(m, 10, 5)"))
+
+
+def _quantile(spark, buckets, q):
+    """histogram_quantile(q) over one scrape of cumulative buckets
+    {job: [(le, count), ...]} at t=0: {job: value}."""
+    samples, series = [], []
+    for job, bs in buckets.items():
+        for le, n in bs:
+            fp = len(series)
+            series.append(Row(fingerprint=fp, labels={"__name__": "h_bucket", "job": job, "le": le}))
+            samples.append(Row(fingerprint=fp, timestamp_ms=0, value=float(n)))
+    e = PromQLEngine(
+        spark.createDataFrame(samples, "fingerprint long, timestamp_ms long, value double"),
+        spark.createDataFrame(series, "fingerprint long, labels map<string,string>"),
+        start_ms=0, end_ms=0, step_ms=60_000,
+    )
+    return {
+        r.labels["job"]: r.value
+        for r in e.eval(f"histogram_quantile({q}, h_bucket)").collect()
+    }
+
+
+def test_histogram_quantile_interpolation(spark):
+    got = _quantile(
+        spark,
+        {
+            # p50 rank 20 lands in the (1, 2] bucket: 1 + (2-1)*(20-10)/(30-10)
+            "a": [("1", 10), ("2", 30), ("4", 40), ("+Inf", 40)],
+            # all mass in the FIRST bucket interpolates from 0, not from the
+            # bucket bound: 0 + (1-0)*(5-0)/(10-0)
+            "b": [("1", 10), ("2", 10), ("4", 10), ("+Inf", 10)],
+        },
+        0.5,
+    )
+    assert got == {"a": 1.5, "b": 0.5}
+
+
+def test_histogram_quantile_exact_boundary(spark):
+    # rank exactly on a bucket's cumulative count returns the bound itself
+    got = _quantile(spark, {"a": [("1", 5), ("2", 10), ("4", 20), ("+Inf", 20)]}, 0.5)
+    assert got == {"a": 2.0}
+
+
+def test_alert_intervals_property_vs_python_model(spark):
+    """Hypothesis sweep: rule replay of ``m > 5`` FOR d must equal a
+    brute-force run detector over the grid. Samples sit on grid points and
+    the lookback is shorter than a step, so a series' instant value at an
+    evaluation is its sample there, if any."""
+    from hypothesis import given, settings, strategies as st
+
+    from promhouse_spark.promql.alerts import alert_intervals_promql
+
+    step = 1_000
+    ser = spark.createDataFrame(
+        [(f, {"__name__": "m", "id": str(f)}) for f in (1, 2)],
+        "fingerprint long, labels map<string,string>",
+    )
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        rows=st.lists(
+            st.tuples(
+                st.integers(1, 2),      # fingerprint
+                st.integers(0, 30),     # grid point
+                st.integers(0, 10),     # value; threshold sits at 5
+            ),
+            min_size=1,
+            max_size=12,
+            unique_by=lambda r: (r[0], r[1]),
+        ),
+        for_steps=st.sampled_from([0, 3, 10]),
+    )
+    def check(rows, for_steps):
+        sdf = spark.createDataFrame(
+            [(f, k * step, float(v)) for f, k, v in rows],
+            "fingerprint long, timestamp_ms long, value double",
+        )
+        e = PromQLEngine(sdf, ser, 0, 30 * step, step, lookback_ms=step - 1)
+        got = {
+            (r.labels["id"], r.start_ms, r.end_ms, r.n_evals)
+            for r in alert_intervals_promql(e, "m > 5", for_ms=for_steps * step).collect()
+        }
+        want = set()
+        for f in (1, 2):
+            vals = {k: v for g, k, v in rows if g == f}
+            run: list[int] = []
+            for k in range(32):  # k = 31 closes a run reaching the grid end
+                if vals.get(k, 0) > 5 and k <= 30:
+                    run.append(k)
+                    continue
+                if run and run[-1] - run[0] >= for_steps:
+                    want.add((str(f), run[0] * step, run[-1] * step, len(run)))
+                run = []
+        assert got == want
+
+    check()

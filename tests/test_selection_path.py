@@ -256,6 +256,34 @@ def dialect_roots(spark, tmp_path_factory) -> dict[str, str]:
     return roots
 
 
+@pytest.fixture(scope="module")
+def dialect_clients(spark, dialect_roots) -> dict:
+    """Remote-read clients over the dialect roots: one served hot, one cold."""
+    pytest.importorskip("flask")
+    from promhouse_spark.edge.http import create_app
+
+    return {
+        "hot": create_app(SparkParquetStorage(spark, dialect_roots["hot"])).test_client(),
+        "cold": create_app(
+            SparkParquetStorage(spark, dialect_roots["cold"], registry_cache_max_series=0)
+        ).test_client(),
+    }
+
+
+def _read_rooms(client, pattern: str) -> set[str]:
+    """The rooms a remote read of ``temp{room=~pattern}`` returns."""
+    from promhouse_spark.edge import prompb, snappy_codec
+
+    q = Query(
+        T0, T0 + POINTS * STEP_MS,
+        make_matchers(("__name__", "=", "temp"), ("room", "=~", pattern)),
+    )
+    resp = client.post("/read", data=snappy_codec.compress(prompb.encode_read_request([q])))
+    assert resp.status_code == 200, resp.data[:300]
+    (series,) = prompb.decode_read_response(snappy_codec.decompress(resp.data))
+    return {ts.labels_map()["room"] for ts in series}
+
+
 @pytest.mark.parametrize(
     "pattern",
     [
@@ -265,9 +293,10 @@ def dialect_roots(spark, tmp_path_factory) -> dict[str, str]:
         "a.*", ".+", "(?i)a.*", "\\w+", "[^a].*",
     ],
 )
-def test_hot_and_cold_read_a_regex_alike(spark, dialect_roots, pattern):
+def test_hot_and_cold_read_a_regex_alike(spark, dialect_roots, dialect_clients, pattern):
     """The same selector answers the same whatever the registry's size:
-    the hot dict and the distributed resolution read one (Java) dialect."""
+    the hot dict and the distributed resolution read one (Java) dialect,
+    and remote read answers as PromQL does."""
     hot = SparkParquetStorage(spark, dialect_roots["hot"])
     cold = SparkParquetStorage(
         spark, dialect_roots["cold"], registry_cache_max_series=0
@@ -278,8 +307,11 @@ def test_hot_and_cold_read_a_regex_alike(spark, dialect_roots, pattern):
     hot_eng = PromQLEngine.from_storage(hot, **grid)
     got = _canon(hot_eng.eval(expr))
     assert got == _canon(PromQLEngine.from_storage(cold, **grid).eval(expr))
+    rooms = {dict(labels)["room"] for labels, _, _ in got}
     if pattern in ("\\p{L}+", ".+"):
-        assert {dict(labels)["room"] for labels, _, _ in got} >= {"a", "é"}
+        assert rooms >= {"a", "é"}
+    assert _read_rooms(dialect_clients["hot"], pattern) == rooms
+    assert _read_rooms(dialect_clients["cold"], pattern) == rooms
     distributed = "time_series" in hot_eng.explain(expr)
     assert distributed == (regex(pattern) is None)
 

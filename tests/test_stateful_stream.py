@@ -94,7 +94,8 @@ def test_increase_state_survives_batches(spark, stream_env):
 
 def test_increase_matches_batch_operator(spark, stream_env, tmp_path):
     """Differential: the streaming cumulative total over all batches equals
-    the batch promql_lite increase over the union of the data."""
+    the batch exact-sum increase over the union of the data — one window
+    lag per series, each delta reset-aware, no extrapolation."""
     src, _ = stream_env
     _write_batch(spark, src, [(1, 3_000, 20.0), (1, 4_000, 2.0)])
 
@@ -125,14 +126,19 @@ def test_increase_matches_batch_operator(spark, stream_env, tmp_path):
     finally:
         q.stop()
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Window, functions as F
 
-    from promhouse_spark.operators.promql_lite import increase
-
+    prev = F.lag("value").over(Window.partitionBy("fingerprint").orderBy("timestamp_ms"))
+    inc = (
+        F.when(prev.isNull(), F.lit(0.0))
+        .when(F.col("value") >= prev, F.col("value") - prev)
+        .otherwise(F.col("value"))  # counter reset
+    )
     batch = (
-        increase(spark.read.parquet(src))
+        spark.read.parquet(src)
+        .withColumn("inc", inc)
         .groupBy("fingerprint")
-        .agg(F.sum("increase").alias("total"))
+        .agg(F.sum("inc").alias("total"))
         .collect()
     )
     for r in batch:
