@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 from promhouse_spark.models import Label, Sample, TimeSeries
+from promhouse_spark.promql import PromQLEngine
 
 T0 = 1767225600000  # 2026-01-01T00:00:00Z, stands in for the reference's now()-6s
 SEC = 1000
@@ -68,3 +69,17 @@ def normalize(series_list):
         )
         for ts in series_list
     )
+
+
+def instant_at(spark, rows, expr, t):
+    """``expr`` evaluated at the single time ``t`` over samples (id,
+    timestamp_ms, value) of the series m{id=...}: {id: value}."""
+    sdf = spark.createDataFrame(
+        rows, "fingerprint long, timestamp_ms long, value double"
+    )
+    ser = spark.createDataFrame(
+        [(fp, {"__name__": "m", "id": str(fp)}) for fp in sorted({r[0] for r in rows})],
+        "fingerprint long, labels map<string,string>",
+    )
+    e = PromQLEngine(sdf, ser, start_ms=t, end_ms=t, step_ms=60_000)
+    return {r.labels["id"]: r.value for r in e.eval(expr).collect()}

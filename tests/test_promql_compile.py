@@ -20,6 +20,7 @@ from promhouse_spark.promql.parser import (
     VectorSelector,
     parse_duration_ms,
 )
+from tests.fixtures import instant_at
 
 
 # ---- parser ---------------------------------------------------------------
@@ -869,46 +870,6 @@ def test_at_start_end_resolve_against_outer_range(eng):
 # ---- hand-computed range-function pins --------------------------------------
 
 
-def _at(spark, rows, expr, t):
-    """``expr`` evaluated at the single time ``t`` over samples (id,
-    timestamp_ms, value) of the series m{id=...}: {id: value}."""
-    sdf = spark.createDataFrame(
-        rows, "fingerprint long, timestamp_ms long, value double"
-    )
-    ser = spark.createDataFrame(
-        [(fp, {"__name__": "m", "id": str(fp)}) for fp in sorted({r[0] for r in rows})],
-        "fingerprint long, labels map<string,string>",
-    )
-    e = PromQLEngine(sdf, ser, start_ms=t, end_ms=t, step_ms=60_000)
-    return {r.labels["id"]: r.value for r in e.eval(expr).collect()}
-
-
-def test_rate_extrapolated_hand_computed(spark):
-    """extrapolatedRate pins, per functions.go: boundary extrapolation,
-    the zero-crossing head clamp, a counter reset, and a single sample."""
-    rows = [
-        # 1: head clamp fires (to_zero 1750 < to_start 2000)
-        (1, 2000, 1.0), (1, 4000, 3.0), (1, 9000, 5.0),
-        # 2: counter reset; the factor extrapolates to exactly 2x
-        (2, 1000, 10.0), (2, 6000, 2.0),
-        # 3: a single sample yields nothing
-        (3, 5000, 7.0),
-    ]
-    inc = _at(spark, rows, "increase(m[10s])", 10_000)
-    # 1: delta 4, sampled 7000, head min(2000, 7000*1/4) = 1750, tail 1000
-    assert inc["1"] == pytest.approx(4 * 9750 / 7000)
-    # 2: delta 2 (reset), head 1000, tail 4000 -> 2 * 10000/5000
-    assert inc["2"] == pytest.approx(4.0)
-    assert "3" not in inc
-    rate = _at(spark, rows, "rate(m[10s])", 10_000)
-    assert rate["1"] == pytest.approx(4 * 9750 / 7000 / 10)
-    # a counter that starts at 0 extrapolates no further back than 0:
-    # head clamps to 0, tail 100 s (< 1.1 x 100 s) -> 30 * 2 over 300 s
-    assert _at(
-        spark, [(1, 100_000, 0.0), (1, 200_000, 30.0)], "rate(m[5m])", 300_000
-    )["1"] == pytest.approx(0.2)
-
-
 def test_increase_with_counter_reset(spark):
     """A drop inside the window contributes the post-reset value, and the
     window (t - 5m, t] is open on the left: the sample at t - 5m is out."""
@@ -921,7 +882,7 @@ def test_increase_with_counter_reset(spark):
     ]
     # delta 8, sampled 120 s, head 60 s (< 1.1 x 60 s), tail 120 s capped
     # at 30 s -> 8 x 210/120
-    assert _at(spark, rows, "increase(m[5m])", 300_000)["1"] == pytest.approx(14.0)
+    assert instant_at(spark, rows, "increase(m[5m])", 300_000)["1"] == pytest.approx(14.0)
 
 
 def test_delta_over_time(spark):
@@ -929,28 +890,28 @@ def test_delta_over_time(spark):
     reset handling and no zero clamp."""
     rows = [(1, 250_000, 5.0), (1, 10_000, 12.0), (1, 150_000, 2.0)]
     # -7 over 240 s sampled, head 10 s, tail 50 s -> -7 x 300/240
-    assert _at(spark, rows, "delta(m[5m])", 300_000)["1"] == pytest.approx(-8.75)
+    assert instant_at(spark, rows, "delta(m[5m])", 300_000)["1"] == pytest.approx(-8.75)
 
 
 def test_irate_uses_last_two_and_handles_reset(spark):
     rows = [(1, 0, 10.0), (1, 60_000, 95.0), (1, 120_000, 100.0), (1, 180_000, 4.0)]
     # last two at t=180 s: 100 -> 4 is a reset, contributing 4 over 60 s
-    assert _at(spark, rows, "irate(m[5m])", 180_000)["1"] == pytest.approx(4.0 / 60.0)
+    assert instant_at(spark, rows, "irate(m[5m])", 180_000)["1"] == pytest.approx(4.0 / 60.0)
     # idelta: the plain gauge difference, negative on the same data
-    assert _at(spark, rows, "idelta(m[5m])", 180_000)["1"] == -96.0
+    assert instant_at(spark, rows, "idelta(m[5m])", 180_000)["1"] == -96.0
     # earlier samples in the window are ignored: at t=120 s, 95 -> 100
-    assert _at(spark, rows, "irate(m[5m])", 120_000)["1"] == pytest.approx(5.0 / 60.0)
+    assert instant_at(spark, rows, "irate(m[5m])", 120_000)["1"] == pytest.approx(5.0 / 60.0)
 
 
 def test_irate_single_sample_window_drops(spark):
-    assert _at(spark, [(1, 0, 1.0), (2, 0, 2.0)], "irate(m[5m])", 0) == {}
+    assert instant_at(spark, [(1, 0, 1.0), (2, 0, 2.0)], "irate(m[5m])", 0) == {}
 
 
 def test_clamp_family(spark):
     rows = [(1, 0, -5.0), (2, 0, 50.0), (3, 0, 500.0)]
 
     def vals(expr):
-        got = _at(spark, rows, expr, 0)
+        got = instant_at(spark, rows, expr, 0)
         return [got[k] for k in ("1", "2", "3")]
 
     assert vals("clamp(m, 0, 100)") == [0.0, 50.0, 100.0]

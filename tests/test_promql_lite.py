@@ -1,190 +1,36 @@
-"""PromQL-lite range functions: increase handles counter resets, rate
-scales by window seconds, delta is last-minus-first."""
+"""Hand-computed pins for PromQL's extrapolated rate()/increase(), as
+``PromQLEngine`` evaluates them (promql/engine.py:_extrapolated)."""
 
-from promhouse_spark.operators.promql_lite import (
-    delta_over_time,
-    histogram_quantile,
-    increase,
-    rate,
-)
-from promhouse_spark.schemas import SAMPLES_SCHEMA
+import pytest
 
-W = 300_000
-
-
-def test_increase_with_counter_reset(spark):
-    rows = [
-        (1, 0, 10.0),
-        (1, 60_000, 15.0),   # +5
-        (1, 120_000, 3.0),   # reset → +3
-        (1, 180_000, 8.0),   # +5
-        (1, 310_000, 9.0),   # next window: +1 (diff vs prev window's last)
-    ]
-    df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
-    got = {r["window_start_ms"]: r["increase"] for r in increase(df, W).collect()}
-    assert got[0] == 13.0  # 5 + 3 + 5 (first sample contributes 0)
-    assert got[W] == 1.0
+from tests.fixtures import instant_at
 
 
 def test_rate(spark):
-    df = spark.createDataFrame([(1, 0, 0.0), (1, 100_000, 30.0)], SAMPLES_SCHEMA)
-    row = rate(df, W).collect()[0]
-    assert row["increase"] == 30.0
-    assert abs(row["rate"] - 30.0 / 300.0) < 1e-12
-
-
-def test_delta_over_time(spark):
-    rows = [(1, 250_000, 5.0), (1, 10_000, 12.0), (1, 150_000, 2.0)]
-    df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
-    row = delta_over_time(df, W).collect()[0]
-    assert row["delta"] == 5.0 - 12.0  # last(t=250k) - first(t=10k)
-    assert row["n_samples"] == 3
-
-
-def test_histogram_quantile_interpolation(spark):
-    # series 1: cumulative 10/30/40 at le 1/2/4. p50 rank=20 lands in the
-    # (1,2] bucket: 1 + (2-1)*(20-10)/(30-10) = 1.5
-    # series 2: all mass in the FIRST bucket — interpolates from 0, not
-    # from the bucket bound: 0 + (1-0)*(5-0)/(10-0) = 0.5
-    rows = [
-        (1, 1.0, 10.0), (1, 2.0, 30.0), (1, 4.0, 40.0),
-        (2, 1.0, 10.0), (2, 2.0, 10.0), (2, 4.0, 10.0),
-    ]
-    df = spark.createDataFrame(rows, "fingerprint long, le double, cum_count double")
-    got = {r["fingerprint"]: r["quantile"] for r in histogram_quantile(df, 0.5).collect()}
-    assert got == {1: 1.5, 2: 0.5}
-
-
-def test_histogram_quantile_exact_boundary(spark):
-    # rank exactly on a bucket's cumulative count returns the bound itself
-    rows = [(1, 1.0, 5.0), (1, 2.0, 10.0), (1, 4.0, 20.0)]
-    df = spark.createDataFrame(rows, "fingerprint long, le double, cum_count double")
-    row = histogram_quantile(df, 0.5).collect()[0]
-    assert row["quantile"] == 2.0 and row["rank"] == 10.0
+    """A counter that starts at 0 extrapolates no further back than 0:
+    head clamps to 0, tail 100 s (< 1.1 x 100 s) -> 30 x 2 over 300 s."""
+    rows = [(1, 100_000, 0.0), (1, 200_000, 30.0)]
+    assert instant_at(spark, rows, "increase(m[5m])", 300_000)["1"] == pytest.approx(60.0)
+    assert instant_at(spark, rows, "rate(m[5m])", 300_000)["1"] == pytest.approx(0.2)
 
 
 def test_rate_extrapolated_hand_computed(spark):
-    """extrapolatedRate pins: boundary extrapolation, the zero-crossing
-    head clamp, and reset handling — hand-computed per functions.go."""
-    from promhouse_spark.operators.promql_lite import rate_extrapolated
-
+    """extrapolatedRate pins, per functions.go: boundary extrapolation,
+    the zero-crossing head clamp, a counter reset, and a single sample."""
     rows = [
-        # series 1: head clamp fires (to_zero 1750 < to_start 2000)
+        # 1: head clamp fires (to_zero 1750 < to_start 2000)
         (1, 2000, 1.0), (1, 4000, 3.0), (1, 9000, 5.0),
-        # series 2: counter reset; factor extrapolates to exactly 2×
+        # 2: counter reset; the factor extrapolates to exactly 2x
         (2, 1000, 10.0), (2, 6000, 2.0),
-        # series 3: single sample → no output
+        # 3: a single sample yields nothing
         (3, 5000, 7.0),
     ]
-    df = spark.createDataFrame(
-        rows, "fingerprint long, timestamp_ms long, value double"
-    )
-    out = {
-        r["fingerprint"]: (r["increase_extrapolated"], r["rate_extrapolated"])
-        for r in rate_extrapolated(df, step_ms=10_000).collect()
-    }
-    # series 1: delta 4, sampled 7000, head min(2000, 7000*1/4)=1750,
-    # tail 1000 → 4 * 9750/7000 = 5.571429
-    assert out[1] == (5.571429, 0.5571429)
-    # series 2: delta 2 (reset), head 1000, tail 4000 → 2 * 10000/5000 = 4
-    assert out[2] == (4.0, 0.4)
-    assert 3 not in out
-
-
-def test_alert_intervals_property_vs_python_model(spark):
-    """Hypothesis gaps-and-islands sweep: alert_intervals must equal a
-    brute-force run detector on random per-series value sequences."""
-    from hypothesis import given, settings, strategies as st
-
-    from promhouse_spark.operators.promql_lite import alert_intervals
-
-    @settings(max_examples=10, deadline=None)
-    @given(
-        rows=st.lists(
-            st.tuples(
-                st.integers(1, 2),      # fingerprint
-                st.integers(0, 30),     # ts
-                st.integers(0, 10),     # value; threshold sits at 5
-            ),
-            min_size=1,
-            max_size=12,
-            unique_by=lambda r: (r[0], r[1]),
-        ),
-        for_ms=st.sampled_from([0, 3, 10]),
-    )
-    def check(rows, for_ms):
-        df = spark.createDataFrame(
-            [(f, t, float(v)) for f, t, v in rows],
-            "fingerprint long, timestamp_ms long, value double",
-        )
-        got = {
-            (r["fingerprint"], r["start_ms"], r["end_ms"], r["n_samples"])
-            for r in alert_intervals(df, threshold=5.0, for_ms=for_ms).collect()
-        }
-        want = set()
-        by_fp: dict[int, list[tuple[int, float]]] = {}
-        for f, t, v in rows:
-            by_fp.setdefault(f, []).append((t, float(v)))
-        for f, pts in by_fp.items():
-            run: list[int] = []
-            for t, v in sorted(pts) + [(None, -1.0)]:
-                if v > 5.0:
-                    run.append(t)
-                else:
-                    if run and run[-1] - run[0] >= for_ms:
-                        want.add((f, run[0], run[-1], len(run)))
-                    run = []
-        assert got == want
-
-    check()
-
-
-def test_irate_uses_last_two_and_handles_reset(spark):
-    rows = [
-        (1, 0, 10.0),
-        (1, 60_000, 95.0),
-        (1, 120_000, 100.0),
-        (1, 180_000, 4.0),  # reset: irate contributes the new value
-    ]
-    from promhouse_spark.operators.promql_lite import idelta, irate
-
-    df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
-    row = irate(df, W).collect()[0]
-    assert row["increase"] == 4.0       # reset-aware (100 -> 4 drop)
-    assert row["dt_ms"] == 60_000
-    assert abs(row["irate"] - 4.0 / 60.0) < 1e-12
-    # idelta: plain gauge difference, negative on the same data
-    d = idelta(df, W).collect()[0]
-    assert d["idelta"] == 4.0 - 100.0
-    # earlier samples in the window are ignored by both
-    no_reset = spark.createDataFrame(rows[:3], SAMPLES_SCHEMA)
-    row2 = irate(no_reset, W).collect()[0]
-    assert row2["increase"] == 5.0 and row2["dt_ms"] == 60_000
-
-
-def test_irate_single_sample_window_drops(spark):
-    from promhouse_spark.operators.promql_lite import irate
-
-    df = spark.createDataFrame([(1, 0, 1.0), (2, 0, 2.0)], SAMPLES_SCHEMA)
-    assert irate(df, W).collect() == []
-
-
-def test_clamp_family(spark):
-    import math
-
-    from pyspark.sql import functions as F
-
-    from promhouse_spark.operators.promql_lite import clamp, clamp_max, clamp_min
-
-    df = spark.createDataFrame([(v,) for v in [-5.0, 50.0, 500.0]], "v double")
-    got = df.select(
-        clamp(F.col("v"), 0.0, 100.0).alias("c"),
-        clamp_min(F.col("v"), 0.0).alias("cmin"),
-        clamp_max(F.col("v"), 100.0).alias("cmax"),
-    ).collect()
-    assert [r.c for r in got] == [0.0, 50.0, 100.0]
-    assert [r.cmin for r in got] == [0.0, 50.0, 500.0]
-    assert [r.cmax for r in got] == [-5.0, 50.0, 100.0]
-    # Prometheus funcClamp: min > max yields NaN for every point
-    nan = df.select(clamp(F.col("v"), 10.0, 5.0).alias("c")).collect()
-    assert all(math.isnan(r.c) for r in nan)
+    inc = instant_at(spark, rows, "increase(m[10s])", 10_000)
+    # 1: delta 4, sampled 7000, head min(2000, 7000*1/4) = 1750, tail 1000
+    assert inc["1"] == pytest.approx(4 * 9750 / 7000)
+    # 2: delta 2 (reset), head 1000, tail 4000 -> 2 * 10000/5000
+    assert inc["2"] == pytest.approx(4.0)
+    assert "3" not in inc
+    rate = instant_at(spark, rows, "rate(m[10s])", 10_000)
+    assert rate["1"] == pytest.approx(4 * 9750 / 7000 / 10)
+    assert rate["2"] == pytest.approx(0.4)
