@@ -855,11 +855,13 @@ def create_app(
         # the lookup; shift back for reporting
         samples, series = eng._selected(sel, rs.range_ms)
         rows = (
-            samples.filter(
-                (F.col("timestamp_ms") > at - rs.range_ms)
-                & (F.col("timestamp_ms") <= at)
+            eng._labeled(
+                samples.filter(
+                    (F.col("timestamp_ms") > at - rs.range_ms)
+                    & (F.col("timestamp_ms") <= at)
+                ),
+                series,
             )
-            .join(series, "fingerprint")
             .select("labels", "timestamp_ms", "value")
             .collect()
         )

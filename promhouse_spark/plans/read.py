@@ -18,9 +18,9 @@ day partitions before reading a byte.
 
 from __future__ import annotations
 
-import json
 from typing import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from promhouse_spark.models import Matcher
@@ -49,12 +49,15 @@ def select_series(registry_df: DataFrame, matchers: Sequence[Matcher]) -> DataFr
 def samples_in_range(samples_df: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
     """F2: inclusive-both-ends time predicate (``clickhouse.go:285-291``),
     plus the re-derived day-partition predicate so partition pruning fires on
-    the date-partitioned fact table (SURVEY §4 pushdown row)."""
-    cond = (F.col(TIMESTAMP_MS) >= start_ms) & (F.col(TIMESTAMP_MS) <= end_ms)
+    the date-partitioned fact table (SURVEY §4 pushdown row). One SQL
+    filter."""
+    start, end = f"({int(start_ms)})", f"({int(end_ms)})"
+    cond = f"{TIMESTAMP_MS} >= {start} AND {TIMESTAMP_MS} <= {end}"
     if DATE in samples_df.columns:
-        start_d = F.to_date(F.timestamp_millis(F.lit(start_ms)))
-        end_d = F.to_date(F.timestamp_millis(F.lit(end_ms)))
-        cond = cond & (F.col(DATE) >= start_d) & (F.col(DATE) <= end_d)
+        cond += (
+            f" AND {DATE} >= to_date(timestamp_millis({start}))"
+            f" AND {DATE} <= to_date(timestamp_millis({end}))"
+        )
     return samples_df.filter(cond)
 
 
@@ -100,24 +103,25 @@ def restrict_to_series(
       ``Column.isin`` makes one per fingerprint;
     - otherwise → left-semi join against a fingerprint frame
       (the reference's temp-table ``ANY INNER JOIN``,
-      ``clickhouse.go:352-358``). A list becomes a plan-local relation
-      (one JSON literal, no RDD), so the planner sees its size. No forced
-      broadcast: an empty-matcher select-all makes the matched set the
-      whole registry, so the join strategy is left to AQE, which
-      broadcasts when the size statistics say it fits and shuffles
-      otherwise.
+      ``clickhouse.go:352-358``). A list becomes a local relation fed by
+      one Arrow batch (no RDD, no parse on an executor), so the planner
+      sees its size. No forced broadcast: an empty-matcher select-all
+      makes the matched set the whole registry, so the join strategy is
+      left to AQE, which broadcasts when the size statistics say it fits
+      and shuffles otherwise.
     """
     if isinstance(fingerprints, DataFrame):
-        # a semi-join keeps each left row once however often its key repeats
-        return samples_df.join(fingerprints.select(FINGERPRINT), FINGERPRINT, "left_semi")
-    fps = sorted({int(f) for f in fingerprints})
-    if not fps:
-        return samples_df.filter(F.lit(False))
-    if len(fps) <= max_inlist:
-        return samples_df.filter(F.expr(f"{FINGERPRINT} IN ({','.join(map(str, fps))})"))
-    fp_df = samples_df.sparkSession.range(1).select(
-        F.explode(F.from_json(F.lit(json.dumps(fps)), "array<bigint>")).alias(FINGERPRINT)
-    )
+        fp_df = fingerprints.select(FINGERPRINT)
+    else:
+        fps = sorted({int(f) for f in fingerprints})
+        if len(fps) <= max_inlist:
+            if not fps:
+                return samples_df.filter("false")
+            return samples_df.filter(f"{FINGERPRINT} IN ({','.join(map(str, fps))})")
+        fp_df = samples_df.sparkSession.createDataFrame(
+            pa.table({FINGERPRINT: pa.array(fps, pa.int64())})
+        )
+    # a semi-join keeps each left row once however often its key repeats
     return samples_df.join(fp_df, FINGERPRINT, "left_semi")
 
 

@@ -38,7 +38,6 @@ PromQL's static typing, not empty-labels vector matching."""
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
@@ -47,12 +46,14 @@ from promhouse_spark.models import Query, make_matchers
 from promhouse_spark.operators.asof import instant_vector
 from promhouse_spark.operators.matchers import check_regex
 from promhouse_spark.operators.vector_match import (
-    _CMP as _VM_CMP,
+    _ARITH,
+    _CMP,
     agg_by,
     binop,
-    ieee_div,
-    ieee_mod,
     match_key,
+    match_labels,
+    sql_double,
+    sql_labels,
     topk_by,
 )
 from promhouse_spark.promql.parser import (
@@ -73,18 +74,26 @@ from promhouse_spark.plans.read import DEFAULT_MAX_SERIES_INLIST, restrict_to_se
 
 NAME = "__name__"
 
-_SERIES_JSON = "array<struct<fingerprint:bigint,labels:map<string,string>>>"
+# SQL: the labels column without the metric name
+_DROP_NAME = "map_filter(labels, (k, v) -> k != '__name__')"
+_NO_LABELS = "CAST(map() AS MAP<STRING, STRING>)"
 
-_ARITH = {
-    "+": lambda l, r: l + r,
-    "-": lambda l, r: l - r,
-    "*": lambda l, r: l * r,
-    "/": ieee_div,
-    "%": ieee_mod,
-    "^": lambda l, r: F.pow(l, r),
-    "atan2": F.atan2,
-}
-_CMP = _VM_CMP  # IEEE NaN comparison semantics, shared with binop
+
+def _drop_name() -> Column:
+    return F.expr(_DROP_NAME)
+
+
+def _label_lookup(series: dict[int, dict[str, str]], drop_name: bool = False) -> str:
+    """SQL: each row's labels, looked up by ``fingerprint`` in one map
+    literal of the series the hot registry resolved (metric name dropped
+    here, in Python, when the caller drops it)."""
+    if not series:
+        return "CAST(NULL AS MAP<STRING, STRING>)"
+    entries = ", ".join(
+        f"{fp}L, {sql_labels({k: v for k, v in labels.items() if not (drop_name and k == NAME)})}"
+        for fp, labels in series.items()
+    )
+    return f"element_at(map({entries}), fingerprint)"
 
 
 def is_scalar_expr(node) -> bool:
@@ -214,25 +223,24 @@ def _is_lit(node) -> bool:
         return False
 
 
-# range-vector aggregations with a direct Spark aggregate
+# range-vector aggregations with a direct Spark aggregate, as SQL over the
+# exploded frame's sample value ``v`` and timestamp ``ts``
 _SIMPLE_OVER_TIME = {
-    "avg_over_time": lambda v, ts: F.avg(v),
+    "avg_over_time": "avg(v)",
     # Spark's min orders NaN above every number, which happens to MATCH
     # Go's fold (`f.F < min || IsNaN(min)`): NaN never wins unless every
     # sample is NaN
-    "min_over_time": lambda v, ts: F.min(v),
+    "min_over_time": "min(v)",
     # ... but Spark's max would let NaN displace a numeric maximum, where
     # Go's `f.F > max || IsNaN(max)` never does — mask NaN out and fall
     # back to NaN only for an all-NaN window
-    "max_over_time": lambda v, ts: F.coalesce(
-        F.max(F.when(~F.isnan(v), v)), F.lit(float("nan"))
-    ),
-    "sum_over_time": lambda v, ts: F.sum(v),
-    "count_over_time": lambda v, ts: F.count(v).cast("double"),
-    "last_over_time": lambda v, ts: F.max_by(v, F.struct(ts, v)),
-    "stddev_over_time": lambda v, ts: F.stddev_pop(v),
-    "stdvar_over_time": lambda v, ts: F.var_pop(v),
-    "present_over_time": lambda v, ts: F.lit(1.0),
+    "max_over_time": "coalesce(max(CASE WHEN NOT isnan(v) THEN v END), CAST('NaN' AS DOUBLE))",
+    "sum_over_time": "sum(v)",
+    "count_over_time": "CAST(count(v) AS DOUBLE)",
+    "last_over_time": "max_by(v, struct(ts, v))",
+    "stddev_over_time": "stddev_pop(v)",
+    "stdvar_over_time": "var_pop(v)",
+    "present_over_time": "1.0D",
     # Prometheus 3.x experimental ts_of_* family: the SAMPLE TIMESTAMP (in
     # seconds) of the window's last/max/min point; value ties break toward
     # the later timestamp, deterministically. For the max variant NaN must
@@ -241,17 +249,12 @@ _SIMPLE_OVER_TIME = {
     # while an all-NaN window still answers the LAST sample's ts; the min
     # variant gets the same behavior for free from Spark's NaN-is-largest
     # struct ordering.
-    "ts_of_last_over_time": lambda v, ts: F.max(ts) / 1000.0,
-    "ts_of_max_over_time": lambda v, ts: F.max_by(
-        ts,
-        F.struct(
-            (~F.isnan(v)).cast("int"),
-            F.when(F.isnan(v), F.lit(float("-inf"))).otherwise(v),
-            ts,
-        ),
-    )
-    / 1000.0,
-    "ts_of_min_over_time": lambda v, ts: F.min_by(ts, F.struct(v, -ts)) / 1000.0,
+    "ts_of_last_over_time": "max(ts) / 1000.0D",
+    "ts_of_max_over_time": (
+        "max_by(ts, struct(CAST(NOT isnan(v) AS INT), "
+        "CASE WHEN isnan(v) THEN CAST('-Infinity' AS DOUBLE) ELSE v END, ts)) / 1000.0D"
+    ),
+    "ts_of_min_over_time": "min_by(ts, struct(v, -ts)) / 1000.0D",
 }
 
 def _float_ceil(c: Column) -> Column:
@@ -321,8 +324,11 @@ class PromQLEngine:
         self.step_ms = step_ms
         self.lookback_ms = lookback_ms
         # native-histogram tier (wire-shape rows keyed by fingerprint);
-        # None = no tier attached, histogram_* functions evaluate empty
-        self.histograms = histograms_df
+        # None = no tier attached, histogram_* functions evaluate empty.
+        # from_storage leaves a loader instead, so only an expression
+        # with a histogram function builds the tier's scan
+        self._histograms = histograms_df
+        self._histograms_loader = None
         # set by from_storage(tier="rollup"): (partials frame, rollup step)
         # — enables exact aggregation pushdown for decomposable
         # *_over_time range functions (streaming/rollup.rollup_range_agg)
@@ -332,7 +338,9 @@ class PromQLEngine:
         # distributed), a snapshot of its hot registry dict (None: every
         # selection resolves over series_df), its IN-list cutover, and its
         # restricted scan (raw tier only), which reads each selector's
-        # samples over the window it can reach
+        # samples over the window it can reach. A selection the dict
+        # resolves keeps its series in Python: ``{signed fingerprint:
+        # labels}``, attached to the result as one map-literal lookup
         self._storage = None
         self._registry: dict | None = None
         self._max_inlist = DEFAULT_MAX_SERIES_INLIST
@@ -349,6 +357,13 @@ class PromQLEngine:
         # construct fresh inside every run.
         self._iv_memo: dict = {}
         self._sel_counts: dict = {}
+
+    @property
+    def histograms(self) -> DataFrame | None:
+        if self._histograms_loader is not None:
+            self._histograms = self._histograms_loader()
+            self._histograms_loader = None
+        return self._histograms
 
     # -- public ------------------------------------------------------------
 
@@ -369,12 +384,12 @@ class PromQLEngine:
         storage keeps its registry as a hot dict (``cache_registry``), the
         engine copies that dict once, and each selector's matchers resolve
         in Python against the copy (``Query.matches``, the remote-read
-        matcher, which reads regexes as Java does); the matched
-        (fingerprint, labels) pairs enter the plan as a small literal
-        relation. The samples come from the storage's ``_restricted_scan``
-        over the window the selector can reach (``find_min_max_time``), so
-        a chunked tier prunes chunks by envelope before its decode. A
-        selection resolves distributed instead, over ``registry_df()``,
+        matcher, which reads regexes as Java does); the matched labels
+        stay in Python and reach the result through one map literal keyed
+        by fingerprint, with no join. The samples come from the storage's
+        ``_restricted_scan`` over the window the selector can reach
+        (``find_min_max_time``), so a chunked tier prunes chunks by
+        envelope before its decode. A selection resolves distributed instead, over ``registry_df()``,
         with the samples scan semi-joined to it, when the dict is off
         (constructed so, or auto-disabled above
         ``registry_cache_max_series``), when a regex lies outside the
@@ -413,15 +428,9 @@ class PromQLEngine:
             samples = storage.samples_df()
         else:
             raise ValueError(f"unknown tier: {tier}")
-        hists = (
-            storage.histograms_df()
-            if tier == "raw" and hasattr(storage, "histograms_df")
-            else None
-        )
-        eng = cls(
-            samples, series, start_ms, end_ms, step_ms, lookback_ms,
-            histograms_df=hists,
-        )
+        eng = cls(samples, series, start_ms, end_ms, step_ms, lookback_ms)
+        if tier == "raw" and hasattr(storage, "histograms_df"):
+            eng._histograms_loader = storage.histograms_df
         if tier == "rollup":
             eng._rollup = (partials, storage._rollup_step_ms)
         eng._storage, eng._registry = storage, registry
@@ -480,18 +489,16 @@ class PromQLEngine:
         )
 
     def _grid(self) -> Column:
-        return F.explode(
-            F.sequence(
-                F.lit(self.start_ms), F.lit(self.end_ms), F.lit(self.step_ms)
-            )
-        ).alias("eval_ms")
+        return F.expr(
+            f"explode(sequence({self.start_ms}, {self.end_ms}, {self.step_ms})) AS eval_ms"
+        )
 
     def _scalar_frame(self, x: float) -> DataFrame:
         spark = self.samples.sparkSession
         return spark.range(1).select(
-            F.create_map().cast("map<string,string>").alias("labels"),
+            F.expr(f"{_NO_LABELS} AS labels"),
             self._grid(),
-            F.lit(float(x)).alias("value"),
+            F.expr(f"{sql_double(x)} AS value"),
         )
 
     def _sub(self, start_ms: int, end_ms: int, step_ms: int) -> "PromQLEngine":
@@ -505,23 +512,21 @@ class PromQLEngine:
         sub._max_inlist, sub._scan = self._max_inlist, self._scan
         return sub
 
-    def _matched(self, sel: VectorSelector) -> tuple[DataFrame, list[int] | DataFrame]:
-        """The series a selector matches (O2): their (fingerprint, labels)
-        frame, and what restricts a fact frame to them — the signed
-        fingerprints when the matchers resolved against the hot registry,
-        else the frame itself."""
+    def _matched(
+        self, sel: VectorSelector
+    ) -> tuple[dict[int, dict[str, str]] | DataFrame, list[int] | DataFrame]:
+        """The series a selector matches (O2), and what restricts a fact
+        frame to them. Resolved against the hot registry: ``{signed
+        fingerprint: labels}`` and the fingerprints. Resolved distributed:
+        the (fingerprint, labels) frame, twice."""
         matchers = list(sel.matchers)
         if sel.name is not None:
             matchers.append(Matcher(NAME, "=", sel.name))
         q = Query(0, 0, make_matchers(*((m.name, m.op, m.value) for m in matchers)))
         if self._registry is not None and q.java_exact():
-            pairs = self._storage._resolve_series(q, self._registry)
-            if len(pairs) <= self._max_inlist:
-                rows = json.dumps([{"fingerprint": fp, "labels": l} for fp, l in pairs])
-                series = self.samples.sparkSession.range(1).select(
-                    F.inline(F.from_json(F.lit(rows), _SERIES_JSON))
-                )
-                return series, [fp for fp, _ in pairs]
+            series = dict(self._storage._resolve_series(q, self._registry))
+            if len(series) <= self._max_inlist:
+                return series, list(series)
         # distributed: no hot dict, a regex only Java reads exactly, or a
         # match set too wide for an IN list
         cond = F.lit(True)
@@ -536,11 +541,12 @@ class PromQLEngine:
 
     def _selected(
         self, sel: VectorSelector, range_ms: int = 0
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, dict[int, dict[str, str]] | DataFrame]:
         """(samples of the matched series with offset applied, their series
-        frame). The matcher evaluates on the series dimension only — the
-        fact table is touched by fingerprint restriction, exactly the
-        reference's read path (O2 matcher→series resolution). With a
+        as :meth:`_matched` gives them). The matcher evaluates on the
+        series dimension only — the fact table is touched by fingerprint
+        restriction, exactly the reference's read path (O2 matcher→series
+        resolution). With a
         storage scan the samples are read over the window this selector
         (with ``range_ms`` for a range selector) can reach on this
         engine's grid; callers apply their own exact time predicates."""
@@ -555,17 +561,41 @@ class PromQLEngine:
             samples = restrict_to_series(self.samples, matched, self._max_inlist)
         if sel.offset_ms:
             samples = samples.withColumn(
-                "timestamp_ms", F.col("timestamp_ms") + F.lit(sel.offset_ms)
+                "timestamp_ms", F.expr(f"timestamp_ms + {sel.offset_ms}")
             )
         return samples, series
 
-    def _attach(self, vec: DataFrame, series: DataFrame, drop_name: bool = False) -> DataFrame:
-        labels = F.col("labels")
-        if drop_name:
-            labels = F.map_filter(labels, lambda k, _: k != F.lit(NAME))
-        return vec.join(series, "fingerprint").select(
-            labels.alias("labels"), "eval_ms", F.col("value").cast("double").alias("value")
+    def _attach(
+        self, vec: DataFrame, series: dict | DataFrame, drop_name: bool = False
+    ) -> DataFrame:
+        """(fingerprint, eval_ms, value) rows → the vector frame (labels,
+        eval_ms, value): labels from the hot registry's map literal, or
+        by a join with a distributed selection's series frame."""
+        if isinstance(series, dict):
+            labels = _label_lookup(series, drop_name)
+        else:
+            vec = vec.join(series, "fingerprint")
+            labels = _DROP_NAME if drop_name else "labels"
+        return vec.selectExpr(
+            f"{labels} AS labels", "eval_ms", "CAST(value AS DOUBLE) AS value"
         )
+
+    def _labeled(self, frame: DataFrame, series: dict | DataFrame) -> DataFrame:
+        """``frame`` with its series' ``labels`` column added."""
+        if isinstance(series, dict):
+            return frame.withColumn("labels", F.expr(_label_lookup(series)))
+        return frame.join(series, "fingerprint")
+
+    def _fingerprints(self, series: dict | DataFrame) -> DataFrame | None:
+        """The matched series' fingerprints as an instant-vector grid
+        source (None for a streaming selection: the grid then comes from
+        the samples)."""
+        if isinstance(series, dict):
+            fps = ", ".join(f"{fp}L" for fp in series)
+            return self.samples.sparkSession.range(1).selectExpr(
+                f"explode(CAST(array({fps}) AS ARRAY<BIGINT>)) AS fingerprint"
+            )
+        return series if not series.isStreaming else None
 
     def _at_ms(self, sel: VectorSelector) -> int | None:
         """Resolve the @ modifier: literal timestamps pass through;
@@ -584,9 +614,10 @@ class PromQLEngine:
         samples, series = self._selected(sel)
         # the matched series' fingerprints replace the distinct over the
         # (semi-joined) fact table as the grid source — one aggregation
-        # over the fact stream removed per selector, and the series
-        # subtree is shared (exchange-reused) with the semi-join/_attach
-        fps = series if not series.isStreaming else None
+        # over the fact stream removed per selector; a distributed
+        # selection's series subtree is shared (exchange-reused) with the
+        # semi-join/_attach
+        fps = self._fingerprints(series)
         at = self._at_ms(sel)
         if at is not None:
             # @ modifier: one evaluation at the pinned timestamp, its value
@@ -618,7 +649,7 @@ class PromQLEngine:
         "positive", "negative",
     )
 
-    def _hist_selected(self, sel: VectorSelector) -> tuple[DataFrame, DataFrame]:
+    def _hist_selected(self, sel: VectorSelector) -> tuple[DataFrame, dict | DataFrame]:
         """Histogram-tier twin of :meth:`_selected`: matcher-resolved
         native-histogram rows (offset applied) + their series frame. An
         empty frame when no histogram tier is attached, so histogram_*
@@ -677,15 +708,14 @@ class PromQLEngine:
 
         if isinstance(node, Aggregation):  # sum()/avg() of histograms
             from promhouse_spark.operators.nativehist import wire_hist_sum
-            from promhouse_spark.operators.vector_match import match_labels
 
             inner = self._hist_wire_frame(node.expr)
             if node.by is not None:
-                grouped = match_labels(F.col("labels"), on=node.by)
+                grouped = match_labels(on=node.by)
             else:
                 # bare sum: ALL labels drop; without: drop listed + name
                 grouped = match_labels(
-                    F.col("labels"), ignoring=node.without or None,
+                    ignoring=node.without or None,
                     on=[] if node.without is None else None,
                 )
             projected = inner.withColumn("labels", grouped)
@@ -731,7 +761,7 @@ class PromQLEngine:
                     .groupBy("fingerprint", "eval_ms")
                     .agg(F.max_by("__h", F.col("__h.timestamp_ms")).alias("__h"))
                 )
-            return latest.join(series, "fingerprint").select(
+            return self._labeled(latest, series).select(
                 "labels",
                 F.col("eval_ms").alias("timestamp_ms"),
                 *[F.col(f"__h.{c}").alias(c) for c in self._WIRE_COLS],
@@ -740,7 +770,7 @@ class PromQLEngine:
             rs = node.args[0]
             sel = rs.selector
             hists, series = self._hist_selected(sel)
-            labeled = hists.join(series, "fingerprint").select(
+            labeled = self._labeled(hists, series).select(
                 "labels", "timestamp_ms", *self._WIRE_COLS
             )
             at = self._at_ms(sel)
@@ -823,7 +853,7 @@ class PromQLEngine:
         """Wire-shape frame → engine vector frame, dropping the metric
         name (promql dropMetricName on every histogram_* function)."""
         return wf.select(
-            F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+            _drop_name().alias("labels"),
             F.col("timestamp_ms").alias("eval_ms"),
             value.cast("double").alias("value"),
         )
@@ -832,25 +862,24 @@ class PromQLEngine:
         """Sliding-window explode: sample at ts reaches grid points t with
         ts ≤ t < ts + range (PromQL window (t-range, t]). Expansion factor
         ≤ range/step, bounded and map-side."""
-        step, start, end = self.step_ms, self.start_ms, self.end_ms
-        ts = F.col("timestamp_ms")
-        first = F.greatest(
-            F.lit(start),
-            F.lit(start) + F.ceil((ts - F.lit(start)) / F.lit(step)) * F.lit(step),
-        ).cast("long")
-        last = F.least(
-            F.lit(end),
-            F.lit(start)
-            + F.floor((ts + F.lit(rng - 1) - F.lit(start)) / F.lit(step)) * F.lit(step),
-        ).cast("long")
-        evs = F.when(first <= last, F.sequence(first, last, F.lit(step))).otherwise(
-            F.array().cast("array<long>")
+        step, start, end = (f"({x})" for x in (self.step_ms, self.start_ms, self.end_ms))
+        first = (
+            f"CAST(greatest({start}, {start} + ceil((timestamp_ms - {start}) / {step})"
+            f" * {step}) AS BIGINT)"
         )
-        return samples.select(
+        last = (
+            f"CAST(least({end}, {start} + floor((timestamp_ms + ({rng - 1}) - {start})"
+            f" / {step}) * {step}) AS BIGINT)"
+        )
+        evs = (
+            f"CASE WHEN {first} <= {last} THEN sequence({first}, {last}, {step})"
+            " ELSE CAST(array() AS ARRAY<BIGINT>) END"
+        )
+        return samples.selectExpr(
             "fingerprint",
-            F.explode(evs).alias("eval_ms"),
-            ts.alias("ts"),
-            F.col("value").cast("double").alias("v"),
+            f"explode({evs}) AS eval_ms",
+            "timestamp_ms AS ts",
+            "CAST(value AS DOUBLE) AS v",
         )
 
     def _range_input(self, arg) -> tuple[DataFrame, DataFrame, int]:
@@ -904,50 +933,43 @@ class PromQLEngine:
     ) -> DataFrame:
         """promql/functions.go extrapolatedRate over the exploded range
         frame: used by rate/increase (counter) and delta (gauge)."""
-        w_in = W.partitionBy("fingerprint", "eval_ms").orderBy("ts", "v")
         if counter:
-            prev = F.lag("v").over(w_in)
-            inc = (
-                F.when(prev.isNull(), F.lit(0.0))
-                .when(F.col("v") >= prev, F.col("v") - prev)
-                .otherwise(F.col("v"))
+            prev = "lag(v) OVER (PARTITION BY fingerprint, eval_ms ORDER BY ts, v)"
+            frame = frame.selectExpr(
+                "*",
+                f"CASE WHEN {prev} IS NULL THEN 0.0D WHEN v >= {prev} THEN v - {prev}"
+                " ELSE v END AS inc",
             )
-            delta_agg = F.sum("inc").alias("delta")
-            base = frame.withColumn("inc", inc)
+            delta = "sum(inc)"
         else:
-            delta_agg = (
-                F.max_by("v", F.struct("ts", "v")) - F.min_by("v", F.struct("ts", "v"))
-            ).alias("delta")
-            base = frame
+            delta = "max_by(v, struct(ts, v)) - min_by(v, struct(ts, v))"
         agg = (
-            base.groupBy("fingerprint", "eval_ms")
+            frame.groupBy("fingerprint", "eval_ms")
             .agg(
-                delta_agg,
-                F.min("ts").alias("first_ts"),
-                F.max("ts").alias("last_ts"),
-                F.min_by("v", F.struct("ts", "v")).alias("first_v"),
-                F.count("*").cast("long").alias("n"),
+                F.expr(f"{delta} AS delta"),
+                F.expr("min(ts) AS first_ts"),
+                F.expr("max(ts) AS last_ts"),
+                F.expr("min_by(v, struct(ts, v)) AS first_v"),
+                F.expr("CAST(count(*) AS BIGINT) AS n"),
             )
-            .filter((F.col("n") >= 2) & (F.col("last_ts") > F.col("first_ts")))
+            .filter("n >= 2 AND last_ts > first_ts")
         )
-        sampled = (F.col("last_ts") - F.col("first_ts")).cast("double")
-        avg_iv = sampled / (F.col("n") - 1)
-        to_start = (F.col("first_ts") - (F.col("eval_ms") - F.lit(rng))).cast("double")
-        to_end = (F.col("eval_ms") - F.col("last_ts")).cast("double")
+        sampled = "CAST(last_ts - first_ts AS DOUBLE)"
+        avg_iv = f"({sampled} / (n - 1))"
+        to_start = f"CAST(first_ts - (eval_ms - ({rng})) AS DOUBLE)"
+        to_end = "CAST(eval_ms - last_ts AS DOUBLE)"
         if counter:
-            to_zero = sampled * (
-                F.col("first_v") / F.nullif(F.col("delta"), F.lit(0.0))
+            to_zero = f"({sampled} * (first_v / nullif(delta, 0.0D)))"
+            to_start = (
+                f"CASE WHEN delta > 0 AND first_v >= 0 AND {to_zero} < {to_start}"
+                f" THEN {to_zero} ELSE {to_start} END"
             )
-            to_start = F.when(
-                (F.col("delta") > 0) & (F.col("first_v") >= 0) & (to_zero < to_start),
-                to_zero,
-            ).otherwise(to_start)
-        head = F.when(to_start >= avg_iv * 1.1, avg_iv / 2).otherwise(to_start)
-        tail = F.when(to_end >= avg_iv * 1.1, avg_iv / 2).otherwise(to_end)
-        value = F.col("delta") * (sampled + head + tail) / sampled
+        head = f"CASE WHEN ({to_start}) >= {avg_iv} * 1.1D THEN {avg_iv} / 2 ELSE {to_start} END"
+        tail = f"CASE WHEN {to_end} >= {avg_iv} * 1.1D THEN {avg_iv} / 2 ELSE {to_end} END"
+        value = f"delta * ({sampled} + ({head}) + ({tail})) / {sampled}"
         if as_rate:
-            value = value / F.lit(rng / 1000.0)
-        return agg.select("fingerprint", "eval_ms", value.alias("value"))
+            value = f"({value}) / {sql_double(rng / 1000.0)}"
+        return agg.selectExpr("fingerprint", "eval_ms", f"{value} AS value")
 
     _ROLLUP_PUSHDOWN = {
         "sum_over_time", "count_over_time", "min_over_time",
@@ -1045,16 +1067,16 @@ class PromQLEngine:
         if len(args) != 1 or not isinstance(args[0], (RangeSelector, Subquery)):
             raise ValueError(f"{func} expects a range selector or subquery")
         frame, series, rng = self._range_input(args[0])
-        g = frame.groupBy("fingerprint", "eval_ms")
         if func in ("rate", "increase", "delta"):
             out = self._extrapolated(
                 frame, rng, counter=func != "delta", as_rate=func == "rate"
             )
         elif func in _SIMPLE_OVER_TIME:
-            out = g.agg(
-                _SIMPLE_OVER_TIME[func](F.col("v"), F.col("ts")).alias("value")
+            out = frame.groupBy("fingerprint", "eval_ms").agg(
+                F.expr(f"{_SIMPLE_OVER_TIME[func]} AS value")
             )
         elif func == "quantile_over_time":
+            g = frame.groupBy("fingerprint", "eval_ms")
             qv = _lit_float(q_param, "quantile_over_time quantile")
             if qv < 0 or qv > 1:
                 # Prometheus: φ outside [0,1] yields ∓Inf (with a warning),
@@ -1080,7 +1102,9 @@ class PromQLEngine:
                     F.element_at(a, hi + 1) - F.element_at(a, lo + 1)
                 ) * (rank - lo.cast("double"))
 
-            gathered = g.agg(F.array_sort(F.collect_list("v")).alias("a"))
+            gathered = frame.groupBy("fingerprint", "eval_ms").agg(
+                F.array_sort(F.collect_list("v")).alias("a")
+            )
             med = arr_q(F.col("a"))
             dev = F.array_sort(
                 F.transform(F.col("a"), lambda x: F.abs(x - med))
@@ -1128,9 +1152,9 @@ class PromQLEngine:
             sf_, tf_ = hw_params
             omf, omtf = 1.0 - sf_, 1.0 - tf_
             arr = F.array_sort(F.collect_list(F.struct("ts", "v")))
-            gathered = g.agg(arr.alias("a"), F.count("*").alias("n")).filter(
-                F.col("n") >= 2
-            )
+            gathered = frame.groupBy("fingerprint", "eval_ms").agg(
+                arr.alias("a"), F.count("*").alias("n")
+            ).filter(F.col("n") >= 2)
             a = F.col("a")
             init = F.struct(
                 a[1]["v"].alias("s"), (a[1]["v"] - a[0]["v"]).alias("b")
@@ -1183,7 +1207,7 @@ class PromQLEngine:
             if isinstance(inner, float):
                 return -inner
             return inner.withColumn("value", -F.col("value")).withColumn(
-                "labels", F.map_filter("labels", lambda k, _: k != F.lit(NAME))
+                "labels", _drop_name()
             )
         if isinstance(node, VectorSelector):
             return self._instant(node)
@@ -1247,7 +1271,7 @@ class PromQLEngine:
         if func in _VALUE_FUNCS:
             vec = self._vec(node.args[0])
             return vec.select(
-                F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+                _drop_name().alias("labels"),
                 "eval_ms",
                 _VALUE_FUNCS[func](F.col("value")).cast("double").alias("value"),
             )
@@ -1264,7 +1288,7 @@ class PromQLEngine:
             else:
                 value = F.least(F.greatest(v, F.lit(lits[0])), F.lit(lits[1]))
             return vec.select(
-                F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+                _drop_name().alias("labels"),
                 "eval_ms",
                 value.cast("double").alias("value"),
             )
@@ -1277,7 +1301,7 @@ class PromQLEngine:
             )
             value = F.round(F.col("value") / F.lit(to)) * F.lit(to)
             return vec.select(
-                F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+                _drop_name().alias("labels"),
                 "eval_ms",
                 value.cast("double").alias("value"),
             )
@@ -1388,7 +1412,7 @@ class PromQLEngine:
             arg = node.args[0]
             if isinstance(arg, VectorSelector):
                 samples, series = self._selected(arg)
-                fps = series if not series.isStreaming else None
+                fps = self._fingerprints(series)
                 # _selected shifted timestamps by +offset for the as-of
                 # match; report the unshifted sample timestamp
                 raw_ts = F.col("sample_ts_ms") - F.lit(arg.offset_ms or 0)
@@ -1414,7 +1438,7 @@ class PromQLEngine:
                 return self._attach(iv, series, drop_name=True)
             vec = self._vec(arg)
             return vec.select(
-                F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+                _drop_name().alias("labels"),
                 "eval_ms",
                 (F.col("eval_ms") / 1000.0).alias("value"),
             )
@@ -1439,7 +1463,7 @@ class PromQLEngine:
                 "days_in_month": F.dayofmonth(F.last_day(t)),
             }[func]
             return vec.select(
-                F.map_filter("labels", lambda k, _: k != F.lit(NAME)).alias("labels"),
+                _drop_name().alias("labels"),
                 "eval_ms",
                 value.cast("double").alias("value"),
             )
@@ -1572,7 +1596,7 @@ class PromQLEngine:
                 )
         vec = self._vec(node.args[1])
         # group per eval by labels minus le (and __name__); le "+Inf" → inf
-        key = match_key(F.col("labels"), ignoring=["le"])
+        key = match_key(ignoring=["le"])
         le = F.when(
             F.element_at("labels", "le").isin("+Inf", "Inf", "inf"),
             F.lit(float("inf")),
@@ -1678,7 +1702,7 @@ class PromQLEngine:
             # complement, so r and r-1 partition the vector)
             from promhouse_spark.functions.labels import labels_map_to_json
 
-            key = match_key(F.col("labels"), by, without)
+            key = match_key(on=by, ignoring=without)
             canon = labels_map_to_json("labels")
             if node.op == "limitk":
                 k = int(_lit_float(node.param, "limitk k"))
@@ -1704,13 +1728,11 @@ class PromQLEngine:
                 (v == F.floor(v)) & (F.abs(v) < 1e15),
                 v.cast("long").cast("string"),
             ).otherwise(v.cast("string"))
-            from promhouse_spark.operators.vector_match import match_labels
-
             # the value label overwrites a same-named grouping label
             # (Prometheus semantics) — pre-filter to avoid Spark's
             # duplicate-map-key exception
             base = F.map_filter(
-                match_labels(F.col("labels"), by, without),
+                match_labels(on=by, ignoring=without),
                 lambda k, _: k != F.lit(label),
             )
             sub = F.map_concat(base, F.create_map(F.lit(label), vstr))
@@ -1737,14 +1759,7 @@ class PromQLEngine:
             return agg_by(
                 vec, lambda c: F.percentile(c, F.lit(q)), by=by, without=without
             ).drop("n_series")
-        fn = {
-            "sum": "sum", "avg": "avg", "min": "min", "max": "max",
-            "count": "count",
-            "group": lambda c: F.lit(1.0),
-            "stddev": lambda c: F.stddev_pop(c),
-            "stdvar": lambda c: F.var_pop(c),
-        }[node.op]
-        return agg_by(vec, fn, by=by, without=without).drop("n_series")
+        return agg_by(vec, node.op, by=by, without=without).drop("n_series")
 
     def _binop(self, node: BinaryOp) -> DataFrame | float:
         lhs = self._compile(node.lhs)
@@ -1774,61 +1789,39 @@ class PromQLEngine:
             if is_cmp:
                 return float(_PY_CMP[node.op](lhs, rhs))
             return float(_PY_ARITH[node.op](lhs, rhs))
-        drop_name = F.map_filter("labels", lambda k, _: k != F.lit(NAME))
+        # the value expression as SQL, and the labels of a computed result
         if l_float or r_float:
             vec, scalar, flipped = (
                 (rhs, lhs, True) if l_float else (lhs, rhs, False)
             )
-            lcol = F.lit(scalar) if flipped else F.col("value")
-            rcol = F.col("value") if flipped else F.lit(scalar)
+            lcol = sql_double(scalar) if flipped else "value"
+            rcol = "value" if flipped else sql_double(scalar)
             other_scalar = r_scalar if flipped else l_scalar
             if is_cmp and not node.bool_mode and not other_scalar:
                 return vec.filter(op_fn(lcol, rcol))
-            value = op_fn(lcol, rcol)
-            if is_cmp:
-                value = value.cast("double")
-            labels = (
-                F.create_map().cast("map<string,string>")
-                if other_scalar
-                else drop_name
-            )
-            return vec.select(
-                labels.alias("labels"),
-                "eval_ms",
-                value.cast("double").alias("value"),
-            )
-        if l_scalar and r_scalar:
+            labels = _NO_LABELS if other_scalar else _DROP_NAME
+        elif l_scalar and r_scalar:
             # scalar frame OP scalar frame: one row per evaluation on each
             # side — join on the eval time, empty output labels
-            l2 = lhs.select("eval_ms", F.col("value").alias("__l"))
-            r2 = rhs.select("eval_ms", F.col("value").alias("__r"))
-            value = op_fn(F.col("__l"), F.col("__r"))
-            if is_cmp:
-                value = value.cast("double")  # bool_mode enforced above
-            return l2.join(r2, "eval_ms").select(
-                F.create_map().cast("map<string,string>").alias("labels"),
-                "eval_ms",
-                value.cast("double").alias("value"),
+            vec = lhs.selectExpr("eval_ms", "value AS __l").join(
+                rhs.selectExpr("eval_ms", "value AS __r"), "eval_ms"
             )
-        if l_scalar or r_scalar:
+            lcol, rcol, labels = "__l", "__r", _NO_LABELS  # bool_mode enforced above
+        elif l_scalar or r_scalar:
             # scalar frame OP vector: Prometheus scalar-vector semantics —
             # match on evaluation time ONLY (engine.go VectorscalarBinop)
-            vec, sc, flipped = (rhs, lhs, True) if l_scalar else (lhs, rhs, False)
-            scv = sc.select("eval_ms", F.col("value").alias("__sv"))
-            joined = vec.join(scv, "eval_ms")
-            lcol = F.col("__sv") if flipped else F.col("value")
-            rcol = F.col("value") if flipped else F.col("__sv")
+            v, sc, flipped = (rhs, lhs, True) if l_scalar else (lhs, rhs, False)
+            vec = v.join(sc.selectExpr("eval_ms", "value AS __sv"), "eval_ms")
+            lcol = "__sv" if flipped else "value"
+            rcol = "value" if flipped else "__sv"
             if is_cmp and not node.bool_mode:
-                return joined.filter(op_fn(lcol, rcol)).select(
-                    "labels", "eval_ms", "value"
-                )
-            value = op_fn(lcol, rcol)
-            if is_cmp:
-                value = value.cast("double")
-            return joined.select(
-                drop_name.alias("labels"),
+                return vec.filter(op_fn(lcol, rcol)).select("labels", "eval_ms", "value")
+            labels = _DROP_NAME
+        if l_scalar or r_scalar:
+            return vec.selectExpr(
+                f"{labels} AS labels",
                 "eval_ms",
-                value.cast("double").alias("value"),
+                f"CAST({op_fn(lcol, rcol)} AS DOUBLE) AS value",
             )
         # an aggregation emits one row per (t, labels), and with plain
         # one-to-one matching its labels are the whole match key, so the
@@ -1843,18 +1836,37 @@ class PromQLEngine:
         )
 
     def _set_op(self, node: BinaryOp, lhs: DataFrame, rhs: DataFrame) -> DataFrame:
-        key = match_key(F.col("labels"), node.on, node.ignoring)
-        l = lhs.withColumn("__key", key)
-        r = rhs.withColumn("__key", key)
-        rk = r.select("eval_ms", "__key").distinct()
-        if node.op == "and":
-            return l.join(rk, ["eval_ms", "__key"], "left_semi").drop("__key")
-        if node.op == "unless":
-            return l.join(rk, ["eval_ms", "__key"], "left_anti").drop("__key")
-        # or: left rows, plus right rows whose match key is absent on the left
-        lk = l.select("eval_ms", "__key").distinct()
-        extra = r.join(lk, ["eval_ms", "__key"], "left_anti").drop("__key")
-        return l.drop("__key").unionByName(extra)
+        """and/unless: a semi-join/anti-join of the left rows against the
+        distinct (eval_ms, match key) pairs of the right side. or: one
+        keyed pass, so each operand is planned once: the two sides, tagged
+        0 (left) and 1 (right), are unioned and windowed over (eval_ms,
+        match key), keeping every left row plus the right rows of keys the
+        left side lacks."""
+        key = match_key(on=node.on, ignoring=node.ignoring)
+        if node.op in ("and", "unless"):
+            # coalesced: a non-null join key gives Catalyst no not-null
+            # predicate to push through the sides' aggregations into the scan
+            key = F.coalesce(key, F.lit(""))
+            rk = rhs.select("eval_ms", key.alias("__key")).distinct()
+            how = "left_semi" if node.op == "and" else "left_anti"
+            return (
+                lhs.withColumn("__key", key)
+                .join(rk, ["eval_ms", "__key"], how)
+                .select("labels", "eval_ms", "value")
+            )
+        sides = [
+            side.select("labels", "eval_ms", "value", key.alias("__key"), F.lit(tag).alias("__side"))
+            for tag, side in ((0, lhs), (1, rhs))
+        ]
+        return (
+            sides[0].unionByName(sides[1])
+            .selectExpr(
+                "labels", "eval_ms", "value",
+                "__side = 0 OR min(__side) OVER (PARTITION BY eval_ms, __key) = 1 AS __keep",
+            )
+            .filter("__keep")
+            .select("labels", "eval_ms", "value")
+        )
 
 
 def _ieee_scalar_div(a: float, b: float) -> float:

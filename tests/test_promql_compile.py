@@ -702,14 +702,13 @@ def test_at_on_quantile_over_time_range(eng):
 def test_division_by_negative_zero(spark):
     # 1 / -0.0 is -Inf (sign of BOTH operands); Spark compares -0.0 == 0.0
     from promhouse_spark.operators.vector_match import ieee_div, ieee_mod
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(1.0, -0.0), (-2.0, -0.0), (0.0, -0.0), (1.0, 0.0)],
         "l double, r double",
     )
-    out = df.select("l", "r", ieee_div(F.col("l"), F.col("r")).alias("d"),
-                    ieee_mod(F.col("l"), F.col("r")).alias("m")).collect()
+    out = df.selectExpr("l", "r", f"{ieee_div('l', 'r')} AS d",
+                        f"{ieee_mod('l', 'r')} AS m").collect()
     got = {(x.l, str(x.r)): x.d for x in out}
     assert got[(1.0, "-0.0")] == -math.inf
     assert got[(-2.0, "-0.0")] == math.inf

@@ -2,14 +2,17 @@
 
 PromQL selects series the way remote read does: matchers resolve in
 Python against the storage's hot registry dict, and the samples come from
-the storage's restricted scan. These tests pin that path: resolution
-stays safe while writers add series, ``samples_df()`` builds without a
-Spark job, the served shapes (a streamed remote read, a sum-of-rate range
-query and a ratio of two) stay within their job counts and build with no
-job at all, and a storage whose dict is off still answers PromQL through
-the distributed ``registry_df()`` resolution, as does a selector whose
-regex only Java reads exactly or whose match set is too wide for an IN
-list. A served storage's dict takes in what other instances flush."""
+the storage's restricted scan; the matched labels stay in Python and
+reach the result as one map literal. These tests pin that path:
+resolution stays safe while writers add series, ``samples_df()`` builds
+without a Spark job, the served shapes (a streamed remote read, a
+sum-of-rate range query and a ratio of two) stay within their job counts
+and build with no job at all and within a py4j round-trip budget, label
+text of any kind survives the map literal, and a storage whose dict is
+off still answers PromQL through the distributed ``registry_df()``
+resolution, as does a selector whose regex only Java reads exactly or
+whose match set is too wide for an IN list. A served storage's dict takes
+in what other instances flush."""
 
 from __future__ import annotations
 
@@ -17,8 +20,10 @@ import contextlib
 import itertools
 import threading
 import time
+from unittest import mock
 
 import pytest
+from hypothesis import given, settings, strategies as hst
 
 from promhouse_spark.models import (
     Label,
@@ -169,8 +174,11 @@ def _range(client, expr: str) -> list[dict]:
 
 #: Spark jobs per served shape on the flat tier. Down from 5, 7 and 14 when
 #: PromQL resolved series over registry_df() and the samples scan inferred
-#: its schema.
-BUDGET = {"read": 4, "range": 4, "binop": 8}
+#: its schema, and from 4 and 8 for range and binop when a selector's
+#: labels were a broadcast relation joined to its result. A streamed read
+#: range-sorts its series (a sampling job and a second shuffle), so that no
+#: task and no driver-side partition holds the whole response.
+BUDGET = {"read": 4, "range": 3, "binop": 6}
 
 
 def test_served_shapes_stay_within_their_job_budget(spark, store):
@@ -207,6 +215,108 @@ def test_promql_build_runs_no_job(spark, store):
                 store, T0 + 300_000, T0 + 600_000, 60_000
             ).eval(expr)
     assert n == [0]
+
+
+#: py4j round trips (on the calling thread) to build each served shape,
+#: ``from_storage(...).eval(expr)``, on this module's store. A rise fails
+#: the test; a change that lowers a count lowers it here. They were 680 and
+#: 1589 while the range-function, aggregation and binop builders made a
+#: Column tree, one round trip per node, and each selector's labels were a
+#: JSON-literal relation.
+ROUND_TRIPS = {"range": 145, "binop": 290}
+
+
+def test_promql_build_round_trip_budget(spark, store):
+    from py4j.clientserver import ClientServerConnection
+
+    rate = "sum by (job) (rate(req_total_{}[5m]))"
+    me = threading.current_thread()
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(conn, command):
+        if threading.current_thread() is me:
+            sent[0] += 1
+        return send(conn, command)
+
+    got = {}
+    for shape, expr in (
+        ("range", rate.format(0)),
+        ("binop", f"{rate.format(1)} / {rate.format(0)}"),
+    ):
+        build = lambda: PromQLEngine.from_storage(  # noqa: E731
+            store, T0 + 300_000, T0 + 600_000, 60_000
+        ).eval(expr)
+        build()  # py4j resolves each JVM class and method once per process
+        sent[0] = 0
+        with mock.patch.object(ClientServerConnection, "send_command", counted):
+            build()
+        got[shape] = sent[0]
+    assert all(got[k] <= ROUND_TRIPS[k] for k in ROUND_TRIPS), got
+
+
+#: label text the map literal must carry byte for byte: SQL quotes and
+#: escapes, the parser's ``${...}`` substitution, control and non-ASCII
+#: characters, and empty values
+LABEL_TEXT = [
+    "'", "\\", "\\'", '"', "a\nb", "a\r\nb", "tab\there", "$", "${env:HOME}",
+    "${spark.app.name}", "\\u0041", "it's", "", "é", "日本語", "😀", "\x00",
+]
+
+
+def _labelled(values: list[str], names: tuple[str, ...]) -> list[TimeSeries]:
+    return [
+        TimeSeries(
+            [Label("__name__", "lv"), Label("i", str(n)), *(Label(k, v) for k in names)],
+            [Sample(float(n + k), T0 + k * STEP_MS) for k in range(POINTS)],
+        )
+        for n, v in enumerate(values)
+    ]
+
+
+def _served_metrics(spark, root: str, expr: str) -> list[list[dict]]:
+    """The result labels of ``expr`` from a hot and a cold storage of
+    ``root``, served through /api/v1/query_range."""
+    from promhouse_spark.edge.http import create_app
+
+    out = []
+    for st in (
+        SparkParquetStorage(spark, root),
+        SparkParquetStorage(spark, root, registry_cache_max_series=0),
+    ):
+        app = create_app(st)
+        try:
+            result = _range(app.test_client(), expr)
+        finally:
+            app.extensions["registry_reloader"].set()
+        out.append(sorted((s["metric"] for s in result), key=lambda m: int(m["i"])))
+    return out
+
+
+def _check_labels_round_trip(spark, root: str, values: list[str], names: tuple[str, ...]):
+    series = _labelled(values, names)
+    st = SparkParquetStorage(spark, root)
+    st.write(series)
+    st.flush()
+    want = [{l.name: l.value for l in ts.labels} for ts in series]
+    hot, cold = _served_metrics(spark, root, "lv")
+    assert hot == cold == want
+    hot, cold = _served_metrics(spark, root, "rate(lv[5m])")
+    assert hot == cold == [{k: v for k, v in m.items() if k != "__name__"} for m in want]
+
+
+def test_label_text_survives_the_map_literal(spark, tmp_path):
+    pytest.importorskip("flask")
+    _check_labels_round_trip(
+        spark, str(tmp_path / "labels"), LABEL_TEXT, ("v", "odd'na\\me$", "ключ")
+    )
+
+
+@settings(max_examples=5, deadline=None)
+@given(values=hst.lists(hst.text(max_size=12), min_size=1, max_size=4, unique=True))
+def test_any_label_text_survives_the_map_literal(spark, tmp_path_factory, values):
+    pytest.importorskip("flask")
+    _check_labels_round_trip(spark, str(tmp_path_factory.mktemp("labels")), values, ("v",))
 
 
 def test_cache_off_promql_resolves_over_registry_df(spark, tmp_path, store):
