@@ -7,8 +7,10 @@ SF_BENCH ?= /root/testdata/sf0.1
 
 .PHONY: test oracle oracle-all bench scaling efficiency write-bench serve all
 
+# ROADMAP's Tier-1 command, exactly
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python3 tools/check_oracle.py $(SF_GATE)

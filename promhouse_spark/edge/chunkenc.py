@@ -614,15 +614,6 @@ def _deltas(values: list[int]) -> list[int]:
     return out
 
 
-def _undeltas(deltas: list[int]) -> list[int]:
-    out = []
-    cur = 0
-    for d in deltas:
-        cur += d
-        out.append(cur)
-    return out
-
-
 def _check_chunk_layout(hists) -> None:
     h0 = hists[0]
     for h in hists[1:]:

@@ -145,6 +145,37 @@ def create_app(
     counters = {"written_samples": 0, "written_time_series": 0, "read_queries": 0}
     # storages without a Spark session (memory, blackhole) match in Python
     spark = getattr(storage, "spark", None)
+
+    def _checked(q):
+        """``q`` once each of its regexes compiles in the dialect the
+        storage matches in: Java's wherever a Spark session runs the match,
+        Python's otherwise. The reference compiles matcher regexes while it
+        converts the request (storages/base/base.go:102-104 via
+        prom.go:153-192), so a bad pattern is a client error (ValueError)
+        before any read."""
+        for m in q.matchers:
+            if m.type not in (MatchType.RE, MatchType.NRE):
+                continue
+            if spark is not None:
+                from promhouse_spark.operators.matchers import check_regex
+
+                check_regex(spark, m.value)
+                continue
+            try:
+                re.compile(m.value)
+            except re.error as e:
+                raise ValueError(f"invalid matcher regex {m.value!r}: {e}") from None
+        return q
+
+    def _selector_query(src: str):
+        """One ``match[]`` selector as a storage query, regexes checked."""
+        from promhouse_spark.promql.parser import VectorSelector, parse
+
+        node = parse(src)
+        if not isinstance(node, VectorSelector):
+            raise ValueError(f"match[] must be a selector: {src!r}")
+        return _checked(node.query())
+
     rule_groups = rule_groups or []
     _started = _time_mod.time()
     # Metric metadata cache fed by Remote-Write 2.0 writes (type/help/unit
@@ -302,25 +333,10 @@ def create_app(
             hint_list.append(hints)
             if hints is not None and not hasattr(storage, "read_with_hints"):
                 log.warning("ignoring read hints: %s", hints)  # prom.go:184-186
-            # the reference compiles matcher regexes while converting the
-            # request (storages/base/base.go:102-104 via prom.go:153-192):
-            # a bad pattern is a client error, rejected before any read, in
-            # the dialect the storage matches in — Java's, as PromQL
-            # checks, wherever a Spark session runs the match
-            for m in q.matchers:
-                if m.type in (MatchType.RE, MatchType.NRE):
-                    try:
-                        if spark is None:
-                            re.compile(m.value)
-                        else:
-                            from promhouse_spark.operators.matchers import check_regex
-
-                            check_regex(spark, m.value)
-                    except re.error as e:
-                        return Response(f"invalid matcher regex: {e}", status=400)
-                    except ValueError as e:
-                        return Response(str(e), status=400)
-            queries.append(q)
+            try:
+                queries.append(_checked(q))
+            except ValueError as e:
+                return Response(str(e), status=400)
         if (
             prompb.RESPONSE_TYPE_STREAMED_XOR_CHUNKS in accepted_types
             and hasattr(storage, "read_chunks")
@@ -614,32 +630,16 @@ def create_app(
         rendered Prometheus-API-style under the "histogram" key. Bounded
         by matched-series cardinality (the API-edge materialization
         contract, same as the float path)."""
-        from promhouse_spark.models import (
-            MatchType,
-            Matcher as MMatcher,
-            Query as MQuery,
-        )
         from promhouse_spark.promql.parser import VectorSelector
 
         if not isinstance(node, VectorSelector):
             return []
         if not hasattr(storage, "read_histograms"):
             return []
-        ops = {
-            "=": MatchType.EQ,
-            "!=": MatchType.NEQ,
-            "=~": MatchType.RE,
-            "!~": MatchType.NRE,
-        }
-        ms = [MMatcher(m.name, ops[m.op], m.value) for m in node.matchers]
-        if node.name is not None:
-            ms.append(MMatcher("__name__", MatchType.EQ, node.name))
         lookback = int(request.values.get("lookback_delta_ms", 300_000))
         te = node.at_ms if isinstance(node.at_ms, int) else t_ms
         te -= node.offset_ms or 0
-        frame = storage.read_histograms(
-            MQuery(start_ms=te - lookback, end_ms=te, matchers=tuple(ms))
-        )
+        frame = storage.read_histograms(_checked(node.query(te - lookback, te)))
         latest: dict = {}
         for r in frame.collect():
             key = tuple(sorted((r["labels"] or {}).items()))
@@ -680,42 +680,6 @@ def create_app(
             out["warnings"] = warnings
         return out
 
-    def _collect_selectors(node, extra_ms: int = 0) -> list:
-        """(VectorSelector, matrix_range_ms) pairs found in the AST, each
-        with the total range it sits under (range selector + enclosing
-        subquery ranges summed) — the window that bounds which stored
-        samples can influence it."""
-        from promhouse_spark.promql.parser import (
-            Aggregation,
-            BinaryOp,
-            Call,
-            RangeSelector,
-            Subquery,
-            Unary,
-            VectorSelector,
-        )
-
-        out = []
-        if isinstance(node, VectorSelector):
-            out.append((node, extra_ms))
-        elif isinstance(node, RangeSelector):
-            out.append((node.selector, extra_ms + node.range_ms))
-        elif isinstance(node, Subquery):
-            out += _collect_selectors(node.expr, extra_ms + node.range_ms)
-        elif isinstance(node, Call):
-            for a in node.args:
-                out += _collect_selectors(a, extra_ms)
-        elif isinstance(node, Aggregation):
-            out += _collect_selectors(node.expr, extra_ms)
-            if node.param is not None:
-                out += _collect_selectors(node.param, extra_ms)
-        elif isinstance(node, BinaryOp):
-            out += _collect_selectors(node.lhs, extra_ms)
-            out += _collect_selectors(node.rhs, extra_ms)
-        elif isinstance(node, Unary):
-            out += _collect_selectors(node.expr, extra_ms)
-        return out
-
     def _query_stats(node, start_ms, end_ms, step_ms, prep_s, eval_s) -> dict:
         """?stats=all: REAL statistics, Prometheus response shape
         (web/api/v1 queryData.Stats). Timings are measured wall times of
@@ -729,6 +693,7 @@ def create_app(
         from pyspark.sql import functions as F
 
         from promhouse_spark.promql import PromQLEngine
+        from promhouse_spark.promql.parser import collect_selectors
 
         stats: dict = {
             "timings": {
@@ -747,7 +712,7 @@ def create_app(
                 storage, start_ms, end_ms, step_ms, lookback_ms=lookback
             )
             total = 0
-            for sel, ext in _collect_selectors(node):
+            for sel, ext in collect_selectors(node):
                 samples, _series = eng._selected(sel, ext)
                 # _selected shifts timestamps by +offset, so the window
                 # compares directly against the evaluation grid; instant
@@ -1049,27 +1014,17 @@ def create_app(
     def _apply_match(df):
         """Apply repeated ?match[]= selectors (PromQL selector syntax) as
         an OR over the series frame; no selectors = all series."""
-        from pyspark.sql import functions as F
+        from functools import reduce
 
-        from promhouse_spark.promql.engine import matcher_condition
-        from promhouse_spark.promql.parser import Matcher, VectorSelector, parse
+        from promhouse_spark.operators.matchers import matchers_to_column
 
-        sels = request.values.getlist("match[]")
-        if not sels:
+        conds = [
+            matchers_to_column(_selector_query(s).matchers)
+            for s in request.values.getlist("match[]")
+        ]
+        if not conds:
             return df
-        conds = None
-        for s in sels:
-            node = parse(s)
-            if not isinstance(node, VectorSelector):
-                raise ValueError(f"match[] must be a selector: {s!r}")
-            matchers = list(node.matchers)
-            if node.name:
-                matchers.append(Matcher("__name__", "=", node.name))
-            c = F.lit(True)
-            for m in matchers:
-                c = c & matcher_condition(F.col("labels"), m)
-            conds = c if conds is None else (conds | c)
-        return df.filter(conds)
+        return df.filter(reduce(lambda a, b: a | b, conds))
 
     @app.get("/federate")
     def federate():
@@ -1227,11 +1182,6 @@ def create_app(
         and render them grouped by owning series. Result cardinality is
         bounded by exemplar retention × matched series (the API-edge
         materialization contract)."""
-        from promhouse_spark.models import (
-            MatchType,
-            Matcher as MMatcher,
-            Query as MQuery,
-        )
         from promhouse_spark.promql.parser import collect_selectors, parse
 
         expr = request.values.get("query")
@@ -1242,26 +1192,17 @@ def create_app(
         try:
             start_ms = _parse_time_ms(request.values["start"])
             end_ms = _parse_time_ms(request.values["end"])
-            selectors = collect_selectors(parse(expr))
+            queries = [
+                _checked(sel.query(start_ms, end_ms))
+                for sel, _ in collect_selectors(parse(expr))
+            ]
         except KeyError as e:
             return _promql_error(ValueError(f"missing parameter {e}"))
         except ValueError as e:
             return _promql_error(e)
-        ops = {
-            "=": MatchType.EQ,
-            "!=": MatchType.NEQ,
-            "=~": MatchType.RE,
-            "!~": MatchType.NRE,
-        }
         by_series: dict = {}
-        for sel in selectors:
-            ms = [MMatcher(m.name, ops[m.op], m.value) for m in sel.matchers]
-            if sel.name is not None:
-                ms.append(MMatcher("__name__", MatchType.EQ, sel.name))
-            frame = storage.read_exemplars(
-                MQuery(start_ms=start_ms, end_ms=end_ms, matchers=tuple(ms))
-            )
-            for r in frame.collect():
+        for q in queries:
+            for r in storage.read_exemplars(q).collect():
                 key = tuple(sorted((r["labels"] or {}).items()))
                 bucket = by_series.setdefault(key, {})
                 # dedupe exemplars repeated across selectors / retries
@@ -1326,24 +1267,6 @@ def create_app(
             )
         return None
 
-    def _model_matchers(selector: str):
-        from promhouse_spark.models import MatchType, Matcher as MMatcher
-        from promhouse_spark.promql.parser import VectorSelector, parse
-
-        node = parse(selector)
-        if not isinstance(node, VectorSelector):
-            raise ValueError(f"match[] must be a selector: {selector!r}")
-        op = {
-            "=": MatchType.EQ,
-            "!=": MatchType.NEQ,
-            "=~": MatchType.RE,
-            "!~": MatchType.NRE,
-        }
-        ms = [MMatcher(m.name, op[m.op], m.value) for m in node.matchers]
-        if node.name:
-            ms.append(MMatcher("__name__", MatchType.EQ, node.name))
-        return tuple(ms)
-
     @app.route("/api/v1/admin/tsdb/delete_series", methods=["POST", "PUT"])
     def admin_delete_series():
         err = _admin_error()
@@ -1356,8 +1279,9 @@ def create_app(
         try:
             start_ms = _parse_time_ms(start_s) if start_s else None
             end_ms = _parse_time_ms(end_s) if end_s else None
-            for sel in sels:
-                storage.delete_series(_model_matchers(sel), start_ms, end_ms)
+            queries = [_selector_query(sel) for sel in sels]
+            for q in queries:
+                storage.delete_series(q.matchers, start_ms, end_ms)
         except ValueError as e:
             return _promql_error(e)
         return Response(status=204)

@@ -167,9 +167,8 @@ def _class_end(pattern: str, i: int) -> int | None:
 def regex(pattern: str) -> re.Pattern | None:
     """A matcher pattern as Python's ``re`` must read it to answer exactly
     what the distributed matcher answers — Java's regex running ``rlike``
-    over ``^(?:pattern)$`` (``promql/engine.py:matcher_condition``,
-    ``operators/matchers.py``) — or None for a pattern outside the subset
-    translated here. The translation: ASCII ``\\d \\w \\s`` and case folding,
+    over ``^(?:pattern)$`` (``operators/matchers.py``) — or None for a
+    pattern outside the subset translated here. The translation: ASCII ``\\d \\w \\s`` and case folding,
     ``.`` stops at every Java line terminator, and the closing ``$`` may
     stand before one final terminator. Outside the subset are ``\\p{..}``,
     ``\\Q..\\E``, ``\\z``, POSIX and nested classes, inner ``^``/``$``,

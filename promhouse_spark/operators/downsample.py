@@ -43,15 +43,3 @@ def downsample(samples_df: DataFrame, step_ms: int = 300_000) -> DataFrame:
         .withColumn(DATE, F.to_date(F.timestamp_millis(F.col("window_start_ms"))))
     )
 
-
-def downsample_to_path(
-    samples_df: DataFrame, out_path: str, step_ms: int = 300_000
-) -> None:
-    """Materialize a rollup table, day-partitioned and clustered by series."""
-    (
-        downsample(samples_df, step_ms)
-        .sortWithinPartitions(FINGERPRINT, "window_start_ms")
-        .write.partitionBy(DATE)
-        .mode("overwrite")
-        .parquet(out_path)
-    )

@@ -63,8 +63,8 @@ def matchers_to_column(
 def check_regex(spark: SparkSession, pattern: str) -> None:
     """ValueError for a matcher pattern Java's regex rejects, raised before
     any plan runs it: ``rlike`` would only fail once a job runs. PromQL
-    and remote read both check here, so a pattern is legal on both or on
-    neither."""
+    and every HTTP selector endpoint check here, so a pattern is legal on
+    all of them or on none."""
     try:
         spark._jvm.java.util.regex.Pattern.compile(anchored(pattern))
         return

@@ -64,11 +64,6 @@ def default_decoder(payload: bytes) -> list[float]:
     return codecs.decode_features(payload)
 
 
-def default_image_decoder(payload: bytes) -> "object":
-    """Back-compat alias: netpbm decodes for real; JPEG/PNG raise."""
-    return codecs.decode_features(payload)
-
-
 def fake_decoder(payload: bytes) -> list[float]:
     """Deterministic stand-in 'decoder': 8 float features derived from byte
     statistics. Lets the full pipeline run end-to-end in environments

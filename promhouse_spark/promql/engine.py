@@ -42,7 +42,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from promhouse_spark.models import Query, make_matchers
+from promhouse_spark.models import MatchType, Query
 from promhouse_spark.operators.asof import instant_vector
 from promhouse_spark.operators.matchers import check_regex
 from promhouse_spark.operators.vector_match import (
@@ -60,7 +60,6 @@ from promhouse_spark.promql.parser import (
     Aggregation,
     BinaryOp,
     Call,
-    Matcher,
     NumberLiteral,
     RangeSelector,
     StringLiteral,
@@ -70,7 +69,11 @@ from promhouse_spark.promql.parser import (
     find_min_max_time,
     parse,
 )
-from promhouse_spark.plans.read import DEFAULT_MAX_SERIES_INLIST, restrict_to_series
+from promhouse_spark.plans.read import (
+    DEFAULT_MAX_SERIES_INLIST,
+    restrict_to_series,
+    select_series,
+)
 
 NAME = "__name__"
 
@@ -153,21 +156,27 @@ def _resolve_start_end(node, start_ms: int, end_ms: int):
     return walk(node)
 
 
+def _sel_key(sel: VectorSelector, at_ms: int | str | None) -> tuple:
+    """An instant selector's identity for sharing its tier. Matchers sort
+    on (name, type, value): ``MatchType`` members do not order."""
+    return (
+        sel.name,
+        tuple(sorted((m.name, m.type.value, m.value) for m in sel.matchers)),
+        sel.offset_ms or 0,
+        at_ms,
+    )
+
+
 def _count_instant_selectors(node, counts: dict) -> None:
     """Count how many times each instant-selector shape occurs in the
-    expression (keyed like PromQLEngine._sel_key, minus the engine-resolved
-    @), WITHOUT crossing range-selector or subquery boundaries — those are
+    expression (keyed by :func:`_sel_key` on the written @), WITHOUT
+    crossing range-selector or subquery boundaries — those are
     evaluated through different machinery (the sliding-window explode / an
     inner engine on a finer grid), so their selectors never share this
     engine's instant tier. Used to decide which instant tiers to
     materialize for reuse across operands (guide §3.3)."""
     if isinstance(node, VectorSelector):
-        key = (
-            node.name,
-            tuple(sorted((m.name, m.op, m.value) for m in node.matchers)),
-            node.offset_ms or 0,
-            node.at_ms,
-        )
+        key = _sel_key(node, node.at_ms)
         counts[key] = counts.get(key, 0) + 1
         return
     if isinstance(node, (RangeSelector, Subquery, NumberLiteral, StringLiteral)):
@@ -288,22 +297,6 @@ _VALUE_FUNCS = {
     "sinh": F.sinh, "cosh": F.cosh, "tanh": F.tanh,
     "deg": F.degrees, "rad": F.radians,
 }
-
-
-def matcher_condition(labels: Column, m: Matcher) -> Column:
-    """One label matcher over a MapType labels column — absent ≡ ""
-    (storages/base/base.go:53-82 semantics, same as operators/matchers)."""
-    v = F.coalesce(F.element_at(labels, F.lit(m.name)), F.lit(""))
-    if m.op == "=":
-        return v == m.value
-    if m.op == "!=":
-        return v != m.value
-    anchored = f"^(?:{m.value})$"
-    if m.op == "=~":
-        return v.rlike(anchored)
-    if m.op == "!~":
-        return ~v.rlike(anchored)
-    raise ValueError(f"bad matcher op {m.op}")
 
 
 class PromQLEngine:
@@ -480,14 +473,6 @@ class PromQLEngine:
 
     # -- scaffolding --------------------------------------------------------
 
-    def _sel_key(self, sel: VectorSelector):
-        return (
-            sel.name,
-            tuple(sorted((m.name, m.op, m.value) for m in sel.matchers)),
-            sel.offset_ms or 0,
-            self._at_ms(sel),
-        )
-
     def _grid(self) -> Column:
         return F.expr(
             f"explode(sequence({self.start_ms}, {self.end_ms}, {self.step_ms})) AS eval_ms"
@@ -519,24 +504,19 @@ class PromQLEngine:
         frame to them. Resolved against the hot registry: ``{signed
         fingerprint: labels}`` and the fingerprints. Resolved distributed:
         the (fingerprint, labels) frame, twice."""
-        matchers = list(sel.matchers)
-        if sel.name is not None:
-            matchers.append(Matcher(NAME, "=", sel.name))
-        q = Query(0, 0, make_matchers(*((m.name, m.op, m.value) for m in matchers)))
+        q = sel.query()
         if self._registry is not None and q.java_exact():
             series = dict(self._storage._resolve_series(q, self._registry))
             if len(series) <= self._max_inlist:
                 return series, list(series)
         # distributed: no hot dict, a regex only Java reads exactly, or a
         # match set too wide for an IN list
-        cond = F.lit(True)
-        for m in matchers:
-            if m.op in ("=~", "!~"):
+        for m in q.matchers:
+            if m.type in (MatchType.RE, MatchType.NRE):
                 check_regex(self.samples.sparkSession, m.value)
-            cond = cond & matcher_condition(F.col("labels"), m)
         if self.series is None:
-            self.series = self._storage.registry_df().select("fingerprint", "labels")
-        series = self.series.filter(cond)
+            self.series = self._storage.registry_df()
+        series = select_series(self.series, q.matchers)
         return series, series
 
     def _selected(
@@ -607,7 +587,7 @@ class PromQLEngine:
         return sel.at_ms
 
     def _instant(self, sel: VectorSelector) -> DataFrame:
-        key = self._sel_key(sel)
+        key = _sel_key(sel, self._at_ms(sel))
         memo = self._iv_memo.get(key)
         if memo is not None:
             return self._attach(*memo)
@@ -1544,7 +1524,7 @@ class PromQLEngine:
             if sel.name:
                 entries[NAME] = sel.name
             for m in sel.matchers:
-                if m.op == "=":
+                if m.type is MatchType.EQ:
                     entries[m.name] = m.value
         entries.pop(NAME, None)  # absent() drops the metric name
         label_lit = (

@@ -86,7 +86,7 @@ def _label_key(name: str) -> str:
 
 
 def _matchers(sel: VectorSelector) -> str:
-    ms = [f"{_label_key(m.name)}{m.op}{_quote(m.value)}" for m in sel.matchers]
+    ms = [f"{_label_key(m.name)}{m.type.value}{_quote(m.value)}" for m in sel.matchers]
     if sel.name is not None and not _CLASSIC_METRIC.match(sel.name):
         # UTF-8 metric name: the quoted in-braces form {"my.metric", ...}
         ms.insert(0, _quote(sel.name))
@@ -211,7 +211,7 @@ def ast_json(node) -> dict:
             "type": "vectorSelector",
             "name": node.name or "",
             "matchers": [
-                {"name": m.name, "type": m.op, "value": m.value}
+                {"name": m.name, "type": m.type.value, "value": m.value}
                 for m in node.matchers
             ],
             "offset": node.offset_ms,

@@ -19,6 +19,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from promhouse_spark.models import MatchType, Matcher, Query
+
 
 # ---- AST ------------------------------------------------------------------
 
@@ -34,13 +36,6 @@ class StringLiteral:
 
 
 @dataclass
-class Matcher:
-    name: str
-    op: str  # = != =~ !~
-    value: str
-
-
-@dataclass
 class VectorSelector:
     name: str | None
     matchers: list[Matcher] = field(default_factory=list)
@@ -48,6 +43,14 @@ class VectorSelector:
     # @ modifier: a pinned unix-ms timestamp, or the literal strings
     # "start"/"end" (resolved against the query range at compile time)
     at_ms: int | str | None = None
+
+    def query(self, start_ms: int = 0, end_ms: int = 0) -> Query:
+        """The selector as a storage query: its matchers plus the metric
+        name as a ``__name__`` ``=`` matcher."""
+        ms = list(self.matchers)
+        if self.name is not None:
+            ms.append(Matcher("__name__", MatchType.EQ, self.name))
+        return Query(start_ms, end_ms, tuple(ms))
 
 
 @dataclass
@@ -441,7 +444,7 @@ class Parser:
                 # {__name__="my.metric"}
                 name = _unquote(name_t.text)
                 if self.peek().text in (",", "}"):
-                    out.append(Matcher("__name__", "=", name))
+                    out.append(Matcher("__name__", MatchType.EQ, name))
                     if self.peek().text == ",":
                         self.next()
                     continue
@@ -456,7 +459,7 @@ class Parser:
             if val_t.kind != "STRING":
                 raise ValueError(f"expected quoted value, got {val_t.text!r}")
             value = _unquote(val_t.text)
-            out.append(Matcher(name, op_t.text, value))
+            out.append(Matcher(name, MatchType(op_t.text), value))
             if self.peek().text == ",":
                 self.next()
         self.expect("}")
@@ -526,32 +529,27 @@ def find_min_max_time(
     return lo[0], hi[0]
 
 
-def collect_selectors(node) -> list[VectorSelector]:
-    """All VectorSelectors anywhere in the expression, in source order —
-    the selector set Prometheus's exemplar API extracts from a query
-    (web/api/v1: extractSelectors). Subquery/range/offset context is
-    irrelevant to exemplar lookup; only the matchers matter."""
-    out: list[VectorSelector] = []
-
-    def walk(n) -> None:
-        if isinstance(n, VectorSelector):
-            out.append(n)
-        elif isinstance(n, RangeSelector):
-            walk(n.selector)
-        elif isinstance(n, Subquery):
-            walk(n.expr)
-        elif isinstance(n, Unary):
-            walk(n.expr)
-        elif isinstance(n, Call):
-            for a in n.args:
-                walk(a)
-        elif isinstance(n, Aggregation):
-            walk(n.expr)
-            if n.param is not None:
-                walk(n.param)
-        elif isinstance(n, BinaryOp):
-            walk(n.lhs)
-            walk(n.rhs)
-
-    walk(node)
-    return out
+def collect_selectors(node, range_ms: int = 0):
+    """Every VectorSelector in the expression, in source order, each with
+    the range it sits under: its range selector's plus every enclosing
+    subquery's. The selector set Prometheus's exemplar API extracts from a
+    query (web/api/v1: extractSelectors); the range bounds the stored
+    samples that can reach the selector (``?stats=all``)."""
+    if isinstance(node, VectorSelector):
+        yield node, range_ms
+    elif isinstance(node, RangeSelector):
+        yield node.selector, range_ms + node.range_ms
+    elif isinstance(node, Subquery):
+        yield from collect_selectors(node.expr, range_ms + node.range_ms)
+    elif isinstance(node, Unary):
+        yield from collect_selectors(node.expr, range_ms)
+    elif isinstance(node, Aggregation):
+        yield from collect_selectors(node.expr, range_ms)
+        if node.param is not None:
+            yield from collect_selectors(node.param, range_ms)
+    elif isinstance(node, Call):
+        for a in node.args:
+            yield from collect_selectors(a, range_ms)
+    elif isinstance(node, BinaryOp):
+        yield from collect_selectors(node.lhs, range_ms)
+        yield from collect_selectors(node.rhs, range_ms)

@@ -28,6 +28,7 @@ from __future__ import annotations
 import math
 import os
 
+from promhouse_spark.models import MatchType
 from promhouse_spark.promql.templates import (
     expand_annotations,
     format_template_value,
@@ -137,14 +138,8 @@ def _series_frames(spark, input_series: list[dict], interval_ms: int):
 
     samples, series, hists, fp = [], [], [], 0
     for s in input_series:
-        sel = parse(s["series"])
-        if not isinstance(sel, VectorSelector):
-            raise ValueError(f"input series must be a selector: {s['series']!r}")
-        labels = {m.name: m.value for m in sel.matchers if m.op == "="}
-        if sel.name:
-            labels["__name__"] = sel.name
         fp += 1
-        series.append((fp, labels))
+        series.append((fp, _expected_labels(s["series"])))
         for i, v in enumerate(parse_series_values(str(s["values"]))):
             if v is None:
                 continue
@@ -180,10 +175,12 @@ def _series_frames(spark, input_series: list[dict], interval_ms: int):
 
 
 def _expected_labels(spec: str) -> dict:
+    """The labels a promtool series spec (an input series or an expected
+    sample) names: its equality matchers and its metric name."""
     sel = parse(spec)
     if not isinstance(sel, VectorSelector):
-        raise ValueError(f"exp_samples labels must be a selector: {spec!r}")
-    labels = {m.name: m.value for m in sel.matchers if m.op == "="}
+        raise ValueError(f"series labels must be a selector: {spec!r}")
+    labels = {m.name: m.value for m in sel.matchers if m.type is MatchType.EQ}
     if sel.name:
         labels["__name__"] = sel.name
     return labels

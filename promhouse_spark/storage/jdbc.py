@@ -149,8 +149,8 @@ class JdbcStorage(SparkParquetStorage):
 
         return self.spark.createDataFrame([], EXEMPLARS_SCHEMA)
 
-    def _histograms_for(self, q) -> list[tuple]:
-        return []  # no histogram tier (see histograms_df)
+    def has_histograms(self) -> bool:
+        return False  # no histogram tier (see histograms_df)
 
     def _existing_fingerprints(self) -> DataFrame:
         df = self._read_table(REGISTRY_TABLE)

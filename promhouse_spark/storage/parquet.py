@@ -28,8 +28,9 @@ Re-expresses the reference's ClickHouse backend
   sorted by (fingerprint, timestamp_ms) within files for delta-encoding
   compression and row-group min/max pruning (the MergeTree ORDER BY analog,
   ``clickhouse.go:99-101``);
-- reads: matcher resolution → IN-list or left-semi strategy at the
-  reference's threshold (default 50, ``cmd/promhouse/main.go:198``) →
+- reads: matcher resolution → IN-list or left-semi strategy at
+  ``max_series_inlist`` series (default ``DEFAULT_MAX_SERIES_INLIST`` =
+  200; the reference's is 50, ``cmd/promhouse/main.go:198``) →
   group-into-series (``clickhouse.go:235-280``);
 - raw-SQL passthrough (``clickhouse.go:372-388``) against the registered
   ``time_series`` / ``samples`` temp views.
@@ -127,6 +128,34 @@ def _not_in(df: DataFrame, stored: DataFrame) -> DataFrame:
     """Rows of ``df`` whose (fingerprint, timestamp) ``stored`` lacks."""
     keys = [FINGERPRINT, TIMESTAMP_MS]
     return df.join(stored.select(*keys), keys, "left_anti")
+
+
+def _time_series(labels: dict, samples=(), histograms=None) -> TimeSeries:
+    """A read result series: labels sorted by name, samples from a grouped
+    row's (timestamp_ms, value) structs."""
+    return TimeSeries(
+        labels=[Label(n, v) for n, v in sorted(labels.items())],
+        samples=[Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS]) for s in samples],
+        histograms=histograms or [],
+    )
+
+
+def _with_histograms(series, hseries: list[tuple[int, dict, list]]):
+    """Float series, as (unsigned fingerprint, TimeSeries) pairs, merged
+    with ``histogram_series`` entries, both in unsigned-fingerprint order
+    and staying in it: a series in both carries its histograms, and a
+    histogram-only series is an entry of its own."""
+    hi = 0
+    for ufp, ts in series:
+        while hi < len(hseries) and hseries[hi][0] < ufp:
+            yield _time_series(hseries[hi][1], histograms=hseries[hi][2])
+            hi += 1
+        if hi < len(hseries) and hseries[hi][0] == ufp:
+            ts.histograms = hseries[hi][2]
+            hi += 1
+        yield ts
+    for _, labels, hists in hseries[hi:]:
+        yield _time_series(labels, histograms=hists)
 
 
 def _age_flusher(ref: weakref.ref) -> None:
@@ -1107,9 +1136,9 @@ class SparkParquetStorage(Storage):
         read() attachment — empty when the tier is absent. Bounded by
         matched native-series cardinality (API-edge contract).
 
-        ``fps``: optional pre-resolved fingerprint list (cached-registry
-        callers like ``iter_series``) — matcher evaluation then stays in
-        Python and labels come from the registry cache, so no Java regex
+        ``fps``: the fingerprints a cached-registry caller (``read``,
+        ``iter_series``) already resolved — the matchers are not resolved
+        again and labels come from the registry cache, so no Java regex
         or distributed matcher error can fire from inside a streaming
         generator after response headers are out."""
         if not self.has_histograms():
@@ -1173,32 +1202,6 @@ class SparkParquetStorage(Storage):
                 out.append((ufp, labels, [hist]))
         return out
 
-    def _attach_histograms(self, q: Query, res: list[TimeSeries]) -> list[TimeSeries]:
-        """Merge the query's native histograms into the float read result
-        (modern prompb TimeSeries carries both sample types); native-only
-        series append as new entries. Result stays sorted by unsigned
-        fingerprint, the read() output contract."""
-        hrows = self._histograms_for(q)
-        if not hrows:
-            return res
-        by_fp: dict[int, TimeSeries] = {}
-        for ts in res:
-            fp = to_signed64(
-                fingerprint((l.name, l.value) for l in ts.labels)
-            )
-            by_fp[fp] = ts
-        for fp, labels, hist in hrows:
-            ts = by_fp.get(fp)
-            if ts is None:
-                ts = TimeSeries(
-                    labels=[Label(n, v) for n, v in sorted(labels.items())]
-                )
-                by_fp[fp] = ts
-                res.append(ts)
-            ts.histograms.append(hist)
-        res.sort(key=lambda ts: fingerprint((l.name, l.value) for l in ts.labels))
-        return res
-
     def read(self, queries: Sequence[Query]) -> list[list[TimeSeries]]:
         sql = rawsql_text(queries)
         if sql is not None:
@@ -1208,10 +1211,7 @@ class SparkParquetStorage(Storage):
             # multi-query requests collapse into ONE Spark job (union of
             # per-query restricted scans tagged with the slot index) —
             # Prometheus remote-read latency scales with jobs, not rows
-            return [
-                self._attach_histograms(q, res)
-                for q, res in zip(queries, self._read_batched(queries))
-            ]
+            return self._read_batched(queries)
 
         results: list[list[TimeSeries]] = []
         samples = self.samples_df()
@@ -1223,39 +1223,21 @@ class SparkParquetStorage(Storage):
                     continue
                 # through _restricted_scan so a chunked tier prunes whole
                 # chunks below the decode barrier on this path too
-                restricted = self._restricted_scan(samples, q, fps)
-                label_of = {
-                    fp: self._registry[to_unsigned64(fp)] for fp in fps
-                }
-                rows = group_into_series(restricted).collect()
-                rows.sort(key=lambda r: to_unsigned64(r[FINGERPRINT]))
-                res = [
-                    TimeSeries(
-                        labels=[
-                            Label(n, v)
-                            for n, v in sorted(label_of[r[FINGERPRINT]].items())
-                        ],
-                        samples=[
-                            Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                            for s in r["samples"]
-                        ],
-                    )
-                    for r in rows
-                ]
+                rows = group_into_series(self._restricted_scan(samples, q, fps)).collect()
+                labels = [self._registry[to_unsigned64(r[FINGERPRINT])] for r in rows]
+                hseries = self.histogram_series(q, fps)
             else:
                 rows = self.distributed_read_plan(q, samples).collect()
-                rows.sort(key=lambda r: to_unsigned64(r[FINGERPRINT]))
-                res = [
-                    TimeSeries(
-                        labels=[Label(n, v) for n, v in sorted(r[LABELS].items())],
-                        samples=[
-                            Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                            for s in r["samples"]
-                        ],
-                    )
-                    for r in rows
-                ]
-            results.append(self._attach_histograms(q, res))
+                labels = [r[LABELS] for r in rows]
+                hseries = self.histogram_series(q)
+            floats = sorted(
+                (
+                    (to_unsigned64(r[FINGERPRINT]), _time_series(ls, r["samples"]))
+                    for r, ls in zip(rows, labels)
+                ),
+                key=lambda e: e[0],
+            )
+            results.append(list(_with_histograms(floats, hseries)))
         return results
 
     def iter_series(self, q: Query):
@@ -1272,51 +1254,24 @@ class SparkParquetStorage(Storage):
         if not self.cache_registry:
             raise ValueError("iter_series requires cache_registry")
         fps = self._resolve_fingerprints(q)
-        # native-histogram series for the same matchers, merged into the
-        # float stream by unsigned fingerprint (driver-resident but
-        # bounded by native cardinality); resolution reuses the cached-
-        # registry fps so no Java-regex matcher runs after headers
-        hseries = self.histogram_series(q, fps=fps)
-        if not fps and not hseries:
+        if not fps:
             return
+        # native-histogram series for the same fingerprints, merged into
+        # the float stream by unsigned fingerprint (driver-resident but
+        # bounded by native cardinality); no Java-regex matcher runs after
+        # headers
+        hseries = self.histogram_series(q, fps)
+        restricted = self._restricted_scan(self.samples_df(), q, fps)
+        grouped = group_into_series(restricted).sort(
+            (F.col(FINGERPRINT) < 0).cast("int"), FINGERPRINT
+        )
 
-        def hist_only(entry):
-            ufp, labels, hists = entry
-            return TimeSeries(
-                labels=[Label(n, v) for n, v in sorted(labels.items())],
-                histograms=hists,
-            )
-
-        hi = 0
-        if fps:
-            restricted = self._restricted_scan(self.samples_df(), q, fps)
-            grouped = group_into_series(restricted).sort(
-                (F.col(FINGERPRINT) < 0).cast("int"), FINGERPRINT
-            )
-            label_of = {fp: self._registry[to_unsigned64(fp)] for fp in fps}
+        def floats():
             for r in grouped.toLocalIterator():
                 ufp = to_unsigned64(r[FINGERPRINT])
-                while hi < len(hseries) and hseries[hi][0] < ufp:
-                    yield hist_only(hseries[hi])
-                    hi += 1
-                hists = []
-                if hi < len(hseries) and hseries[hi][0] == ufp:
-                    hists = hseries[hi][2]
-                    hi += 1
-                yield TimeSeries(
-                    labels=[
-                        Label(n, v)
-                        for n, v in sorted(label_of[r[FINGERPRINT]].items())
-                    ],
-                    samples=[
-                        Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                        for s in r["samples"]
-                    ],
-                    histograms=hists,
-                )
-        while hi < len(hseries):
-            yield hist_only(hseries[hi])
-            hi += 1
+                yield ufp, _time_series(self._registry[ufp], r["samples"])
+
+        yield from _with_histograms(floats(), hseries)
 
     def _restricted_scan(self, samples: DataFrame, q: Query, fps) -> DataFrame:
         """One query's restricted fact scan (F2 + J1/J2) — the layout seam:
@@ -1333,40 +1288,31 @@ class SparkParquetStorage(Storage):
         its slot index, unioned and grouped once. Order preserved; empty
         slots stay empty."""
         samples = self.samples_df()
-        per_query: list[tuple[int, list[int]]] = []
-        branches = []
-        for idx, q in enumerate(queries):
-            fps = self._resolve_fingerprints(q)
-            per_query.append((idx, fps))
-            if not fps:
-                continue
-            branch = self._restricted_scan(samples, q, fps).select(
+        fps_of = [self._resolve_fingerprints(q) for q in queries]
+        branches = [
+            self._restricted_scan(samples, q, fps).select(
                 F.lit(idx).alias("qidx"), FINGERPRINT, TIMESTAMP_MS, VALUE
             )
-            branches.append(branch)
-        results: list[list[TimeSeries]] = [[] for _ in queries]
-        if not branches:
-            return results
-        union = branches[0]
-        for b in branches[1:]:
-            union = union.unionByName(b)
-        grouped = union.groupBy("qidx", FINGERPRINT).agg(
-            F.sort_array(F.collect_list(F.struct(TIMESTAMP_MS, VALUE))).alias("samples")
-        )
-        rows = grouped.collect()
-        rows.sort(key=lambda r: (r["qidx"], to_unsigned64(r[FINGERPRINT])))
-        for r in rows:
-            labels = self._registry.get(to_unsigned64(r[FINGERPRINT]), {})
-            results[r["qidx"]].append(
-                TimeSeries(
-                    labels=[Label(n, v) for n, v in sorted(labels.items())],
-                    samples=[
-                        Sample(value=s[VALUE], timestamp_ms=s[TIMESTAMP_MS])
-                        for s in r["samples"]
-                    ],
-                )
+            for idx, (q, fps) in enumerate(zip(queries, fps_of))
+            if fps
+        ]
+        floats: list[list] = [[] for _ in queries]
+        if branches:
+            union = branches[0]
+            for b in branches[1:]:
+                union = union.unionByName(b)
+            grouped = union.groupBy("qidx", FINGERPRINT).agg(
+                F.sort_array(F.collect_list(F.struct(TIMESTAMP_MS, VALUE))).alias("samples")
             )
-        return results
+            for r in grouped.collect():
+                ufp = to_unsigned64(r[FINGERPRINT])
+                floats[r["qidx"]].append(
+                    (ufp, _time_series(self._registry.get(ufp, {}), r["samples"]))
+                )
+        return [
+            list(_with_histograms(sorted(f, key=lambda e: e[0]), self.histogram_series(q, fps)))
+            for f, q, fps in zip(floats, queries, fps_of)
+        ]
 
     # ------------------------------------------------------------ analytics
 

@@ -39,12 +39,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from promhouse_spark.models import Matcher
 from promhouse_spark.operators.vector_match import agg_by
-from promhouse_spark.promql.engine import matcher_condition
+from promhouse_spark.plans.read import select_series
 from promhouse_spark.promql.parser import (
     Aggregation,
     Call,
-    Matcher,
     RangeSelector,
     VectorSelector,
     parse,
@@ -71,7 +71,7 @@ _RATE_FUNCS = {"rate", "increase", "delta"}
 @dataclass
 class StreamingRule:
     record: str
-    matchers: list[Matcher]
+    matchers: tuple[Matcher, ...]
     func: str
     range_ms: int
     agg_op: str | None = None
@@ -119,12 +119,9 @@ def compile_rule_node(record: str, node, lookback_ms: int = 300_000) -> Streamin
         raise ValueError(f"cannot stream {type(node).__name__} rules")
     if sel.offset_ms or sel.at_ms is not None:
         raise ValueError("offset/@ selectors do not stream")
-    matchers = list(sel.matchers)
-    if sel.name is not None:
-        matchers.append(Matcher(NAME, "=", sel.name))
     return StreamingRule(
         record=record,
-        matchers=matchers,
+        matchers=sel.query().matchers,
         func=func,
         range_ms=range_ms,
         agg_op=agg_op,
@@ -143,10 +140,7 @@ def rule_series_frame(
     """Per-series rule evaluation — valid on batch AND streaming sample
     frames (the sliding_rate contract). Output: (fingerprint, eval_time,
     eval_ms, value)."""
-    cond = F.lit(True)
-    for m in rule.matchers:
-        cond = cond & matcher_condition(F.col("labels"), m)
-    fps = series_df.filter(cond).select(FINGERPRINT)
+    fps = select_series(series_df, rule.matchers).select(FINGERPRINT)
     s = samples_df.join(fps, FINGERPRINT, "left_semi")
     if rule.func in _RATE_FUNCS:
         rated = sliding_rate(

@@ -162,13 +162,13 @@ class RefEval:
                 continue
             for m in sel.matchers:
                 v = s.labels.get(m.name, "")
-                if m.op == "=":
+                if m.type.value == "=":
                     ok = v == m.value
-                elif m.op == "!=":
+                elif m.type.value == "!=":
                     ok = v != m.value
-                elif m.op == "=~":
+                elif m.type.value == "=~":
                     ok = re.fullmatch(m.value, v) is not None
-                elif m.op == "!~":
+                elif m.type.value == "!~":
                     ok = re.fullmatch(m.value, v) is None
                 if not ok:
                     break
@@ -906,7 +906,7 @@ def _absent_labels(sel) -> tuple:
         sorted(
             (m.name, m.value)
             for m in sel.matchers
-            if m.op == "=" and m.name != NAME and m.value != ""
+            if m.type.value == "=" and m.name != NAME and m.value != ""
         )
     )
 

@@ -37,7 +37,7 @@ def test_durations():
 def test_parse_selector_and_matchers():
     r = parse('http_requests_total{code="200", handler=~"q.*", x!~"a", y!="b"}')
     assert isinstance(r, VectorSelector) and r.name == "http_requests_total"
-    assert [(m.name, m.op, m.value) for m in r.matchers] == [
+    assert [(m.name, m.type.value, m.value) for m in r.matchers] == [
         ("code", "=", "200"), ("handler", "=~", "q.*"),
         ("x", "!~", "a"), ("y", "!=", "b"),
     ]

@@ -123,11 +123,11 @@ except ImportError:  # pragma: no cover
     _HYP = False
 
 if _HYP:
+    from promhouse_spark.models import MatchType, Matcher
     from promhouse_spark.promql.parser import (
         Aggregation,
         BinaryOp,
         Call,
-        Matcher,
         NumberLiteral,
         RangeSelector,
         Subquery,
@@ -146,7 +146,7 @@ if _HYP:
     _matcher = st.builds(
         Matcher,
         name=_lname,
-        op=st.sampled_from(["=", "!=", "=~", "!~"]),
+        type=st.sampled_from(list(MatchType)),
         value=st.text(
             alphabet=st.characters(whitelist_categories=("Ll", "Nd")),
             max_size=6,
@@ -223,7 +223,7 @@ def test_parse_quoted_metric_sugar():
 
     r = parse('{"my.metric"}')
     assert isinstance(r, VectorSelector) and r.name is None
-    assert [(m.name, m.op, m.value) for m in r.matchers] == [
+    assert [(m.name, m.type.value, m.value) for m in r.matchers] == [
         ("__name__", "=", "my.metric")
     ]
     r = parse('{"my.metric", env="prod"}')
@@ -237,7 +237,7 @@ def test_parse_quoted_label_names():
     from promhouse_spark.promql.parser import parse
 
     r = parse('{"label.with.dots"="v", plain="w"}')
-    assert [(m.name, m.op, m.value) for m in r.matchers] == [
+    assert [(m.name, m.type.value, m.value) for m in r.matchers] == [
         ("label.with.dots", "=", "v"),
         ("plain", "=", "w"),
     ]

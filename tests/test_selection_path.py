@@ -12,7 +12,8 @@ text of any kind survives the map literal, and a storage whose dict is
 off still answers PromQL through the distributed ``registry_df()``
 resolution, as does a selector whose regex only Java reads exactly or
 whose match set is too wide for an IN list. A served storage's dict takes
-in what other instances flush."""
+in what other instances flush. A bad regex in any selector a client sends
+is a client error on every endpoint."""
 
 from __future__ import annotations
 
@@ -26,6 +27,7 @@ import pytest
 from hypothesis import given, settings, strategies as hst
 
 from promhouse_spark.models import (
+    Exemplar,
     Label,
     Query,
     Sample,
@@ -481,3 +483,66 @@ def _canon(df) -> list[tuple]:
         (tuple(sorted(r["labels"].items())), r["eval_ms"], r["value"])
         for r in df.collect()
     )
+
+
+@pytest.fixture(scope="module")
+def selector_client(spark, tmp_path_factory):
+    """An admin-enabled server over ``up`` series of three jobs, each with
+    an exemplar."""
+    pytest.importorskip("flask")
+    from promhouse_spark.edge.http import create_app
+
+    st = SparkParquetStorage(spark, str(tmp_path_factory.mktemp("selectors")))
+    st.write([
+        TimeSeries(
+            [Label("__name__", "up"), Label("job", job)],
+            [Sample(1.0, T0 + k * STEP_MS) for k in range(4)],
+            exemplars=[Exemplar([Label("trace_id", job)], 1.0, T0)],
+        )
+        for job in ("a", "b", "c")
+    ])
+    st.flush()
+    return create_app(st, enable_admin=True).test_client()
+
+
+_WINDOW = {"start": str(T0 / 1000), "end": str((T0 + 60_000) / 1000)}
+
+
+@pytest.mark.parametrize(
+    "method, path, params",
+    [
+        ("GET", "/api/v1/series", {"match[]": 'up{job=~"("}'}),
+        ("GET", "/api/v1/labels", {"match[]": 'up{job=~"("}'}),
+        ("GET", "/api/v1/label/job/values", {"match[]": 'up{job=~"("}'}),
+        ("GET", "/federate", {"match[]": 'up{job=~"("}', "time": _WINDOW["end"]}),
+        ("GET", "/api/v1/query_exemplars", {"query": 'up{job=~"("}', **_WINDOW}),
+        ("POST", "/api/v1/admin/tsdb/delete_series", {"match[]": 'up{job=~"("}'}),
+        ("GET", "/api/v1/query", {"query": 'up{job=~"("}', "time": _WINDOW["end"]}),
+    ],
+)
+def test_bad_selector_regex_is_a_client_error(selector_client, method, path, params):
+    """Every endpoint that takes a selector rejects a regex the storage's
+    matcher cannot compile with 400 ``bad_data``, before any read."""
+    resp = selector_client.open(path, method=method, query_string=params)
+    assert resp.status_code == 400, resp.data[:300]
+    assert resp.get_json()["errorType"] == "bad_data"
+
+
+def test_bad_remote_read_regex_is_a_client_error(selector_client):
+    from promhouse_spark.edge import prompb, snappy_codec
+
+    q = Query(T0, T0 + 60_000, make_matchers(("__name__", "=", "up"), ("job", "=~", "(")))
+    resp = selector_client.post(
+        "/read", data=snappy_codec.compress(prompb.encode_read_request([q]))
+    )
+    assert resp.status_code == 400
+    assert b"invalid matcher regex" in resp.data
+
+
+def test_series_endpoint_serves_a_valid_regex(selector_client):
+    resp = selector_client.get("/api/v1/series", query_string={"match[]": 'up{job=~"a|b"}'})
+    assert resp.status_code == 200
+    assert resp.get_json()["data"] == [
+        {"__name__": "up", "job": "a"},
+        {"__name__": "up", "job": "b"},
+    ]

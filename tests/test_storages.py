@@ -228,6 +228,23 @@ def test_differential_vs_oracle(storage, specs):
     )
 
 
+@pytest.mark.parametrize(
+    "specs",
+    [
+        [("__name__", "=", "http_requests_total")],
+        [("__name__", "=~", "http_requests_.+")],
+        [("__name__", "=", "no_such_metric")],
+        [],
+    ],
+)
+def test_iter_series_matches_read(storage, specs):
+    """The streamed serve (``iter_series``, cached registry only) gives
+    exactly the series ``read()`` gives, in the same order."""
+    if not getattr(storage, "cache_registry", False) or not hasattr(storage, "iter_series"):
+        pytest.skip("no streamed serve on this backend")
+    assert list(storage.iter_series(q(*specs))) == read_one(storage, q(*specs))
+
+
 # --- JDBC backend: filter pushdown reaches the remote database ------------
 
 
